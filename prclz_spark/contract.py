@@ -200,7 +200,10 @@ def _grid_bounds(spark: SparkSession):
     b["by0"] = [min(p[1] for p in g) for g in b.geometry]
     b["bx1"] = [max(p[0] for p in g) for g in b.geometry]
     b["by1"] = [max(p[1] for p in g) for g in b.geometry]
-    return spark.createDataFrame(b[["block_id", "bx0", "by0", "bx1", "by1"]])
+    return spark.createDataFrame(
+        b[["block_id", "bx0", "by0", "bx1", "by1"]],
+        "block_id string, bx0 double, by0 double, bx1 double, by1 double",
+    )
 
 
 def _grid_block_sql() -> str:
@@ -302,7 +305,8 @@ def _q_spatial_knn(spark, sf_dir):
     centers["tx"] = [sum(p[0] for p in r) / 4.0 for r in centers.geometry]
     centers["ty"] = [sum(p[1] for p in r) / 4.0 for r in centers.geometry]
     tgt = spark.createDataFrame(
-        centers[["block_id", "tx", "ty"]].rename(columns={"block_id": "target_id"})
+        centers[["block_id", "tx", "ty"]].rename(columns={"block_id": "target_id"}),
+        "target_id string, tx double, ty double",
     )
     out = knn.knn_join(pts, tgt, KNN_RES, target_id="target_id")
     return out.select(
@@ -379,7 +383,9 @@ def _q_spatial_block_extract(spark, sf_dir):
     roads = synth.road_grid_lines(GRID_G, jitter=0.0)
     roads = roads[roads.highway.notna()][["osm_id", "geometry"]].copy()
     roads["region_id"] = "city"
-    lines = spark.createDataFrame(roads)
+    lines = spark.createDataFrame(
+        roads, "osm_id string, geometry array<array<double>>, region_id string"
+    )
     aoi = [
         [synth.AOI_LON0, synth.AOI_LAT0],
         [synth.AOI_LON0 + synth.AOI_SPAN, synth.AOI_LAT0],
@@ -387,7 +393,8 @@ def _q_spatial_block_extract(spark, sf_dir):
         [synth.AOI_LON0, synth.AOI_LAT0 + synth.AOI_SPAN],
     ]
     regions = spark.createDataFrame(
-        pd.DataFrame([{"region_id": "city", "geometry": aoi}])
+        pd.DataFrame([{"region_id": "city", "geometry": aoi}]),
+        "region_id string, geometry array<array<double>>",
     )
     out = blocks.extract_blocks(lines, regions)
     return out.select(
@@ -416,7 +423,7 @@ def _q_spatial_k_complexity(spark, sf_dir):
     rows-only driver check; pytest pins values against the pure-python
     oracle (tests/test_graphops.py)."""
     assigned = _assigned_img_cached(spark, sf_dir)
-    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     return complexity.k_complexity(assigned, blocks_sdf).select(
         "block_id", "complexity", "centroid_count"
     )
@@ -454,7 +461,7 @@ def _q_spatial_k_complexity_grid(spark, sf_dir):
     whole distributed chain (PIP assign → cogroup → Voronoi → weak-dual
     iteration) must reproduce that closed form per block."""
     assigned = _assigned_grid_cached(spark)
-    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     return complexity.k_complexity(assigned, blocks_sdf).select(
         "block_id", "complexity", "centroid_count"
     )
@@ -478,7 +485,7 @@ def _q_spatial_reblock_status(spark, sf_dir):
     one-building-plus-dummy case the reference connects to the outside
     network) with new edges and existing_len bounded by the perimeter."""
     assigned = _assigned_grid_cached(spark)
-    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     parcels = parcel.parcelize(assigned, blocks_sdf)
     out = reblock.reblock(parcels, assigned, blocks_sdf, emit="summary")
     perim = 4.0 * STEP
@@ -508,7 +515,7 @@ def _q_spatial_parcels(spark, sf_dir):
     point. Per-block invariants are SQL-checkable: one parcel per point and
     the cells exactly partition the block (area sum = block area)."""
     assigned = _assigned_img_cached(spark, sf_dir)
-    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     parcels = parcel.parcelize(assigned, blocks_sdf)
     return parcels.groupBy("block_id").agg(
         F.count("*").alias("n_parcels"),
@@ -584,7 +591,7 @@ def _q_spatial_parcels_footprint(spark, sf_dir):
     assigned = _assigned_img_cached(spark, sf_dir).filter(
         synth.image_id_num(F.col("image_id")) % FOOT_SAMPLE == 0
     )
-    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     parcels = parcel.parcelize_footprints(
         assigned, blocks_sdf, footprint_side=OVL_SIDE, ptdist=FOOT_PTDIST
     )
@@ -670,7 +677,7 @@ def _q_spatial_reblock_steiner(spark, sf_dir):
     metric-closure Steiner → chain re-expansion) to an analytic value,
     which the rows-only spatial_reblock cannot."""
     parcels, pts = _mesh_fixture(spark)
-    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     out = reblock.reblock(parcels, pts, blocks_sdf, emit="summary")
     return out.select(
         "block_id", "status", "n_terminals", "n_new_edges",
@@ -695,7 +702,7 @@ def _q_spatial_reblock(spark, sf_dir):
     the metric-closure MST is not SQL-expressible; pytest pins kernel
     invariants (tests/test_reblock.py)."""
     assigned = _assigned_img_cached(spark, sf_dir)
-    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks_sdf = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     parcels = parcel.parcelize(assigned, blocks_sdf)
     out = reblock.reblock(parcels, assigned, blocks_sdf, emit="summary")
     return out.select(
@@ -747,7 +754,7 @@ def _q_spatial_road_dist_dist(spark, sf_dir):
     row-identical."""
     pts = _img_points(spark, sf_dir)
     roads = synth.road_grid_lines(GRID_G, jitter=0.0)
-    lines = spark.createDataFrame(roads)
+    lines = spark.createDataFrame(roads, synth.LINES_DDL)
     segs = rangejoin.segments_from_lines_df(
         lines.filter(F.col("highway").isNotNull())
     ).select("seg_id", "ax", "ay", "bx", "by")
@@ -828,9 +835,12 @@ def _q_spatial_largest_overlap(spark, sf_dir):
     cover_pdf = _grid_cover(spark)
     # ship the 30k-cell cover NARROW (ints + strings Arrow-convert fast);
     # ring geometry goes once per block (49 rows), not once per cell
-    cover = spark.createDataFrame(cover_pdf[["cell", "block_id"]])
+    cover = spark.createDataFrame(
+        cover_pdf[["cell", "block_id"]], "cell bigint, block_id string"
+    )
     blocks_geo = spark.createDataFrame(
-        cover_pdf[["block_id", "geometry"]].drop_duplicates("block_id")
+        cover_pdf[["block_id", "geometry"]].drop_duplicates("block_id"),
+        synth.BLOCKS_DDL,
     )
     out = assign.largest_overlap_assign(
         feats, cover, PIP_RES, feature_id="image_id", block_geoms=blocks_geo
@@ -901,7 +911,7 @@ def _q_spatial_boundary_types(spark, sf_dir):
     highway."""
     from .operators import rangejoin
 
-    blocks = spark.createDataFrame(synth.grid_blocks(GRID_G))
+    blocks = spark.createDataFrame(synth.grid_blocks(GRID_G), synth.BLOCKS_DDL)
     typed = rangejoin.boundary_types_for_blocks(
         blocks, _typed_grid_lines(), res=8, threshold=STEP / 4.0
     )

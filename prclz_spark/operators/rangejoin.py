@@ -43,15 +43,17 @@ def segments_from_lines(lines_pdf: pd.DataFrame) -> pd.DataFrame:
     waterway, then highway, then natural, each overriding the last
     (i_topology_utils.py:287-293) — so multi-tagged lines resolve
     identically; untagged lines default to 'highway' (weight 0)."""
+    def present(v) -> bool:  # pandas IO turns missing cells into NaN
+        return v is not None and not (isinstance(v, float) and np.isnan(v))
+
     rows = []
     for r in lines_pdf.itertuples(index=False):
         ft = "highway"
         for tag in ("waterway", "highway", "natural"):
-            v = getattr(r, tag, None)
-            if v is not None and not (isinstance(v, float) and np.isnan(v)):
+            if present(getattr(r, tag, None)):
                 ft = tag
         g = r.geometry
-        if g is None:  # same zero-segment skip as the distributed builder
+        if not present(g):  # same zero-segment skip as the distributed builder
             continue
         for i in range(len(g) - 1):
             rows.append(

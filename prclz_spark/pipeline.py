@@ -154,28 +154,28 @@ def run_pipeline(
         computed[COMPLEXITY_TABLE] = 0
         return computed
 
-    blocks_sdf = spark.createDataFrame(blocks_pdf)
-
-    def per_block_stage(table: str, build) -> int:
+    def per_block_stage(table: str, build, prep=None) -> int:
         """Shared per-block resume pattern (CheckPointer anti-join analog,
         i_reblock.py:254-255): blocks already in the table's lineage are
-        skipped; ``build(todo_blocks, todo_assigned)`` produces the new
-        rows, committed partitioned by block_id."""
+        skipped — picked on the driver from ``blocks_pdf``, no Spark job;
+        ``build(todo_blocks, todo_assigned)`` produces the new rows,
+        committed partitioned by block_id. ``prep`` decorates the todo
+        block frame first (stage 4's boundary types)."""
         done = store.completed_partitions(table)
-        todo_blocks = blocks_sdf
-        if done:
-            todo_blocks = blocks_sdf.filter(
-                ~F.col("block_id").isin(*sorted(done))
-            )
-        n_todo_blocks = todo_blocks.count()
-        computed[table] = n_todo_blocks
-        if n_todo_blocks > 0:
+        todo_pdf = blocks_pdf[~blocks_pdf.block_id.isin(done)]
+        computed[table] = len(todo_pdf)
+        if len(todo_pdf):
+            todo_blocks = spark.createDataFrame(todo_pdf, synth.BLOCKS_DDL)
+            if prep is not None:
+                todo_blocks = prep(todo_blocks)
             todo_assigned = assigned.join(
                 F.broadcast(todo_blocks.select("block_id")), "block_id", "left_semi"
             )
             out = build(todo_blocks, todo_assigned)
-            store.commit(out, table, "block_id", stage=table)
-        return n_todo_blocks
+            store.commit(
+                out, table, "block_id", stage=table, keys=list(todo_pdf.block_id)
+            )
+        return len(todo_pdf)
 
     # -- stage 2: k-complexity per block -----------------------------------
     per_block_stage(
@@ -199,6 +199,7 @@ def run_pipeline(
     # (i_reblock.py:159-165) — are cheap filters of the committed table,
     # each with its own lineage so resume covers all three. Typed
     # boundaries (lines_pdf) feed the reference's F25 edge weighting.
+    prep = None
     if lines_pdf is not None:
         from .operators import rangejoin as rangejoin_op
 
@@ -206,9 +207,12 @@ def run_pipeline(
             # OSM-style polyline table (osm_id/highway/waterway/natural/
             # geometry) — flatten to the typed segment dimension
             lines_pdf = rangejoin_op.segments_from_lines(lines_pdf)
-        blocks_sdf = rangejoin_op.boundary_types_for_blocks(
-            blocks_sdf, lines_pdf, res=min(res, 12)
-        )
+
+        def prep(blks):
+            return rangejoin_op.boundary_types_for_blocks(
+                blks, lines_pdf, res=min(res, 12)
+            )
+
     per_block_stage(
         REBLOCK_ALL_TABLE,
         lambda blks, pts_: reblock_op.reblock(
@@ -219,30 +223,34 @@ def run_pipeline(
             blks,
             emit="all",
         ),
+        prep,
     )
-    allf = store.read(spark, REBLOCK_ALL_TABLE)
-    if allf is None:
+    if store.latest_snapshot_id(REBLOCK_ALL_TABLE) is None:
         return computed
-    # the three sink splits each count AND commit their slice — cache the
-    # long frame once so that is 1 parquet scan, not 6
-    allf = allf.cache()
-    scols = [f.name for f in reblock_op.REBLOCK_SUMMARY_SCHEMA.fields]
-    ecols = [f.name for f in reblock_op.REBLOCK_EDGES_SCHEMA.fields]
-    tcols = [f.name for f in reblock_op.REBLOCK_TERMINALS_SCHEMA.fields]
-    for tname, kind, cols in (
-        (REBLOCK_TABLE, "summary", scols),
-        (REBLOCK_EDGES_TABLE, "edge", ecols),
-        (REBLOCK_TERMINALS_TABLE, "terminal", tcols),
+    # each sink's todo blocks = reblock_all's lineage minus its own, known
+    # on the driver; the counts come from the new snapshots' lineage
+    reblocked = store.completed_partitions(REBLOCK_ALL_TABLE)
+    sinks = []
+    for tname, kind, schema in (
+        (REBLOCK_TABLE, "summary", reblock_op.REBLOCK_SUMMARY_SCHEMA),
+        (REBLOCK_EDGES_TABLE, "edge", reblock_op.REBLOCK_EDGES_SCHEMA),
+        (REBLOCK_TERMINALS_TABLE, "terminal", reblock_op.REBLOCK_TERMINALS_SCHEMA),
     ):
-        done = store.completed_partitions(tname)
-        sub = allf.filter(F.col("kind") == kind).select(*cols)
-        if done:
-            sub = sub.filter(~F.col("block_id").isin(*sorted(done)))
-        n_new = sub.count()
-        computed[tname] = n_new
-        if n_new > 0:
-            store.commit(sub, tname, "block_id", stage=tname)
-    allf.unpersist()
+        todo = sorted(reblocked - store.completed_partitions(tname))
+        computed[tname] = 0
+        if todo:
+            sinks.append((tname, kind, [f.name for f in schema.fields], todo))
+    if sinks:
+        # the sinks each scan their slice — cache the long frame once so
+        # that is 1 parquet scan, not one per sink
+        allf = store.read(spark, REBLOCK_ALL_TABLE).cache()
+        for tname, kind, cols, todo in sinks:
+            sub = store.resume_filter(
+                allf.filter(F.col("kind") == kind).select(*cols), tname, "block_id"
+            )
+            sid = store.commit(sub, tname, "block_id", stage=tname, keys=todo)
+            computed[tname] = store.committed_rows(tname, sid)
+        allf.unpersist()
 
     # -- stage 5: curated training manifest ---------------------------------
     # The keep-list (phash connected components) is a GLOBAL property of
@@ -275,8 +283,8 @@ def run_pipeline(
         # partition by block_id like every other stage: high-cardinality
         # parallel writes that co-locate with the spatial tables (a
         # 'split' partitioning would funnel the write through 3 tasks)
-        store.commit(mf, MANIFEST_TABLE, "block_id", stage=MANIFEST_TABLE)
-        computed[MANIFEST_TABLE] = store.read(spark, MANIFEST_TABLE).count()
+        sid = store.commit(mf, MANIFEST_TABLE, "block_id", stage=MANIFEST_TABLE)
+        computed[MANIFEST_TABLE] = store.committed_rows(MANIFEST_TABLE, sid)
 
     return computed
 

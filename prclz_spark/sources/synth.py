@@ -148,6 +148,16 @@ def image_id_num(image_id: Column) -> Column:
 # synthetic city: road grid, blocks, buildings
 # ---------------------------------------------------------------------------
 
+# Spark schemas of grid_blocks / road_grid_lines frames: pass them to
+# createDataFrame so no session has to infer (and without Arrow, inference
+# fails on road_grid_lines' all-None tag columns)
+BLOCKS_DDL = "block_id string, geometry array<array<double>>"
+LINES_DDL = (
+    "osm_id string, highway string, waterway string, natural string, "
+    "geometry array<array<double>>"
+)
+
+
 def grid_blocks(g: int = 8) -> pd.DataFrame:
     """Axis-aligned g x g street blocks covering the AOI. SQL-oracle
     friendly (PIP = range predicates); block ids minted in canonical

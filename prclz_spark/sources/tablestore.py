@@ -23,8 +23,16 @@ is a minimal stand-in with the same semantics the pipeline needs:
 - readers resolve LATEST → manifest → exact file list, so half-written
   data files are invisible;
 - time travel: read any older snapshot id;
-- lineage rows carry (stage, partition_id, rows_out, wall_ms, committed_at)
-  — the _lineage/_metrics contract of the north_rule.
+- lineage rows carry (stage, partition_id, rows_out, wall_ms, committed_at,
+  snapshot_id) — the _lineage/_metrics contract of the north_rule;
+- a commit costs the Spark jobs of its write and nothing per partition
+  (row counts come from Parquet footers), a read costs no schema-inference
+  job (the manifest stores the schema), and resume filters are broadcast
+  anti-joins against lineage keys, so no plan or job count grows with
+  the number of committed partitions;
+- one writer per table: each commit first removes what killed commits
+  left behind (staging directories, unlisted data files, manifests past
+  LATEST).
 
 If real Iceberg jars are available the layer swaps to ``writeTo``.
 """
@@ -33,10 +41,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
+import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 class TableStore:
@@ -69,6 +81,59 @@ class TableStore:
             return json.load(f)
 
     # -- write ------------------------------------------------------------
+    def _on_phase(self, table: str, phase: str) -> None:
+        """Fault-injection point between the phases of ``commit``:
+        ``'staged'`` (after the staging write), ``'moved'`` (after each
+        partition's files move into ``data/``) and ``'manifest'`` (after the
+        manifest, before ``LATEST``). A no-op; tests override it to kill a
+        commit part-way."""
+
+    def _collect_garbage(self, table: str, latest: dict | None) -> None:
+        """Remove what killed commits left behind: ``_staging_*``
+        directories, data files that no committed snapshot lists, and
+        manifests written past ``LATEST``. Manifests are cumulative, so the
+        latest one lists every committed data file.
+
+        Assumes ONE WRITER PER TABLE: a concurrent commit's staging
+        directory and freshly moved files would look stale here."""
+        tdir = self._tdir(table)
+        for entry in os.listdir(tdir):
+            if entry.startswith("_staging_"):
+                shutil.rmtree(os.path.join(tdir, entry))
+        keep = (
+            {f for e in latest["files"] for f in e["files"]} if latest else set()
+        )
+        datadir = os.path.join(tdir, "data")
+        for pdir in os.listdir(datadir):
+            full = os.path.join(datadir, pdir)
+            for fname in os.listdir(full):
+                if f"{pdir}/{fname}" not in keep:
+                    os.remove(os.path.join(full, fname))
+            if not os.listdir(full):
+                os.rmdir(full)
+        sid = latest["snapshot_id"] if latest else 0
+        snapdir = self._snapdir(table)
+        for fname in os.listdir(snapdir):
+            stem, ext = os.path.splitext(fname)
+            if ext == ".tmp" or (ext == ".json" and int(stem) > sid):
+                os.remove(os.path.join(snapdir, fname))
+
+    def _publish(self, table: str, manifest: dict) -> int:
+        """Write the manifest, then flip ``LATEST`` to it (both atomic
+        renames): the snapshot becomes visible at the second rename."""
+        sid = manifest["snapshot_id"]
+        mpath = os.path.join(self._snapdir(table), f"{sid}.json")
+        tmp = mpath + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, mpath)
+        self._on_phase(table, "manifest")
+        ltmp = self._latest_path(table) + ".tmp"
+        with open(ltmp, "w") as f:
+            f.write(str(sid))
+        os.replace(ltmp, self._latest_path(table))
+        return sid
+
     def commit(
         self,
         df: DataFrame,
@@ -76,20 +141,35 @@ class TableStore:
         partition_col: str,
         stage: str | None = None,
         extra: dict | None = None,
+        keys: list[str] | None = None,
     ) -> int:
         """Append ``df`` as one atomic snapshot, one data file per value of
         ``partition_col`` (repartitioned by it so each task owns whole
         partitions), with a lineage record per partition. ``extra`` merges
         stage-level metrics (e.g. broadcast dimension size, plan choice)
         into every lineage row — visible via read_lineage; metrics_df keeps
-        its fixed per-partition schema.
+        its fixed per-partition schema. ``keys`` names the partitions this
+        commit covers: a key that wrote no rows still gets a lineage record
+        (rows_out 0), so resume counts it as done.
 
-        Returns the new snapshot id. A killed job leaves data files but no
-        manifest/LATEST update — invisible to readers, re-runnable."""
+        The write is the only Spark work: per-partition ``rows_out`` comes
+        from the Parquet footers of the moved files, read on the driver, so
+        a commit runs the same jobs for 4 partitions as for 10^4. Lineage
+        ``wall_ms`` is the wall time of that whole write, shared by every
+        record of the commit (not a per-partition time); each record also
+        carries its ``snapshot_id``.
+
+        Returns the new snapshot id. A killed commit is invisible to
+        readers (``LATEST`` moves last) and re-runnable; the next commit to
+        the table removes its leftovers (``_collect_garbage``)."""
         tdir = self._tdir(table)
         datadir = os.path.join(tdir, "data")
         os.makedirs(datadir, exist_ok=True)
         os.makedirs(self._snapdir(table), exist_ok=True)
+        prev = self.latest_snapshot_id(table)
+        prev_manifest = self.manifest(table, prev) if prev else None
+        self._collect_garbage(table, prev_manifest)
+        sid = (prev or 0) + 1
 
         staging = os.path.join(tdir, f"_staging_{uuid.uuid4().hex}")
         t0 = time.time()
@@ -100,69 +180,59 @@ class TableStore:
             .parquet(staging)
         )
         wall_ms = int((time.time() - t0) * 1000)
+        self._on_phase(table, "staged")
 
-        spark = df.sparkSession
+        def record(pkey: str, rows: int) -> dict:
+            return {
+                "stage": stage or table,
+                "partition_id": pkey,
+                "rows_out": rows,
+                "wall_ms": wall_ms,
+                "committed_at": time.time(),
+                "snapshot_id": sid,
+                **(extra or {}),
+            }
+
         files: list[dict] = []
         lineage: list[dict] = []
+        prefix = f"{partition_col}="
         for entry in sorted(os.listdir(staging)):
-            if not entry.startswith(f"{partition_col}="):
+            if not entry.startswith(prefix):
                 continue
-            pkey = entry.split("=", 1)[1]
             pdir = os.path.join(staging, entry)
             outdir = os.path.join(datadir, entry)  # keep hive layout so the
             os.makedirs(outdir, exist_ok=True)     # partition column survives
-            parts = sorted(p for p in os.listdir(pdir) if p.endswith(".parquet"))
-            moved = []
-            for p in parts:
+            moved, rows = [], 0
+            for p in sorted(os.listdir(pdir)):
+                if not p.endswith(".parquet"):
+                    continue
                 new_name = f"{uuid.uuid4().hex}.parquet"
-                os.replace(os.path.join(pdir, p), os.path.join(outdir, new_name))
+                dst = os.path.join(outdir, new_name)
+                os.replace(os.path.join(pdir, p), dst)
+                rows += pq.read_metadata(dst).num_rows
                 moved.append(f"{entry}/{new_name}")
-            rows = spark.read.option("basePath", datadir).parquet(
-                *[os.path.join(datadir, m) for m in moved]
-            ).count() if moved else 0
-            files.append({"partition": pkey, "files": moved})
-            lineage.append(
-                {
-                    "stage": stage or table,
-                    "partition_id": pkey,
-                    "rows_out": rows,
-                    "wall_ms": wall_ms,
-                    "committed_at": time.time(),
-                    **(extra or {}),
-                }
+            files.append({"partition": entry[len(prefix):], "files": moved})
+            lineage.append(record(entry[len(prefix):], rows))
+            self._on_phase(table, "moved")
+        shutil.rmtree(staging)
+        written = {rec["partition_id"] for rec in lineage}
+        if keys is not None:
+            lineage.extend(
+                record(k, 0) for k in sorted(set(keys) - written)
             )
-        # clean staging skeleton
-        for root, dirs, fs in os.walk(staging, topdown=False):
-            for fname in fs:
-                os.remove(os.path.join(root, fname))
-            for d in dirs:
-                os.rmdir(os.path.join(root, d))
-        os.rmdir(staging)
 
-        prev = self.latest_snapshot_id(table)
-        sid = (prev or 0) + 1
-        prev_manifest = self.manifest(table, prev) if prev else None
-        all_files = list(prev_manifest["files"]) if prev_manifest else []
-        all_files.extend(files)
-        all_lineage = list(prev_manifest["lineage"]) if prev_manifest else []
-        all_lineage.extend(lineage)
-        manifest = {
+        fields = [f for f in df.schema.fields if f.name != partition_col]
+        fields += [f for f in df.schema.fields if f.name == partition_col]
+        return self._publish(table, {
             "snapshot_id": sid,
             "parent": prev,
             "partition_col": partition_col,
-            "files": all_files,
-            "lineage": all_lineage,
-        }
-        mpath = os.path.join(self._snapdir(table), f"{sid}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
-        ltmp = self._latest_path(table) + ".tmp"
-        with open(ltmp, "w") as f:
-            f.write(str(sid))
-        os.replace(ltmp, self._latest_path(table))
-        return sid
+            # the schema a read of the files yields (data columns, then the
+            # hive partition column), so read() infers nothing
+            "schema_ddl": _schema_ddl(fields),
+            "files": (prev_manifest["files"] if prev_manifest else []) + files,
+            "lineage": (prev_manifest["lineage"] if prev_manifest else []) + lineage,
+        })
 
     def commit_bucketed(
         self,
@@ -209,8 +279,12 @@ class TableStore:
         writer.saveAsTable(catalog_name)
         wall_ms = int((time.time() - t0) * 1000)
 
-        spark = df.sparkSession
-        rows = spark.table(catalog_name).count()
+        rows = sum(
+            pq.read_metadata(os.path.join(d, f)).num_rows
+            for d, _, fs in os.walk(datadir)
+            for f in fs
+            if f.endswith(".parquet")
+        )
         prev_manifest = self.manifest(table, prev) if prev else None
         all_lineage = list(prev_manifest["lineage"]) if prev_manifest else []
         all_lineage.append(
@@ -220,9 +294,10 @@ class TableStore:
                 "rows_out": rows,
                 "wall_ms": wall_ms,
                 "committed_at": time.time(),
+                "snapshot_id": sid,
             }
         )
-        manifest = {
+        return self._publish(table, {
             "snapshot_id": sid,
             "parent": prev,
             "partition_col": None,
@@ -234,22 +309,9 @@ class TableStore:
                 "cols": list(bucket_cols),
                 "n": n_buckets,
                 "sort": list(sort_cols) if sort_cols else [],
-                "schema_ddl": ", ".join(
-                    f"`{f.name}` {f.dataType.simpleString()}"
-                    for f in df.schema.fields
-                ),
+                "schema_ddl": _schema_ddl(df.schema.fields),
             },
-        }
-        mpath = os.path.join(self._snapdir(table), f"{sid}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
-        ltmp = self._latest_path(table) + ".tmp"
-        with open(ltmp, "w") as f:
-            f.write(str(sid))
-        os.replace(ltmp, self._latest_path(table))
-        return sid
+        })
 
     def read_bucketed(
         self, spark: SparkSession, table: str, snapshot_id: int | None = None
@@ -289,12 +351,26 @@ class TableStore:
         if not paths:
             return None
         # basePath lets Spark recover the partition column from the
-        # hive-style subdirectories the manifest's files live in
-        return spark.read.option("basePath", datadir).parquet(*paths)
+        # hive-style subdirectories the manifest's files live in; the
+        # stored schema spares the schema-inference job (manifests written
+        # before it was stored still infer)
+        reader = spark.read.option("basePath", datadir)
+        if "schema_ddl" in m:
+            reader = reader.schema(m["schema_ddl"])
+        return reader.parquet(*paths)
 
     def read_lineage(self, table: str, snapshot_id: int | None = None) -> list[dict]:
         m = self.manifest(table, snapshot_id)
         return m["lineage"] if m else []
+
+    def committed_rows(self, table: str, snapshot_id: int) -> int:
+        """Rows the commit that created ``snapshot_id`` wrote, from its
+        lineage records — no Spark job."""
+        return sum(
+            rec["rows_out"]
+            for rec in self.read_lineage(table, snapshot_id)
+            if rec.get("snapshot_id") == snapshot_id
+        )
 
     def metrics_df(
         self, spark: SparkSession, table: str, snapshot_id: int | None = None
@@ -324,13 +400,27 @@ class TableStore:
         self, df: DataFrame, table: str, partition_col: str
     ) -> DataFrame:
         """Drop rows whose partition is already committed — the distributed
-        CheckPointer.completed anti-join (i_reblock.py:254-255). String-
-        compare because parquet partition keys are strings on disk."""
-        from pyspark.sql import functions as F
-
+        CheckPointer.completed anti-join (i_reblock.py:254-255): a
+        broadcast left_anti join against a small frame of lineage keys, so
+        the plan does not grow with the number of committed partitions.
+        String-compare because parquet partition keys are strings on
+        disk."""
         done = self.completed_partitions(table)
         if not done:
             return df
-        return df.filter(
-            ~F.col(partition_col).cast("string").isin(*sorted(done))
+        # from pandas: under Arrow that is a LocalRelation, not an RDD
+        # whose broadcast would need a job of its own
+        keys = df.sparkSession.createDataFrame(
+            pd.DataFrame({"_committed_key": sorted(done)}), "_committed_key string"
         )
+        return df.join(
+            F.broadcast(keys),
+            F.col(partition_col).cast("string") == keys["_committed_key"],
+            "left_anti",
+        )
+
+
+def _schema_ddl(fields) -> str:
+    """DDL for ``spark.read.schema``; parsing it makes every field and
+    element nullable, as a Parquet read does."""
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)

@@ -163,8 +163,4 @@ def commit_phash_dedup_batch(
     sid = store.commit(out, table, partition_col="bucket", stage=stage)
     # rows-out from the new snapshot's lineage: the commit already counted
     # per-partition rows, re-counting the frame would re-run the dedup join
-    return sum(
-        l["rows_out"]
-        for l in store.read_lineage(table, sid)
-        if l.get("stage") == stage
-    )
+    return store.committed_rows(table, sid)

@@ -66,6 +66,30 @@ def test_query_matches_oracle(spark, name):
     pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=0, atol=1e-9)
 
 
+# contract queries that build Spark frames from driver-side pandas tables
+# (the inputs whose schema a session could otherwise have to infer)
+VANILLA_SAMPLE = [
+    "spatial_block_extract", "spatial_boundary_types", "spatial_knn",
+    "spatial_largest_overlap", "spatial_road_dist_dist", "spatial_tiles",
+]
+
+
+@pytest.fixture(scope="module")
+def vanilla(spark):
+    """A session on the same context with Spark's stock SQL settings: no
+    Arrow conversion, default shuffle partitions and broadcast threshold."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "200")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    return s
+
+
+@pytest.mark.parametrize("name", VANILLA_SAMPLE)
+def test_query_matches_oracle_vanilla_session(vanilla, name):
+    test_query_matches_oracle(vanilla, name)
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     n = df.count()

@@ -8,6 +8,7 @@ skip-if-output-exists (midway/midway_blocks.py:31).
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -184,3 +185,174 @@ def test_tablestore_metrics_df(spark, tmp_path):
     }
     assert agg == {"s1": 100, "s2": 50}
     assert store.metrics_df(spark, "missing") is None
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` in Spark job group ``group``; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tablestore_job_counts_flat(spark, tmp_path):
+    """A commit runs only its write's jobs — none per partition — and a
+    read of a committed table runs none at all (schema from the manifest,
+    driver-side file listing up to 32 files), while lineage rows_out stay
+    the true per-partition counts."""
+    store = TableStore(str(tmp_path))
+    jobs = {}
+    for p in (4, 64):
+        df = spark.range(0, 1000).select(
+            F.col("id"), (F.col("id") % p).alias("bucket")
+        )
+        sid, jobs[p] = _jobs_in_group(
+            spark, f"commit-{p}-{tmp_path.name}",
+            lambda: store.commit(df, f"t{p}", "bucket", stage="s"),
+        )
+        want = {
+            str(r["bucket"]): r["count"]
+            for r in df.groupBy("bucket").count().collect()
+        }
+        got = {r["partition_id"]: r["rows_out"] for r in store.read_lineage(f"t{p}")}
+        assert got == want
+        assert store.committed_rows(f"t{p}", sid) == 1000
+    assert jobs[4] == jobs[64], jobs
+
+    back, n_read = _jobs_in_group(
+        spark, f"read-{tmp_path.name}", lambda: store.read(spark, "t4")
+    )
+    assert n_read == 0
+    assert back.columns == ["id", "bucket"]
+    assert back.count() == 1000
+
+
+def test_tablestore_commit_keys_mark_empty_partitions(spark, tmp_path):
+    """A key the commit covers but that wrote no rows still lands in
+    lineage (rows_out 0), so resume does not recompute it forever."""
+    store = TableStore(str(tmp_path))
+    df = spark.range(0, 10).select(F.col("id"), F.lit("a").alias("p"))
+    sid = store.commit(df, "t", "p", keys=["a", "b"])
+    lin = {r["partition_id"]: r["rows_out"] for r in store.read_lineage("t")}
+    assert lin == {"a": 10, "b": 0}
+    assert all(r["snapshot_id"] == sid for r in store.read_lineage("t"))
+    assert store.completed_partitions("t") == {"a", "b"}
+    assert store.read(spark, "t").count() == 10
+
+
+def _store_leftovers(root):
+    """Files a killed commit may leave: staging directories, data files no
+    latest manifest lists, and manifests past LATEST."""
+    store = TableStore(root)
+    out = []
+    for table in os.listdir(root):
+        tdir = os.path.join(root, table)
+        out += [e for e in os.listdir(tdir) if e.startswith("_staging_")]
+        m = store.manifest(table)
+        keep = {f for e in m["files"] for f in e["files"]} if m else set()
+        datadir = os.path.join(tdir, "data")
+        for pdir in os.listdir(datadir):
+            out += [
+                f"{pdir}/{f}" for f in os.listdir(os.path.join(datadir, pdir))
+                if f"{pdir}/{f}" not in keep
+            ]
+        sid = m["snapshot_id"] if m else 0
+        for f in os.listdir(os.path.join(tdir, "snapshots")):
+            stem, ext = os.path.splitext(f)
+            if f != "LATEST" and (ext != ".json" or int(stem) > sid):
+                out.append(f)
+    return out
+
+
+class _Killed(Exception):
+    pass
+
+
+def _kill_at(monkeypatch, table, phase):
+    """Make the first commit to ``table`` that reaches ``phase`` raise, as
+    if the process died there ('moved' fires after the first partition's
+    files moved, so the kill lands mid-move)."""
+
+    def on_phase(self, t, p):
+        if (t, p) == (table, phase):
+            raise _Killed(f"{table}:{phase}")
+
+    monkeypatch.setattr(TableStore, "_on_phase", on_phase)
+
+
+PHASES = ["staged", "moved", "manifest"]
+
+
+@pytest.mark.parametrize("phase", PHASES)
+def test_tablestore_killed_commit_resumes_clean(spark, tmp_path, monkeypatch, phase):
+    """A commit killed after the staging write, mid-move, or between the
+    manifest and LATEST stays invisible; re-running it gives the same table
+    as an uninterrupted commit and leaves no orphaned files."""
+    root = str(tmp_path)
+    store = TableStore(root)
+    df = spark.range(0, 40).select(F.col("id"), (F.col("id") % 4).alias("b"))
+    store.commit(df.filter("b < 2"), "t", "b", stage="first")
+    rest = df.filter("b >= 2")
+
+    _kill_at(monkeypatch, "t", phase)
+    with pytest.raises(_Killed):
+        store.commit(rest, "t", "b", stage="second")
+    monkeypatch.undo()
+    assert store.latest_snapshot_id("t") == 1
+    assert store.read(spark, "t").count() == 20
+
+    store.commit(rest, "t", "b", stage="second")
+    assert sorted(r["id"] for r in store.read(spark, "t").collect()) == list(range(40))
+    assert sorted(r["partition_id"] for r in store.read_lineage("t")) == ["0", "1", "2", "3"]
+    assert _store_leftovers(root) == []
+
+
+_RESUME_TABLES = (
+    "assign", "complexity", "parcels", "reblock_all", "reblock_summary",
+    "reblock_edges", "reblock_terminals", "manifest",
+)
+
+
+def _pipeline_tables(spark, root):
+    """Every pipeline table as a sorted, string-valued frame; drops the
+    kernels' own wall_ms timings, the one nondeterministic column."""
+    store = TableStore(root)
+    out = {}
+    for t in _RESUME_TABLES:
+        pdf = store.read(spark, t).toPandas()
+        pdf = pdf.drop(columns=[c for c in pdf.columns if c == "wall_ms"])
+        pdf = pdf[sorted(pdf.columns)].astype(str)
+        out[t] = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+    return out
+
+
+@pytest.fixture(scope="module")
+def clean_pipeline(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("clean") / "wh")
+    pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
+    return _pipeline_tables(spark, root)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("phase", PHASES)
+def test_pipeline_killed_commit_resumes_identical(
+    spark, tmp_path, monkeypatch, clean_pipeline, phase
+):
+    """Kill the complexity commit at each of its phases: the re-run gives
+    tables identical to an uninterrupted run and no orphaned files."""
+    root = str(tmp_path / "wh")
+    _kill_at(monkeypatch, "complexity", phase)
+    with pytest.raises(_Killed):
+        pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
+    monkeypatch.undo()
+    out = pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
+    assert out["assign"] == 0 and out["complexity"] == 4
+    got = _pipeline_tables(spark, root)
+    for t in _RESUME_TABLES:
+        pd.testing.assert_frame_equal(got[t], clean_pipeline[t], obj=t)
+    assert _store_leftovers(root) == []

@@ -142,6 +142,29 @@ def test_segments_from_lines_df_parity(spark):
     pd.testing.assert_frame_equal(want, got)
 
 
+def test_segments_from_lines_skips_nan_geometry(spark):
+    """pandas IO writes a missing geometry as float NaN, not None: the
+    driver builder must skip it like None (zero segments, no crash), so it
+    still matches the Spark flatten, which sees a null geometry."""
+    lines = pd.DataFrame([
+        {"osm_id": "w0", "highway": "residential", "waterway": np.nan,
+         "natural": np.nan, "geometry": [[10.0, 50.0], [10.1, 50.0]]},
+        {"osm_id": "w1", "highway": "residential", "waterway": np.nan,
+         "natural": np.nan, "geometry": np.nan},
+    ])
+    want = rangejoin.segments_from_lines(lines)
+    assert list(want.seg_id) == ["w0_0"]
+    spark_lines = lines.astype(object).where(lines.notna(), None)
+    got = rangejoin.segments_from_lines_df(
+        spark.createDataFrame(
+            spark_lines,
+            "osm_id string, highway string, waterway string, natural string, "
+            "geometry array<array<double>>",
+        )
+    ).toPandas()[want.columns]
+    pd.testing.assert_frame_equal(want, got)
+
+
 def test_segment_cover_df_parity(spark):
     """Column-side supercover emits the IDENTICAL (cell, seg_id) set as
     the driver pandas builder (same linspace arithmetic, same dilation),
