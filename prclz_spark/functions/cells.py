@@ -249,30 +249,6 @@ def cover_cells_classified(ring: np.ndarray, res: int) -> tuple[np.ndarray, np.n
     return ids, interior[yy, xx]
 
 
-def cover_cells(ring: np.ndarray, res: int) -> np.ndarray:
-    """Cells whose rectangle intersects the polygon ``ring`` ((n,2) lon/lat,
-    closed or open). Exact bbox scan + rectangle/polygon intersection test;
-    used to explode the (small) polygon dimension side of spatial joins
-    (SURVEY.md §2.3 J1: "polygon's covering cell set, exploded")."""
-    from . import geom  # local import to avoid cycle
-
-    nx = _nx(res)
-    lon0, lat0 = ring[:, 0].min(), ring[:, 1].min()
-    lon1, lat1 = ring[:, 0].max(), ring[:, 1].max()
-    x0 = int(np.clip(np.floor((lon0 + 180.0) / 360.0 * nx), 0, nx - 1))
-    x1 = int(np.clip(np.floor((lon1 + 180.0) / 360.0 * nx), 0, nx - 1))
-    y0 = int(np.clip(np.floor((lat0 + 90.0) / 180.0 * nx), 0, nx - 1))
-    y1 = int(np.clip(np.floor((lat1 + 90.0) / 180.0 * nx), 0, nx - 1))
-    w, h = 360.0 / nx, 180.0 / nx
-    out = []
-    for cx in range(x0, x1 + 1):
-        for cy in range(y0, y1 + 1):
-            rx0, ry0 = -180.0 + cx * w, -90.0 + cy * h
-            if geom.rect_intersects_polygon(rx0, ry0, rx0 + w, ry0 + h, ring):
-                out.append(res * RES_BITS_SHIFT + cx * XY_SHIFT + cy)
-    return np.asarray(out, dtype=np.int64)
-
-
 # ---------------------------------------------------------------------------
 # Cover compaction (H3 compact_cells / uncompact_cells analog)
 # ---------------------------------------------------------------------------

@@ -99,20 +99,6 @@ def seg_point_distance(
     return dist, cx, cy
 
 
-def closest_edge_to_point(segments: np.ndarray, x: float, y: float):
-    """argmin edge for one point over (m,2,2) segments → (idx, dist, cx, cy).
-    The distributed analog feeds candidates from the cell kRing join; this
-    local form is the reference's add_node_to_closest_edge candidate scan
-    (prclz/topology.py:504-534)."""
-    d, cx, cy = seg_point_distance(
-        segments[:, 0, 0], segments[:, 0, 1],
-        segments[:, 1, 0], segments[:, 1, 1],
-        np.full(len(segments), x), np.full(len(segments), y),
-    )
-    i = int(np.argmin(d))
-    return i, float(d[i]), float(cx[i]), float(cy[i])
-
-
 # ---------------------------------------------------------------------------
 # area / centroid / bounds (prclz/topology.py:232-271)
 # ---------------------------------------------------------------------------
@@ -596,29 +582,6 @@ def rect_intersects_polygon(
         if segments_intersect_any(re_[0], re_[1], poly_edges):
             return True
     return False
-
-
-def rect_within_polygon(
-    x0: float, y0: float, x1: float, y1: float, ring: np.ndarray
-) -> bool:
-    """True iff the rectangle lies entirely inside the (simple) polygon:
-    all four corners strictly inside and no rectangle edge crosses or
-    touches a polygon edge. Used to flag *interior* cover cells — points in
-    interior cells skip the PIP refine entirely (JVM-only equi-join)."""
-    if ring.shape[0] >= 2 and np.array_equal(ring[0], ring[-1]):
-        ring = ring[:-1]
-    corners = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
-    if not points_in_polygon(corners[:, 0], corners[:, 1], ring).all():
-        return False
-    poly_edges = np.stack([ring, np.roll(ring, -1, axis=0)], axis=1)
-    rect_edges = np.array(
-        [[[x0, y0], [x1, y0]], [[x1, y0], [x1, y1]],
-         [[x1, y1], [x0, y1]], [[x0, y1], [x0, y0]]]
-    )
-    for re_ in rect_edges:
-        if segments_intersect_any(re_[0], re_[1], poly_edges):
-            return False
-    return True
 
 
 def segments_intersect_any(p: np.ndarray, q: np.ndarray, segs: np.ndarray) -> bool:

@@ -1,87 +1,19 @@
-"""Bowyer–Watson Delaunay triangulation → Voronoi cells, pure numpy.
+"""Voronoi cells by exact half-plane clipping, pure numpy.
 
 Replaces ``pytess.voronoi`` (/root/reference/prclz/complexity.py:22) and R
 ``st_voronoi`` (prclz/parcelization/midway_parcelization.R:67-70). Runs
 per block inside ``applyInPandas`` groups — blocks carry 10–10^3 points
-(SURVEY.md §7.4), so the O(n²) incremental insert is fine; the distributed
+(SURVEY.md §7.4), so per-cell clipping is fine; the distributed
 dimension is the *number of blocks*, not points per block.
 
 Returns the same contract pytess does: ``[(anchor_point_or_None,
-cell_vertices), ...]``; cells of points on the super-triangle get
-anchor=None and are filtered by the caller exactly like the reference
-filters them (complexity.py:25: ``if anchor and ... len(vs) > 2``).
+cell_vertices), ...]``; callers filter degenerate cells exactly like the
+reference (complexity.py:25: ``if anchor and ... len(vs) > 2``).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-
-def _circumcircle(ax, ay, bx, by, cx, cy):
-    d = 2.0 * (ax * (by - cy) + bx * (cy - ay) + cx * (ay - by))
-    if abs(d) < 1e-30:
-        return None
-    ux = (
-        (ax * ax + ay * ay) * (by - cy)
-        + (bx * bx + by * by) * (cy - ay)
-        + (cx * cx + cy * cy) * (ay - by)
-    ) / d
-    uy = (
-        (ax * ax + ay * ay) * (cx - bx)
-        + (bx * bx + by * by) * (ax - cx)
-        + (cx * cx + cy * cy) * (bx - ax)
-    ) / d
-    r2 = (ax - ux) ** 2 + (ay - uy) ** 2
-    return ux, uy, r2
-
-
-def delaunay(points: np.ndarray) -> list[tuple[int, int, int]]:
-    """Bowyer–Watson over (n,2) points → triangles as index triples into the
-    input. Deterministic: insertion in input order, deterministic
-    perturbation of exact duplicates is the caller's job."""
-    n = len(points)
-    if n < 3:
-        return []
-    # super-triangle comfortably containing all points
-    cx, cy = points[:, 0].mean(), points[:, 1].mean()
-    span = max(points[:, 0].ptp(), points[:, 1].ptp(), 1e-9) * 64.0
-    sp = np.array(
-        [[cx - span, cy - span / 2], [cx + span, cy - span / 2], [cx, cy + span]]
-    )
-    pts = np.vstack([points, sp])
-    S0, S1, S2 = n, n + 1, n + 2
-    tris: list[tuple[int, int, int]] = [(S0, S1, S2)]
-    circ: dict[tuple[int, int, int], tuple[float, float, float]] = {}
-
-    def cc(t):
-        if t not in circ:
-            a, b, c = pts[t[0]], pts[t[1]], pts[t[2]]
-            res = _circumcircle(a[0], a[1], b[0], b[1], c[0], c[1])
-            circ[t] = res if res else (0.0, 0.0, -1.0)
-        return circ[t]
-
-    for i in range(n):
-        px, py = pts[i]
-        bad = []
-        for t in tris:
-            ux, uy, r2 = cc(t)
-            if r2 >= 0 and (px - ux) ** 2 + (py - uy) ** 2 <= r2 * (1 + 1e-12):
-                bad.append(t)
-        # boundary of the cavity = edges appearing in exactly one bad triangle
-        edge_count: dict[tuple[int, int], tuple[int, int]] = {}
-        for t in bad:
-            for e in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0])):
-                key = (min(e), max(e))
-                if key in edge_count:
-                    edge_count.pop(key)
-                else:
-                    edge_count[key] = e
-        for t in bad:
-            tris.remove(t)
-        for e in edge_count.values():
-            tris.append((e[0], e[1], i))
-    # drop triangles touching the super-triangle
-    return [t for t in tris if max(t) < n]
 
 
 def voronoi(points_list: list[tuple[float, float]]):

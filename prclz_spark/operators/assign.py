@@ -22,16 +22,14 @@ north_rule's "salted two-stage join"), and AQE skew-join splitting which is
 on by default (session.py).
 
 At 10^12 rows the point side is never shuffled for the broadcast variant —
-the only wide exchange is the final aggregation, and
-``repartitionByRange(cell_prefix)`` co-locates neighborhoods for
-downstream stages.
+the only wide exchange is the final aggregation.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -67,24 +65,6 @@ def block_cover_pdf(blocks_pdf: pd.DataFrame, res: int) -> pd.DataFrame:
             "interior": interior,
         }))
     return pd.concat(frames, ignore_index=True)
-
-
-def block_cover_df(spark: SparkSession, blocks: DataFrame, res: int) -> DataFrame:
-    """Distributed cover explode for large polygon tables (mapInPandas —
-    no driver materialization)."""
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("block_id", T.StringType()),
-            T.StructField("geometry", RING_TYPE),
-        ]
-    )
-
-    def explode_covers(batches):
-        for pdf in batches:
-            yield block_cover_pdf(pdf, res)
-
-    return blocks.mapInPandas(explode_covers, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -474,16 +454,3 @@ def largest_overlap_assign(
         .filter((F.col("__rn") == 1) & (F.col("overlap") > 0))
         .select(feature_id, "block_id", "overlap")
     )
-
-
-def repartition_by_cell_prefix(
-    df: DataFrame, res: int, prefix_res: int, num_partitions: int | None = None,
-    lon_col: str = "lon", lat_col: str = "lat",
-) -> DataFrame:
-    """north_rule: 'explicit repartitionByRange on cell prefix' — co-locate
-    whole neighborhoods so downstream per-block stages shuffle nothing."""
-    pref = cells.cell_prefix(cells.cell_id(F.col(lon_col), F.col(lat_col), res), res, prefix_res)
-    df = df.withColumn("cell_prefix", pref)
-    if num_partitions:
-        return df.repartitionByRange(num_partitions, "cell_prefix")
-    return df.repartitionByRange("cell_prefix")

@@ -66,19 +66,26 @@ def _extend_levels(levels: list[int], ring: int) -> tuple[list[int], int]:
     return levels + ext + [term], term
 
 
-def _cascade(
+def cascade(
     points_narrow: DataFrame,
-    pid: str,
+    keys: str | list[str],
     levels: list[int],
     ring: int,
     make_candidates: Callable[[DataFrame, int], DataFrame],
-    make_brute: Callable[[DataFrame], DataFrame],
     argmin: Callable[[DataFrame], DataFrame],
+    make_brute: Callable[[DataFrame], DataFrame] | None = None,
     exhaustive: bool = False,
 ) -> DataFrame:
-    """Shared EXACT multi-resolution NN cascade (one copy of every
-    correctness-bearing invariant — accept threshold, anti-join chain,
-    union order — for knn_join and parcel_assign).
+    """The EXACT multi-resolution NN cascade — the one level loop behind
+    every nearest-neighbour operator (knn_join, parcel_assign and the
+    three point→segment paths in rangejoin). It holds every
+    correctness-bearing invariant once: accept threshold, anti-join
+    chain, per-level checkpoint, union order.
+
+    Callers supply only ``make_candidates(remaining, r)`` (the level-r
+    candidate join), ``argmin(cand)`` (one row per ``keys`` with the
+    winner and its ``nn_dist``) and, unless ``exhaustive``,
+    ``make_brute(residue)`` (the candidate frame of the final pass).
 
     Fine -> coarse levels are the distributed analog of the reference's
     buffer doubling AND the skew defense: with one coarse level, a dense
@@ -97,14 +104,14 @@ def _cascade(
     ``exhaustive``: extend the cascade with auto-appended coarser levels
     down to the terminal resolution (where the kRing window spans the
     whole grid, making the candidate set complete), so the residue is
-    empty BY CONSTRUCTION and ``make_brute`` is never planned. This is
-    the ``broadcast_targets=False`` shape: with a fact-sized target
-    table, a non-empty residue through ``make_brute`` would otherwise be
-    a true cartesian — the residue is instead drained by equi-joins
-    whose per-point fan-out is output-sensitive (a point surviving to
-    level r had no target within ring·cell_h(r+3), so its r-window holds
-    ~the targets within twice its true NN distance).
+    empty BY CONSTRUCTION and no brute pass is planned. This is the
+    fact-sized-target shape: a non-empty residue through ``make_brute``
+    would otherwise be a true cartesian — the residue is instead drained
+    by equi-joins whose per-point fan-out is output-sensitive (a point
+    surviving to level r had no target within ring·cell_h(r+3), so its
+    r-window holds ~the targets within twice its true NN distance).
     """
+    keys = [keys] if isinstance(keys, str) else list(keys)
     # fine -> coarse is load-bearing for the skew defense: [14, 17] stays
     # EXACT (every level's accept is ring-guaranteed) but runs the coarse
     # hotspot join first — silently reintroducing the quadratic candidate
@@ -132,7 +139,7 @@ def _cascade(
         accept = best.filter(F.col("nn_dist") <= F.lit(ring * cell_h))
         resolved.append(accept)
         remaining = remaining.join(
-            accept.select(pid), on=pid, how="left_anti"
+            accept.select(*keys), on=keys, how="left_anti"
         ).localCheckpoint(eager=False)
         # exhaustive-only early exit: once the residue is empty, skip the
         # auto-appended coarser levels (each is a full candidate-build
@@ -167,8 +174,8 @@ def knn_join(
     """Nearest ``targets`` row (tx, ty) for every ``points`` row.
 
     Output: (point columns..., target_id, nn_dist). Exact nearest
-    neighbor via the _cascade helper; ``res`` may be a fine -> coarse
-    level list (see _cascade's skew note).
+    neighbor via :func:`cascade`; ``res`` may be a fine -> coarse
+    level list (see its skew note).
 
     ``point_id``: a unique key column in ``points`` (defaults to the
     first column); grouping happens on it alone and the remaining point
@@ -217,9 +224,9 @@ def knn_join(
         # table would be a true cartesian)
         return remaining.crossJoin(F.broadcast(targets))
 
-    out = _cascade(
+    out = cascade(
         points.select(pid, lon_col, lat_col),
-        pid, levels, ring, make_candidates, make_brute, argmin,
+        pid, levels, ring, make_candidates, argmin, make_brute,
         exhaustive=not broadcast_targets,
     )
     return points.join(out, on=pid)
@@ -233,7 +240,6 @@ def parcel_assign(
     anchor_id: str = "anchor_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    broadcast_anchors: bool = True,
 ) -> DataFrame:
     """Voronoi-parcel membership for a second point set: each point's
     parcel is the Voronoi cell of the nearest anchor WITHIN the point's
@@ -244,7 +250,7 @@ def parcel_assign(
     ``anchors`` (anchor_id, block_id, ax, ay). Output: (point columns...,
     anchor_id, nn_dist).
 
-    Same _cascade as knn_join, but the candidate join is constrained to
+    Same :func:`cascade` as knn_join, but the candidate join is constrained to
     the block from the start — the escape-distance guarantee is
     unaffected by the block constraint (any unseen IN-BLOCK anchor lies
     outside the kRing, hence farther), and the residue joins only its
@@ -272,11 +278,9 @@ def parcel_assign(
         )
 
     def make_candidates(remaining: DataFrame, r: int) -> DataFrame:
-        a_r = a_base.withColumn(
+        a_r = F.broadcast(a_base.withColumn(
             "__acell", cells.cell_id(F.col("ax"), F.col("ay"), r)
-        )
-        if broadcast_anchors:
-            a_r = F.broadcast(a_r)
+        ))
         return remaining.withColumn(
             "__cell",
             F.explode(cells.kring_cells(F.col(lon_col), F.col(lat_col), r, 1)),
@@ -288,13 +292,12 @@ def parcel_assign(
         )
 
     def make_brute(remaining: DataFrame) -> DataFrame:
-        a_all = F.broadcast(a_base) if broadcast_anchors else a_base
         return remaining.join(
-            a_all, F.col("block_id") == F.col("__ablock"), "inner"
+            F.broadcast(a_base), F.col("block_id") == F.col("__ablock"), "inner"
         )
 
-    out = _cascade(
+    out = cascade(
         points.select(point_id, "block_id", lon_col, lat_col),
-        point_id, levels, 1, make_candidates, make_brute, argmin,
+        point_id, levels, 1, make_candidates, argmin, make_brute,
     )
     return points.join(out, point_id)

@@ -13,8 +13,9 @@ dist(x) ≤ ε — SURVEY.md §2.7 F6).
 Distributed shape: segments explode to covering cells (supercover
 sampling, driver-side for dimension-sized road tables); points kRing-join
 the cell index; the point-segment distance is *pure Column arithmetic*
-(dot-product clamp — no Python anywhere); ``min_by`` picks the winner with
-the same exactness guarantee + brute-force fallback as the kNN join.
+(dot-product clamp — no Python anywhere). Every nearest-segment path runs
+on :func:`knn.cascade`, the engine's one exact NN level loop; each path
+supplies only its candidate join, its argmin and its brute-force pass.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells
+from . import knn
 
 __all__ = [
     "segments_from_lines", "segment_cover_pdf", "nearest_segment_join",
@@ -221,18 +223,15 @@ def nearest_segment_join_distributed(
     point_id: str | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    max_segs_per_cell: int | None = 4096,
+    max_segs_per_cell: int = 4096,
 ) -> DataFrame:
-    """Exact nearest segment for FACT-SIZED road tables: the cover is
-    built distributed (:func:`segment_cover_df`), joins by cell key with
-    no broadcast requested, and exactness comes from the same cascade
-    shape as ``knn._cascade`` — a level accepts winners whose distance
-    ≤ cell_h(r) (the dilated cover guarantees every segment within one
-    cell of the point's cell is a candidate), survivors fall through to
-    auto-appended coarser levels, and the terminal level (res ≤ 1, where
-    any segment's 3×3-dilated cover is the whole grid) has a provably
-    complete candidate set and accepts unconditionally — no cartesian
-    anywhere, residue empty by construction.
+    """Exact nearest segment for FACT-SIZED road tables, run as an
+    exhaustive :func:`knn.cascade` with ring 1. Each level's candidates
+    come from the distributed cover (:func:`segment_cover_df`, joined by
+    cell key, no broadcast requested): its 3×3 dilation puts every
+    segment within one cell of the point's cell among the candidates.
+    The terminal level is res 1, where any segment's dilated cover is the
+    whole grid, so no cartesian is ever planned.
 
     ``max_segs_per_cell``: hot-cell guard (a star junction puts every
     road through one cell and its 8 neighbors — the per-cell join key
@@ -241,117 +240,84 @@ def nearest_segment_join_distributed(
     replicate to their cell's nb chunk keys; per-(cell, chunk) rows are
     ~cap (hash-balanced) so no straggler task, and the min-reduction
     over all chunks is the min over the cell — EXACT, a plan change only
-    (the same
-    decomposition as dedup's chunk-pair guard, one-sided because NN is a
-    reduction, not a pair enumeration).
+    (the same decomposition as dedup's chunk-pair guard, one-sided
+    because NN is a reduction, not a pair enumeration).
 
     Output: (point columns..., seg_id, road_dist) — identical rows to
-    :func:`nearest_segment_join` (both exact; ties on distance break to
-    the lowest seg_id here, which only matters for the seg_id column)."""
+    :func:`nearest_segment_join`."""
     pid = point_id or points.columns[0]
     levels = list(res) if isinstance(res, (list, tuple)) else [res]
-    assert list(levels) == sorted(levels, reverse=True) and len(
-        set(levels)
-    ) == len(levels), f"levels must be strictly fine->coarse: {levels}"
-    # terminal: at res <= 1 the 3x3 dilation of any sample cell covers the
-    # whole (<= 2x2) grid, so every segment is a candidate of every point
-    term = 1
-    if levels[-1] > term:
-        r = levels[-1] - 3
-        while r > term:
-            levels.append(r)
-            r -= 3
-        levels.append(term)
-    else:
-        term = levels[-1]
-
     points = points.localCheckpoint(eager=False)
     segments = segments.localCheckpoint(eager=False)  # one consumer per level
     pts = points.select(
         pid, F.col(lon_col).alias("lon"), F.col(lat_col).alias("lat")
     )
+
+    def make_candidates(remaining: DataFrame, r: int) -> DataFrame:
+        # cov feeds the count agg AND the chunk join — truncate once
+        cov = segment_cover_df(segments, r).localCheckpoint(eager=False)
+        # pay-per-skew guard: only cells ABOVE the cap get chunked;
+        # everything else passes through with nb=1 via a left join
+        # against the hot-cell table — usually tiny or empty at a
+        # density-matched working res, so the guard costs ~nothing
+        # when there is no skew. The hot table is checkpointed: it
+        # feeds BOTH join sides, and recomputing its full-cover agg
+        # per consumer measured ~2x on the whole level (BENCH note).
+        hot = (
+            cov.groupBy("cell")
+            .agg(F.count("*").alias("cn"))
+            .filter(F.col("cn") > F.lit(max_segs_per_cell))
+            .select(
+                "cell",
+                F.ceil(F.col("cn") / F.lit(max_segs_per_cell))
+                .cast("int")
+                .alias("nb"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        nb1 = F.coalesce(F.col("nb"), F.lit(1))
+        cov = (
+            cov.join(hot, "cell", "left")
+            .withColumn("chunk", F.pmod(F.xxhash64("seg_id"), nb1).cast("int"))
+            .drop("nb")
+        )
+        pcell = (
+            remaining.withColumn(
+                "cell", cells.cell_id(F.col("lon"), F.col("lat"), r)
+            )
+            .join(hot, "cell", "left")
+            .select(
+                pid, "lon", "lat", "cell",
+                F.explode(F.sequence(F.lit(0), nb1 - 1)).alias("chunk"),
+            )
+        )
+        return pcell.join(cov, ["cell", "chunk"])
+
+    out = knn.cascade(
+        pts, pid, levels, 1, make_candidates, _seg_argmin(pid), exhaustive=True
+    )
+    return points.join(out, on=pid).withColumnRenamed("nn_dist", "road_dist")
+
+
+def _seg_argmin(pid: str):
+    """Per-point nearest segment: (pid, seg_id, nn_dist), distance ties
+    broken to the lowest seg_id so every plan variant agrees."""
     dist = _seg_dist_cols()
 
     def argmin(cand: DataFrame) -> DataFrame:
         # project the distance ONCE before aggregating: inlined in both
         # agg expressions it is evaluated twice per candidate row (no
-        # CSE across aggregates; ~20% on the level's agg at 194M rows).
-        # Tie-break deterministically to the lowest seg_id so the output
-        # does not depend on which plan variant ran.
+        # CSE across aggregates; ~20% on the level's agg at 194M rows)
         d = cand.select(pid, "seg_id", dist.alias("__d"))
         return d.groupBy(pid).agg(
             F.min_by(
                 F.col("seg_id"),
                 F.struct(F.col("__d").alias("d"), F.col("seg_id").alias("s")),
             ).alias("seg_id"),
-            F.min("__d").alias("road_dist"),
+            F.min("__d").alias("nn_dist"),
         )
 
-    remaining = pts
-    resolved: list[DataFrame] = []
-    out = None
-    for r in levels:
-        cell_h = 180.0 / (1 << r)
-        cov = segment_cover_df(segments, r)
-        pcell = remaining.withColumn(
-            "cell", cells.cell_id(F.col("lon"), F.col("lat"), r)
-        )
-        if max_segs_per_cell is not None:
-            # cov feeds the count agg AND the chunk join — truncate once
-            cov = cov.localCheckpoint(eager=False)
-            # pay-per-skew guard: only cells ABOVE the cap get chunked;
-            # everything else passes through with nb=1 via a left join
-            # against the hot-cell table — usually tiny or empty at a
-            # density-matched working res, so the guard costs ~nothing
-            # when there is no skew. The hot table is checkpointed: it
-            # feeds BOTH join sides, and recomputing its full-cover agg
-            # per consumer measured ~2x on the whole level (BENCH note).
-            hot = (
-                cov.groupBy("cell")
-                .agg(F.count("*").alias("cn"))
-                .filter(F.col("cn") > F.lit(max_segs_per_cell))
-                .select(
-                    "cell",
-                    F.ceil(F.col("cn") / F.lit(max_segs_per_cell))
-                    .cast("int")
-                    .alias("nb"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            nb1 = F.coalesce(F.col("nb"), F.lit(1))
-            cov = (
-                cov.join(hot, "cell", "left")
-                .withColumn(
-                    "chunk", F.pmod(F.xxhash64("seg_id"), nb1).cast("int")
-                )
-                .drop("nb")
-            )
-            pcell = pcell.join(hot, "cell", "left").select(
-                pid, "lon", "lat", "cell",
-                F.explode(F.sequence(F.lit(0), nb1 - 1)).alias("chunk"),
-            )
-            cand = pcell.join(cov, ["cell", "chunk"])
-        else:
-            cand = pcell.join(cov, "cell")
-        best = argmin(cand).localCheckpoint(eager=False)
-        if r == term:
-            resolved.append(best)  # complete candidate set: accept all
-            break
-        resolved.append(best.filter(F.col("road_dist") <= F.lit(cell_h)))
-        remaining = remaining.join(
-            resolved[-1].select(pid), on=pid, how="left_anti"
-        ).localCheckpoint(eager=False)
-        # early exit on an empty residue: every auto-appended coarser
-        # level would otherwise rebuild the FULL segment cover (explode +
-        # distinct Exchange over the fact table, plus the guard's count
-        # agg) just to join it against nothing. The count reads the
-        # checkpoint the next level would materialize anyway — ~free.
-        if remaining.count() == 0:
-            break
-    out = resolved[-1]
-    for s in resolved[:-1]:
-        out = s.unionByName(out)
-    return points.join(out, on=pid)
+    return argmin
 
 
 def _seg_dist_cols():
@@ -378,37 +344,33 @@ def nearest_segment_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    """(point columns..., seg_id, road_dist): exact nearest segment.
-    Candidates from the kRing(1) × dilated-cover equi-join; winners whose
-    distance exceeds the ring guarantee fall through to a brute-force pass
-    against the broadcast segment table (few, by cover construction)."""
+    """(point columns..., seg_id, road_dist): exact nearest segment, as a
+    one-level :func:`knn.cascade` at ``res`` with ring 1. Candidates come
+    from the cell × dilated-cover equi-join; winners farther than the
+    ring guarantee fall through to a brute-force pass against the
+    broadcast segment table (few, by cover construction)."""
     spark = points.sparkSession
     pid = point_id or points.columns[0]
-    cell_h = 180.0 / (1 << res)
     cov = F.broadcast(spark.createDataFrame(segment_cover))
     segs = F.broadcast(
         spark.createDataFrame(
             segment_cover.drop_duplicates("seg_id")[["seg_id", "ax", "ay", "bx", "by"]]
         )
     )
-    pts = points.select(pid, lon_col, lat_col)
-    dist = _seg_dist_cols()
+    pts = points.select(
+        pid, F.col(lon_col).alias("lon"), F.col(lat_col).alias("lat")
+    )
 
-    cand = pts.withColumn("cell", cells.cell_id(F.col(lon_col), F.col(lat_col), res)) \
-        .join(cov, on="cell", how="inner")
-    best = cand.groupBy(pid).agg(
-        F.min_by(F.col("seg_id"), dist).alias("seg_id"),
-        F.min(dist).alias("road_dist"),
+    def make_candidates(remaining: DataFrame, r: int) -> DataFrame:
+        return remaining.withColumn(
+            "cell", cells.cell_id(F.col("lon"), F.col("lat"), r)
+        ).join(cov, on="cell", how="inner")
+
+    out = knn.cascade(
+        pts, pid, [res], 1, make_candidates, _seg_argmin(pid),
+        lambda remaining: remaining.crossJoin(segs),
     )
-    # the dilated cover guarantees candidates for any point within cell_h of
-    # a segment; a winner under cell_h is provably globally nearest
-    sure = best.filter(F.col("road_dist") <= F.lit(cell_h))
-    unresolved = pts.join(sure.select(pid), on=pid, how="left_anti")
-    brute = unresolved.crossJoin(segs).groupBy(pid).agg(
-        F.min_by(F.col("seg_id"), dist).alias("seg_id"),
-        F.min(dist).alias("road_dist"),
-    )
-    return points.join(sure.unionByName(brute), on=pid)
+    return points.join(out, on=pid).withColumnRenamed("nn_dist", "road_dist")
 
 
 def classify_by_distance(
@@ -451,9 +413,10 @@ def boundary_types_for_blocks(
     ring, aligned with the ring's vertex order (what
     reblock._relabel_boundary_edges expects).
 
-    Distributed shape: ring vertices explode JVM-side; candidates come
-    from the dilated segment cover × kRing(1) equi-join (broadcast dim);
-    the nearest pick is ``min(struct(round(dist, 9), seg_id))`` so
+    Distributed shape: ring vertices explode JVM-side and run a one-level
+    :func:`knn.cascade` keyed on (block_id, vi): candidates come from the
+    dilated segment cover equi-join (broadcast dim), the residue from a
+    broadcast cross-join; the nearest pick is ``min(struct(round(dist, 9), seg_id))`` so
     distance ties — every shared corner vertex lies ON two grid lines —
     break deterministically toward the lowest seg_id on both the engine
     and any SQL oracle. The distance is rounded to the geometry snap
@@ -505,31 +468,34 @@ def boundary_types_for_blocks(
             F.col("xy")[0].alias("lon"), F.col("xy")[1].alias("lat"),
         )
     )
+    keys = ["block_id", "vi"]
     dist = F.round(_seg_dist_cols(), 9)
-    cell_h = 180.0 / (1 << res)
-    cand = verts.withColumn(
-        "cell", cells.cell_id(F.col("lon"), F.col("lat"), res)
-    ).join(cov, on="cell", how="inner")
-    best = cand.groupBy("block_id", "vi").agg(
-        F.min(F.struct(dist.alias("d"), F.col("seg_id"))).alias("__b")
-    ).select("block_id", "vi", F.col("__b.d").alias("d"), F.col("__b.seg_id").alias("seg_id"))
-    sure = best.filter(F.col("d") <= F.lit(cell_h))
-    unresolved = verts.join(
-        sure.select("block_id", "vi"), on=["block_id", "vi"], how="left_anti"
+
+    def argmin(cand: DataFrame) -> DataFrame:
+        return cand.groupBy(*keys).agg(
+            F.min(F.struct(dist.alias("d"), F.col("seg_id"))).alias("__b")
+        ).select(
+            *keys, F.col("__b.d").alias("nn_dist"), F.col("__b.seg_id").alias("seg_id")
+        )
+
+    def make_candidates(remaining: DataFrame, r: int) -> DataFrame:
+        return remaining.withColumn(
+            "cell", cells.cell_id(F.col("lon"), F.col("lat"), r)
+        ).join(cov, on="cell", how="inner")
+
+    nearest = knn.cascade(
+        verts.select(*keys, "lon", "lat"), keys, [res], 1,
+        make_candidates, argmin, lambda remaining: remaining.crossJoin(segs),
     )
-    brute = unresolved.crossJoin(segs).groupBy("block_id", "vi").agg(
-        F.min(F.struct(dist.alias("d"), F.col("seg_id"))).alias("__b")
-    ).select("block_id", "vi", F.col("__b.d").alias("d"), F.col("__b.seg_id").alias("seg_id"))
     vt = (
-        sure.unionByName(brute)
-        .join(types, on="seg_id", how="left")
+        nearest.join(types, on="seg_id", how="left")
         .withColumn(
             "vtype",
-            F.when(F.col("d") > F.lit(threshold), F.lit("gadm_boundary")).otherwise(
+            F.when(F.col("nn_dist") > F.lit(threshold), F.lit("gadm_boundary")).otherwise(
                 F.col("feature_type")
             ),
         )
-        .join(verts.select("block_id", "vi", "n"), on=["block_id", "vi"])
+        .join(verts.select(*keys, "n"), on=keys)
         .select("block_id", "vi", "n", "vtype")
     )
     a, b = vt.alias("a"), vt.alias("b")

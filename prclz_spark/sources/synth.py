@@ -222,28 +222,6 @@ def road_grid_lines(g: int = 8, jitter: float = 0.0) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def buildings_pdf(n_per_block: int = 6, g: int = 8) -> pd.DataFrame:
-    """Small rectangles jittered inside each grid block (FIXTURES.md §3)."""
-    step = AOI_SPAN / g
-    rows = []
-    osm = 0
-    for gy in range(g):
-        for gx in range(g):
-            x0 = AOI_LON0 + gx * step
-            y0 = AOI_LAT0 + gy * step
-            for b in range(n_per_block):
-                u = ((osm * A_U + B_U) % M1) / M1
-                v = ((osm * A_V + B_V) % M1) / M1
-                cx = x0 + (0.15 + 0.7 * u) * step
-                cy = y0 + (0.15 + 0.7 * v) * step
-                s = 0.03 * step
-                ring = [[cx - s, cy - s], [cx + s, cy - s],
-                        [cx + s, cy + s], [cx - s, cy + s]]
-                rows.append({"osm_id": f"bldg_{osm}", "geometry": ring})
-                osm += 1
-    return pd.DataFrame(rows)
-
-
 # ---------------------------------------------------------------------------
 # parquet fixture writer (pyarrow — visible to the DuckDB oracle by path)
 # ---------------------------------------------------------------------------

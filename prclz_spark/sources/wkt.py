@@ -52,11 +52,6 @@ def wkt_ring_udf(wkt: pd.Series) -> pd.Series:
     return wkt.map(parse_wkt_ring)
 
 
-@pandas_udf(T.StringType())
-def ring_wkt_udf(ring: pd.Series) -> pd.Series:
-    return ring.map(ring_to_wkt)
-
-
 def read_wkt_csv(
     spark: SparkSession,
     path: str,

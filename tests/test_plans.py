@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from prclz_spark import contract
-from prclz_spark.operators import assign, complexity, knn, tiles
+from prclz_spark.operators import assign, complexity, knn, rangejoin, tiles
 from prclz_spark.sources import synth
 
 
@@ -142,15 +142,30 @@ def test_knn_nonbroadcast_nonempty_residue_exact(spark):
     assert "CartesianProduct" not in _plan(b)
 
 
-def test_cascade_rejects_coarse_to_fine_levels(spark):
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda pts, t, lv: knn.knn_join(pts, t, lv, target_id="target_id"),
+        lambda pts, t, lv: knn.parcel_assign(pts, t, lv, point_id="image_id"),
+        lambda pts, t, lv: rangejoin.nearest_segment_join_distributed(
+            pts, t, lv, point_id="image_id"
+        ),
+    ],
+    ids=["knn_join", "parcel_assign", "nearest_segment_join_distributed"],
+)
+def test_cascade_rejects_coarse_to_fine_levels(spark, run):
+    """Every caller of the shared cascade inherits its level-order guard."""
     centers = synth.grid_blocks(4).copy()
-    centers["tx"] = [sum(p[0] for p in r) / 4.0 for r in centers.geometry]
-    centers["ty"] = [sum(p[1] for p in r) / 4.0 for r in centers.geometry]
-    tgt = spark.createDataFrame(
-        centers[["block_id", "tx", "ty"]].rename(columns={"block_id": "target_id"})
-    )
+    cx = [sum(p[0] for p in r) / 4.0 for r in centers.geometry]
+    cy = [sum(p[1] for p in r) / 4.0 for r in centers.geometry]
+    # one frame serves as targets, anchors and (point-like) segments
+    tgt = spark.createDataFrame(centers.drop(columns="geometry").assign(
+        target_id=centers.block_id, anchor_id=centers.block_id,
+        seg_id=centers.block_id, tx=cx, ty=cy, ax=cx, ay=cy, bx=cx, by=cy,
+    ))
+    pts = _points(spark, 100).withColumn("block_id", F.lit("b0"))
     with pytest.raises(AssertionError, match="fine->coarse"):
-        knn.knn_join(_points(spark, 100), tgt, [14, 17], target_id="target_id")
+        run(pts, tgt, [14, 17])
 
 
 def test_tiles_rect_plan_jvm_only(spark):
