@@ -188,8 +188,8 @@ STEP = synth.AOI_SPAN / GRID_G
 
 
 def _grid_cover(spark: SparkSession):
-    # pandas cover → the operator's small-dimension fast path (interior
-    # cells JVM-only; boundary rings via executor broadcast)
+    # pandas cover → the operator's small-dimension fast path (broadcast
+    # cover with cell-local edge lists; JVM ray cast on boundary cells)
     return assign.block_cover_pdf(synth.grid_blocks(GRID_G), PIP_RES)
 
 

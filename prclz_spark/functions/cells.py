@@ -157,12 +157,19 @@ def cell_id_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
 
 def cell_bounds(cell: int) -> tuple[float, float, float, float]:
     """(lon_min, lat_min, lon_max, lat_max) of a cell."""
-    res = int(cell // RES_BITS_SHIFT)
-    nx = _nx(res)
-    rem = cell - res * RES_BITS_SHIFT
-    cx, cy = int(rem // XY_SHIFT), int(rem % XY_SHIFT)
+    return tuple(float(v[0]) for v in cell_bounds_np(np.array([cell])))
+
+
+def cell_bounds_np(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized :func:`cell_bounds` over an int64 id array (mixed
+    resolutions allowed)."""
+    ids = np.asarray(ids, dtype=np.int64)
+    res = ids // RES_BITS_SHIFT
+    rem = ids - res * RES_BITS_SHIFT
+    cx, cy = rem // XY_SHIFT, rem % XY_SHIFT
+    nx = np.left_shift(1, res).astype(float)
     w, h = 360.0 / nx, 180.0 / nx
-    return (-180.0 + cx * w, -90.0 + cy * h, -180.0 + (cx + 1) * w, -90.0 + (cy + 1) * h)
+    return -180.0 + cx * w, -90.0 + cy * h, -180.0 + (cx + 1) * w, -90.0 + (cy + 1) * h
 
 
 def cover_cells_classified(ring: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:

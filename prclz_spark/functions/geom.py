@@ -58,6 +58,23 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nd
     return (crossings % 2).astype(bool)
 
 
+def ring_edges(ring: np.ndarray) -> np.ndarray:
+    """(n, 4) ``[x0, y0, x1, y1]`` edges of ``ring`` exactly as
+    points_in_polygon walks them, less the ones that can never flip its
+    parity: horizontal edges (the straddle test is always False) and edges
+    with a NaN coordinate (straddle or ``px < xint`` is always False).
+    A ring with fewer than 3 vertices once the closing one is dropped
+    (empty, None, a point, a segment) has no area and gets no edges."""
+    if ring.ndim != 2 or ring.shape[0] < 3:
+        return np.zeros((0, 4))
+    if np.array_equal(ring[0], ring[-1]):
+        ring = ring[:-1]
+    if ring.shape[0] < 3:
+        return np.zeros((0, 4))
+    e = np.concatenate([ring, np.roll(ring, -1, axis=0)], axis=1)
+    return e[(e[:, 1] != e[:, 3]) & ~np.isnan(e).any(axis=1)]
+
+
 def point_in_polygon(x: float, y: float, ring: np.ndarray) -> bool:
     return bool(points_in_polygon(np.array([x]), np.array([y]), ring)[0])
 

@@ -22,8 +22,10 @@ from pyspark.sql import functions as F
 
 
 def _open_ring(g: Column) -> Column:
-    """Drop the closing vertex when the ring repeats it."""
-    first, last = F.element_at(g, 1), F.element_at(g, -1)
+    """Drop the closing vertex when the ring repeats it. try_element_at:
+    codegen may hoist the ends out of the size guard, and element_at raises
+    on an empty ring under ANSI."""
+    first, last = F.try_element_at(g, F.lit(1)), F.try_element_at(g, F.lit(-1))
     closed = (F.size(g) > 1) & (first[0] == last[0]) & (first[1] == last[1])
     return F.when(closed, F.slice(g, 1, F.size(g) - 1)).otherwise(g)
 
@@ -124,3 +126,62 @@ def with_ring_bounds_rect(
         .withColumn(prefix + "rect", (F.size(F.col("__ring")) == 4) & edges_ok)
     )
     return df.drop("__ring", "__nxt")
+
+
+def with_ring_edges(
+    df: DataFrame, geometry_col: str = "geometry", out_col: str = "edges"
+) -> DataFrame:
+    """Append ``out_col``: the ring's ``[x0, y0, x1, y1]`` edges as an
+    array<array<double>> — the JVM twin of ``geom.ring_edges`` (same walk,
+    horizontal and NaN edges dropped, empty for rings under 3 vertices)."""
+    df = df.withColumn("__ring", _open_ring(F.col(geometry_col)))
+    ring = F.col("__ring")
+    ok = F.size(ring) >= 3
+    # guarded: slice raises on an empty ring under ANSI
+    df = df.withColumn(
+        "__nxt",
+        F.when(
+            ok,
+            F.concat(F.slice(ring, 2, F.size(ring) - 1), F.array(F.try_element_at(ring, F.lit(1)))),
+        ),
+    )
+    edges = F.filter(
+        F.zip_with(
+            F.col("__ring"), F.col("__nxt"), lambda a, b: F.array(a[0], a[1], b[0], b[1])
+        ),
+        lambda e: (e[1] != e[3])
+        & ~(F.isnan(e[0]) | F.isnan(e[1]) | F.isnan(e[2]) | F.isnan(e[3])),
+    )
+    empty = F.array().cast("array<array<double>>")
+    return df.withColumn(out_col, F.when(ok, edges).otherwise(empty)).drop(
+        "__ring", "__nxt"
+    )
+
+
+def ring_contains(edges: Column, x: Column, y: Column) -> Column:
+    """Even-odd ray cast of point (x, y) against an ``[x0, y0, x1, y1]``
+    edge array: the Column twin of ``geom.points_in_polygon``, with its
+    exact arithmetic (straddle test, then ``x < x0 + (y - y0) / (y1 - y0)
+    * (x1 - x0)``), so answers are bit-identical for the same edges. Only
+    parity matters, so any edge subset that keeps every edge the ray can
+    cross gives the same answer. A null point gives null (no match).
+
+    All three inputs enter as lambda ARGUMENTS (one single-element
+    ``transform``), never as closures: each is evaluated once per row
+    (the HOF-closure rule), and the predicate stays safe inside a join
+    condition — canonicalization renumbers lambda variables into the
+    same id space as attributes, so a closed-over column can vanish from
+    the canonical ``references`` and InferFiltersFromConstraints then
+    pushes the predicate to the side that lacks it (Spark 4.1)."""
+
+    def cast(p):
+        def flip(acc, e):
+            y0, y1 = e[1], e[3]
+            straddle = (y0 > p["y"]) != (y1 > p["y"])
+            xint = e[0] + (p["y"] - y0) / (y1 - y0) * (e[2] - e[0])
+            return acc != (straddle & (p["x"] < xint))
+
+        return F.aggregate(p["e"], F.lit(False), flip)
+
+    bound = F.array(F.struct(x.alias("x"), y.alias("y"), edges.alias("e")))
+    return F.element_at(F.transform(bound, cast), 1)

@@ -11,9 +11,11 @@ in-memory rtree. The distributed re-expression (SURVEY.md §2.3 J1) is a
    its covering cell set. The join on ``cell`` is a plain equi-join
    Catalyst can broadcast (small dim) or shuffle (large dim, AQE
    skew-split).
-2. *exact refine* — surviving (point, polygon) candidates pass through an
-   Arrow-vectorized ray-cast PIP kernel, batched per polygon so each
-   polygon's ring is converted to numpy once per batch, not per row.
+2. *exact refine* — a candidate in an interior cell is assigned by the
+   join alone; one in a boundary cell passes a JVM even-odd ray cast
+   (``geomcols.ring_contains``) over that cell's own edge list: the ring
+   edges a ``+x`` ray from inside the cell can cross, built once on the
+   dimension side. One filter, one scan of the points, no Python worker.
 
 Skew: dense urban cells concentrate candidates. Three levers, all explicit:
 ``res`` (smaller cells spread hot spots), optional *salting* (replicate the
@@ -29,12 +31,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..functions import cells, geom
+from ..functions import cells, geom, geomcols
 
 RING_TYPE = T.ArrayType(T.ArrayType(T.DoubleType()))
 
@@ -53,10 +56,12 @@ def block_cover_pdf(blocks_pdf: pd.DataFrame, res: int) -> pd.DataFrame:
     no exact-PIP refine (the standard covering-with-containment-flag
     optimization; the reference's rtree gives only a maybe-set, SURVEY.md
     §2.3 J1). At fine ``res`` the interior share approaches 1 - O(1/√cells)
-    so the Python refine touches only a boundary sliver."""
+    so the ray cast touches only a boundary sliver."""
     frames = []
     for r in blocks_pdf.itertuples(index=False):
         ring = geom.ring_to_np(r.geometry)
+        if len(geom.ring_edges(ring)) == 0:
+            continue  # no area (None, empty, under 3 vertices): covers nothing
         ids, interior = cells.cover_cells_classified(ring, res)
         frames.append(pd.DataFrame({
             "cell": ids,
@@ -64,24 +69,77 @@ def block_cover_pdf(blocks_pdf: pd.DataFrame, res: int) -> pd.DataFrame:
             "geometry": [r.geometry] * len(ids),
             "interior": interior,
         }))
+    if not frames:
+        return pd.DataFrame({"cell": np.zeros(0, np.int64), "block_id": [],
+                             "geometry": [], "interior": np.zeros(0, bool)})
     return pd.concat(frames, ignore_index=True)
 
 
 # ---------------------------------------------------------------------------
-# PIP refine kernel
+# cell-local edge lists (the boundary refine's dimension side)
 # ---------------------------------------------------------------------------
 
-@pandas_udf(T.BooleanType())
-def _pip_udf(lon: pd.Series, lat: pd.Series, block_id: pd.Series, ring: pd.Series) -> pd.Series:
-    """Batched PIP: group by block_id so each ring hits numpy once per
-    batch; then one vectorized ray-cast per polygon over all its points."""
-    out = np.zeros(len(lon), dtype=bool)
-    lon_v, lat_v = lon.to_numpy(), lat.to_numpy()
-    for bid, idx in pd.Series(range(len(block_id))).groupby(block_id.to_numpy()).groups.items():
-        ii = np.asarray(idx)
-        r = geom.ring_to_np(ring.iloc[ii[0]])
-        out[ii] = geom.points_in_polygon(lon_v[ii], lat_v[ii], r)
-    return pd.Series(out)
+# band padding, as a fraction of a cell: far above float rounding, so a
+# point whose cell id rounds across a cell edge still finds every edge
+EDGE_PAD = 1.0 / 16
+
+
+def _cell_edges(cover_pdf: pd.DataFrame) -> list:
+    """Per cover row, the ``[x0, y0, x1, y1]`` ring edges a ``+x`` ray from
+    a point in that cell can cross; ``None`` on interior rows, which need
+    no refine. An edge is kept when its y-range meets the cell's y-band and
+    its east end is at or east of the cell's west edge, each bound padded
+    by EDGE_PAD of a cell, so rounding can only add edges, never drop one.
+    The ray cast's parity over any superset of the crossable edges equals
+    the one over the whole ring. Vectorized per block with numpy; reads
+    ``interior`` as final, so it runs on the cover actually broadcast
+    (compacted or not)."""
+    out = [None] * len(cover_pdf)
+    pos = np.nonzero(~cover_pdf["interior"].to_numpy(dtype=bool))[0]
+    cell_ids = cover_pdf["cell"].to_numpy()
+    geoms = cover_pdf["geometry"]
+    for ii in cover_pdf.iloc[pos].groupby("block_id", sort=False).indices.values():
+        rows = pos[ii]
+        e = geom.ring_edges(geom.ring_to_np(geoms.iloc[rows[0]]))
+        lo, hi = np.minimum(e[:, 1], e[:, 3]), np.maximum(e[:, 1], e[:, 3])
+        east = np.maximum(e[:, 0], e[:, 2])
+        x0, y0, x1, y1 = cells.cell_bounds_np(cell_ids[rows])
+        padx, pady = (x1 - x0) * EDGE_PAD, (y1 - y0) * EDGE_PAD
+        step = max(1, 4_000_000 // max(1, len(e)))  # bounds the mask's memory
+        for c in range(0, len(rows), step):
+            sl = slice(c, c + step)
+            m = (
+                (lo[None, :] <= (y1[sl] + pady[sl])[:, None])
+                & (hi[None, :] >= (y0[sl] - pady[sl])[:, None])
+                & (east[None, :] >= (x0[sl] - padx[sl])[:, None])
+            )
+            for k, r in enumerate(rows[sl]):
+                out[r] = e[m[k]].tolist()
+    return out
+
+
+def _cover_frame(spark, cover_pdf: pd.DataFrame) -> DataFrame:
+    """The broadcast dimension (cell, block_id, interior, edges), built
+    through Arrow with an explicit edge type (no inference, same frame
+    under a vanilla session)."""
+    if "interior" not in cover_pdf.columns:
+        # unclassified cover: every cell is a boundary cell
+        cover_pdf = cover_pdf.assign(interior=False)
+    tbl = pa.Table.from_pandas(
+        cover_pdf[["cell", "block_id", "interior"]], preserve_index=False
+    ).append_column(
+        "edges",
+        pa.array(_cell_edges(cover_pdf), type=pa.list_(pa.list_(pa.float64()))),
+    )
+    return F.broadcast(spark.createDataFrame(tbl))
+
+
+def _refine(cand: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
+    """The single exact filter over (point, cover row) candidates: an
+    interior cell assigns outright, a boundary cell by the ray cast over
+    its edge list."""
+    inside = geomcols.ring_contains(F.col("edges"), F.col(lon_col), F.col(lat_col))
+    return cand.filter(F.col("interior") | inside).drop("cell", "interior", "edges")
 
 
 # ---------------------------------------------------------------------------
@@ -102,9 +160,9 @@ def assign_points_to_blocks(
 
     ``points``: any DataFrame with lon/lat columns. ``cover``: the exploded
     (cell, block_id, geometry[, interior]) dimension — a *pandas* DataFrame
-    (block_cover_pdf) takes the small-dimension fast path (no geometry ever
-    crosses Arrow: interior cells resolve JVM-side, boundary rings ride a
-    task broadcast), a Spark DataFrame takes the distributed path. ``how``:
+    (block_cover_pdf) takes the small-dimension fast path (the broadcast
+    carries per-cell edge lists, never whole rings), a Spark DataFrame
+    takes the distributed path. ``how``:
     'inner' keeps matched points (sjoin op='within'), 'left' keeps all
     (sjoin how='left', utils.py:73).
 
@@ -128,52 +186,16 @@ def assign_points_to_blocks(
     raise ValueError(how)
 
 
-def _ring_pip_udf(spark, cover_pdf: pd.DataFrame):
-    """Exact ray-cast refine for boundary-cell candidates: rings resolved
-    from an executor broadcast keyed by block_id — the Arrow frame carries
-    primitives only."""
-    rings = {
-        r.block_id: geom.ring_to_np(r.geometry)
-        for r in cover_pdf.drop_duplicates("block_id").itertuples(index=False)
-    }
-    bc = spark.sparkContext.broadcast(rings)
-
-    @pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series, block_id: pd.Series) -> pd.Series:
-        ring_map = bc.value
-        out = np.zeros(len(lon), dtype=bool)
-        lon_v, lat_v = lon.to_numpy(), lat.to_numpy()
-        codes, uniques = pd.factorize(block_id)
-        for k, bid in enumerate(uniques):
-            ii = np.nonzero(codes == k)[0]
-            out[ii] = geom.points_in_polygon(lon_v[ii], lat_v[ii], ring_map[bid])
-        return pd.Series(out)
-
-    return pip
-
-
 def _assign_small_cover(
     points: DataFrame, cover_pdf: pd.DataFrame, res: int, lon_col: str, lat_col: str
 ) -> DataFrame:
-    """Small-dimension path. Split the cover by the ``interior`` flag:
-    points in interior cells are assigned by the broadcast equi-join alone
-    (whole-stage codegen, zero Python); only boundary-cell candidates pass
-    the exact ray-cast (_ring_pip_udf)."""
-    spark = points.sparkSession
-    if "interior" not in cover_pdf.columns:
-        cover_pdf = cover_pdf.assign(interior=False)
-    cov_df = F.broadcast(
-        spark.createDataFrame(cover_pdf[["cell", "block_id", "interior"]])
-    )
-    pip = _ring_pip_udf(spark, cover_pdf)
-
+    """Small-dimension path: one broadcast equi-join on the point's cell,
+    then one filter (_refine). Interior-cell candidates pass on the flag
+    alone; boundary-cell ones by the JVM ray cast over the cell's edge
+    list. The points are scanned once and no Python worker starts."""
     pt = points.withColumn("cell", cells.cell_id(F.col(lon_col), F.col(lat_col), res))
-    cand = pt.join(cov_df, on="cell", how="inner")
-    inner = cand.filter(F.col("interior"))
-    boundary = cand.filter(~F.col("interior")).filter(
-        pip(F.col(lon_col), F.col(lat_col), F.col("block_id"))
-    )
-    return inner.unionByName(boundary).drop("cell", "interior")
+    cand = pt.join(_cover_frame(points.sparkSession, cover_pdf), on="cell", how="inner")
+    return _refine(cand, lon_col, lat_col)
 
 
 def compact_cover_pdf(
@@ -235,17 +257,11 @@ def assign_points_to_blocks_compact(
     count for stage metrics (pipeline.run_pipeline) compact once and
     hand it in instead of paying the quadtree fold twice."""
     assert 0 <= res_min <= res, (res, res_min)
-    spark = points.sparkSession
     comp = (
         compacted_pdf
         if compacted_pdf is not None
         else compact_cover_pdf(cover_pdf, res, res_min)
     )
-    cov_df = F.broadcast(
-        spark.createDataFrame(comp[["cell", "block_id", "interior"]])
-    )
-    pip = _ring_pip_udf(spark, cover_pdf)
-
     ancestors = F.array(
         *[
             cells.cell_id(F.col(lon_col), F.col(lat_col), r)
@@ -253,12 +269,39 @@ def assign_points_to_blocks_compact(
         ]
     )
     pt = points.withColumn("cell", F.explode(ancestors))
-    cand = pt.join(cov_df, on="cell", how="inner")
-    inner = cand.filter(F.col("interior"))
-    boundary = cand.filter(~F.col("interior")).filter(
-        pip(F.col(lon_col), F.col(lat_col), F.col("block_id"))
+    cand = pt.join(_cover_frame(points.sparkSession, comp), on="cell", how="inner")
+    return _refine(cand, lon_col, lat_col)
+
+
+def _cover_edges(cover: DataFrame) -> DataFrame:
+    """Spark-cover twin of _cell_edges, on the dimension side: ``geometry``
+    becomes the row's cell-local ``edges`` (ring edges from
+    geomcols.with_ring_edges, kept by the same padded band tests against
+    the cell's bounds decoded from its id; null on interior rows). An
+    unclassified cover gets ``interior`` = False."""
+    if "interior" not in cover.columns:
+        cover = cover.withColumn("interior", F.lit(False))
+    cell = F.col("cell")  # res * 2^52 + cx * 2^26 + cy (cells.cell_id)
+    r = F.shiftright(cell, 52)
+    cx = F.shiftright(cell, 26).bitwiseAND(cells.XY_SHIFT - 1)
+    cy = cell.bitwiseAND(cells.XY_SHIFT - 1)
+    nx = F.pow(F.lit(2.0), r)
+    w, h = F.lit(360.0) / nx, F.lit(180.0) / nx
+    cov = (
+        geomcols.with_ring_edges(cover, "geometry", "__ring_edges")
+        .withColumn("__x0", F.lit(-180.0) + cx * w - w * EDGE_PAD)
+        .withColumn("__y0", F.lit(-90.0) + cy * h - h * EDGE_PAD)
+        .withColumn("__y1", F.lit(-90.0) + (cy + 1) * h + h * EDGE_PAD)
     )
-    return inner.unionByName(boundary).drop("cell", "interior")
+    local = F.filter(
+        F.col("__ring_edges"),
+        lambda e: (F.least(e[1], e[3]) <= F.col("__y1"))
+        & (F.greatest(e[1], e[3]) >= F.col("__y0"))
+        & (F.greatest(e[0], e[2]) >= F.col("__x0")),
+    )
+    return cov.withColumn("edges", F.when(~F.col("interior"), local)).drop(
+        "geometry", "__ring_edges", "__x0", "__y0", "__y1"
+    )
 
 
 def _assign_dist_cover(
@@ -270,11 +313,11 @@ def _assign_dist_cover(
     broadcast_cover: bool,
     salt: int,
 ) -> DataFrame:
-    """Distributed-cover path (large polygon dimension): geometry rides the
-    join as a column; optional salting spreads hot cells."""
+    """Distributed-cover path (large polygon dimension): each cover row
+    carries its cell-local edge list (_cover_edges) across the join in
+    place of the geometry; optional salting spreads hot cells."""
     pt = points.withColumn("cell", cells.cell_id(F.col(lon_col), F.col(lat_col), res))
-    cov = cover
-    has_interior = "interior" in cover.columns
+    cov = _cover_edges(cover)
     if salt > 0:
         cov = cov.withColumn(
             "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
@@ -286,16 +329,7 @@ def _assign_dist_cover(
     if broadcast_cover:
         cov = F.broadcast(cov)
     cand = pt.join(cov, on=join_keys, how="inner")
-    drop_cols = ["geometry", "cell", "__salt"]
-    if has_interior:
-        inner = cand.filter(F.col("interior"))
-        boundary = cand.filter(~F.col("interior")).filter(
-            _pip_udf(F.col(lon_col), F.col(lat_col), F.col("block_id"), F.col("geometry"))
-        )
-        return inner.unionByName(boundary).drop(*drop_cols, "interior")
-    return cand.filter(
-        _pip_udf(F.col(lon_col), F.col(lat_col), F.col("block_id"), F.col("geometry"))
-    ).drop(*drop_cols)
+    return _refine(cand, lon_col, lat_col).drop("__salt")
 
 
 def largest_overlap_assign(
@@ -318,8 +352,6 @@ def largest_overlap_assign(
     geometry onto every covering cell row makes the dimension frame
     orders of magnitude heavier to ship/broadcast for zero information."""
     from pyspark.sql import Window
-
-    from ..functions import geomcols
 
     # centroid is pure Column arithmetic (geomcols) — the former
     # mapInPandas stage paid ~9 s / 20k rows in nested-array Arrow

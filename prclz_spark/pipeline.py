@@ -52,7 +52,9 @@ EVENTS_BUCKETS = 32
 
 
 def image_points(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    base = spark.range(0, n, numPartitions=partitions or 32)
+    """(image_id, lon, lat) for ids 0..n-1, JVM-synthesized; ``partitions``
+    defaults to Spark's defaultParallelism (one task per core)."""
+    base = spark.range(0, n, numPartitions=partitions)
     lon, lat = synth.lonlat_cols(F.col("id"))
     return base.select(
         F.col("id").alias("image_id"), lon.alias("lon"), lat.alias("lat")

@@ -172,9 +172,9 @@ def test_compact_assign_matches_classic(spark):
 
 
 def test_compact_assign_plan_shape(spark):
-    """One Generate (the ancestor explode), cover joins stay broadcast,
-    exactly one ArrowEvalPython (the boundary ray-cast), no cell
-    Exchange — the compact path must not smuggle in a shuffle."""
+    """One Generate (the ancestor explode), the cover join stays
+    broadcast, no Python eval (the boundary ray cast is a JVM filter), no
+    cell Exchange — the compact path must not smuggle in a shuffle."""
     from pyspark.sql import functions as F
 
     from prclz_spark.operators import assign
@@ -186,8 +186,8 @@ def test_compact_assign_plan_shape(spark):
     pts = base.select(F.col("id").alias("image_id"), lon.alias("lon"), lat.alias("lat"))
     out = assign.assign_points_to_blocks_compact(pts, cover, 15, 11)
     p = out._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Generate") == 2  # one explode per union branch
-    assert p.count("ArrowEvalPython") == 1
+    assert p.count("Generate") == 1  # one scan of the points, no union
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     assert "BroadcastHashJoin" in p
     assert "Exchange hashpartitioning(cell" not in p
 

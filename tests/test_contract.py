@@ -70,8 +70,9 @@ def test_query_matches_oracle(spark, name):
 # (the inputs whose schema a session could otherwise have to infer)
 VANILLA_SAMPLE = [
     "spatial_block_extract", "spatial_boundary_types", "spatial_knn",
-    "spatial_largest_overlap", "spatial_parcel_assign", "spatial_road_dist",
-    "spatial_road_dist_dist", "spatial_tiles",
+    "spatial_largest_overlap", "spatial_parcel_assign", "spatial_pip_assign",
+    "spatial_pip_assign_compact", "spatial_road_dist", "spatial_road_dist_dist",
+    "spatial_tiles",
 ]
 
 

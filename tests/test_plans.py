@@ -1,6 +1,6 @@
 """Physical-plan regression tests: the optimizations the engine claims
 must be visible in `.explain` output — broadcast joins, pruned scans,
-Python confined to the boundary branch, explicit partition counts.
+no Python eval in the assign refine, explicit partition counts.
 
 These guard against silent plan regressions (e.g. a broadcast falling
 back to sort-merge, or a new Exchange sneaking in front of the fact
@@ -35,8 +35,8 @@ def test_assign_plan_shape(spark, cover):
     # cell prefilter is a broadcast hash join, not shuffled
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
-    # exactly one Python eval: the boundary-sliver PIP refine
-    assert p.count("ArrowEvalPython") == 1
+    # no Python eval: the boundary refine is a JVM ray cast
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     # the fact (point) side is never exchanged before the join
     assert "Exchange hashpartitioning(image_id" not in p
 
@@ -201,6 +201,18 @@ def test_assign_salted_equivalence(spark):
     assert a.equals(b)
 
 
+def test_assign_salted_plan_no_python(spark):
+    """The salted distributed path refines in the JVM too: edge lists are
+    derived from the cover's geometry on the dimension side, and no Python
+    eval appears in the executed plan."""
+    cov_sdf = spark.createDataFrame(assign.block_cover_pdf(synth.grid_blocks(4), 15))
+    out = assign.assign_points_to_blocks(
+        _points(spark, 3_000), cov_sdf, 15, broadcast_cover=False, salt=4
+    )
+    p = _plan(out)
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+
+
 def test_tiles_poly_matches_rect_on_grid(spark):
     """The generic polygon-clip tiling path agrees with the rectilinear
     JVM path on axis-aligned blocks."""
@@ -327,8 +339,8 @@ def test_largest_overlap_plan_shape(spark):
 
 def test_manifest_plan_single_python_eval(spark, cover):
     """training_manifest: caption features + split are inlined Column
-    arithmetic — the ONLY Python in the plan stays the PIP boundary
-    refine, and the cover join stays broadcast."""
+    arithmetic and the PIP refine is a JVM ray cast — no Python eval in
+    the plan at all, and the cover join stays broadcast."""
     from prclz_spark.operators import curation
 
     img = (
@@ -341,7 +353,7 @@ def test_manifest_plan_single_python_eval(spark, cover):
     )
     out = curation.training_manifest(img, cover, 15, idnum=F.col("image_id"))
     p = _plan(out)
-    assert p.count("ArrowEvalPython") == 1
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     assert "BroadcastHashJoin" in p
     # the BPE piece count really is in the JVM projection, not a UDF
     assert "regexp_extract_all" in p
