@@ -64,19 +64,6 @@ class PlanarGraph:
                 g.add_edge(u, v)
         return g
 
-    @staticmethod
-    def from_linestrings(lines: list[np.ndarray], close: bool = True) -> "PlanarGraph":
-        """from_multilinestring (topology.py:340-361) — note the reference
-        *closes* each linestring back to its first vertex; replicated."""
-        g = PlanarGraph()
-        for line in lines:
-            coords = [(float(p[0]), float(p[1])) for p in line]
-            if close and len(coords) > 1:
-                coords.append(coords[0])
-            for a, b in zip(coords, coords[1:]):
-                g.add_edge(a, b)
-        return g
-
     # -- basic queries ----------------------------------------------------
     def number_of_nodes(self) -> int:
         return len(self.adj)

@@ -101,7 +101,6 @@ def tile_membership_poly(
     t: int = 2,
     footprint: float = DEFAULT_FOOTPRINT,
     id_col: str = "image_id",
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """Tile membership against arbitrary polygon rings (cover = exploded
     cell dimension from operators.assign.block_cover_*). Exact clip kernel."""
@@ -110,8 +109,7 @@ def tile_membership_poly(
     cx = (F.col("tx0") + F.col("tx1")) / 2
     cy = (F.col("ty0") + F.col("ty1")) / 2
     tiles = tiles.withColumn("cell", F.explode(cells.kring_cells(cx, cy, res, 1)))
-    cov = F.broadcast(cover) if broadcast_cover else cover
-    cand = tiles.join(cov, on="cell", how="inner")
+    cand = tiles.join(F.broadcast(cover), on="cell", how="inner")
 
     @F.pandas_udf(T.DoubleType())
     def overlap_frac(tx0, ty0, tx1, ty1, block_id, ring):

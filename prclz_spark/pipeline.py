@@ -51,10 +51,10 @@ EVENTS_ASSIGN_TABLE = "events_assign"
 EVENTS_BUCKETS = 32
 
 
-def image_points(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    """(image_id, lon, lat) for ids 0..n-1, JVM-synthesized; ``partitions``
-    defaults to Spark's defaultParallelism (one task per core)."""
-    base = spark.range(0, n, numPartitions=partitions)
+def image_points(spark: SparkSession, n: int) -> DataFrame:
+    """(image_id, lon, lat) for ids 0..n-1, JVM-synthesized, in Spark's
+    defaultParallelism partitions (one task per core)."""
+    base = spark.range(0, n)
     lon, lat = synth.lonlat_cols(F.col("id"))
     return base.select(
         F.col("id").alias("image_id"), lon.alias("lon"), lat.alias("lat")
@@ -80,9 +80,9 @@ def _caption_phash_cols(df: DataFrame) -> DataFrame:
     )
 
 
-def image_rows(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
+def image_rows(spark: SparkSession, n: int) -> DataFrame:
     """image_points plus the synthesized caption/phash columns."""
-    return _caption_phash_cols(image_points(spark, n, partitions))
+    return _caption_phash_cols(image_points(spark, n))
 
 
 def run_pipeline(
@@ -92,23 +92,14 @@ def run_pipeline(
     grid_g: int = 8,
     res: int = 17,
     prefix_res: int = 6,
-    lines_pdf=None,
-    res_min: int | None = None,
-    compact_cover_rows: int = 20_000,
 ) -> dict:
     """The reference's full stage chain — assign → k-complexity →
     parcelization → reblocking (SURVEY.md §3) — each stage committed
     atomically with per-partition lineage and resumable independently.
 
-    Stage 1 is size-gated between the classic single-cell cover join and
-    the compacted ancestor-array join (assign_points_to_blocks_compact):
-    when the classified cover exceeds ``compact_cover_rows`` rows, the
-    interior cells are compacted through the quadtree down to ``res_min``
-    (default res-4, floored at prefix_res) before broadcasting — the
-    production lever for continent-scale AOIs at fine res, where the flat
-    cover would blow the broadcast budget. Row-identical to the classic
-    join (pinned in tests/test_cells_compact.py); the chosen plan and both
-    cover sizes land in the assign stage's lineage metrics.
+    Stage 1 is the flat single-cell broadcast join
+    (assign_points_to_blocks); the cover's row count lands in the assign
+    stage's lineage metrics.
 
     Returns per-stage counts actually computed this run (0 for a fully
     resumed stage)."""
@@ -118,8 +109,6 @@ def run_pipeline(
     computed = {}
 
     # -- stage 1: spatial assign, partitioned by cell prefix ---------------
-    rmin = res_min if res_min is not None else max(prefix_res, res - 4)
-    use_compact = len(cover) > compact_cover_rows and rmin < res
     pts = image_points(spark, n_images)
     pts = pts.withColumn(
         "cell_prefix",
@@ -131,22 +120,10 @@ def run_pipeline(
     n_todo = todo.count()
     computed[ASSIGN_TABLE] = n_todo
     if n_todo > 0:
-        if use_compact:
-            comp = assign_op.compact_cover_pdf(cover, res, rmin)
-            assigned_new = assign_op.assign_points_to_blocks_compact(
-                todo, cover, res, rmin, compacted_pdf=comp
-            )
-            broadcast_rows = len(comp)
-        else:
-            assigned_new = assign_op.assign_points_to_blocks(todo, cover, res)
-            broadcast_rows = len(cover)
         store.commit(
-            assigned_new, ASSIGN_TABLE, "cell_prefix", stage=ASSIGN_TABLE,
-            extra={
-                "cover_rows": len(cover),
-                "cover_broadcast_rows": broadcast_rows,
-                "cover_compacted": use_compact,
-            },
+            assign_op.assign_points_to_blocks(todo, cover, res),
+            ASSIGN_TABLE, "cell_prefix", stage=ASSIGN_TABLE,
+            extra={"cover_rows": len(cover)},
         )
     assigned = store.read(spark, ASSIGN_TABLE)
     if assigned is None:
@@ -156,20 +133,17 @@ def run_pipeline(
         computed[COMPLEXITY_TABLE] = 0
         return computed
 
-    def per_block_stage(table: str, build, prep=None) -> int:
+    def per_block_stage(table: str, build) -> int:
         """Shared per-block resume pattern (CheckPointer anti-join analog,
         i_reblock.py:254-255): blocks already in the table's lineage are
         skipped — picked on the driver from ``blocks_pdf``, no Spark job;
         ``build(todo_blocks, todo_assigned)`` produces the new rows,
-        committed partitioned by block_id. ``prep`` decorates the todo
-        block frame first (stage 4's boundary types)."""
+        committed partitioned by block_id."""
         done = store.completed_partitions(table)
         todo_pdf = blocks_pdf[~blocks_pdf.block_id.isin(done)]
         computed[table] = len(todo_pdf)
         if len(todo_pdf):
             todo_blocks = spark.createDataFrame(todo_pdf, synth.BLOCKS_DDL)
-            if prep is not None:
-                todo_blocks = prep(todo_blocks)
             todo_assigned = assigned.join(
                 F.broadcast(todo_blocks.select("block_id")), "block_id", "left_semi"
             )
@@ -199,22 +173,7 @@ def run_pipeline(
     # ONE kernel pass emits the long-format 'all' frame; the three
     # reference sinks — summary, steiner lines, terminal points
     # (i_reblock.py:159-165) — are cheap filters of the committed table,
-    # each with its own lineage so resume covers all three. Typed
-    # boundaries (lines_pdf) feed the reference's F25 edge weighting.
-    prep = None
-    if lines_pdf is not None:
-        from .operators import rangejoin as rangejoin_op
-
-        if "seg_id" not in lines_pdf.columns:
-            # OSM-style polyline table (osm_id/highway/waterway/natural/
-            # geometry) — flatten to the typed segment dimension
-            lines_pdf = rangejoin_op.segments_from_lines(lines_pdf)
-
-        def prep(blks):
-            return rangejoin_op.boundary_types_for_blocks(
-                blks, lines_pdf, res=min(res, 12)
-            )
-
+    # each with its own lineage so resume covers all three.
     per_block_stage(
         REBLOCK_ALL_TABLE,
         lambda blks, pts_: reblock_op.reblock(
@@ -225,7 +184,6 @@ def run_pipeline(
             blks,
             emit="all",
         ),
-        prep,
     )
     if store.latest_snapshot_id(REBLOCK_ALL_TABLE) is None:
         return computed

@@ -92,13 +92,9 @@ def test_pipeline_kill_and_resume(spark, tmp_path):
     total_assigned = store.read(spark, "assign").count()
     assert total_assigned == 5_000  # every point assigned exactly once
 
-    # stage-1 plan metrics: the g=4/res=17 cover (28,677 rows) crosses the
-    # compaction gate, so the broadcast side must be the compacted cover
-    # and the lineage must record both sizes + the plan choice
+    # stage-1 metrics: the lineage records the g=4/res=17 cover's size
     asg_lin = store.read_lineage("assign")
-    assert asg_lin and all(r["cover_compacted"] for r in asg_lin)
-    assert all(r["cover_broadcast_rows"] < r["cover_rows"] for r in asg_lin)
-    assert all(r["cover_rows"] == 28_677 for r in asg_lin)
+    assert asg_lin and all(r["cover_rows"] == 28_677 for r in asg_lin)
     k_pdf = store.read(spark, "complexity").toPandas()
     assert len(k_pdf) == 16
 

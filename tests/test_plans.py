@@ -6,6 +6,8 @@ These guard against silent plan regressions (e.g. a broadcast falling
 back to sort-merge, or a new Exchange sneaking in front of the fact
 side)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,6 +41,33 @@ def test_assign_plan_shape(spark, cover):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     # the fact (point) side is never exchanged before the join
     assert "Exchange hashpartitioning(image_id" not in p
+
+
+def _signature(df) -> tuple:
+    """Join operators (sorted set) plus the Exchange count of the
+    executed plan — built, not run."""
+    p = _plan(df)
+    return sorted(set(re.findall(r"\w*Join\w*", p))), p.count("Exchange")
+
+
+def test_plans_stable_across_input_size(spark, cover):
+    """No plan flip with input size: the assign (pandas cover) and rect
+    tile plans of 10k and 20M points carry the same join operators and
+    Exchange count, so size-driven choices (broadcast thresholds, AQE's
+    initial plan) cannot swap a join strategy at fact scale."""
+    bounds = contract._grid_bounds(spark)
+
+    def sigs(n):
+        pts = _points(spark, n)
+        return (
+            _signature(assign.assign_points_to_blocks(pts, cover, 15)),
+            _signature(tiles.tile_membership_rect(pts, bounds, t=2, footprint=0.002)),
+        )
+
+    small, large = sigs(10_000), sigs(20_000_000)
+    assert small == large
+    assert "BroadcastHashJoin" in small[0][0]
+    assert "BroadcastNestedLoopJoin" in small[1][0]
 
 
 def test_assign_scan_pruning(spark, tmp_path):
@@ -193,9 +222,7 @@ def test_assign_salted_equivalence(spark):
     cover_pdf = assign.block_cover_pdf(synth.grid_blocks(4), 15)
     base = assign.assign_points_to_blocks(pts, cover_pdf, 15).toPandas()
     cov_sdf = spark.createDataFrame(cover_pdf)
-    salted = assign.assign_points_to_blocks(
-        pts, cov_sdf, 15, broadcast_cover=False, salt=4
-    ).toPandas()
+    salted = assign.assign_points_to_blocks(pts, cov_sdf, 15, salt=4).toPandas()
     a = base.sort_values("image_id")[["image_id", "block_id"]].reset_index(drop=True)
     b = salted.sort_values("image_id")[["image_id", "block_id"]].reset_index(drop=True)
     assert a.equals(b)
@@ -206,9 +233,7 @@ def test_assign_salted_plan_no_python(spark):
     derived from the cover's geometry on the dimension side, and no Python
     eval appears in the executed plan."""
     cov_sdf = spark.createDataFrame(assign.block_cover_pdf(synth.grid_blocks(4), 15))
-    out = assign.assign_points_to_blocks(
-        _points(spark, 3_000), cov_sdf, 15, broadcast_cover=False, salt=4
-    )
+    out = assign.assign_points_to_blocks(_points(spark, 3_000), cov_sdf, 15, salt=4)
     p = _plan(out)
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 

@@ -177,30 +177,51 @@ def test_segment_cover_df_parity(spark):
     assert sa == sb
 
 
+def _random_segments(n: int, res: int, seed: int = 11) -> pd.DataFrame:
+    """n seeded uniform-random segments over the AOI, 0.3–2 cells long
+    at ``res``, in random directions."""
+    rng = np.random.default_rng(seed)
+    cell_h = 180.0 / (1 << res)
+    ax = synth.AOI_LON0 + rng.uniform(0, synth.AOI_SPAN, n)
+    ay = synth.AOI_LAT0 + rng.uniform(0, synth.AOI_SPAN, n)
+    ang = rng.uniform(0, 2 * np.pi, n)
+    ln = rng.uniform(0.3, 2.0, n) * cell_h
+    return pd.DataFrame({
+        "seg_id": [f"s{i}" for i in range(n)], "ax": ax, "ay": ay,
+        "bx": ax + ln * np.cos(ang), "by": ay + ln * np.sin(ang),
+    })
+
+
 def test_distributed_join_matches_legacy_with_residue(spark):
     """nearest_segment_join_distributed == the broadcast path row-for-row,
     including a far outlier that is residue at the caller's resolution
-    (drained by the auto-appended coarser levels, not a cartesian)."""
-    segs = _grid_segments(4, jitter=0.3)
-    cover = rangejoin.segment_cover_pdf(segs, 13)
-    base = spark.range(0, 800, numPartitions=4)
-    lon, lat = synth.lonlat_cols(F.col("id"))
-    pts = base.select(F.col("id").alias("pid"), lon.alias("lon"), lat.alias("lat"))
-    pts = pts.unionByName(spark.createDataFrame(
-        pd.DataFrame({"pid": [99999], "lon": [-150.0], "lat": [-70.0]})
-    ))
-    legacy = rangejoin.nearest_segment_join(pts, cover, 13)
-    dist = rangejoin.nearest_segment_join_distributed(
-        pts, spark.createDataFrame(segs), 13, point_id="pid"
-    )
-    a = sorted(map(tuple, legacy.select("pid", F.round("road_dist", 9)).collect()))
-    b = sorted(map(tuple, dist.select("pid", F.round("road_dist", 9)).collect()))
-    assert a == b and len(b) == 801
-    p = dist._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    # fully JVM-side: the distributed path has no Python stage at all
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    (drained by the auto-appended coarser levels, not a cartesian). Two
+    inputs: a jittered road grid, and seeded random segments in general
+    position (random anchors, directions and lengths)."""
+    cases = [
+        (_grid_segments(4, jitter=0.3), 13, 800),
+        (_random_segments(2_000, 16), 16, 4_000),
+    ]
+    for segs, res, n in cases:
+        cover = rangejoin.segment_cover_pdf(segs, res)
+        base = spark.range(0, n, numPartitions=4)
+        lon, lat = synth.lonlat_cols(F.col("id"))
+        pts = base.select(F.col("id").alias("pid"), lon.alias("lon"), lat.alias("lat"))
+        pts = pts.unionByName(spark.createDataFrame(
+            pd.DataFrame({"pid": [99999], "lon": [-150.0], "lat": [-70.0]})
+        ))
+        legacy = rangejoin.nearest_segment_join(pts, cover, res)
+        dist = rangejoin.nearest_segment_join_distributed(
+            pts, spark.createDataFrame(segs), res, point_id="pid"
+        )
+        a = sorted(map(tuple, legacy.select("pid", F.round("road_dist", 9)).collect()))
+        b = sorted(map(tuple, dist.select("pid", F.round("road_dist", 9)).collect()))
+        assert a == b and len(b) == n + 1, res
+        p = dist._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
+        # fully JVM-side: the distributed path has no Python stage at all
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def test_nearest_segment_tie_breaks_to_lowest_seg_id(spark):

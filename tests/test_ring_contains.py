@@ -118,7 +118,7 @@ def test_assign_cell_local_edges_match_numpy(spark, probes_df, name):
     outs = {
         "small": assign.assign_points_to_blocks(pts, cover, RES),
         "compact": assign.assign_points_to_blocks_compact(pts, cover, RES, RES - 3),
-        "dist": assign.assign_points_to_blocks(pts, spark.createDataFrame(cover), RES, broadcast_cover=False),
+        "dist": assign.assign_points_to_blocks(pts, spark.createDataFrame(cover), RES),
     }
     for path, out in outs.items():
         got = [r.pid for r in out.select("pid").collect()]
@@ -163,7 +163,7 @@ def test_degenerate_rings_match_nothing(spark):
         "cell long, block_id string, " + RING_DDL + ", interior boolean",
     )
     assert assign.assign_points_to_blocks(pts, cov, RES).count() == 0
-    assert assign.assign_points_to_blocks(pts, cov, RES, broadcast_cover=False, salt=3).count() == 0
+    assert assign.assign_points_to_blocks(pts, cov, RES, salt=3).count() == 0
 
 
 def test_nan_and_null_points_get_no_row(spark):
@@ -184,7 +184,7 @@ def test_nan_and_null_points_get_no_row(spark):
         "small": assign.assign_points_to_blocks(pts, cover, 15),
         "compact": assign.assign_points_to_blocks_compact(pts, cover, 15, 11),
         "salted": assign.assign_points_to_blocks(
-            pts, spark.createDataFrame(cover), 15, broadcast_cover=False, salt=4
+            pts, spark.createDataFrame(cover), 15, salt=4
         ),
     }
     for path, out in outs.items():
