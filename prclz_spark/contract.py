@@ -20,6 +20,7 @@ valid for the rectilinear fixture geometry.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -109,6 +110,10 @@ def _img_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return img.withColumn("lon", lon).withColumn("lat", lat).drop("idnum")
 
 
+# the four stage-commit caches below key on the SparkSession object, not
+# its applicationId: spark.newSession() shares the application (and so
+# the id) but not the SQL conf, and a frame built under one session's
+# settings must not answer a query run under another's
 _CLUSTERS_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -121,7 +126,7 @@ def _phash_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint-ed so every consumer reads materialized partitions
     instead of replaying the loop (same all-or-nothing semantics as the
     pipeline's keep-list lineage stage)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (spark, sf_dir)
     if key not in _CLUSTERS_CACHE:
         _CLUSTERS_CACHE[key] = dedup.phash_clusters(
             _images(spark, sf_dir)
@@ -141,7 +146,7 @@ def _assigned_img_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputing it inline, worth ~2-3 s each at sf0.1). Subset consumers
     (anchor sampling, footprint sampling) FILTER the committed table —
     assign is per-row, so subset-of-assign == assign-of-subset."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (spark, sf_dir)
     if key not in _ASSIGN_CACHE:
         pts = _img_points(spark, sf_dir)
         _ASSIGN_CACHE[key] = assign.assign_points_to_blocks(
@@ -154,7 +159,7 @@ def _assigned_events_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Committed assign table for the events-derived point set (the
     second corpus spatial_parcel_assign maps): same stage-commit reuse as
     _assigned_img_cached."""
-    key = (spark.sparkContext.applicationId, sf_dir, "events")
+    key = (spark, sf_dir, "events")
     if key not in _ASSIGN_CACHE:
         ev = _t(spark, sf_dir, "events").select("event_id")
         lon, lat = synth.lonlat_cols(F.col("event_id"))
@@ -168,7 +173,7 @@ def _assigned_events_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _assigned_grid_cached(spark: SparkSession) -> DataFrame:
     """Same stage-commit reuse for the closed-form grid fixture (shared
     by k_complexity_grid and reblock_status)."""
-    key = (spark.sparkContext.applicationId, "grid")
+    key = (spark, "grid")
     if key not in _ASSIGN_CACHE:
         _ASSIGN_CACHE[key] = assign.assign_points_to_blocks(
             _grid_fixture_points(spark), _grid_cover(spark), PIP_RES
@@ -2376,6 +2381,23 @@ def _sql_img_incremental_dedup(sf_dir):
     """
 
 
+def _stream_state_root(data_dir: str, sf_dir: str, images_path: str) -> str:
+    """State root (store + checkpoint + landing) of img_stream_dedup.
+
+    Keyed by a fixture FINGERPRINT, not just the sf name: a regenerated
+    images parquet keeps its path, and Spark's FileStreamSource seen-files
+    map is path-keyed — a name-only key would serve stale committed rows
+    against the fresh oracle. Also keyed by a short hash of the data
+    dir's real path: the stream checkpoint stores absolute landing paths,
+    so a checkout copied together with its data dir must start fresh
+    state instead of failing on the original's basePath."""
+    sfname = os.path.basename(os.path.normpath(sf_dir))
+    st = os.stat(images_path)
+    fp = f"{st.st_size}_{st.st_mtime_ns}"
+    where = hashlib.sha1(os.path.realpath(data_dir).encode()).hexdigest()[:8]
+    return os.path.join(data_dir, f"stream_phash_v1_{sfname}_{fp}_{where}")
+
+
 def _q_img_stream_dedup(spark, sf_dir):
     """Streaming incremental phash dedup — the production shape of daily
     ingest against a committed keeper corpus: availableNow drain of the
@@ -2391,20 +2413,11 @@ def _q_img_stream_dedup(spark, sf_dir):
     from .sources.tablestore import TableStore
     from .streaming.incremental import stream_phash_dedup_ingest
 
-    sfname = os.path.basename(os.path.normpath(sf_dir))
-    target_now = ensure_images(sf_dir)
-    st = os.stat(target_now)
-    # state root keyed by a fixture FINGERPRINT, not just the sf name: a
-    # regenerated images parquet keeps its path, and Spark's
-    # FileStreamSource seen-files map is path-keyed — a name-only key
-    # would serve stale committed rows against the fresh oracle
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    root = os.path.join(_DATA_DIR, f"stream_phash_v1_{sfname}_{fp}")
-    os.makedirs(root, exist_ok=True)
+    target = ensure_images(sf_dir)
+    root = _stream_state_root(_DATA_DIR, sf_dir, target)
     landing = os.path.join(root, "landing")
     os.makedirs(landing, exist_ok=True)
     link = os.path.join(landing, "part-0.parquet")
-    target = ensure_images(sf_dir)
     if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(
         target
     ):

@@ -19,7 +19,10 @@ component. The pieces here:
   Beyond", SoCC 2014) in pure DataFrame ops — O(log n) rounds even on
   path graphs, each round two shuffles (a groupBy-min and an equi-join),
   no collect_list (per-node state is a single min, so hub nodes cannot
-  blow task memory) and no driver-side graph.
+  blow task memory) and no driver-side graph. Each round is ONE Spark
+  materialization: its convergence signature is observed by the round's
+  own checkpoint job, never by a separate probe action, and an empty
+  edge set returns after that first checkpoint with no star rounds.
 - ``cluster_assign``: items ∪ pairs → (id, cluster_root, is_keep) with
   exactly one keeper (the component-minimum id) per cluster.
 
@@ -29,12 +32,14 @@ collapses identical hashes to one representative FIRST (a single hash
 aggregation), so band buckets hold distinct hashes only and the
 self-join fan-out is bounded by distinct-hash collisions, not corpus
 multiplicity. Group sizes ride along as ``n_a``/``n_b`` so multiplicity
-is never lost.
+is never lost. Band buckets holding a single representative are dropped
+before the self-join (they cannot pair), so a corpus with no near-dup
+candidates plans no join work at all.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 PHASH_BANDS = 4
@@ -76,8 +81,12 @@ def phash_near_dup(
     construction, so it is force-broadcast whenever band values fit 16
     bits (bands ≥ 4 — no extra Exchange of the banded frame); with wider
     bands the bound degenerates to distinct-phash cardinality and the
-    broadcast decision is left to AQE. ``max_bucket_reps=None`` restores
-    the unguarded join."""
+    broadcast decision is left to AQE. Singleton buckets (``bn = 1``) are
+    filtered out of the count table before the join — exact, since a
+    pair needs two reps in one bucket — so when no bucket holds two reps
+    the count table is empty and AQE propagates the empty relation
+    through the join and distinct. ``max_bucket_reps=None`` restores the
+    unguarded join."""
     width = 64 // bands
     mask = (1 << width) - 1
     g = img.groupBy(phash_col).agg(
@@ -103,7 +112,14 @@ def phash_near_dup(
         # the distinct-phash aggregation and the corpus scan beneath it —
         # truncate once (the CLAUDE.md multi-consumer rule)
         banded = banded.localCheckpoint(eager=False)
-        cnt = banded.groupBy("band", "bv").agg(F.count("*").alias("bn"))
+        # a bucket holding one rep cannot yield a pair: dropping it before
+        # the join is exact, and with no multi-rep bucket the count table
+        # is empty and AQE plans no join or distinct work at all
+        cnt = (
+            banded.groupBy("band", "bv")
+            .agg(F.count("*").alias("bn"))
+            .where(F.col("bn") > 1)
+        )
         # the "≤ bands·2^width rows by construction" broadcast bound only
         # holds while band values are ≤16 bits (bands ≥ 4 on a 64-bit
         # hash); with wider bands the count table is bounded only by
@@ -351,18 +367,25 @@ def connected_components(
     steps are a groupBy-min plus an equi-join — per-node state is ONE
     value, so a 10^8-degree hub costs a wide join fan-out but never an
     executor OOM. Edges are localCheckpoint-ed per round to truncate the
-    iterative lineage. Converges when the edge multiset is stable
-    (count + order-independent hash signature), at which point the edge
-    set IS the star mapping."""
-    e = (
+    iterative lineage, and each checkpoint job also computes the round's
+    signature (count + order-independent hash sum) through
+    ``DataFrame.observe`` — one materialization per round, no probe job.
+    Stops at the first round whose signature equals the previous one's
+    (a fixed point: the edge set IS the star mapping). An input whose
+    normalized edge set is empty returns right after its one checkpoint,
+    with no star rounds, as a plan the optimizer knows is empty."""
+    e, sig = _checkpoint_with_signature(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    prev_sig = None
-    for it in range(max_iter):
+    if sig[0] == 0:
+        # limit(0) plans as an empty LocalRelation, so a caller's join
+        # against the result folds away at plan time instead of
+        # broadcasting an empty checkpoint (one job per consumer)
+        return e.limit(0).select(F.col("u").alias("node"), F.col("v").alias("root"))
+    for _ in range(max_iter):
         # large-star: every neighbor v > u links to min(N(u) ∪ {u})
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
@@ -384,25 +407,29 @@ def connected_components(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         out2 = mins2.select("u", F.col("m").alias("v"))
-        e = out1.union(out2).distinct().localCheckpoint(eager=True)
         # checkpoint EVERY round (letting two rounds ride one lineage was
         # measured 35% SLOWER at sf0.1 — the next round re-executes the
-        # prior round's two shuffles), but probe convergence every 2nd
-        # round only: the probe is a driver round-trip on top of the
-        # checkpoint job and the star algorithm needs ~log n rounds, so
-        # odd-round probing halves the chatter for at most one extra
-        # (cheap, stable) round
-        if it % 2 == 0 and it + 1 < max_iter:
-            continue
-        sig = e.agg(
-            F.count("*").alias("n"),
-            # decimal sum: ANSI mode would raise on long overflow
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        if prev_sig == (sig.n, sig.h):
+        # prior round's two shuffles)
+        e, new_sig = _checkpoint_with_signature(out1.union(out2).distinct())
+        if new_sig == sig:
             break
-        prev_sig = (sig.n, sig.h)
+        sig = new_sig
     return e.select(F.col("u").alias("node"), F.col("v").alias("root"))
+
+
+def _checkpoint_with_signature(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Eagerly localCheckpoint ``e`` and return it with its (count,
+    order-independent hash sum) signature, observed by the checkpoint's
+    own job — no separate probe action."""
+    obs = Observation()
+    e = e.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        # decimal sum: ANSI mode would raise on long overflow
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    ).localCheckpoint(eager=True)
+    sig = obs.get
+    return e, (sig["n"], sig["h"])
 
 
 def phash_clusters(

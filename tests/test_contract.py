@@ -73,6 +73,8 @@ VANILLA_SAMPLE = [
     "spatial_largest_overlap", "spatial_parcel_assign", "spatial_pip_assign",
     "spatial_pip_assign_compact", "spatial_road_dist", "spatial_road_dist_dist",
     "spatial_tiles",
+    "dedup_clusters", "img_incremental_dedup", "img_phash_clusters",
+    "img_phash_dedup", "img_phash_dedup_capped", "img_training_manifest",
 ]
 
 
@@ -90,6 +92,36 @@ def vanilla(spark):
 @pytest.mark.parametrize("name", VANILLA_SAMPLE)
 def test_query_matches_oracle_vanilla_session(vanilla, name):
     test_query_matches_oracle(vanilla, name)
+
+
+def test_contract_caches_are_per_session(spark, vanilla):
+    """newSession() shares the applicationId but not the SQL conf: the
+    stage-commit caches must build a separate frame per session."""
+    from prclz_spark import contract
+
+    a = contract._phash_clusters_cached(spark, SF_DIR)
+    assert contract._phash_clusters_cached(spark, SF_DIR) is a
+    b = contract._phash_clusters_cached(vanilla, SF_DIR)
+    assert b is not a
+    assert b.sparkSession is vanilla
+
+
+def test_stream_state_root_per_data_dir(tmp_path):
+    """img_stream_dedup's state root moves with the data dir: the stream
+    checkpoint stores absolute landing paths, so a copied checkout (same
+    fixture, other data dir) must not reuse the original's state."""
+    from prclz_spark import contract
+
+    images = tmp_path / "images.parquet"
+    images.write_bytes(b"x")
+    a, b = tmp_path / "repo_a" / "data", tmp_path / "repo_b" / "data"
+    ra = contract._stream_state_root(str(a), "/fixtures/sf0.01", str(images))
+    rb = contract._stream_state_root(str(b), "/fixtures/sf0.01", str(images))
+    assert ra != rb
+    assert os.path.dirname(ra) == str(a) and os.path.dirname(rb) == str(b)
+    assert ra == contract._stream_state_root(str(a), "/fixtures/sf0.01/", str(images))
+    images.write_bytes(b"xy")  # a regenerated fixture gets fresh state too
+    assert contract._stream_state_root(str(a), "/fixtures/sf0.01", str(images)) != ra
 
 
 def test_entry_smoke(spark):

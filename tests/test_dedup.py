@@ -2,11 +2,15 @@
 union-find oracle, and phash band-join exactness vs brute force."""
 
 import random
+import threading
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from prclz_spark import pipeline
 from prclz_spark.operators import dedup
+from spark_jobs import jobs_in_group
 
 
 def _uf(edges, nodes):
@@ -27,17 +31,25 @@ def _uf(edges, nodes):
     return {n: find(n) for n in nodes}
 
 
-def _check_cc(spark, edges, schema):
+def _cc(e):
+    return dedup.connected_components(e, "u", "v")
+
+
+def _check_cc(spark, edges, schema, frame=None, run=_cc):
+    """``run(frame)`` (default: the edges as a literal frame) against the
+    union-find oracle; the output's node/root type must be the input's."""
     nodes = sorted({x for e in edges for x in e})
     want = _uf(edges, nodes)
-    e = spark.createDataFrame(edges, schema)
-    got = {r.node: r.root for r in dedup.connected_components(e, "u", "v").collect()}
+    e = spark.createDataFrame(edges, schema) if frame is None else frame
+    out = run(e)
+    assert [f.dataType for f in out.schema.fields] == [e.schema["u"].dataType] * 2
+    got = {r.node: r.root for r in out.collect()}
     for n in nodes:
         got.setdefault(n, n)
     assert got == want
 
 
-def test_cc_matches_union_find_long_ids(spark):
+def _long_edges():
     """Path (worst case for naive label prop — forces the O(log n)
     rounds), random blobs, a star, self-loops, and duplicate edges."""
     rng = random.Random(7)
@@ -45,49 +57,132 @@ def test_cc_matches_union_find_long_ids(spark):
     edges += [(rng.randrange(100, 150), rng.randrange(100, 150)) for _ in range(60)]
     edges += [(200 + i, 200) for i in range(1, 6)]
     edges += [(300, 300), (0, 1), (1, 0)]  # self-loop + duplicates
-    _check_cc(spark, edges, "u long, v long")
+    return edges
+
+
+def _string_edges():
+    rng = random.Random(11)
+    raw = [(rng.randrange(0, 80), rng.randrange(0, 80)) for _ in range(90)]
+    return [(f"doc_{a:05d}", f"doc_{b:05d}") for a, b in raw]
+
+
+def test_cc_matches_union_find_long_ids(spark):
+    _check_cc(spark, _long_edges(), "u long, v long")
 
 
 def test_cc_matches_union_find_string_ids(spark):
-    rng = random.Random(11)
-    raw = [(rng.randrange(0, 80), rng.randrange(0, 80)) for _ in range(90)]
-    edges = [(f"doc_{a:05d}", f"doc_{b:05d}") for a, b in raw]
-    _check_cc(spark, edges, "u string, v string")
+    _check_cc(spark, _string_edges(), "u string, v string")
+
+
+def test_cc_runs_no_probe_action(spark, monkeypatch):
+    """Convergence is read from each round's checkpoint job: building the
+    components calls no driver-side action (first/collect/count/isEmpty)
+    on any DataFrame — the result is collected only after the patch."""
+
+    def run(e):
+        def refuse(self, *a, **k):
+            raise AssertionError("connected_components ran a probe action")
+
+        with monkeypatch.context() as m:
+            for name in ("first", "collect", "count", "isEmpty"):
+                m.setattr(type(e), name, refuse)
+            return _cc(e)
+
+    _check_cc(spark, _long_edges(), "u long, v long", run=run)
+    _check_cc(spark, _string_edges(), "u string, v string", run=run)
+
+
+def test_cc_empty_graph_returns_after_one_checkpoint(spark, monkeypatch):
+    """An edge set that is empty — literally, or only at run time (a join
+    with no shared key) — returns zero (node, root) rows of the input's
+    id type after exactly one localCheckpoint: no star rounds, no wait on
+    an observation that never fills, and an empty LocalRelation plan."""
+    calls = []
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    real = cls.localCheckpoint
+
+    def counting(self, *a, **k):
+        calls.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+
+    def run(e):
+        calls.clear()
+        box = []
+        t = threading.Thread(target=lambda: box.append(_cc(e)), daemon=True)
+        t.start()
+        t.join(timeout=120)
+        assert box, "connected_components did not return on an empty graph"
+        assert len(calls) == 1
+        # known empty at plan time, so a consumer's join folds away
+        plan = box[0]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation <empty>"), plan
+        return box[0]
+
+    _check_cc(spark, [], "u long, v long", run=run)
+    a = spark.range(3).select(F.col("id").alias("k"), F.format_string("a%d", "id").alias("u"))
+    b = spark.range(10, 13).select(F.col("id").alias("k"), F.format_string("b%d", "id").alias("v"))
+    _check_cc(spark, [], None, frame=a.join(b, "k").select("u", "v"), run=run)
 
 
 def test_phash_band_join_is_exact_for_small_hamming(spark):
     """Pigeonhole guarantee: with 4 bands, every pair within Hamming 3
     shares at least one untouched band — the banded join must equal the
-    brute-force all-pairs result exactly (no approximate recall)."""
+    brute-force all-pairs result exactly (no approximate recall). The
+    second corpus has only singleton band buckets (exact duplicates
+    included, which collapse to one rep): both sides are empty."""
     rng = np.random.default_rng(3)
     base = rng.integers(0, 2**63, size=40, dtype=np.int64)
-    hashes = list(base)
+    planted = list(base)
     # plant near-dups at hamming 1..3 of existing hashes
     for i in range(20):
         h = int(base[i % len(base)])
         for _ in range(1 + i % 3):
             h ^= 1 << int(rng.integers(0, 64))
-        hashes.append(np.int64(h))
-    rows = [(f"img_{i:04d}", int(h)) for i, h in enumerate(hashes)]
-    df = spark.createDataFrame(rows, "image_id string, phash long")
+        planted.append(np.int64(h))
+    # every band value distinct across hashes: i repeated in all 4 bands
+    # (pairwise Hamming = 4 * popcount(i ^ j) >= 4)
+    singletons = [i * 0x0001_0001_0001_0001 for i in range(1, 41)]
+    singletons += singletons[:5]
 
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.phash_near_dup(df, max_hamming=3).collect()
-    }
+    for hashes, min_pairs in ((planted, 15), (singletons, 0)):
+        rows = [(f"img_{i:04d}", int(h)) for i, h in enumerate(hashes)]
+        df = spark.createDataFrame(rows, "image_id string, phash long")
 
-    # brute force over distinct hashes; rep = min (zero-padded) id per hash
-    uh = sorted({int(h) for h in hashes})
-    rep = {h: min(i for i, hh in rows if int(hh) == h) for h in uh}
-    want = set()
-    for x in range(len(uh)):
-        for y in range(x + 1, len(uh)):
-            d = bin((uh[x] ^ uh[y]) & ((1 << 64) - 1)).count("1")
-            if d <= 3:
-                a, b = sorted((rep[uh[x]], rep[uh[y]]))
-                want.add((a, b, d))
-    assert len(want) >= 15  # planted near-dups actually present
-    assert got == want
+        got = {
+            (r.id_a, r.id_b, r.hamming)
+            for r in dedup.phash_near_dup(df, max_hamming=3).collect()
+        }
+
+        # brute force over distinct hashes; rep = min (zero-padded) id per hash
+        uh = sorted({int(h) for h in hashes})
+        rep = {h: min(i for i, hh in rows if int(hh) == h) for h in uh}
+        want = set()
+        for x in range(len(uh)):
+            for y in range(x + 1, len(uh)):
+                d = bin((uh[x] ^ uh[y]) & ((1 << 64) - 1)).count("1")
+                if d <= 3:
+                    a, b = sorted((rep[uh[x]], rep[uh[y]]))
+                    want.add((a, b, d))
+        if min_pairs:
+            assert len(want) >= min_pairs  # planted near-dups actually present
+        else:
+            assert want == set()
+        assert got == want
+
+
+def test_phash_clusters_without_pairs_job_count(spark):
+    """The pipeline's corpus has exact-duplicate groups only, so no band
+    bucket holds two reps: building the keep-list runs only the banded
+    checkpoint, the bucket count and the empty CC edge checkpoint — no
+    join, no distinct and no star round."""
+    img = pipeline.image_rows(spark, 604)
+    assert dedup.phash_near_dup(img).count() == 0
+    _, n_jobs = jobs_in_group(
+        spark, "phash-clusters-604", lambda: dedup.phash_clusters(img)
+    )
+    assert n_jobs == 3
 
 
 def test_phash_hot_bucket_cap_is_exact(spark):

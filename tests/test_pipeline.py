@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from prclz_spark import pipeline
 from prclz_spark.sources.tablestore import TableStore
+from spark_jobs import jobs_in_group
 
 
 def test_tablestore_commit_read_lineage(spark, tmp_path):
@@ -183,19 +184,6 @@ def test_tablestore_metrics_df(spark, tmp_path):
     assert store.metrics_df(spark, "missing") is None
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` in Spark job group ``group``; return (result, job count)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_tablestore_job_counts_flat(spark, tmp_path):
     """A commit runs only its write's jobs — none per partition — and a
     read of a committed table runs none at all (schema from the manifest,
@@ -207,7 +195,7 @@ def test_tablestore_job_counts_flat(spark, tmp_path):
         df = spark.range(0, 1000).select(
             F.col("id"), (F.col("id") % p).alias("bucket")
         )
-        sid, jobs[p] = _jobs_in_group(
+        sid, jobs[p] = jobs_in_group(
             spark, f"commit-{p}-{tmp_path.name}",
             lambda: store.commit(df, f"t{p}", "bucket", stage="s"),
         )
@@ -220,7 +208,7 @@ def test_tablestore_job_counts_flat(spark, tmp_path):
         assert store.committed_rows(f"t{p}", sid) == 1000
     assert jobs[4] == jobs[64], jobs
 
-    back, n_read = _jobs_in_group(
+    back, n_read = jobs_in_group(
         spark, f"read-{tmp_path.name}", lambda: store.read(spark, "t4")
     )
     assert n_read == 0
