@@ -11,18 +11,24 @@ nearest-parcel queries"):
 3. per point, ``min_by(distance)`` picks the winner;
 4. points whose winner is not provably exact within ring r (the analog of
    the reference's x2 buffer growth) fall through to the next (coarser)
-   resolution level, and the final residue to one brute-force pass.
+   resolution level, and the final residue to one brute-force pass;
+5. a point that falls through carries its winner's distance as ``__ub``,
+   and every later argmin drops candidates beyond it before grouping
+   (:func:`within_bound`) — like the reference, a wider search only
+   looks for targets closer than the best one already found.
 
 Guarantee: a ring-r winner is only accepted when its distance <= r * cell
 edge (otherwise a nearer target could hide in ring r+1) — this makes the
-result exact, not approximate, at every cascade level.
+result exact, not approximate, at every cascade level. The bound keeps it
+exact: ``__ub`` is a real target's distance, so the true nearest target
+and every target tied with it pass ``d <= __ub``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells
@@ -30,6 +36,16 @@ from ..functions import cells
 
 def _dist2(px, py, tx, ty):
     return (px - tx) * (px - tx) + (py - ty) * (py - ty)
+
+
+def within_bound(d: Column) -> Column:
+    """Every argmin's candidate filter: drop a candidate whose distance
+    ``d`` exceeds the point's best distance from an earlier level
+    (``__ub``, null before the first). ``d`` must be the very expression
+    the argmin emits as ``nn_dist`` (see :func:`cascade` for why this
+    is exact)."""
+    ub = F.col("__ub")
+    return ub.isNull() | (d <= ub)
 
 
 def _terminal_res(ring: int) -> int:
@@ -79,8 +95,8 @@ def cascade(
     """The EXACT multi-resolution NN cascade — the one level loop behind
     every nearest-neighbour operator (knn_join, parcel_assign and the
     three point→segment paths in rangejoin). It holds every
-    correctness-bearing invariant once: accept threshold, anti-join
-    chain, per-level checkpoint, union order.
+    correctness-bearing invariant once: accept threshold, residue chain
+    and its distance bound, per-level checkpoint, union order.
 
     Callers supply only ``make_candidates(remaining, r)`` (the level-r
     candidate join), ``argmin(cand)`` (one row per ``keys`` with the
@@ -96,8 +112,27 @@ def cascade(
     (any unseen target lies outside the kRing, hence farther), so every
     cascade is exact; survivors fall through, the residue goes brute.
 
+    The residue carries ``__ub`` (null before the first level): after
+    each non-terminal level it is rebuilt by a ``left`` join of the
+    remaining points to that level's winners, keeping the points with no
+    winner or a winner beyond the guarantee, and setting ``__ub`` to the
+    winner's ``nn_dist`` (or keeping the old bound). Every ``argmin``
+    must drop candidates with :func:`within_bound` before it groups,
+    comparing the exact expression it emits as ``nn_dist``. That keeps
+    every level exact:
+
+    - ``__ub`` is the distance to a real target of the same point, in
+      the argmin's own arithmetic, so the true nearest target and every
+      target tied with it pass the filter; tie-breaks do not change. A
+      filtered-out candidate is strictly farther than the level's winner.
+    - A point with no candidate left at a level stays in the residue
+      with its old bound.
+    - The terminal level and the brute pass see complete candidate sets,
+      so no point is lost. A NaN or null bound (a NaN or null
+      coordinate) filters nothing: NaN compares above every double.
+
     Per-level winner frames are lazily localCheckpoint-ed: each feeds
-    three consumers (accept filter, anti-join, final union) and would
+    three consumers (accept filter, residue join, final union) and would
     otherwise re-execute the candidate join and the caller's upstream
     plan per consumer (measured 2.4x wall on the bench parcel-assign).
 
@@ -123,7 +158,7 @@ def cascade(
     terminal = None
     if exhaustive:
         levels, terminal = _extend_levels(list(levels), ring)
-    remaining = points_narrow
+    remaining = points_narrow.withColumn("__ub", F.lit(None).cast("double"))
     resolved: list[DataFrame] = []
     for r in levels:
         # guarantee radius in degrees: a ring-k winner is exact when its
@@ -136,11 +171,22 @@ def cascade(
             resolved.append(best)
             remaining = None
             break
-        accept = best.filter(F.col("nn_dist") <= F.lit(ring * cell_h))
-        resolved.append(accept)
-        remaining = remaining.join(
-            accept.select(*keys), on=keys, how="left_anti"
-        ).localCheckpoint(eager=False)
+        bound = F.lit(ring * cell_h)
+        resolved.append(best.filter(F.col("nn_dist") <= bound))
+        # the residue is every point NOT accepted: no winner at this level
+        # (null __bd), or one beyond the ring guarantee. It keeps the
+        # tightest distance seen so far as its bound for the next level
+        bd = F.col("__bd")
+        remaining = (
+            remaining.join(
+                best.select(*keys, F.col("nn_dist").alias("__bd")),
+                on=keys, how="left",
+            )
+            .filter(bd.isNull() | (bd > bound))
+            .withColumn("__ub", F.coalesce(bd, F.col("__ub")))
+            .drop("__bd")
+            .localCheckpoint(eager=False)
+        )
         # exhaustive-only early exit: once the residue is empty, skip the
         # auto-appended coarser levels (each is a full candidate-build
         # pass over the fact-sized target table). The count reads the
@@ -200,7 +246,7 @@ def knn_join(
     order_key = F.struct(d2.alias("d"), F.col(target_id).alias("t"))
 
     def argmin(cand: DataFrame) -> DataFrame:
-        return cand.groupBy(pid).agg(
+        return cand.filter(within_bound(F.sqrt(d2))).groupBy(pid).agg(
             F.min_by(F.col(target_id), order_key).alias(target_id),
             F.sqrt(F.min(d2)).alias("nn_dist"),
         )
@@ -272,7 +318,7 @@ def parcel_assign(
     )
 
     def argmin(cand: DataFrame) -> DataFrame:
-        return cand.groupBy(point_id).agg(
+        return cand.filter(within_bound(F.sqrt(d2))).groupBy(point_id).agg(
             F.min_by(F.col("__aid"), order_key).alias(anchor_id),
             F.sqrt(F.min(d2)).alias("nn_dist"),
         )

@@ -15,7 +15,9 @@ sampling, driver-side for dimension-sized road tables); points kRing-join
 the cell index; the point-segment distance is *pure Column arithmetic*
 (dot-product clamp — no Python anywhere). Every nearest-segment path runs
 on :func:`knn.cascade`, the engine's one exact NN level loop; each path
-supplies only its candidate join, its argmin and its brute-force pass.
+supplies only its candidate join, its argmin (which drops candidates
+beyond the residue's bound, :func:`knn.within_bound`) and its brute-force
+pass.
 """
 
 from __future__ import annotations
@@ -287,7 +289,7 @@ def nearest_segment_join_distributed(
             )
             .join(hot, "cell", "left")
             .select(
-                pid, "lon", "lat", "cell",
+                pid, "lon", "lat", "__ub", "cell",
                 F.explode(F.sequence(F.lit(0), nb1 - 1)).alias("chunk"),
             )
         )
@@ -305,11 +307,17 @@ def _seg_argmin(pid: str):
     dist = _seg_dist_cols()
 
     def argmin(cand: DataFrame) -> DataFrame:
-        # project the distance ONCE before aggregating: inlined in both
-        # agg expressions it is evaluated twice per candidate row (no
-        # CSE across aggregates; ~20% on the level's agg at 194M rows)
-        d = cand.select(pid, "seg_id", dist.alias("__d"))
-        return d.groupBy(pid).agg(
+        # project the distance ONCE, then drop candidates beyond the
+        # point's bound, then aggregate: inlined in both agg expressions
+        # the distance is evaluated twice per candidate row (no CSE
+        # across aggregates; ~20% on the level's agg at 194M rows). The
+        # projection is a one-element explode because Catalyst pushes a
+        # filter through a plain projection into the candidate join's
+        # condition, inlining the distance there a second time
+        d = cand.select(
+            pid, "seg_id", "__ub", F.explode(F.array(dist)).alias("__d")
+        )
+        return d.filter(knn.within_bound(F.col("__d"))).groupBy(pid).agg(
             F.min_by(
                 F.col("seg_id"),
                 F.struct(F.col("__d").alias("d"), F.col("seg_id").alias("s")),
@@ -472,7 +480,7 @@ def boundary_types_for_blocks(
     dist = F.round(_seg_dist_cols(), 9)
 
     def argmin(cand: DataFrame) -> DataFrame:
-        return cand.groupBy(*keys).agg(
+        return cand.filter(knn.within_bound(dist)).groupBy(*keys).agg(
             F.min(F.struct(dist.alias("d"), F.col("seg_id"))).alias("__b")
         ).select(
             *keys, F.col("__b.d").alias("nn_dist"), F.col("__b.seg_id").alias("seg_id")

@@ -72,7 +72,7 @@ VANILLA_SAMPLE = [
     "spatial_block_extract", "spatial_boundary_types", "spatial_knn",
     "spatial_largest_overlap", "spatial_parcel_assign", "spatial_pip_assign",
     "spatial_pip_assign_compact", "spatial_road_dist", "spatial_road_dist_dist",
-    "spatial_tiles",
+    "spatial_road_dist_metrics", "spatial_tiles",
     "dedup_clusters", "img_incremental_dedup", "img_phash_clusters",
     "img_phash_dedup", "img_phash_dedup_capped", "img_training_manifest",
 ]

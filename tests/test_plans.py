@@ -171,6 +171,87 @@ def test_knn_nonbroadcast_nonempty_residue_exact(spark):
     assert "CartesianProduct" not in _plan(b)
 
 
+def test_knn_tie_at_residue_bound(spark):
+    """The knn twin of test_rangejoin's bound tie. At res 8 the point's
+    kRing holds only target 2, at d2 = 3.25 (d beyond the ring
+    guarantee); target 1 sits two cells south at the same d2 and is
+    first seen at res 5. The point carries __ub = sqrt(3.25) there, both
+    targets pass the bound and the tie goes to target 1. Compared as
+    ``<`` the point would be dropped, and likewise compared squared
+    (d2 > d here, and sqrt(3.25)**2 rounds below 3.25)."""
+    import pandas as pd
+
+    w, h = 360.0 / 256, 180.0 / 256
+    px, py = -180.0 + 135.5 * w, -90.0 + 199.5 * h  # a res-8 cell centre
+    tgt = spark.createDataFrame(pd.DataFrame({
+        "target_id": [2, 1], "tx": [px + 1.5, px - 1.0], "ty": [py + 1.0, py - 1.5],
+    }))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"image_id": [1], "lon": [px], "lat": [py]}
+    ))
+    want = [(1, 1, 3.25 ** 0.5)]
+    assert want[0][2] > 1.0 and want[0][2] > h
+    for broadcast in (False, True):
+        out = knn.knn_join(
+            pts, tgt, 8, target_id="target_id", broadcast_targets=broadcast
+        )
+        assert [tuple(r) for r in out.select("image_id", "target_id", "nn_dist").collect()] == want
+
+
+def test_segment_cascade_bounds_coarser_levels(spark, monkeypatch):
+    """Every level after the first of nearest_segment_join_distributed
+    aggregates over a Filter on the residue bound ``__ub``, applied to
+    the distance projected once (not folded into the candidate join's
+    condition). The filter itself runs in the argmin's own stage; the
+    job count pins the whole cascade (30 for this fixture: the residue's
+    left join to each level's winners is size-estimated as a product, so
+    from the second level on Spark shuffles it where the left_anti
+    residue without a bound was broadcast; 27 jobs)."""
+    import pandas as pd
+
+    from spark_jobs import jobs_in_group
+
+    h = 2.0 ** -7
+    segs = spark.createDataFrame(pd.DataFrame({
+        "seg_id": ["s2", "s1"], "ax": [10.0, 10.0 + h], "ay": [50.0, 50.0],
+        "bx": [10.0, 10.0 + h], "by": [50.0 + h, 50.0 + h],
+    }))
+    # pid 1 resolves at the first level, pid 2 is residue down to res 7
+    pts = spark.createDataFrame(pd.DataFrame({
+        "pid": [1, 2], "lon": [10.0 + h / 2] * 2, "lat": [50.0 + h / 2, 50.5],
+    }))
+    plans = []
+    seg_argmin = rangejoin._seg_argmin
+
+    def recording(pid):
+        argmin = seg_argmin(pid)
+
+        def run(cand):
+            out = argmin(cand)
+            plans.append(_plan(out))
+            return out
+
+        return run
+
+    monkeypatch.setattr(rangejoin, "_seg_argmin", recording)
+    n, jobs = jobs_in_group(
+        spark, "segment-bound",
+        lambda: rangejoin.nearest_segment_join_distributed(pts, segs, 13).count(),
+    )
+    assert n == 2 and jobs == 30
+    assert len(plans) >= 3
+    bound = re.compile(r"Filter \(isnull\(__ub#\d+\) OR \(__d#\d+ <= __ub#\d+\)\)")
+    # level 1 has no bound yet: the null literal folds the filter away
+    assert "__ub" not in plans[0]
+    for p in plans[1:]:
+        lines = p.splitlines()
+        agg = max(i for i, ln in enumerate(lines) if "partial_min_by" in ln)
+        filt = [i for i, ln in enumerate(lines) if bound.search(ln)]
+        join = min(i for i, ln in enumerate(lines) if "Join" in ln)
+        assert len(filt) == 1 and agg < filt[0] < join, p
+        assert p.count("<= __ub") == 1, p
+
+
 @pytest.mark.parametrize(
     "run",
     [

@@ -2,12 +2,14 @@
 /root/reference/data_processing/split_lines.py:23-38,
 reblock/i_topology_utils.py:309-329)."""
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from prclz_spark.operators import rangejoin
+from prclz_spark.operators import knn, rangejoin
 from prclz_spark.sources import synth
 
 
@@ -253,6 +255,104 @@ def test_nearest_segment_tie_breaks_to_lowest_seg_id(spark):
     assert a == b
     assert [r[1] for r in b] == ["s1", "s1"]
     assert b[0][2] == h / 2 and b[1][2] > 180.0 / (1 << res)
+
+
+def test_nearest_segment_tie_at_residue_bound(spark):
+    """A coarser level must still rank a target tied with the residue
+    bound. At res 8 the point's cell sees only s2 (one cell to the east,
+    distance d = 2 cell heights, beyond the ring guarantee), so the point
+    falls through carrying __ub = d. The next level also finds s1 (two
+    cell heights north) at the same d, and the tie goes to s1. With the
+    bound compared as ``<`` the point would be dropped; compared squared
+    (d > 1) likewise. Dyadic coordinates make both distances exactly d."""
+    res = 8
+    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+    px, py = -180.0 + 135.5 * w, -90.0 + 199.5 * h  # the centre of a cell
+    d = 2 * h
+    segs = pd.DataFrame({
+        "seg_id": ["s2", "s1"],
+        "ax": [px + d, px - w / 4], "ay": [py - h / 4, py + d],
+        "bx": [px + d, px + w / 4], "by": [py + h / 4, py + d],
+    })
+    pts = spark.createDataFrame(pd.DataFrame({"pid": [1], "lon": [px], "lat": [py]}))
+    legacy = rangejoin.nearest_segment_join(
+        pts, rangejoin.segment_cover_pdf(segs, res), res
+    )
+    dist = rangejoin.nearest_segment_join_distributed(
+        pts, spark.createDataFrame(segs), res
+    )
+    assert d > 1.0 and d > h
+    for out in (legacy, dist):
+        assert [tuple(r) for r in out.select("pid", "seg_id", "road_dist").collect()] == [
+            (1, "s1", d)
+        ]
+
+
+def test_nn_paths_keep_nan_and_null_points(spark):
+    """A NaN or null coordinate gives a NaN or null distance at every
+    level, so the point stays in the residue with a NaN or null bound.
+    That bound must never filter out the terminal level's (or brute
+    pass's) candidates: every NN entry point returns one row per point."""
+    segs = pd.DataFrame({
+        "seg_id": ["s1", "s2"], "ax": [10.0, 10.05], "ay": [50.0, 50.0],
+        "bx": [10.0, 10.05], "by": [50.05, 50.05],
+        "feature_type": ["waterway", "highway"],
+    })
+    tgt = spark.createDataFrame(pd.DataFrame(
+        {"target_id": [1, 2], "tx": [10.0, 10.05], "ty": [50.0, 50.05]}
+    ))
+    anchors = spark.createDataFrame(pd.DataFrame(
+        {"anchor_id": [1, 2], "block_id": ["b0", "b0"],
+         "ax": [10.0, 10.05], "ay": [50.0, 50.05]}
+    ))
+    # pid 2 gets a NaN lon made in Spark (pandas would turn it into
+    # null), pid 3 a null lon
+    base = spark.createDataFrame(pd.DataFrame(
+        {"pid": [1, 2, 3], "lon": [10.01] * 3, "lat": [50.01, 50.02, 50.03]}
+    ))
+    lon = (
+        F.when(F.col("pid") == 2, F.lit(float("nan")))
+        .when(F.col("pid") == 3, F.lit(None).cast("double"))
+        .otherwise(F.col("lon"))
+    )
+    pts = base.select("pid", lon.alias("lon"), "lat", F.lit("b0").alias("block_id"))
+    levels = [16, 13]
+    runs = {
+        "knn_join": knn.knn_join(pts, tgt, levels, point_id="pid"),
+        "knn_join_shuffle": knn.knn_join(
+            pts, tgt, levels, point_id="pid", broadcast_targets=False
+        ),
+        "parcel_assign": knn.parcel_assign(pts, anchors, levels, point_id="pid"),
+        "nearest_segment_join": rangejoin.nearest_segment_join(
+            pts, rangejoin.segment_cover_pdf(segs, 14), 14, point_id="pid"
+        ).withColumnRenamed("road_dist", "nn_dist"),
+        "nearest_segment_join_distributed": rangejoin.nearest_segment_join_distributed(
+            pts, spark.createDataFrame(segs.drop(columns="feature_type")), levels,
+            point_id="pid",
+        ).withColumnRenamed("road_dist", "nn_dist"),
+    }
+    for name, out in runs.items():
+        rows = sorted(out.select("pid", "nn_dist").collect())
+        assert [r.pid for r in rows] == [1, 2, 3], name
+        assert 0.0 < rows[0].nn_dist < 0.02, name
+        assert math.isnan(rows[1].nn_dist), name
+        assert rows[2].nn_dist is None, name
+
+    # boundary types: the ring's vertices are the points. The NaN vertex
+    # types as 'gadm_boundary' (NaN exceeds the threshold); the null one
+    # keeps its nearest segment's type, the lowest seg_id s1's
+    v = lambda x, y: F.array(F.lit(x).cast("double"), F.lit(y).cast("double"))
+    blocks = spark.range(1).select(
+        F.lit("blk").alias("block_id"),
+        F.array(
+            v(10.01, 50.01), v(float("nan"), 50.02), v(None, 50.03),
+            v(10.04, 50.01), v(10.01, 50.01),
+        ).alias("geometry"),
+    )
+    out = rangejoin.boundary_types_for_blocks(blocks, segs, 14, threshold=0.5)
+    assert [tuple(r) for r in out.select("block_id", "boundary_types").collect()] == [
+        ("blk", ["natural", "natural", "highway", "highway"])
+    ]
 
 
 def test_star_junction_hot_cell_guard(spark):
