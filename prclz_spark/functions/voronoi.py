@@ -16,6 +16,21 @@ from __future__ import annotations
 import numpy as np
 
 
+def perturb_duplicates(points) -> np.ndarray:
+    """(n, 2) float copy of ``points`` whose k-th exact duplicate of a
+    coordinate moves by k·1e-9 on both axes (SURVEY.md §7.4)."""
+    pts = np.array(points, dtype=float).reshape(-1, 2)
+    seen: dict[tuple[float, float], int] = {}
+    for i in range(len(pts)):
+        key = (pts[i, 0], pts[i, 1])
+        if key in seen:
+            seen[key] += 1
+            pts[i] += 1e-9 * seen[key]
+        else:
+            seen[key] = 0
+    return pts
+
+
 def voronoi(points_list: list[tuple[float, float]]):
     """pytess-contract Voronoi: list of (anchor | None, cell_vertex_list).
 
@@ -24,16 +39,7 @@ def voronoi(points_list: list[tuple[float, float]]):
     them to a frame too, and callers clip to the block anyway —
     complexity.py:28). Half-plane clipping is exact and convex by
     construction, robust where a dual-of-Delaunay ordering degenerates."""
-    pts = np.asarray(points_list, dtype=float)
-    # deterministic perturbation of exact duplicates (SURVEY.md §7.4)
-    seen: dict[tuple[float, float], int] = {}
-    for i in range(len(pts)):
-        key = (pts[i, 0], pts[i, 1])
-        if key in seen:
-            seen[key] += 1
-            pts[i] += 1e-9 * seen[key] * np.array([1.0, 1.0])
-        else:
-            seen[key] = 0
+    pts = perturb_duplicates(points_list)
 
     n = len(pts)
     if n == 0:

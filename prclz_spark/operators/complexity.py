@@ -7,10 +7,10 @@ block, then per block in a joblib process: Voronoi-decompose the block on
 the centroids, clip cells to the block, build the planar graph S0, and
 iterate weak duals until empty; k = sequence length - 1.
 
-Spark shape: ``points ⨝_cell+PIP blocks → cogroup-by-block applyInPandas``.
-The per-block kernel is pure numpy (functions.voronoi / graphops). Blocks
-are independent — the operator scales with the number of blocks; the one
-shuffle is the groupBy(block_id).
+S0 is built from ``parcel.block_cells``, the cells the parcels are made
+of. In the pipeline the complexity table is a filter sink of
+``reblock_all``, whose per-block pass computes each block's cells once;
+``k_complexity`` is the standalone cogroup-by-block operator.
 
 Fidelity pins (SURVEY.md §7.3 step 5): boundary-anchor filter
 (complexity.py:25 — anchor not in block exterior coords, len(vs) > 2),
@@ -22,72 +22,45 @@ production sequence-termination variant ``get_weak_dual_sequence``
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geom
 from ..functions.graphops import PlanarGraph
-from ..functions.voronoi import halfplane_voronoi_cell
+from .parcel import _cogroup_by_block, block_cells
+
+
+def s0_from_cells(
+    block_ring: np.ndarray,
+    centroids: list[tuple[float, float]],
+    pieces: list[list[np.ndarray]],
+) -> PlanarGraph:
+    """get_s0_approximation (prclz/complexity.py:11-40) from the
+    centroids' clipped cells (``parcel.block_cells``): boundary anchors
+    dropped (complexity.py:25), pieces snapped so adjacent cells'
+    independently-computed shared vertices coincide and the mesh
+    connects."""
+    boundary_set = {(float(x), float(y)) for x, y in np.asarray(block_ring, float)}
+    return PlanarGraph.from_polygons(
+        [
+            geom.snap_ring(p)
+            for c, ps in zip(centroids, pieces)
+            if (float(c[0]), float(c[1])) not in boundary_set
+            for p in ps
+        ]
+    )
 
 
 def s0_from_block(block_ring: np.ndarray, centroids: list[tuple[float, float]]) -> PlanarGraph:
-    """get_s0_approximation (prclz/complexity.py:11-40): Voronoi cells of
-    the centroids clipped to the block → planar graph of cell boundaries.
-
-    Cells come from exact half-plane clipping against an expanded block
-    bbox frame (mathematically the Voronoi diagram restricted to the
-    frame — what pytess+clip produces up to degeneracies). The pytess
-    anchor/vs contract is still honored via functions.voronoi for callers
-    that need it; here we need the clipped cells only."""
-    block_ring = np.asarray(block_ring, dtype=float)
-    boundary_set = {(float(x), float(y)) for x, y in block_ring}
-    pts = np.asarray(centroids, dtype=float)
-    # deterministic perturbation of duplicates
-    seen: dict[tuple[float, float], int] = {}
-    for i in range(len(pts)):
-        key = (pts[i, 0], pts[i, 1])
-        if key in seen:
-            seen[key] += 1
-            pts[i] += 1e-9 * seen[key]
-        else:
-            seen[key] = 0
-
-    x0, y0, x1, y1 = geom.ring_bounds(block_ring)
-    m = max(x1 - x0, y1 - y0, 1e-9)
-    frame = np.array(
-        [[x0 - m, y0 - m], [x1 + m, y0 - m], [x1 + m, y1 + m], [x0 - m, y1 + m]]
-    )
-    rings = []
-    for i in range(len(pts)):
-        anchor = (float(centroids[i][0]), float(centroids[i][1]))
-        if anchor in boundary_set:
-            continue  # complexity.py:25 boundary-anchor filter
-        cell = halfplane_voronoi_cell(i, pts, frame)
-        if len(cell) <= 2:
-            continue  # len(vs) > 2 filter
-        # clip to block: geometry-true multi-ring clip — a NON-CONVEX
-        # block ∩ a convex cell can be disconnected, and plain
-        # Sutherland–Hodgman would emit one ring with degenerate bridge
-        # edges that become phantom edges in the mesh graph (convex
-        # blocks take the SH fast path inside). shapely .intersection
-        # semantics, prclz/complexity.py:28.
-        for clipped in geom.polygon_intersection(block_ring, cell):
-            if len(clipped) >= 3 and geom.ring_area(clipped) > 0:
-                # snap so adjacent cells' independently-computed shared
-                # vertices coincide exactly and the mesh graph connects
-                rings.append(geom.snap_ring(clipped))
-    return PlanarGraph.from_polygons(rings)
+    """S0: the centroids' Voronoi cells clipped to the block → planar
+    graph of cell boundaries."""
+    return s0_from_cells(block_ring, centroids, block_cells(block_ring, centroids)[1])
 
 
 def block_complexity(block_ring: np.ndarray, centroids: list[tuple[float, float]]) -> int:
     """calculate_complexity (midway/midway_complexity.py:32-37):
-    k = len(weak-dual sequence) - 1."""
-    if len(centroids) == 0:
-        return 0
-    s0 = s0_from_block(block_ring, centroids)
-    return s0.weak_dual_sequence_length()
+    k = len(weak-dual sequence) - 1 (0 without centroids)."""
+    return s0_from_block(block_ring, centroids).weak_dual_sequence_length()
 
 
 COMPLEXITY_SCHEMA = T.StructType(
@@ -107,42 +80,24 @@ def k_complexity(
     ``assigned_points``: (block_id, lon, lat) — output of
     operators.assign. ``blocks``: (block_id, geometry ring).
     Output: (block_id, complexity, centroid_count) —
-    FIXTURES.md §6 contract (geometry/centroids re-joinable from inputs).
+    FIXTURES.md §6 contract (geometry/centroids re-joinable from inputs);
+    a block without points gets k = 0, a kernel fault k = -1.
 
     Uses cogrouped applyInPandas so block geometry rides next to its points
-    without replicating the ring onto every point row.
+    without replicating the ring onto every point row; ``num_partitions``
+    defaults to 2x default parallelism (see parcel._cogroup_by_block)."""
 
-    The kernel is CPU-heavy while its shuffle is byte-light, so AQE's
-    size-based partition coalescing would starve the stage (a few-MB
-    shuffle collapses to a handful of tasks no matter how many cores
-    exist). The input is therefore pre-hash-partitioned on block_id with an
-    explicit count — an exchange Spark reuses for the cogroup clustering
-    and AQE will not coalesce — defaulting to 2x default parallelism."""
-
-    def per_block(pts_pdf: pd.DataFrame, blk_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(blk_pdf) == 0:
-            return pd.DataFrame(columns=["block_id", "complexity", "centroid_count"])
-        bid = blk_pdf["block_id"].iloc[0]
-        ring = geom.ring_to_np(blk_pdf["geometry"].iloc[0])
+    def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
         cent = list(zip(pts_pdf["lon"].to_numpy(), pts_pdf["lat"].to_numpy()))
         try:
             k = block_complexity(ring, cent)
-            status = 0
         except Exception:
             # kernel-level fault isolation: never fail the stage
             # (midway_blocks.py:45-48 error-file analog, SURVEY.md §4)
-            k, status = -1, 1
-        _ = status
-        return pd.DataFrame(
-            {"block_id": [bid], "complexity": [k], "centroid_count": [len(cent)]}
-        )
+            k = -1
+        return [{"block_id": bid, "complexity": k, "centroid_count": len(cent)}]
 
-    n = num_partitions or (
-        assigned_points.sparkSession.sparkContext.defaultParallelism * 2
-    )
-    pts = assigned_points.select("block_id", "lon", "lat").repartition(n, "block_id")
-    return (
-        pts.groupBy("block_id")
-        .cogroup(blocks.repartition(n, "block_id").groupBy("block_id"))
-        .applyInPandas(per_block, COMPLEXITY_SCHEMA)
+    return _cogroup_by_block(
+        assigned_points, ["block_id", "lon", "lat"], blocks, kernel,
+        COMPLEXITY_SCHEMA, num_partitions,
     )

@@ -8,12 +8,16 @@ role is played by image points (SURVEY.md §1.4), so a parcel is the
 clipped Voronoi cell of one point — the dissolve step is the identity —
 and the mesh is the union of cell boundaries.
 
-Spark shape: ``assigned points → groupBy(block) cogroup blocks →
-applyInPandas(voronoi_clip)``; one shuffle, kernels pure numpy
-(functions.voronoi halfplane cells + Sutherland–Hodgman clip, the same
-pair complexity.py's S0 uses, so parcels and k-complexity agree)."""
+``block_cells`` is the engine's one cell loop; parcels and k-complexity's
+S0 mesh both derive from it, so they agree. The pipeline computes each
+block's cells once (``reblock.block_rows``) and its parcels table is a
+filter sink of ``reblock_all``. Spark shape of ``parcelize``: assigned
+points cogrouped with blocks by block_id (``_cogroup_by_block``, shared
+by every per-block operator); one shuffle, kernels pure numpy."""
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -22,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geom
-from ..functions.voronoi import halfplane_voronoi_cell
+from ..functions.voronoi import halfplane_voronoi_cell, perturb_duplicates
 
 PARCELS_SCHEMA = T.StructType(
     [
@@ -34,57 +38,127 @@ PARCELS_SCHEMA = T.StructType(
 )
 
 
+
+def _cogroup_by_block(
+    points: DataFrame, point_cols: list[str], blocks: DataFrame,
+    kernel: Callable[[pd.DataFrame, str, np.ndarray, list | None], list[dict]],
+    schema: T.StructType, num_partitions: int | None = None,
+) -> DataFrame:
+    """The per-block operators' one cogroup: ``kernel(pts_pdf, block_id,
+    ring, boundary_types)`` returns a block's output rows as dicts (missing
+    keys become nulls; boundary_types is None unless the blocks frame
+    carries them); a group without a block row yields nothing. No side may
+    carry a nested array column: an empty group of one crashes the Python
+    worker's Arrow read, so rings travel flattened (``F.flatten``).
+
+    The kernels are CPU-heavy while their shuffle is byte-light, so AQE's
+    size-based coalescing would collapse the stage to a handful of tasks.
+    Both sides are therefore hash-partitioned on block_id with an explicit
+    count (default 2x default parallelism) — an exchange the cogroup
+    reuses and AQE does not coalesce."""
+    cols = [f.name for f in schema.fields]
+    blk_cols = ["block_id", F.flatten("geometry").alias("geometry")] + (
+        ["boundary_types"] if "boundary_types" in blocks.columns else []
+    )
+
+    def per_block(pts_pdf: pd.DataFrame, blk_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(blk_pdf) == 0:
+            return pd.DataFrame(columns=cols)
+        blk = blk_pdf.iloc[0]
+        bt = blk.get("boundary_types")
+        rows = kernel(
+            pts_pdf, blk["block_id"], np.asarray(blk["geometry"], float).reshape(-1, 2),
+            None if bt is None else list(bt),
+        )
+        return pd.DataFrame(rows, columns=cols)
+
+    n = num_partitions or points.sparkSession.sparkContext.defaultParallelism * 2
+    return (
+        points.select(*point_cols).repartition(n, "block_id").groupBy("block_id")
+        .cogroup(
+            blocks.select(*blk_cols).repartition(n, "block_id").groupBy("block_id")
+        )
+        .applyInPandas(per_block, schema)
+    )
+
+
+def _canonical_points(pts_pdf: pd.DataFrame, point_id: str) -> tuple[list, np.ndarray]:
+    """(string ids, (n, 2) lon/lat) in point-id order: the duplicate
+    perturbation depends on order, so not on the cogroup's arrival."""
+    pts_pdf = pts_pdf.sort_values(point_id, kind="stable")
+    return [str(v) for v in pts_pdf[point_id]], pts_pdf[["lon", "lat"]].to_numpy(float)
+
+
+def _cell_frame(block_ring: np.ndarray) -> np.ndarray:
+    """The block's bbox expanded by its larger side: the frame every
+    Voronoi cell is clipped from."""
+    x0, y0, x1, y1 = geom.ring_bounds(block_ring)
+    m = max(x1 - x0, y1 - y0, 1e-9)
+    return np.array(
+        [[x0 - m, y0 - m], [x1 + m, y0 - m], [x1 + m, y1 + m], [x0 - m, y1 + m]]
+    )
+
+
+def block_cells(
+    block_ring: np.ndarray, pts_xy
+) -> tuple[np.ndarray, list[list[np.ndarray]]]:
+    """Each point's Voronoi cell clipped to the block: (perturbed points,
+    per point its pieces with >= 3 vertices and positive area, in
+    ``polygon_intersection`` order). Cells are exact half-plane clips of
+    the bbox frame. The clip to the block is multi-ring: a NON-CONVEX
+    block ∩ a convex cell can be disconnected, where Sutherland–Hodgman
+    would emit one ring whose bridge edges become phantom mesh edges
+    (shapely .intersection semantics, prclz/complexity.py:28)."""
+    block_ring = np.asarray(block_ring, dtype=float)
+    pts, frame = perturb_duplicates(pts_xy), _cell_frame(block_ring)
+    pieces = []
+    for i in range(len(pts)):
+        cell = halfplane_voronoi_cell(i, pts, frame)
+        pieces.append(
+            [
+                p for p in geom.polygon_intersection(block_ring, cell)
+                if len(p) >= 3 and geom.ring_area(p) > 0
+            ]
+            if len(cell) >= 3 else []
+        )
+    return pts, pieces
+
+
+def parcels_from_cells(point_ids: list[str], pts: np.ndarray, pieces: list) -> list[tuple]:
+    """Parcels from ``block_cells``: the piece holding the (perturbed)
+    generating point keeps the point id — terminals pair with their parcel
+    by id in reblock — and detached pieces get a "#k" suffix so their
+    edges still enter the parcel mesh."""
+    out = []
+    for pid, (x, y), ps in zip(point_ids, pts, pieces):
+        if len(ps) <= 1:
+            out.extend((pid, p) for p in ps)
+            continue
+        own = [j for j, p in enumerate(ps) if geom.point_in_polygon(x, y, p)]
+        main = own[0] if own else int(np.argmax([geom.ring_area(p) for p in ps]))
+        out.append((pid, ps[main]))
+        out.extend((f"{pid}#{j}", p) for j, p in enumerate(ps) if j != main)
+    return out
+
+
 def block_parcels(
     block_ring: np.ndarray,
     point_ids: list[str],
     pts_xy: np.ndarray,
 ) -> list[tuple[str, np.ndarray]]:
-    """Clipped Voronoi cell per point; duplicates perturbed
-    deterministically like the Voronoi module."""
-    pts = np.array(pts_xy, dtype=float)
-    seen: dict[tuple[float, float], int] = {}
-    for i in range(len(pts)):
-        key = (pts[i, 0], pts[i, 1])
-        if key in seen:
-            seen[key] += 1
-            pts[i] += 1e-9 * seen[key]
-        else:
-            seen[key] = 0
-    x0, y0, x1, y1 = geom.ring_bounds(block_ring)
-    m = max(x1 - x0, y1 - y0, 1e-9)
-    frame = np.array(
-        [[x0 - m, y0 - m], [x1 + m, y0 - m], [x1 + m, y1 + m], [x0 - m, y1 + m]]
-    )
-    out = []
-    for i in range(len(pts)):
-        cell = halfplane_voronoi_cell(i, pts, frame)
-        if len(cell) < 3:
-            continue
-        # geometry-true multi-ring clip (non-convex block ∩ cell can be
-        # disconnected; see complexity.s0_from_block). The piece holding
-        # the generating point keeps the point id — terminals pair with
-        # their parcel by id in reblock — and detached pieces get a
-        # "#k" suffix so their edges still enter the parcel mesh.
-        pieces = [
-            p for p in geom.polygon_intersection(block_ring, cell)
-            if len(p) >= 3 and geom.ring_area(p) > 0
-        ]
-        if not pieces:
-            continue
-        if len(pieces) == 1:
-            out.append((point_ids[i], pieces[0]))
-            continue
-        own = [
-            j for j, p in enumerate(pieces)
-            if geom.point_in_polygon(pts[i, 0], pts[i, 1], p)
-        ]
-        main = own[0] if own else int(np.argmax([geom.ring_area(p) for p in pieces]))
-        out.append((point_ids[i], pieces[main]))
-        out.extend(
-            (f"{point_ids[i]}#{j}", p)
-            for j, p in enumerate(pieces) if j != main
-        )
-    return out
+    """Clipped Voronoi cell per point, in input order; duplicates
+    perturbed deterministically."""
+    return parcels_from_cells(point_ids, *block_cells(block_ring, pts_xy))
+
+
+def _parcel_row(block_id: str, pid: str, ring: np.ndarray) -> dict:
+    """One parcels-table row."""
+    return {
+        "block_id": block_id,
+        "parcel_point_id": pid,
+        "geometry": [[float(x), float(y)] for x, y in ring],
+        "area": geom.ring_area(ring),
+    }
 
 
 def parcelize(
@@ -95,43 +169,20 @@ def parcelize(
 ) -> DataFrame:
     """(block_id, parcel_point_id, geometry, area): one parcel per
     assigned point. ``assigned_points``: (block_id, point_id, lon, lat);
-    ``blocks``: (block_id, geometry ring). Pre-hash-partitioned with an
-    explicit count so AQE's size-based coalescing cannot starve the
-    CPU-heavy kernel (see complexity.k_complexity)."""
+    ``blocks``: (block_id, geometry ring). Points are taken in point-id
+    order, so the output does not depend on shuffle arrival order."""
 
-    def per_block(pts_pdf: pd.DataFrame, blk_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in PARCELS_SCHEMA.fields]
-        if len(blk_pdf) == 0 or len(pts_pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        bid = blk_pdf["block_id"].iloc[0]
-        ring = geom.ring_to_np(blk_pdf["geometry"].iloc[0])
-        ids = [str(v) for v in pts_pdf[point_id]]
-        xy = np.column_stack([pts_pdf["lon"].to_numpy(), pts_pdf["lat"].to_numpy()])
+    def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
+        ids, xy = _canonical_points(pts_pdf, point_id)
         try:
             cells_out = block_parcels(ring, ids, xy)
         except Exception:
             cells_out = []  # fault isolation, never fail the stage
-        rows = [
-            {
-                "block_id": bid,
-                "parcel_point_id": pid,
-                "geometry": [[float(x), float(y)] for x, y in cell],
-                "area": geom.ring_area(cell),
-            }
-            for pid, cell in cells_out
-        ]
-        return pd.DataFrame(rows, columns=cols)
+        return [_parcel_row(bid, pid, cell) for pid, cell in cells_out]
 
-    n = num_partitions or (
-        assigned_points.sparkSession.sparkContext.defaultParallelism * 2
-    )
-    pts = assigned_points.select("block_id", point_id, "lon", "lat").repartition(
-        n, "block_id"
-    )
-    return (
-        pts.groupBy("block_id")
-        .cogroup(blocks.repartition(n, "block_id").groupBy("block_id"))
-        .applyInPandas(per_block, PARCELS_SCHEMA)
+    return _cogroup_by_block(
+        assigned_points, ["block_id", point_id, "lon", "lat"], blocks, kernel,
+        PARCELS_SCHEMA, num_partitions,
     )
 
 
@@ -202,22 +253,8 @@ def block_parcels_footprint(
                 f"footprint densification produced {len(anchors)} anchors "
                 f"(> {max_anchors}) at ptdist={ptdist}"
             )
-    pts = np.asarray(anchors, dtype=float)
-    # deterministic perturbation of exact duplicates (shared footprint
-    # corners / overlapping rings), same scheme as the Voronoi module
-    seen: dict[tuple[float, float], int] = {}
-    for i in range(len(pts)):
-        key = (pts[i, 0], pts[i, 1])
-        if key in seen:
-            seen[key] += 1
-            pts[i] += 1e-9 * seen[key]
-        else:
-            seen[key] = 0
-    x0, y0, x1, y1 = geom.ring_bounds(block_ring)
-    m = max(x1 - x0, y1 - y0, 1e-9)
-    frame = np.array(
-        [[x0 - m, y0 - m], [x1 + m, y0 - m], [x1 + m, y1 + m], [x0 - m, y1 + m]]
-    )
+    # exact duplicates: shared footprint corners / overlapping rings
+    pts, frame = perturb_duplicates(anchors), _cell_frame(block_ring)
     agg_area: dict[int, float] = {}
     agg_cells: dict[int, int] = {}
     for i in range(len(pts)):
@@ -264,18 +301,10 @@ def parcelize_footprints(
     model the tiling operator uses). Output:
     (block_id, parcel_id, n_cells, area, ptdist_used)."""
 
-    def per_block(pts_pdf: pd.DataFrame, blk_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in FOOTPRINT_PARCELS_SCHEMA.fields]
-        if len(blk_pdf) == 0 or len(pts_pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        bid = blk_pdf["block_id"].iloc[0]
-        ring = geom.ring_to_np(blk_pdf["geometry"].iloc[0])
-        # canonical order: independent of cogroup arrival order
-        pts_pdf = pts_pdf.sort_values(point_id)
-        ids = [str(v) for v in pts_pdf[point_id]]
-        xy = np.column_stack(
-            [pts_pdf["lon"].to_numpy(), pts_pdf["lat"].to_numpy()]
-        )
+    def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
+        if len(pts_pdf) == 0:
+            return []
+        ids, xy = _canonical_points(pts_pdf, point_id)
         h = footprint_side / 2.0
         rings = [
             np.array(
@@ -289,36 +318,19 @@ def parcelize_footprints(
             except Exception:
                 continue
             if out:
-                return pd.DataFrame(
-                    [
-                        {"block_id": bid, "parcel_id": pid, "n_cells": nc,
-                         "area": a, "ptdist_used": float(d)}
-                        for pid, nc, a in out
-                    ],
-                    columns=cols,
-                )
+                return [
+                    {"block_id": bid, "parcel_id": pid, "n_cells": nc,
+                     "area": a, "ptdist_used": float(d)}
+                    for pid, nc, a in out
+                ]
         # inherit-block-boundary fallback: the whole block as one parcel
-        return pd.DataFrame(
-            [{"block_id": bid, "parcel_id": FALLBACK_PARCEL_ID, "n_cells": 1,
-              "area": geom.ring_area(geom.snap_ring(ring)),
-              "ptdist_used": -1.0}],
-            columns=cols,
-        )
+        return [{"block_id": bid, "parcel_id": FALLBACK_PARCEL_ID, "n_cells": 1,
+                 "area": geom.ring_area(geom.snap_ring(ring)),
+                 "ptdist_used": -1.0}]
 
-    n = num_partitions or (
-        assigned_points.sparkSession.sparkContext.defaultParallelism * 2
-    )
-    pts = assigned_points.select("block_id", point_id, "lon", "lat").repartition(
-        n, "block_id"
-    )
-    return (
-        pts.groupBy("block_id")
-        .cogroup(
-            blocks.select("block_id", "geometry")
-            .repartition(n, "block_id")
-            .groupBy("block_id")
-        )
-        .applyInPandas(per_block, FOOTPRINT_PARCELS_SCHEMA)
+    return _cogroup_by_block(
+        assigned_points, ["block_id", point_id, "lon", "lat"], blocks, kernel,
+        FOOTPRINT_PARCELS_SCHEMA, num_partitions,
     )
 
 

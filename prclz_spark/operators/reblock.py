@@ -17,16 +17,17 @@ original segments (i_topology.py:347-365); split the result into
 existing (weight 0) vs new roads (i_topology.py:469-486); persist
 per-block timing/size metrics (i_reblock.py:152-158).
 
-Spark shape (SURVEY.md §3.3): ``parcels ⨝ points ⨝ blocks →
-repartition by block → applyInPandas(steiner_reblock)``. Work per block is
-strongly size-dependent (the reference sorts small blocks first and
-enforces a per-block time budget); here every block is an independent
+Spark shape (SURVEY.md §3.3): one cogroup of points and blocks by block.
+The pipeline's ``reblock_all`` runs stages 2-4 in it (``block_rows``:
+cells once → complexity, parcels, then reblock on the in-memory parcels);
+``reblock`` takes a parcels table instead. Every block is an independent
 task and a kernel-level try/except emits a status row instead of failing
-the stage.
+the stage (the reference enforces a per-block time budget).
 """
 
 from __future__ import annotations
 
+import contextlib
 import time
 
 import numpy as np
@@ -37,6 +38,14 @@ from pyspark.sql import types as T
 
 from ..functions import geom
 from ..functions.graphops import PlanarGraph
+from .complexity import COMPLEXITY_SCHEMA, s0_from_cells
+from .parcel import (
+    PARCELS_SCHEMA,
+    _cogroup_by_block,
+    _parcel_row,
+    block_cells,
+    parcels_from_cells,
+)
 
 BOUNDARY_TOL = 1e-9
 # reference feature-type weights (i_topology_utils.py:33-35)
@@ -81,14 +90,16 @@ REBLOCK_TERMINALS_SCHEMA = T.StructType(
     ]
 )
 
-# long format: one kernel pass feeds all three reference sinks (summary,
-# steiner lines, terminal points — i_reblock.py:152-165) without running
-# the Steiner kernel once per output table
+# long format: ONE per-block pass (block_rows) feeds complexity, parcels
+# and the three reference sinks (summary, steiner lines, terminal points —
+# i_reblock.py:152-165), told apart by ``kind``
 REBLOCK_ALL_SCHEMA = T.StructType(
     [T.StructField("kind", T.StringType())]
     + REBLOCK_EDGES_SCHEMA.fields[:]
     + REBLOCK_SUMMARY_SCHEMA.fields[1:]
-    + [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
+    + REBLOCK_TERMINALS_SCHEMA.fields[1:]
+    + COMPLEXITY_SCHEMA.fields[1:]
+    + PARCELS_SCHEMA.fields[1:]
 )
 
 MAX_TERMINALS = 400  # straggler budget: the reference bounds per-block work
@@ -300,6 +311,45 @@ def reblock_kernel(
     return edges, summary
 
 
+def _reblock_block(
+    block_id: str, block_ring: np.ndarray, parcels: dict[str, np.ndarray],
+    points: dict[str, np.ndarray], boundary_types: list[str] | None,
+    simplify: bool = True, drop_boundary_parcels: bool = True,
+) -> dict[str, list[dict]]:
+    """One block's reblock rows per sink kind from parcels and points keyed
+    by point id, which pairs each terminal with its parcel. Both enter the
+    kernel in pid order, so insertion order, subsampling and tie-breaks do
+    not depend on arrival order; a kernel fault gives a status-1 summary."""
+    ring_ids = sorted(parcels)
+    ring_idx = {pid: i for i, pid in enumerate(ring_ids)}
+    pt_ids = sorted(points)
+    xy = np.array([points[p] for p in pt_ids], dtype=float).reshape(-1, 2)
+    cells = np.array([ring_idx.get(p, -1) for p in pt_ids], dtype=int)
+    try:
+        edges, summary = reblock_kernel(
+            block_ring, [parcels[p] for p in ring_ids], xy,
+            simplify=simplify, terminal_cells=cells,
+            drop_boundary_parcels=drop_boundary_parcels,
+            boundary_types=boundary_types,
+        )
+    except Exception:
+        edges, summary = [], {
+            "_terminals": [], "status": 1, "n_terminals": 0,
+            "n_nodes_pre": 0, "n_edges_pre": 0, "n_new_edges": 0,
+            "new_len": 0.0, "existing_len": 0.0, "wall_ms": 0,
+        }
+    term_pts = summary.pop("_terminals")
+    return {
+        "summary": [{"block_id": block_id, **summary}],
+        "edge": [
+            {"block_id": block_id, "edge_type": et, "ax": a[0], "ay": a[1],
+             "bx": b_[0], "by": b_[1], "length": L}
+            for et, a, b_, L in edges
+        ],
+        "terminal": [{"block_id": block_id, "x": x, "y": y} for x, y in term_pts],
+    }
+
+
 def reblock(
     parcels: DataFrame,
     assigned_points: DataFrame,
@@ -314,126 +364,118 @@ def reblock(
     output; ``assigned_points``: (block_id, point_id, lon, lat);
     ``blocks``: (block_id, geometry[, boundary_types]). ``emit``: 'edges'
     (steiner edge rows), 'summary' (per-block metrics, the reference's
-    timing/size columns), 'terminals' (snapped terminal points — the
-    reference's third output file, i_reblock.py:159-165), or 'all' (long
-    format with a ``kind`` column carrying every sink from ONE kernel
-    pass — what pipeline stage 4 persists before splitting into the
-    three reference tables). ``boundary_types``, when present on the
-    blocks frame, carries one feature type per boundary ring segment and
-    feeds the reference's typed edge weighting (produce it with
+    timing/size columns) or 'terminals' (snapped terminal points — the
+    reference's third output file, i_reblock.py:159-165).
+    ``boundary_types``, when present on the blocks frame, carries one
+    feature type per boundary ring segment and feeds the reference's
+    typed edge weighting (produce it with
     rangejoin.boundary_types_for_blocks).
 
     Implementation: parcels already carry block_id AND the owning point id
     (parcel_point_id), so the kernel inputs co-group on block_id — the
     only shuffle — and terminals pair with their parcels by id inside the
-    kernel (no geometric matching). Rows are sorted by pid in-kernel, so
-    results are independent of cogroup arrival order."""
-    # single co-grouped stream: parcel rows carry their ring (>= 3 vertices),
-    # point rows a 1-vertex "ring" — disambiguated by length in the kernel;
-    # both carry the point id so the kernel can pair them
+    kernel (no geometric matching). The pipeline's ``reblock_all`` makes
+    the same kernel call on the parcels it has just computed in memory."""
+    kinds = {"edges": ("edge", REBLOCK_EDGES_SCHEMA),
+             "summary": ("summary", REBLOCK_SUMMARY_SCHEMA),
+             "terminals": ("terminal", REBLOCK_TERMINALS_SCHEMA)}
+    if emit not in kinds:
+        raise ValueError(emit)
+    kind, schema = kinds[emit]
+    # single co-grouped stream: parcel rows carry their flattened ring
+    # (>= 3 vertices), point rows one vertex — disambiguated by length in
+    # the kernel; both carry the point id so the kernel can pair them
     both = parcels.select(
-        "block_id", F.col("parcel_point_id").alias("pid"), "geometry"
+        "block_id", F.col("parcel_point_id").alias("pid"),
+        F.flatten("geometry").alias("geometry"),
     ).unionByName(
         assigned_points.select(
             "block_id",
             F.col(point_id).cast("string").alias("pid"),
-            F.array(F.array(F.col("lon"), F.col("lat"))).alias("geometry"),
+            F.array(F.col("lon"), F.col("lat")).alias("geometry"),
         )
     )
-    has_btypes = "boundary_types" in blocks.columns
-    blk_cols = ["block_id", "geometry"] + (
-        ["boundary_types"] if has_btypes else []
-    )
 
-    schemas = {
-        "edges": REBLOCK_EDGES_SCHEMA,
-        "summary": REBLOCK_SUMMARY_SCHEMA,
-        "terminals": REBLOCK_TERMINALS_SCHEMA,
-        "all": REBLOCK_ALL_SCHEMA,
-    }
-    if emit not in schemas:
-        raise ValueError(emit)
-
-    def per_block(rows_pdf: pd.DataFrame, blk_pdf: pd.DataFrame) -> pd.DataFrame:
-        ecols = [f.name for f in REBLOCK_EDGES_SCHEMA.fields]
-        scols = [f.name for f in REBLOCK_SUMMARY_SCHEMA.fields]
-        acols = [f.name for f in REBLOCK_ALL_SCHEMA.fields]
-        out_cols = [f.name for f in schemas[emit].fields]
-        if len(blk_pdf) == 0 or len(rows_pdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        bid = blk_pdf["block_id"].iloc[0]
-        ring = geom.ring_to_np(blk_pdf["geometry"].iloc[0])
-        btypes = None
-        if has_btypes and blk_pdf["boundary_types"].iloc[0] is not None:
-            btypes = list(blk_pdf["boundary_types"].iloc[0])
+    def kernel(rows_pdf, bid, ring, btypes) -> list[dict]:
+        if len(rows_pdf) == 0:
+            return []
         prings: dict[str, np.ndarray] = {}
         pts: dict[str, np.ndarray] = {}
         for pid, gvals in zip(rows_pdf["pid"], rows_pdf["geometry"]):
-            arr = geom.ring_to_np(gvals)
+            arr = np.asarray(gvals, float).reshape(-1, 2)
             if len(arr) == 1:
                 pts[str(pid)] = arr[0]
             else:
                 prings[str(pid)] = arr
-        # canonical order: sort by pid so kernel inputs (and therefore
-        # insertion order, subsampling, tie-breaks) are independent of
-        # shuffle arrival order
-        ring_ids = sorted(prings)
-        ring_idx = {pid: i for i, pid in enumerate(ring_ids)}
-        pt_ids = sorted(pts)
-        xy = np.array([pts[p] for p in pt_ids], dtype=float).reshape(-1, 2)
-        cells = np.array([ring_idx.get(p, -1) for p in pt_ids], dtype=int)
-        try:
-            edges, summary = reblock_kernel(
-                ring, [prings[p] for p in ring_ids], xy,
-                simplify=simplify, terminal_cells=cells,
-                drop_boundary_parcels=drop_boundary_parcels,
-                boundary_types=btypes,
-            )
-            summary["status"] = summary.get("status", 0)
-        except Exception:
-            edges, summary = [], {
-                "_terminals": [], "status": 1, "n_terminals": 0,
-                "n_nodes_pre": 0, "n_edges_pre": 0, "n_new_edges": 0,
-                "new_len": 0.0, "existing_len": 0.0, "wall_ms": 0,
-            }
-        term_pts = summary.pop("_terminals", [])
-        if emit == "summary":
-            return pd.DataFrame([{"block_id": bid, **summary}], columns=scols)
-        if emit == "terminals":
-            return pd.DataFrame(
-                [{"block_id": bid, "x": x, "y": y} for x, y in term_pts],
-                columns=out_cols,
-            )
-        edge_rows = [
-            {
-                "block_id": bid, "edge_type": et,
-                "ax": a[0], "ay": a[1], "bx": b_[0], "by": b_[1],
-                "length": L,
-            }
-            for et, a, b_, L in edges
-        ]
-        if emit == "edges":
-            return pd.DataFrame(edge_rows, columns=ecols)
-        rows = (
-            [{"kind": "summary", "block_id": bid, **summary}]
-            + [{"kind": "edge", **r} for r in edge_rows]
-            + [{"kind": "terminal", "block_id": bid, "x": x, "y": y}
-               for x, y in term_pts]
-        )
-        return pd.DataFrame(rows, columns=acols)
+        return _reblock_block(
+            bid, ring, prings, pts, btypes,
+            simplify=simplify, drop_boundary_parcels=drop_boundary_parcels,
+        )[kind]
 
-    schema = schemas[emit]
     # explicit hash partition count: the Steiner kernel is the most
     # CPU-expensive stage in the engine; never let byte-based AQE
-    # coalescing underparallelize it (see complexity.k_complexity)
-    n = num_partitions or (
-        parcels.sparkSession.sparkContext.defaultParallelism * 2
+    # coalescing underparallelize it (see parcel._cogroup_by_block)
+    return _cogroup_by_block(
+        both, ["block_id", "pid", "geometry"], blocks, kernel, schema, num_partitions
     )
-    return (
-        both.repartition(n, "block_id")
-        .groupBy("block_id")
-        .cogroup(
-            blocks.select(*blk_cols).repartition(n, "block_id").groupBy("block_id")
+
+
+def block_rows(
+    block_id: str, block_ring: np.ndarray, point_ids: list, pts_xy: np.ndarray,
+    boundary_types: list[str] | None = None,
+) -> list[dict]:
+    """One block's ``REBLOCK_ALL_SCHEMA`` rows, points taken in point-id
+    order: its cells, computed once (``parcel.block_cells``), give the
+    complexity row and the parcel rows, and the in-memory parcels feed the
+    reblock kernel as ``reblock`` feeds it from a parcels table. A fault
+    costs only its own product (k = -1, no parcel rows, or status 1); a
+    block without points gives one complexity row (k = 0) and nothing
+    else."""
+    order = pd.Series(point_ids).sort_values(kind="stable").index.to_numpy()
+    ids = [str(point_ids[i]) for i in order]
+    xy = np.asarray(pts_xy, dtype=float).reshape(-1, 2)[order]
+    k, parcels = -1, []  # a fault in the shared cells faults both products
+    with contextlib.suppress(Exception):
+        pts, pieces = block_cells(block_ring, xy)
+        with contextlib.suppress(Exception):
+            k = s0_from_cells(block_ring, xy, pieces).weak_dual_sequence_length()
+        parcels = parcels_from_cells(ids, pts, pieces)
+    out = {
+        "complexity": [
+            {"block_id": block_id, "complexity": k, "centroid_count": len(ids)}
+        ],
+        "parcel": [_parcel_row(block_id, pid, ring) for pid, ring in parcels],
+    }
+    if ids:
+        out.update(
+            _reblock_block(
+                block_id, block_ring, dict(parcels), dict(zip(ids, xy)),
+                boundary_types,
+            )
         )
-        .applyInPandas(per_block, schema)
+    # every key present, so no column of another kind comes out NaN: a
+    # NaN in the array-typed geometry column fails the Arrow conversion
+    blank = dict.fromkeys(f.name for f in REBLOCK_ALL_SCHEMA.fields)
+    return [
+        {**blank, **row, "kind": kind} for kind, rows in out.items() for row in rows
+    ]
+
+
+def reblock_all(
+    assigned_points: DataFrame, blocks: DataFrame, point_id: str = "image_id"
+) -> DataFrame:
+    """Complexity, parcels and reblock of every block in ONE cogroup pass
+    (``block_rows``): ``REBLOCK_ALL_SCHEMA`` rows whose ``kind`` —
+    complexity, parcel, summary, edge or terminal — filtered to its own
+    schema's columns equals k_complexity, parcelize and reblock(emit=...)
+    on the same (block_id, point_id, lon, lat) points and (block_id,
+    geometry[, boundary_types]) blocks."""
+
+    def kernel(pts_pdf, bid, ring, btypes) -> list[dict]:
+        xy = pts_pdf[["lon", "lat"]].to_numpy(float)
+        return block_rows(bid, ring, pts_pdf[point_id].tolist(), xy, btypes)
+
+    return _cogroup_by_block(
+        assigned_points, ["block_id", point_id, "lon", "lat"], blocks, kernel,
+        REBLOCK_ALL_SCHEMA,
     )

@@ -5,7 +5,9 @@ resumes via output-file-exists checks and CheckPointer CSVs (SURVEY.md
 §3, §2.1 S9). Here each stage is a DataFrame program whose output commits
 atomically to the TableStore with per-partition lineage; re-running the
 pipeline recomputes only partitions absent from lineage (kill-and-resume:
-a killed commit leaves no manifest, so its partitions re-run).
+a killed commit leaves no manifest, so its partitions re-run). Stages 2-4
+(k-complexity, parcels, reblock) are ONE per-block pass committed as
+``reblock_all``; their five tables are filter sinks of it.
 
 Partitioning follows the north_rule: points carry a cell *prefix*
 (coarse cell id) and every stage table is partitioned by it, so a
@@ -94,8 +96,9 @@ def run_pipeline(
     prefix_res: int = 6,
 ) -> dict:
     """The reference's full stage chain — assign → k-complexity →
-    parcelization → reblocking (SURVEY.md §3) — each stage committed
-    atomically with per-partition lineage and resumable independently.
+    parcelization → reblocking (SURVEY.md §3), the last three as one
+    per-block pass — each table committed atomically with per-partition
+    lineage and resumable independently.
 
     Stage 1 is the flat single-cell broadcast join
     (assign_points_to_blocks); the cover's row count lands in the assign
@@ -133,65 +136,32 @@ def run_pipeline(
         computed[COMPLEXITY_TABLE] = 0
         return computed
 
-    def per_block_stage(table: str, build) -> int:
-        """Shared per-block resume pattern (CheckPointer anti-join analog,
-        i_reblock.py:254-255): blocks already in the table's lineage are
-        skipped — picked on the driver from ``blocks_pdf``, no Spark job;
-        ``build(todo_blocks, todo_assigned)`` produces the new rows,
-        committed partitioned by block_id."""
-        done = store.completed_partitions(table)
-        todo_pdf = blocks_pdf[~blocks_pdf.block_id.isin(done)]
-        computed[table] = len(todo_pdf)
-        if len(todo_pdf):
-            todo_blocks = spark.createDataFrame(todo_pdf, synth.BLOCKS_DDL)
-            todo_assigned = assigned.join(
-                F.broadcast(todo_blocks.select("block_id")), "block_id", "left_semi"
-            )
-            out = build(todo_blocks, todo_assigned)
-            store.commit(
-                out, table, "block_id", stage=table, keys=list(todo_pdf.block_id)
-            )
-        return len(todo_pdf)
-
-    # -- stage 2: k-complexity per block -----------------------------------
-    per_block_stage(
-        COMPLEXITY_TABLE,
-        lambda blks, pts_: complexity_op.k_complexity(pts_, blks),
-    )
-
-    # -- stage 3: parcelization per block (reference stage 3) --------------
-    per_block_stage(
-        PARCELS_TABLE,
-        lambda blks, pts_: parcel_op.parcelize(pts_, blks),
-    )
-    parcels = store.read(spark, PARCELS_TABLE)
-    if parcels is None:
-        computed[REBLOCK_TABLE] = 0
-        return computed
-
-    # -- stage 4: Steiner reblocking per block (reference stage 5) ---------
-    # ONE kernel pass emits the long-format 'all' frame; the three
-    # reference sinks — summary, steiner lines, terminal points
-    # (i_reblock.py:159-165) — are cheap filters of the committed table,
-    # each with its own lineage so resume covers all three.
-    per_block_stage(
-        REBLOCK_ALL_TABLE,
-        lambda blks, pts_: reblock_op.reblock(
-            parcels.join(
-                F.broadcast(blks.select("block_id")), "block_id", "left_semi"
-            ),
-            pts_,
-            blks,
-            emit="all",
-        ),
-    )
-    if store.latest_snapshot_id(REBLOCK_ALL_TABLE) is None:
-        return computed
-    # each sink's todo blocks = reblock_all's lineage minus its own, known
-    # on the driver; the counts come from the new snapshots' lineage
+    # -- stages 2-4: k-complexity, parcels, Steiner reblocking -------------
+    # ONE per-block pass commits every per-block product to reblock_all.
+    # Resume (CheckPointer anti-join analog, i_reblock.py:254-255): blocks
+    # in its lineage are skipped, picked on the driver — no Spark job.
+    done = store.completed_partitions(REBLOCK_ALL_TABLE)
+    todo_pdf = blocks_pdf[~blocks_pdf.block_id.isin(done)]
+    computed[REBLOCK_ALL_TABLE] = len(todo_pdf)
+    if len(todo_pdf):
+        todo_blocks = spark.createDataFrame(todo_pdf, synth.BLOCKS_DDL)
+        todo_assigned = assigned.join(
+            F.broadcast(todo_blocks.select("block_id")), "block_id", "left_semi"
+        )
+        store.commit(
+            reblock_op.reblock_all(todo_assigned, todo_blocks),
+            REBLOCK_ALL_TABLE, "block_id", stage=REBLOCK_ALL_TABLE,
+            keys=list(todo_pdf.block_id),
+        )
+    # complexity, parcels and the three reference reblock sinks (summary,
+    # steiner lines, terminal points — i_reblock.py:159-165) are filters of
+    # it, each with its own lineage: todo = reblock_all's lineage minus the
+    # sink's. Complexity and parcels count blocks, the reblock sinks rows.
     reblocked = store.completed_partitions(REBLOCK_ALL_TABLE)
     sinks = []
     for tname, kind, schema in (
+        (COMPLEXITY_TABLE, "complexity", complexity_op.COMPLEXITY_SCHEMA),
+        (PARCELS_TABLE, "parcel", parcel_op.PARCELS_SCHEMA),
         (REBLOCK_TABLE, "summary", reblock_op.REBLOCK_SUMMARY_SCHEMA),
         (REBLOCK_EDGES_TABLE, "edge", reblock_op.REBLOCK_EDGES_SCHEMA),
         (REBLOCK_TERMINALS_TABLE, "terminal", reblock_op.REBLOCK_TERMINALS_SCHEMA),
@@ -204,13 +174,18 @@ def run_pipeline(
         # the sinks each scan their slice — cache the long frame once so
         # that is 1 parquet scan, not one per sink
         allf = store.read(spark, REBLOCK_ALL_TABLE).cache()
-        for tname, kind, cols, todo in sinks:
-            sub = store.resume_filter(
-                allf.filter(F.col("kind") == kind).select(*cols), tname, "block_id"
-            )
-            sid = store.commit(sub, tname, "block_id", stage=tname, keys=todo)
-            computed[tname] = store.committed_rows(tname, sid)
-        allf.unpersist()
+        try:
+            for tname, kind, cols, todo in sinks:
+                sub = store.resume_filter(
+                    allf.filter(F.col("kind") == kind).select(*cols), tname, "block_id"
+                )
+                sid = store.commit(sub, tname, "block_id", stage=tname, keys=todo)
+                computed[tname] = (
+                    len(todo) if tname in (COMPLEXITY_TABLE, PARCELS_TABLE)
+                    else store.committed_rows(tname, sid)
+                )
+        finally:
+            allf.unpersist()
 
     # -- stage 5: curated training manifest ---------------------------------
     # The keep-list (phash connected components) is a GLOBAL property of

@@ -69,10 +69,12 @@ def test_query_matches_oracle(spark, name):
 # contract queries that build Spark frames from driver-side pandas tables
 # (the inputs whose schema a session could otherwise have to infer)
 VANILLA_SAMPLE = [
-    "spatial_block_extract", "spatial_boundary_types", "spatial_knn",
-    "spatial_largest_overlap", "spatial_parcel_assign", "spatial_pip_assign",
-    "spatial_pip_assign_compact", "spatial_road_dist", "spatial_road_dist_dist",
-    "spatial_road_dist_metrics", "spatial_tiles",
+    "spatial_block_extract", "spatial_boundary_types", "spatial_k_complexity_grid",
+    "spatial_knn", "spatial_largest_overlap", "spatial_parcel_assign",
+    "spatial_parcels", "spatial_parcels_footprint", "spatial_pip_assign",
+    "spatial_pip_assign_compact", "spatial_reblock_status", "spatial_reblock_steiner",
+    "spatial_road_dist", "spatial_road_dist_dist", "spatial_road_dist_metrics",
+    "spatial_tiles",
     "dedup_clusters", "img_incremental_dedup", "img_phash_clusters",
     "img_phash_dedup", "img_phash_dedup_capped", "img_training_manifest",
 ]

@@ -322,21 +322,51 @@ def clean_pipeline(spark, tmp_path_factory):
     return _pipeline_tables(spark, root)
 
 
+# the per-block pass's commit, its first sink and a mid-loop sink; the
+# complexity cases keep their bare phase ids
+_KILLED_COMMITS = [
+    pytest.param(t, p, id=p if t == "complexity" else f"{t}-{p}")
+    for t in ("complexity", "reblock_all", "parcels") for p in PHASES
+]
+
+
 @pytest.mark.slow
-@pytest.mark.parametrize("phase", PHASES)
+@pytest.mark.parametrize("table, phase", _KILLED_COMMITS)
 def test_pipeline_killed_commit_resumes_identical(
-    spark, tmp_path, monkeypatch, clean_pipeline, phase
+    spark, tmp_path, monkeypatch, clean_pipeline, table, phase
 ):
-    """Kill the complexity commit at each of its phases: the re-run gives
-    tables identical to an uninterrupted run and no orphaned files."""
+    """Kill a per-block commit at each of its phases: the re-run gives
+    tables identical to an uninterrupted run and no orphaned files. A
+    killed reblock_all re-runs the kernel for all 4 blocks and feeds all
+    five sinks; a killed sink re-derives from reblock_all, and the sinks
+    committed before it resume from their own lineage."""
     root = str(tmp_path / "wh")
-    _kill_at(monkeypatch, "complexity", phase)
+    _kill_at(monkeypatch, table, phase)
     with pytest.raises(_Killed):
         pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
     monkeypatch.undo()
     out = pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
-    assert out["assign"] == 0 and out["complexity"] == 4
+    assert out["assign"] == 0 and out[table] == 4
+    assert out["reblock_all"] == (4 if table == "reblock_all" else 0)
+    assert out["complexity"] == (0 if table == "parcels" else 4)
+    assert out["manifest"] == 400
     got = _pipeline_tables(spark, root)
     for t in _RESUME_TABLES:
         pd.testing.assert_frame_equal(got[t], clean_pipeline[t], obj=t)
     assert _store_leftovers(root) == []
+
+
+@pytest.mark.slow
+def test_pipeline_fresh_run_jobs_flat_in_blocks(spark, tmp_path):
+    """A fresh run costs the same Spark jobs on 9 blocks as on 16: stages
+    2-4 are one per-block commit plus five filter sinks, none of them per
+    block."""
+    jobs = {}
+    for g in (3, 4):
+        _, jobs[g] = jobs_in_group(
+            spark, f"fresh-{g}-{tmp_path.name}",
+            lambda: pipeline.run_pipeline(
+                spark, str(tmp_path / f"wh{g}"), n_images=400 * g, grid_g=g
+            ),
+        )
+    assert jobs == {3: 31, 4: 31}, jobs
