@@ -82,11 +82,13 @@ def _cogroup_by_block(
     )
 
 
-def _canonical_points(pts_pdf: pd.DataFrame, point_id: str) -> tuple[list, np.ndarray]:
+def _canonical_points(point_ids, pts_xy) -> tuple[list[str], np.ndarray]:
     """(string ids, (n, 2) lon/lat) in point-id order: the duplicate
-    perturbation depends on order, so not on the cogroup's arrival."""
-    pts_pdf = pts_pdf.sort_values(point_id, kind="stable")
-    return [str(v) for v in pts_pdf[point_id]], pts_pdf[["lon", "lat"]].to_numpy(float)
+    perturbation depends on order, so not on the cogroup's arrival. Every
+    per-block kernel takes its points through here."""
+    ids = pd.Series(point_ids).reset_index(drop=True).sort_values(kind="stable")
+    xy = np.asarray(pts_xy, dtype=float).reshape(-1, 2)[ids.index.to_numpy()]
+    return [str(v) for v in ids], xy
 
 
 def _cell_frame(block_ring: np.ndarray) -> np.ndarray:
@@ -173,7 +175,7 @@ def parcelize(
     order, so the output does not depend on shuffle arrival order."""
 
     def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
-        ids, xy = _canonical_points(pts_pdf, point_id)
+        ids, xy = _canonical_points(pts_pdf[point_id], pts_pdf[["lon", "lat"]])
         try:
             cells_out = block_parcels(ring, ids, xy)
         except Exception:
@@ -304,7 +306,7 @@ def parcelize_footprints(
     def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
         if len(pts_pdf) == 0:
             return []
-        ids, xy = _canonical_points(pts_pdf, point_id)
+        ids, xy = _canonical_points(pts_pdf[point_id], pts_pdf[["lon", "lat"]])
         h = footprint_side / 2.0
         rings = [
             np.array(

@@ -31,7 +31,6 @@ import contextlib
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,6 +40,7 @@ from ..functions.graphops import PlanarGraph
 from .complexity import COMPLEXITY_SCHEMA, s0_from_cells
 from .parcel import (
     PARCELS_SCHEMA,
+    _canonical_points,
     _cogroup_by_block,
     _parcel_row,
     block_cells,
@@ -318,8 +318,12 @@ def _reblock_block(
 ) -> dict[str, list[dict]]:
     """One block's reblock rows per sink kind from parcels and points keyed
     by point id, which pairs each terminal with its parcel. Both enter the
-    kernel in pid order, so insertion order, subsampling and tie-breaks do
-    not depend on arrival order; a kernel fault gives a status-1 summary."""
+    kernel in the string order of their pids, so insertion order,
+    subsampling and tie-breaks do not depend on arrival order; a kernel
+    fault gives a status-1 summary. The ids are sorted here, not taken
+    from ``_canonical_points``: ``reblock`` reads parcels from a table, in
+    any order, with "#k" piece ids that only exist as strings, and the
+    in-memory call in ``block_rows`` must see the same order."""
     ring_ids = sorted(parcels)
     ring_idx = {pid: i for i, pid in enumerate(ring_ids)}
     pt_ids = sorted(points)
@@ -431,9 +435,7 @@ def block_rows(
     costs only its own product (k = -1, no parcel rows, or status 1); a
     block without points gives one complexity row (k = 0) and nothing
     else."""
-    order = pd.Series(point_ids).sort_values(kind="stable").index.to_numpy()
-    ids = [str(point_ids[i]) for i in order]
-    xy = np.asarray(pts_xy, dtype=float).reshape(-1, 2)[order]
+    ids, xy = _canonical_points(point_ids, pts_xy)
     k, parcels = -1, []  # a fault in the shared cells faults both products
     with contextlib.suppress(Exception):
         pts, pieces = block_cells(block_ring, xy)
@@ -461,21 +463,19 @@ def block_rows(
     ]
 
 
-def reblock_all(
-    assigned_points: DataFrame, blocks: DataFrame, point_id: str = "image_id"
-) -> DataFrame:
+def reblock_all(assigned_points: DataFrame, blocks: DataFrame) -> DataFrame:
     """Complexity, parcels and reblock of every block in ONE cogroup pass
     (``block_rows``): ``REBLOCK_ALL_SCHEMA`` rows whose ``kind`` —
     complexity, parcel, summary, edge or terminal — filtered to its own
     schema's columns equals k_complexity, parcelize and reblock(emit=...)
-    on the same (block_id, point_id, lon, lat) points and (block_id,
+    on the same (block_id, image_id, lon, lat) points and (block_id,
     geometry[, boundary_types]) blocks."""
 
     def kernel(pts_pdf, bid, ring, btypes) -> list[dict]:
         xy = pts_pdf[["lon", "lat"]].to_numpy(float)
-        return block_rows(bid, ring, pts_pdf[point_id].tolist(), xy, btypes)
+        return block_rows(bid, ring, pts_pdf["image_id"].tolist(), xy, btypes)
 
     return _cogroup_by_block(
-        assigned_points, ["block_id", point_id, "lon", "lat"], blocks, kernel,
+        assigned_points, ["block_id", "image_id", "lon", "lat"], blocks, kernel,
         REBLOCK_ALL_SCHEMA,
     )

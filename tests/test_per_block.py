@@ -26,15 +26,15 @@ def _canon(sdf):
     return pdf.sort_values(cols).reset_index(drop=True)
 
 
-def _assert_kinds_match_operators(assigned, blocks, point_id="image_id"):
-    fused = reblock.reblock_all(assigned, blocks, point_id=point_id).cache()
-    parcels = parcel.parcelize(assigned, blocks, point_id=point_id)
+def _assert_kinds_match_operators(assigned, blocks):
+    fused = reblock.reblock_all(assigned, blocks).cache()
+    parcels = parcel.parcelize(assigned, blocks)
     want = {
         "complexity": complexity.k_complexity(assigned, blocks),
         "parcel": parcels,
     }
     for emit, kind in (("summary", "summary"), ("edges", "edge"), ("terminals", "terminal")):
-        want[kind] = reblock.reblock(parcels, assigned, blocks, point_id=point_id, emit=emit)
+        want[kind] = reblock.reblock(parcels, assigned, blocks, emit=emit)
     got_kinds = {r["kind"] for r in fused.select("kind").distinct().collect()}
     assert got_kinds <= set(want)
     for kind, op in want.items():
