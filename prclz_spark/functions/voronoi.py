@@ -6,9 +6,9 @@ per block inside ``applyInPandas`` groups — blocks carry 10–10^3 points
 (SURVEY.md §7.4), so per-cell clipping is fine; the distributed
 dimension is the *number of blocks*, not points per block.
 
-Returns the same contract pytess does: ``[(anchor_point_or_None,
-cell_vertices), ...]``; callers filter degenerate cells exactly like the
-reference (complexity.py:25: ``if anchor and ... len(vs) > 2``).
+``parcel.block_cells`` is the one loop over a block's cells: it clips
+each ``halfplane_voronoi_cell`` to the block, and parcels and the
+k-complexity S0 are both made from its pieces.
 """
 
 from __future__ import annotations
@@ -29,35 +29,6 @@ def perturb_duplicates(points) -> np.ndarray:
         else:
             seen[key] = 0
     return pts
-
-
-def voronoi(points_list: list[tuple[float, float]]):
-    """pytess-contract Voronoi: list of (anchor | None, cell_vertex_list).
-
-    Cell of point i = exact intersection of bisector half-planes against a
-    large bounding frame (hull cells are unbounded in theory; pytess clips
-    them to a frame too, and callers clip to the block anyway —
-    complexity.py:28). Half-plane clipping is exact and convex by
-    construction, robust where a dual-of-Delaunay ordering degenerates."""
-    pts = perturb_duplicates(points_list)
-
-    n = len(pts)
-    if n == 0:
-        return []
-    if n < 3:
-        return [(tuple(points_list[i]), []) for i in range(n)]
-
-    x0, y0 = pts[:, 0].min(), pts[:, 1].min()
-    x1, y1 = pts[:, 0].max(), pts[:, 1].max()
-    m = max(x1 - x0, y1 - y0, 1e-9) * 10.0
-    frame = np.array(
-        [[x0 - m, y0 - m], [x1 + m, y0 - m], [x1 + m, y1 + m], [x0 - m, y1 + m]]
-    )
-    out = []
-    for i in range(n):
-        cell = halfplane_voronoi_cell(i, pts, frame)
-        out.append((tuple(points_list[i]), [tuple(c) for c in cell]))
-    return out
 
 
 def halfplane_voronoi_cell(i: int, pts: np.ndarray, frame: np.ndarray) -> np.ndarray:

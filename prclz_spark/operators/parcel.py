@@ -38,7 +38,6 @@ PARCELS_SCHEMA = T.StructType(
 )
 
 
-
 def _cogroup_by_block(
     points: DataFrame, point_cols: list[str], blocks: DataFrame,
     kernel: Callable[[pd.DataFrame, str, np.ndarray, list | None], list[dict]],

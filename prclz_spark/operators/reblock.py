@@ -317,13 +317,10 @@ def _reblock_block(
     simplify: bool = True, drop_boundary_parcels: bool = True,
 ) -> dict[str, list[dict]]:
     """One block's reblock rows per sink kind from parcels and points keyed
-    by point id, which pairs each terminal with its parcel. Both enter the
-    kernel in the string order of their pids, so insertion order,
-    subsampling and tie-breaks do not depend on arrival order; a kernel
-    fault gives a status-1 summary. The ids are sorted here, not taken
-    from ``_canonical_points``: ``reblock`` reads parcels from a table, in
-    any order, with "#k" piece ids that only exist as strings, and the
-    in-memory call in ``block_rows`` must see the same order."""
+    by point id, which pairs each terminal with its parcel; a kernel fault
+    gives a status-1 summary. Both enter the kernel in pid string order
+    (parcels arrive from a table in any order, "#k" ids included), so
+    insertion order, subsampling and tie-breaks do not depend on it."""
     ring_ids = sorted(parcels)
     ring_idx = {pid: i for i, pid in enumerate(ring_ids)}
     pt_ids = sorted(points)

@@ -7,7 +7,8 @@ atomically to the TableStore with per-partition lineage; re-running the
 pipeline recomputes only partitions absent from lineage (kill-and-resume:
 a killed commit leaves no manifest, so its partitions re-run). Stages 2-4
 (k-complexity, parcels, reblock) are ONE per-block pass committed as
-``reblock_all``; their five tables are filter sinks of it.
+``reblock_all``; their five tables are filter sinks of it, committed
+together from one write (``TableStore.commit_split``).
 
 Partitioning follows the north_rule: points carry a cell *prefix*
 (coarse cell id) and every stage table is partitioned by it, so a
@@ -156,9 +157,10 @@ def run_pipeline(
     # complexity, parcels and the three reference reblock sinks (summary,
     # steiner lines, terminal points — i_reblock.py:159-165) are filters of
     # it, each with its own lineage: todo = reblock_all's lineage minus the
-    # sink's. Complexity and parcels count blocks, the reblock sinks rows.
+    # sink's. ONE write of reblock_all split by kind commits them all.
+    # Complexity and parcels count blocks, the reblock sinks rows.
     reblocked = store.completed_partitions(REBLOCK_ALL_TABLE)
-    sinks = []
+    sinks, keys = {}, {}
     for tname, kind, schema in (
         (COMPLEXITY_TABLE, "complexity", complexity_op.COMPLEXITY_SCHEMA),
         (PARCELS_TABLE, "parcel", parcel_op.PARCELS_SCHEMA),
@@ -166,26 +168,17 @@ def run_pipeline(
         (REBLOCK_EDGES_TABLE, "edge", reblock_op.REBLOCK_EDGES_SCHEMA),
         (REBLOCK_TERMINALS_TABLE, "terminal", reblock_op.REBLOCK_TERMINALS_SCHEMA),
     ):
-        todo = sorted(reblocked - store.completed_partitions(tname))
+        keys[tname] = sorted(reblocked - store.completed_partitions(tname))
         computed[tname] = 0
-        if todo:
-            sinks.append((tname, kind, [f.name for f in schema.fields], todo))
+        if keys[tname]:
+            sinks[kind] = (tname, [f.name for f in schema.fields])
     if sinks:
-        # the sinks each scan their slice — cache the long frame once so
-        # that is 1 parquet scan, not one per sink
-        allf = store.read(spark, REBLOCK_ALL_TABLE).cache()
-        try:
-            for tname, kind, cols, todo in sinks:
-                sub = store.resume_filter(
-                    allf.filter(F.col("kind") == kind).select(*cols), tname, "block_id"
-                )
-                sid = store.commit(sub, tname, "block_id", stage=tname, keys=todo)
-                computed[tname] = (
-                    len(todo) if tname in (COMPLEXITY_TABLE, PARCELS_TABLE)
-                    else store.committed_rows(tname, sid)
-                )
-        finally:
-            allf.unpersist()
+        allf = store.read(spark, REBLOCK_ALL_TABLE).filter(F.col("kind").isin(list(sinks)))
+        for tname, sid in store.commit_split(allf, "kind", sinks, "block_id", keys).items():
+            computed[tname] = (
+                len(keys[tname]) if tname in (COMPLEXITY_TABLE, PARCELS_TABLE)
+                else store.committed_rows(tname, sid)
+            )
 
     # -- stage 5: curated training manifest ---------------------------------
     # The keep-list (phash connected components) is a GLOBAL property of

@@ -150,7 +150,7 @@ class TableStore:
         into every lineage row — visible via read_lineage; metrics_df keeps
         its fixed per-partition schema. ``keys`` names the partitions this
         commit covers: a key that wrote no rows still gets a lineage record
-        (rows_out 0), so resume counts it as done.
+        (rows_out 0), so resume counts it as done; any other is dropped.
 
         The write is the only Spark work: per-partition ``rows_out`` comes
         from the Parquet footers of the moved files, read on the driver, so
@@ -162,25 +162,70 @@ class TableStore:
         Returns the new snapshot id. A killed commit is invisible to
         readers (``LATEST`` moves last) and re-runnable; the next commit to
         the table removes its leftovers (``_collect_garbage``)."""
-        tdir = self._tdir(table)
-        datadir = os.path.join(tdir, "data")
-        os.makedirs(datadir, exist_ok=True)
-        os.makedirs(self._snapdir(table), exist_ok=True)
-        prev = self.latest_snapshot_id(table)
-        prev_manifest = self.manifest(table, prev) if prev else None
-        self._collect_garbage(table, prev_manifest)
-        sid = (prev or 0) + 1
+        (prev,), staging, wall_ms = self._stage(df, [table], [partition_col])
+        return self._publish_staged(
+            table, staging, partition_col, df.schema.fields, prev, wall_ms,
+            stage, extra, keys,
+        )
 
-        staging = os.path.join(tdir, f"_staging_{uuid.uuid4().hex}")
+    def commit_split(
+        self, df: DataFrame, split_col: str, tables: dict[str, tuple[str, list[str]]],
+        partition_col: str, keys: dict[str, list[str]],
+    ) -> dict[str, int]:
+        """``commit(..., stage=table, keys=keys[table])`` of each
+        ``split_col`` value's rows to ``tables[value] = (table, columns)``
+        (``partition_col`` among the columns) from ONE Spark write, whose
+        fixed cost dominates small tables. Files keep all of ``df``'s
+        columns; reads see the manifest's. Tables publish in order and the
+        staging directory lives in the last, so a kill strands nothing in
+        a complete table. Returns {table: snapshot id}."""
+        prevs, staging, wall_ms = self._stage(
+            df, [t for t, _ in tables.values()], [split_col, partition_col]
+        )
+        sids = {}
+        for prev, (value, (t, cols)) in zip(prevs, tables.items()):
+            src = os.path.join(staging, f"{split_col}={value}")
+            os.makedirs(src, exist_ok=True)
+            sids[t] = self._publish_staged(
+                t, src, partition_col, [df.schema[c] for c in cols], prev, wall_ms,
+                t, None, keys[t],
+            )
+        shutil.rmtree(staging)
+        return sids
+
+    def _stage(
+        self, df: DataFrame, tables: list[str], partition_cols: list[str]
+    ) -> tuple[list[dict | None], str, int]:
+        """Create each table's directories and ``_collect_garbage`` it,
+        then write ``df`` hive-partitioned (one file per directory) into a
+        staging directory of the last. Returns the tables' latest
+        manifests, the staging directory and the write's wall ms."""
+        prevs = []
+        for table in tables:
+            os.makedirs(os.path.join(self._tdir(table), "data"), exist_ok=True)
+            os.makedirs(self._snapdir(table), exist_ok=True)
+            prevs.append(self.manifest(table))
+            self._collect_garbage(table, prevs[-1])
+        staging = os.path.join(self._tdir(tables[-1]), f"_staging_{uuid.uuid4().hex}")
         t0 = time.time()
         (
-            df.repartition(partition_col)
+            df.repartition(partition_cols[-1])
             .write.mode("overwrite")
-            .partitionBy(partition_col)
+            .partitionBy(*partition_cols)
             .parquet(staging)
         )
-        wall_ms = int((time.time() - t0) * 1000)
+        return prevs, staging, int((time.time() - t0) * 1000)
+
+    def _publish_staged(
+        self, table: str, staging: str, partition_col: str, schema_fields: list,
+        prev_manifest: dict | None, wall_ms: int, stage: str | None,
+        extra: dict | None, keys: list[str] | None,
+    ) -> int:
+        """``commit`` from phase 'staged' on: move the staged partitions
+        into ``data/``, a lineage record each, then publish."""
         self._on_phase(table, "staged")
+        datadir = os.path.join(self._tdir(table), "data")
+        sid = (prev_manifest["snapshot_id"] if prev_manifest else 0) + 1
 
         def record(pkey: str, rows: int) -> dict:
             return {
@@ -197,7 +242,9 @@ class TableStore:
         lineage: list[dict] = []
         prefix = f"{partition_col}="
         for entry in sorted(os.listdir(staging)):
-            if not entry.startswith(prefix):
+            if not entry.startswith(prefix) or (
+                keys is not None and entry[len(prefix):] not in keys
+            ):
                 continue
             pdir = os.path.join(staging, entry)
             outdir = os.path.join(datadir, entry)  # keep hive layout so the
@@ -221,11 +268,11 @@ class TableStore:
                 record(k, 0) for k in sorted(set(keys) - written)
             )
 
-        fields = [f for f in df.schema.fields if f.name != partition_col]
-        fields += [f for f in df.schema.fields if f.name == partition_col]
+        fields = [f for f in schema_fields if f.name != partition_col]
+        fields += [f for f in schema_fields if f.name == partition_col]
         return self._publish(table, {
             "snapshot_id": sid,
-            "parent": prev,
+            "parent": prev_manifest["snapshot_id"] if prev_manifest else None,
             "partition_col": partition_col,
             # the schema a read of the files yields (data columns, then the
             # hive partition column), so read() infers nothing

@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 
 from prclz_spark.functions.graphops import PlanarGraph
-from prclz_spark.functions.voronoi import voronoi
 
 
 def unit_square():
@@ -154,16 +153,19 @@ def test_monrovia_complexity_pipeline():
 
 
 def test_voronoi_cells_contain_anchors():
-    pts = [(0.2, 0.2), (0.8, 0.2), (0.5, 0.8), (0.4, 0.4), (0.9, 0.9)]
-    cells = voronoi(pts)
-    assert len(cells) == 5
+    """block_cells, the one cell loop: each point's cell clipped to the
+    block is one piece holding its point, and the pieces tile the block."""
     from prclz_spark.functions import geom
+    from prclz_spark.operators.parcel import block_cells
 
-    for anchor, vs in cells:
-        assert anchor is not None
-        assert len(vs) >= 3
-        ring = np.array(vs)
-        assert geom.point_in_polygon(anchor[0], anchor[1], ring)
+    pts = [(0.2, 0.2), (0.8, 0.2), (0.5, 0.8), (0.4, 0.4), (0.9, 0.9)]
+    square = np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0]])
+    anchors, pieces = block_cells(square, pts)
+    assert len(pieces) == 5
+    for (x, y), ps in zip(anchors, pieces):
+        assert len(ps) == 1 and len(ps[0]) >= 3
+        assert geom.point_in_polygon(x, y, ps[0])
+    assert abs(sum(geom.ring_area(ps[0]) for ps in pieces) - 1.0) < 1e-12
 
 
 def test_node_link_roundtrip():

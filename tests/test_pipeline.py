@@ -296,6 +296,53 @@ def test_tablestore_killed_commit_resumes_clean(spark, tmp_path, monkeypatch, ph
     assert _store_leftovers(root) == []
 
 
+def _split_frame(spark):
+    """40 rows over split values 'a' (even ids) and 'c' (odd ids), each
+    in partitions b = 0..3, with one column per target table."""
+    return spark.range(0, 40).select(
+        F.when(F.col("id") % 2 == 0, "a").otherwise("c").alias("k"),
+        (F.col("id") % 4).cast("string").alias("b"),
+        F.col("id").alias("x"), (-F.col("id")).alias("y"),
+    )
+
+
+@pytest.mark.parametrize("phase", [None] + PHASES)
+def test_tablestore_commit_split(spark, tmp_path, monkeypatch, phase):
+    """One write commits each split value to its own table with its own
+    columns, keeps only the table's keys, and publishes the tables in
+    order: a kill in the second table leaves the first committed, and
+    re-running the split for the rest gives the same tables as separate
+    commits, with no orphaned files."""
+    root = str(tmp_path / "split")
+    store = TableStore(root)
+    df = _split_frame(spark)
+    tables = {"a": ("ta", ["b", "x"]), "c": ("tc", ["b", "y"])}
+    keys = {"ta": ["0", "2", "9"], "tc": ["1"]}
+    if phase is not None:
+        _kill_at(monkeypatch, "tc", phase)
+        with pytest.raises(_Killed):
+            store.commit_split(df, "k", tables, "b", keys)
+        monkeypatch.undo()
+        assert store.latest_snapshot_id("ta") == 1
+        assert store.latest_snapshot_id("tc") is None
+        tables = {"c": tables["c"]}
+    sids = store.commit_split(df, "k", tables, "b", keys)
+    assert sids == {t: 1 for t, _ in tables.values()}
+
+    want = TableStore(str(tmp_path / "separate"))
+    for value, (t, cols) in {"a": ("ta", ["b", "x"]), "c": ("tc", ["b", "y"])}.items():
+        sub = df.filter((F.col("k") == value) & F.col("b").isin(keys[t]))
+        want.commit(sub.select(*cols), t, "b", keys=keys[t])
+        got = store.read(spark, t)
+        assert got.columns == want.read(spark, t).columns == [cols[1], "b"]
+        assert sorted(got.collect()) == sorted(want.read(spark, t).collect())
+        assert {
+            r["partition_id"]: (r["stage"], r["rows_out"]) for r in store.read_lineage(t)
+        } == {r["partition_id"]: (t, r["rows_out"]) for r in want.read_lineage(t)}
+    assert store.completed_partitions("ta") == {"0", "2", "9"}
+    assert _store_leftovers(root) == []
+
+
 _RESUME_TABLES = (
     "assign", "complexity", "parcels", "reblock_all", "reblock_summary",
     "reblock_edges", "reblock_terminals", "manifest",
@@ -359,8 +406,8 @@ def test_pipeline_killed_commit_resumes_identical(
 @pytest.mark.slow
 def test_pipeline_fresh_run_jobs_flat_in_blocks(spark, tmp_path):
     """A fresh run costs the same Spark jobs on 9 blocks as on 16: stages
-    2-4 are one per-block commit plus five filter sinks, none of them per
-    block."""
+    2-4 are one per-block commit plus one split write of its five filter
+    sinks, none of them per block."""
     jobs = {}
     for g in (3, 4):
         _, jobs[g] = jobs_in_group(
@@ -369,4 +416,4 @@ def test_pipeline_fresh_run_jobs_flat_in_blocks(spark, tmp_path):
                 spark, str(tmp_path / f"wh{g}"), n_images=400 * g, grid_g=g
             ),
         )
-    assert jobs == {3: 31, 4: 31}, jobs
+    assert jobs == {3: 22, 4: 22}, jobs
