@@ -176,29 +176,32 @@ class TableStore:
         ``split_col`` value's rows to ``tables[value] = (table, columns)``
         (``partition_col`` among the columns) from ONE Spark write, whose
         fixed cost dominates small tables. Files keep all of ``df``'s
-        columns; reads see the manifest's. Tables publish in order and the
-        staging directory lives in the last, so a kill strands nothing in
-        a complete table. Returns {table: snapshot id}."""
+        columns; reads see the manifest's. Each table takes its part of
+        the write as its own staging directory before the first publishes,
+        then they publish in order. Returns {table: snapshot id}."""
         prevs, staging, wall_ms = self._stage(
             df, [t for t, _ in tables.values()], [split_col, partition_col]
         )
-        sids = {}
-        for prev, (value, (t, cols)) in zip(prevs, tables.items()):
+        own = {}
+        for value, (t, _) in tables.items():
+            own[t] = os.path.join(self._tdir(t), f"_staging_{uuid.uuid4().hex}")
             src = os.path.join(staging, f"{split_col}={value}")
-            os.makedirs(src, exist_ok=True)
-            sids[t] = self._publish_staged(
-                t, src, partition_col, [df.schema[c] for c in cols], prev, wall_ms,
-                t, None, keys[t],
-            )
+            os.replace(src, own[t]) if os.path.isdir(src) else os.mkdir(own[t])
         shutil.rmtree(staging)
-        return sids
+        return {
+            t: self._publish_staged(
+                t, own[t], partition_col, [df.schema[c] for c in cols], prev,
+                wall_ms, t, None, keys[t],
+            )
+            for prev, (t, cols) in zip(prevs, tables.values())
+        }
 
     def _stage(
         self, df: DataFrame, tables: list[str], partition_cols: list[str]
     ) -> tuple[list[dict | None], str, int]:
         """Create each table's directories and ``_collect_garbage`` it,
         then write ``df`` hive-partitioned (one file per directory) into a
-        staging directory of the last. Returns the tables' latest
+        staging directory of the first. Returns the tables' latest
         manifests, the staging directory and the write's wall ms."""
         prevs = []
         for table in tables:
@@ -206,7 +209,7 @@ class TableStore:
             os.makedirs(self._snapdir(table), exist_ok=True)
             prevs.append(self.manifest(table))
             self._collect_garbage(table, prevs[-1])
-        staging = os.path.join(self._tdir(tables[-1]), f"_staging_{uuid.uuid4().hex}")
+        staging = os.path.join(self._tdir(tables[0]), f"_staging_{uuid.uuid4().hex}")
         t0 = time.time()
         (
             df.repartition(partition_cols[-1])
@@ -242,9 +245,8 @@ class TableStore:
         lineage: list[dict] = []
         prefix = f"{partition_col}="
         for entry in sorted(os.listdir(staging)):
-            if not entry.startswith(prefix) or (
-                keys is not None and entry[len(prefix):] not in keys
-            ):
+            pkey = entry[len(prefix):]
+            if not entry.startswith(prefix) or (keys is not None and pkey not in keys):
                 continue
             pdir = os.path.join(staging, entry)
             outdir = os.path.join(datadir, entry)  # keep hive layout so the
@@ -258,8 +260,8 @@ class TableStore:
                 os.replace(os.path.join(pdir, p), dst)
                 rows += pq.read_metadata(dst).num_rows
                 moved.append(f"{entry}/{new_name}")
-            files.append({"partition": entry[len(prefix):], "files": moved})
-            lineage.append(record(entry[len(prefix):], rows))
+            files.append({"partition": pkey, "files": moved})
+            lineage.append(record(pkey, rows))
             self._on_phase(table, "moved")
         shutil.rmtree(staging)
         written = {rec["partition_id"] for rec in lineage}
