@@ -722,13 +722,15 @@ ROAD_EPS = 0.004  # ε for the near-road classify (J4/J13)
 
 def _q_spatial_road_dist(spark, sf_dir):
     """J4/J13 distance join: each image point's exact distance to the
-    nearest road segment + ε classify. Oracle: closed-form distance to the
-    nearest grid line (valid for the unjittered road grid)."""
+    nearest road segment + ε classify, on segments built by the pandas
+    builder (``segments_from_lines``). Oracle: closed-form distance
+    to the nearest grid line (valid for the unjittered road grid)."""
     pts = _img_points(spark, sf_dir)
     roads = synth.road_grid_lines(GRID_G, jitter=0.0)
     segs = rangejoin.segments_from_lines(roads[roads.highway.notna()])
-    cover = rangejoin.segment_cover_pdf(segs, SEG_RES)
-    joined = rangejoin.nearest_segment_join(pts, cover, SEG_RES)
+    joined = rangejoin.nearest_segment_join_distributed(
+        pts, spark.createDataFrame(segs), SEG_RES, point_id="image_id"
+    )
     out = rangejoin.classify_by_distance(joined, ROAD_EPS)
     return out.select(
         "image_id", F.round("road_dist", 9).alias("road_dist_r9"), "road_class"
@@ -751,12 +753,12 @@ def _sql_spatial_road_dist(sf_dir):
 
 
 def _q_spatial_road_dist_dist(spark, sf_dir):
-    """spatial_road_dist through the DISTRIBUTED segment-cover path
-    (fact-sized-roads plan: segments flattened and supercovered as
-    Column arithmetic, cell-key shuffle joins, exhaustive cascade, no
-    broadcast of the cover, no cartesian) — shares spatial_road_dist's
-    closed-form oracle, so a green row proves the two plans are
-    row-identical."""
+    """spatial_road_dist with the segments flattened by the DISTRIBUTED
+    builder (``segments_from_lines_df``, one Generate over the vertex
+    array) instead of the pandas one; both rows then run the
+    same nearest-segment operator and share spatial_road_dist's
+    closed-form oracle, so a green pair proves the two segment builders
+    agree."""
     pts = _img_points(spark, sf_dir)
     roads = synth.road_grid_lines(GRID_G, jitter=0.0)
     lines = spark.createDataFrame(roads, synth.LINES_DDL)
@@ -780,8 +782,9 @@ def _q_spatial_road_dist_metrics(spark, sf_dir):
     pts = _img_points(spark, sf_dir)
     roads = synth.road_grid_lines(GRID_G, jitter=0.0)
     segs = rangejoin.segments_from_lines(roads[roads.highway.notna()])
-    cover = rangejoin.segment_cover_pdf(segs, SEG_RES)
-    joined = rangejoin.nearest_segment_join(pts, cover, SEG_RES)
+    joined = rangejoin.nearest_segment_join_distributed(
+        pts, spark.createDataFrame(segs), SEG_RES, point_id="image_id"
+    )
     out = rangejoin.classify_by_distance(joined, ROAD_EPS)
     off = F.when(F.col("road_class") == "off_road", F.col("road_dist"))
     return out.agg(
@@ -876,7 +879,7 @@ def _typed_grid_lines() -> pd.DataFrame:
     horizontal road/water lines on EVEN grid rows (waterway when the row
     index ≡ 0 mod 4, natural otherwise) with LOW seg_ids, then vertical
     highways on every column. Corner vertices sit on both families at
-    distance 0 — the min(struct(dist, seg_id)) tie-break resolves to the
+    distance 0 — the (round(dist, 9), seg_id) tie-break resolves to the
     horizontal (lower id), making every classification closed-form."""
     rows = []
     sid = 0

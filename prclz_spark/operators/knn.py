@@ -93,8 +93,8 @@ def cascade(
     exhaustive: bool = False,
 ) -> DataFrame:
     """The EXACT multi-resolution NN cascade — the one level loop behind
-    every nearest-neighbour operator (knn_join, parcel_assign and the
-    three point→segment paths in rangejoin). It holds every
+    every nearest-neighbour operator (knn_join, parcel_assign and
+    rangejoin's one point→segment path). It holds every
     correctness-bearing invariant once: accept threshold, residue chain
     and its distance bound, per-level checkpoint, union order.
 

@@ -10,38 +10,43 @@ from point to nearest segment" with a predicate on top; buffering is
 replaced by the exact distance test (buffer(ε).intersects(x) ≡
 dist(x) ≤ ε — SURVEY.md §2.7 F6).
 
-Distributed shape: segments explode to covering cells (supercover
-sampling, driver-side for dimension-sized road tables); points kRing-join
-the cell index; the point-segment distance is *pure Column arithmetic*
-(dot-product clamp — no Python anywhere). Every nearest-segment path runs
-on :func:`knn.cascade`, the engine's one exact NN level loop; each path
-supplies only its candidate join, its argmin (which drops candidates
-beyond the residue's bound, :func:`knn.within_bound`) and its brute-force
-pass.
+Distributed shape: segments explode to covering cells as Column
+arithmetic (:func:`segment_cover_df`, no pandas build, no broadcast);
+points join the cover by cell key; the point-segment distance is *pure
+Column arithmetic* (dot-product clamp — no Python anywhere). There is ONE
+nearest-segment path, :func:`_nearest_segments`: an exhaustive
+:func:`knn.cascade` (the engine's one exact NN level loop) whose coarser
+levels drain the residue, so no cartesian brute pass is ever planned.
+The road join and the boundary typing differ only in their point keys
+and their distance expression.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells
 from . import knn
 
 __all__ = [
-    "segments_from_lines", "segment_cover_pdf", "nearest_segment_join",
-    "segments_from_lines_df", "segment_cover_df",
+    "segments_from_lines", "segments_from_lines_df", "segment_cover_df",
     "nearest_segment_join_distributed",
     "classify_by_distance", "boundary_types_for_blocks",
 ]
+
+# hot-cell guard of the candidate join: a cell's segment rows split into
+# ceil(count / MAX_SEGS_PER_CELL) hash chunks (see _nearest_segments)
+MAX_SEGS_PER_CELL = 4096
 
 
 def segments_from_lines(lines_pdf: pd.DataFrame) -> pd.DataFrame:
     """OSM-style polylines (osm_id, highway, waterway, natural, geometry)
     → the flat segment dimension (seg_id, ax, ay, bx, by, feature_type)
-    that ``segment_cover_pdf`` / ``boundary_types_for_blocks`` consume.
+    that :func:`nearest_segment_join_distributed` (via
+    ``spark.createDataFrame``) and ``boundary_types_for_blocks`` consume.
 
     feature_type replicates the reference's tag→type assignment order —
     waterway, then highway, then natural, each overriding the last
@@ -69,36 +74,6 @@ def segments_from_lines(lines_pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(
         rows, columns=["seg_id", "ax", "ay", "bx", "by", "feature_type"]
     )
-
-
-def segment_cover_pdf(segments_pdf: pd.DataFrame, res: int) -> pd.DataFrame:
-    """(seg_id, ax, ay, bx, by) → one row per (cell, segment): supercover
-    sampling at 1/4-cell steps with 1-cell dilation so every cell within
-    one cell of the segment is present (the kRing(1) join then guarantees
-    candidate completeness for any point within ~1 cell of a road)."""
-    nx = 1 << res
-    rows = []
-    for r in segments_pdf.itertuples(index=False):
-        u0, v0 = (r.ax + 180.0) / 360.0 * nx, (r.ay + 90.0) / 180.0 * nx
-        u1, v1 = (r.bx + 180.0) / 360.0 * nx, (r.by + 90.0) / 180.0 * nx
-        n = max(1, int(np.ceil(max(abs(u1 - u0), abs(v1 - v0)) / 0.25)))
-        t = np.linspace(0.0, 1.0, n + 1)
-        iu = np.floor(u0 + t * (u1 - u0)).astype(np.int64)
-        iv = np.floor(v0 + t * (v1 - v0)).astype(np.int64)
-        cs = set()
-        for du in (-1, 0, 1):
-            for dv in (-1, 0, 1):
-                uu = np.clip(iu + du, 0, nx - 1)
-                vv = np.clip(iv + dv, 0, nx - 1)
-                cs.update(
-                    (res * cells.RES_BITS_SHIFT + uu * cells.XY_SHIFT + vv).tolist()
-                )
-        for c in cs:
-            rows.append(
-                {"cell": int(c), "seg_id": r.seg_id,
-                 "ax": r.ax, "ay": r.ay, "bx": r.bx, "by": r.by}
-            )
-    return pd.DataFrame(rows)
 
 
 def segments_from_lines_df(lines: DataFrame) -> DataFrame:
@@ -148,13 +123,16 @@ def segments_from_lines_df(lines: DataFrame) -> DataFrame:
 
 
 def segment_cover_df(segments: DataFrame, res: int) -> DataFrame:
-    """Distributed :func:`segment_cover_pdf`: the same supercover —
-    samples every ≤1/4 cell along the segment, 3×3 dilation, distinct per
-    (cell, segment) — as pure Column arithmetic (whole-stage codegen, one
-    Generate for samples, one for the dilated cells, one Exchange for the
-    distinct). The sample positions reproduce np.linspace bit-for-bit
-    (t_i = i·(1/n), t_n = 1.0), so the emitted cell set is identical to
-    the driver builder's and the two paths are interchangeable.
+    """(seg_id, ax, ay, bx, by) → one row per (cell, segment): the
+    supercover — samples every ≤1/4 cell along the segment, 3×3
+    dilation, distinct per (cell, segment) — as pure Column arithmetic
+    (whole-stage codegen, one Generate for samples, one for the dilated
+    cells, one Exchange for the distinct). The dilation puts every cell
+    within one cell of the segment in the cover, so a point's own cell
+    key finds every segment its ring-1 guarantee covers. The sample
+    positions reproduce np.linspace bit-for-bit (t_i = i·(1/n),
+    t_n = 1.0); tests/test_rangejoin.py pins the cell set against a
+    numpy builder.
 
     Scale shape: per-row fan-out is 9·(len/0.25cell + 1) before the
     array_distinct — output-proportional, no driver collect, and the
@@ -225,35 +203,52 @@ def nearest_segment_join_distributed(
     point_id: str | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    max_segs_per_cell: int = 4096,
 ) -> DataFrame:
-    """Exact nearest segment for FACT-SIZED road tables, run as an
-    exhaustive :func:`knn.cascade` with ring 1. Each level's candidates
-    come from the distributed cover (:func:`segment_cover_df`, joined by
-    cell key, no broadcast requested): its 3×3 dilation puts every
-    segment within one cell of the point's cell among the candidates.
-    The terminal level is res 1, where any segment's dilated cover is the
-    whole grid, so no cartesian is ever planned.
+    """Exact nearest segment of every point: (point columns..., seg_id,
+    road_dist), distance ties broken to the lowest seg_id. ``segments``
+    is (seg_id, ax, ay, bx, by); it is never broadcast, so it may be
+    fact-sized. ``res`` is the first cascade level or a fine -> coarse
+    level list; see :func:`_nearest_segments`."""
+    pid = point_id or points.columns[0]
+    levels = list(res) if isinstance(res, (list, tuple)) else [res]
+    # the caller's upstream plan feeds the first candidate join AND the
+    # final re-attach — truncate once so it executes once
+    points = points.localCheckpoint(eager=False)
+    pts = points.select(
+        pid, F.col(lon_col).alias("lon"), F.col(lat_col).alias("lat")
+    )
+    out = _nearest_segments(pts, [pid], segments, levels, _seg_dist_cols())
+    return points.join(out, on=pid).withColumnRenamed("nn_dist", "road_dist")
 
-    ``max_segs_per_cell``: hot-cell guard (a star junction puts every
-    road through one cell and its 8 neighbors — the per-cell join key
-    goes quadratic exactly like the kNN hotspot). Each cell's segment
-    rows split into ``nb = ceil(count/cap)`` hash chunks; points
+
+def _nearest_segments(
+    pts: DataFrame,
+    keys: list[str],
+    segments: DataFrame,
+    levels: list[int],
+    dist: Column,
+) -> DataFrame:
+    """The one point→segment NN path: ``pts`` (keys..., lon, lat) →
+    (keys..., seg_id, nn_dist), where ``dist`` is the point-segment
+    distance the argmin ranks by and emits. An exhaustive
+    :func:`knn.cascade` with ring 1. Each level's candidates come from
+    the distributed cover (:func:`segment_cover_df`, joined by cell key,
+    no broadcast requested): its 3×3 dilation puts every segment within
+    one cell of the point's cell among the candidates. Coarser levels
+    are appended down to res 1, where any segment's dilated cover is the
+    whole grid, so the residue drains by equi-joins and no cartesian is
+    ever planned.
+
+    Hot-cell guard (a star junction puts every road through one cell and
+    its 8 neighbors — the per-cell join key goes quadratic exactly like
+    the kNN hotspot): each cell holding more than ``MAX_SEGS_PER_CELL``
+    segment rows splits into ``nb = ceil(count/cap)`` hash chunks; points
     replicate to their cell's nb chunk keys; per-(cell, chunk) rows are
     ~cap (hash-balanced) so no straggler task, and the min-reduction
     over all chunks is the min over the cell — EXACT, a plan change only
     (the same decomposition as dedup's chunk-pair guard, one-sided
-    because NN is a reduction, not a pair enumeration).
-
-    Output: (point columns..., seg_id, road_dist) — identical rows to
-    :func:`nearest_segment_join`."""
-    pid = point_id or points.columns[0]
-    levels = list(res) if isinstance(res, (list, tuple)) else [res]
-    points = points.localCheckpoint(eager=False)
+    because NN is a reduction, not a pair enumeration)."""
     segments = segments.localCheckpoint(eager=False)  # one consumer per level
-    pts = points.select(
-        pid, F.col(lon_col).alias("lon"), F.col(lat_col).alias("lat")
-    )
 
     def make_candidates(remaining: DataFrame, r: int) -> DataFrame:
         # cov feeds the count agg AND the chunk join — truncate once
@@ -268,10 +263,10 @@ def nearest_segment_join_distributed(
         hot = (
             cov.groupBy("cell")
             .agg(F.count("*").alias("cn"))
-            .filter(F.col("cn") > F.lit(max_segs_per_cell))
+            .filter(F.col("cn") > F.lit(MAX_SEGS_PER_CELL))
             .select(
                 "cell",
-                F.ceil(F.col("cn") / F.lit(max_segs_per_cell))
+                F.ceil(F.col("cn") / F.lit(MAX_SEGS_PER_CELL))
                 .cast("int")
                 .alias("nb"),
             )
@@ -289,22 +284,22 @@ def nearest_segment_join_distributed(
             )
             .join(hot, "cell", "left")
             .select(
-                pid, "lon", "lat", "__ub", "cell",
+                *keys, "lon", "lat", "__ub", "cell",
                 F.explode(F.sequence(F.lit(0), nb1 - 1)).alias("chunk"),
             )
         )
         return pcell.join(cov, ["cell", "chunk"])
 
-    out = knn.cascade(
-        pts, pid, levels, 1, make_candidates, _seg_argmin(pid), exhaustive=True
+    return knn.cascade(
+        pts, keys, levels, 1, make_candidates, _seg_argmin(keys, dist),
+        exhaustive=True,
     )
-    return points.join(out, on=pid).withColumnRenamed("nn_dist", "road_dist")
 
 
-def _seg_argmin(pid: str):
-    """Per-point nearest segment: (pid, seg_id, nn_dist), distance ties
-    broken to the lowest seg_id so every plan variant agrees."""
-    dist = _seg_dist_cols()
+def _seg_argmin(keys: list[str], dist: Column):
+    """Per-point nearest segment: (keys..., seg_id, nn_dist) with
+    ``nn_dist`` = ``dist``, distance ties broken to the lowest seg_id so
+    every plan variant agrees."""
 
     def argmin(cand: DataFrame) -> DataFrame:
         # project the distance ONCE, then drop candidates beyond the
@@ -315,9 +310,9 @@ def _seg_argmin(pid: str):
         # filter through a plain projection into the candidate join's
         # condition, inlining the distance there a second time
         d = cand.select(
-            pid, "seg_id", "__ub", F.explode(F.array(dist)).alias("__d")
+            *keys, "seg_id", "__ub", F.explode(F.array(dist)).alias("__d")
         )
-        return d.filter(knn.within_bound(F.col("__d"))).groupBy(pid).agg(
+        return d.filter(knn.within_bound(F.col("__d"))).groupBy(*keys).agg(
             F.min_by(
                 F.col("seg_id"),
                 F.struct(F.col("__d").alias("d"), F.col("seg_id").alias("s")),
@@ -328,7 +323,7 @@ def _seg_argmin(pid: str):
     return argmin
 
 
-def _seg_dist_cols():
+def _seg_dist_cols() -> Column:
     """Point-segment distance as Column arithmetic (F14 dot-product clamp,
     whole-stage codegen)."""
     dx = F.col("bx") - F.col("ax")
@@ -342,43 +337,6 @@ def _seg_dist_cols():
         (F.col("lon") - cx) * (F.col("lon") - cx)
         + (F.col("lat") - cy) * (F.col("lat") - cy)
     )
-
-
-def nearest_segment_join(
-    points: DataFrame,
-    segment_cover: pd.DataFrame,
-    res: int,
-    point_id: str | None = None,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """(point columns..., seg_id, road_dist): exact nearest segment, as a
-    one-level :func:`knn.cascade` at ``res`` with ring 1. Candidates come
-    from the cell × dilated-cover equi-join; winners farther than the
-    ring guarantee fall through to a brute-force pass against the
-    broadcast segment table (few, by cover construction)."""
-    spark = points.sparkSession
-    pid = point_id or points.columns[0]
-    cov = F.broadcast(spark.createDataFrame(segment_cover))
-    segs = F.broadcast(
-        spark.createDataFrame(
-            segment_cover.drop_duplicates("seg_id")[["seg_id", "ax", "ay", "bx", "by"]]
-        )
-    )
-    pts = points.select(
-        pid, F.col(lon_col).alias("lon"), F.col(lat_col).alias("lat")
-    )
-
-    def make_candidates(remaining: DataFrame, r: int) -> DataFrame:
-        return remaining.withColumn(
-            "cell", cells.cell_id(F.col("lon"), F.col("lat"), r)
-        ).join(cov, on="cell", how="inner")
-
-    out = knn.cascade(
-        pts, pid, [res], 1, make_candidates, _seg_argmin(pid),
-        lambda remaining: remaining.crossJoin(segs),
-    )
-    return points.join(out, on=pid).withColumnRenamed("nn_dist", "road_dist")
 
 
 def classify_by_distance(
@@ -421,16 +379,19 @@ def boundary_types_for_blocks(
     ring, aligned with the ring's vertex order (what
     reblock._relabel_boundary_edges expects).
 
-    Distributed shape: ring vertices explode JVM-side and run a one-level
-    :func:`knn.cascade` keyed on (block_id, vi): candidates come from the
-    dilated segment cover equi-join (broadcast dim), the residue from a
-    broadcast cross-join; the nearest pick is ``min(struct(round(dist, 9), seg_id))`` so
-    distance ties — every shared corner vertex lies ON two grid lines —
-    break deterministically toward the lowest seg_id on both the engine
-    and any SQL oracle. The distance is rounded to the geometry snap
-    grid (geom.SNAP = 1e-9) first: a vertex coordinate reached through a
-    different float path (y0 + step vs LAT0 + 2*step) sits ~1 ulp off
-    the line and would otherwise lose a d=0 tie it geometrically owns."""
+    Distributed shape: ring vertices explode JVM-side and, keyed on
+    (block_id, vi), run the one point→segment path
+    (:func:`_nearest_segments`: distributed cover, cell-key joins,
+    exhaustive cascade, no broadcast of the segments and no cartesian);
+    only the small (seg_id, feature_type) table is broadcast, to type
+    the winners. The nearest pick ranks ``round(dist, 9)`` then seg_id,
+    so distance ties — every shared corner vertex lies ON two grid
+    lines — break deterministically toward the lowest seg_id on both the
+    engine and any SQL oracle. The distance is rounded to the geometry
+    snap grid (geom.SNAP = 1e-9) first: a vertex coordinate reached
+    through a different float path (y0 + step vs LAT0 + 2*step) sits
+    ~1 ulp off the line and would otherwise lose a d=0 tie it
+    geometrically owns."""
     spark = blocks.sparkSession
     g0 = F.col(geometry_col)
     if len(lines_pdf) == 0:
@@ -450,13 +411,7 @@ def boundary_types_for_blocks(
                 F.sequence(F.lit(1), n_seg), lambda _: F.lit("gadm_boundary")
             ),
         )
-    cover = segment_cover_pdf(lines_pdf, res)
-    cov = F.broadcast(spark.createDataFrame(cover))
-    segs = F.broadcast(
-        spark.createDataFrame(
-            cover.drop_duplicates("seg_id")[["seg_id", "ax", "ay", "bx", "by"]]
-        )
-    )
+    segs = spark.createDataFrame(lines_pdf[["seg_id", "ax", "ay", "bx", "by"]])
     types = F.broadcast(
         spark.createDataFrame(lines_pdf[["seg_id", "feature_type"]])
     )
@@ -477,23 +432,9 @@ def boundary_types_for_blocks(
         )
     )
     keys = ["block_id", "vi"]
-    dist = F.round(_seg_dist_cols(), 9)
-
-    def argmin(cand: DataFrame) -> DataFrame:
-        return cand.filter(knn.within_bound(dist)).groupBy(*keys).agg(
-            F.min(F.struct(dist.alias("d"), F.col("seg_id"))).alias("__b")
-        ).select(
-            *keys, F.col("__b.d").alias("nn_dist"), F.col("__b.seg_id").alias("seg_id")
-        )
-
-    def make_candidates(remaining: DataFrame, r: int) -> DataFrame:
-        return remaining.withColumn(
-            "cell", cells.cell_id(F.col("lon"), F.col("lat"), r)
-        ).join(cov, on="cell", how="inner")
-
-    nearest = knn.cascade(
-        verts.select(*keys, "lon", "lat"), keys, [res], 1,
-        make_candidates, argmin, lambda remaining: remaining.crossJoin(segs),
+    nearest = _nearest_segments(
+        verts.select(*keys, "lon", "lat"), keys, segs, [res],
+        F.round(_seg_dist_cols(), 9),
     )
     vt = (
         nearest.join(types, on="seg_id", how="left")

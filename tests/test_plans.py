@@ -223,8 +223,8 @@ def test_segment_cascade_bounds_coarser_levels(spark, monkeypatch):
     plans = []
     seg_argmin = rangejoin._seg_argmin
 
-    def recording(pid):
-        argmin = seg_argmin(pid)
+    def recording(keys, dist):
+        argmin = seg_argmin(keys, dist)
 
         def run(cand):
             out = argmin(cand)

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from prclz_spark.functions import cells
 from prclz_spark.operators import knn, rangejoin
 from prclz_spark.sources import synth
 
@@ -27,11 +28,99 @@ def _grid_segments(g: int, jitter: float = 0.0) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def test_segment_cover_dilated():
+def _segment_cover_pdf(segments_pdf: pd.DataFrame, res: int) -> pd.DataFrame:
+    """numpy oracle for ``rangejoin.segment_cover_df``: (seg_id, ax, ay,
+    bx, by) → one row per (cell, segment), sampling at 1/4-cell steps
+    with 1-cell dilation, so every cell within one cell of the segment
+    is present."""
+    nx = 1 << res
+    rows = []
+    for r in segments_pdf.itertuples(index=False):
+        u0, v0 = (r.ax + 180.0) / 360.0 * nx, (r.ay + 90.0) / 180.0 * nx
+        u1, v1 = (r.bx + 180.0) / 360.0 * nx, (r.by + 90.0) / 180.0 * nx
+        n = max(1, int(np.ceil(max(abs(u1 - u0), abs(v1 - v0)) / 0.25)))
+        t = np.linspace(0.0, 1.0, n + 1)
+        iu = np.floor(u0 + t * (u1 - u0)).astype(np.int64)
+        iv = np.floor(v0 + t * (v1 - v0)).astype(np.int64)
+        cs = set()
+        for du in (-1, 0, 1):
+            for dv in (-1, 0, 1):
+                uu = np.clip(iu + du, 0, nx - 1)
+                vv = np.clip(iv + dv, 0, nx - 1)
+                cs.update(
+                    (res * cells.RES_BITS_SHIFT + uu * cells.XY_SHIFT + vv).tolist()
+                )
+        for c in cs:
+            rows.append(
+                {"cell": int(c), "seg_id": r.seg_id,
+                 "ax": r.ax, "ay": r.ay, "bx": r.bx, "by": r.by}
+            )
+    return pd.DataFrame(rows)
+
+
+def _bruteforce_nearest(
+    pts: pd.DataFrame, segs: pd.DataFrame, decimals: int | None = None
+) -> list[tuple]:
+    """numpy oracle: sorted (pid, seg_id, dist) of every point's nearest
+    segment, with ``rangejoin._seg_dist_cols``' arithmetic in the same
+    operation order (so distances match bit for bit) and ties broken to
+    the lowest seg_id. ``decimals`` ranks by the rounded distance, as
+    boundary typing does."""
+    segs = segs.sort_values("seg_id", kind="stable")
+    ids = segs.seg_id.to_numpy()
+    ax, ay, bx, by = (segs[c].to_numpy()[None, :] for c in ("ax", "ay", "bx", "by"))
+    dx, dy = bx - ax, by - ay
+    len2 = dx * dx + dy * dy
+    out = []
+    for lo in range(0, len(pts), 256):
+        chunk = pts.iloc[lo:lo + 256]
+        px = chunk.lon.to_numpy()[:, None]
+        py = chunk.lat.to_numpy()[:, None]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t_raw = ((px - ax) * dx + (py - ay) * dy) / len2
+        t = np.where(len2 > 0, np.maximum(0.0, np.minimum(1.0, t_raw)), 0.0)
+        cx = ax + t * dx
+        cy = ay + t * dy
+        d = np.sqrt((px - cx) * (px - cx) + (py - cy) * (py - cy))
+        if decimals is not None:
+            d = np.round(d, decimals)
+        k = d.argmin(axis=1)  # the first minimum: the lowest seg_id
+        out += zip(chunk.pid, ids[k], d[np.arange(len(k)), k])
+    return sorted(out)
+
+
+def _record_level_plans(monkeypatch) -> list[str]:
+    """Executed plan of every cascade level's argmin (each level is
+    checkpointed, so the output frame's own plan hides them)."""
+    plans = []
+    seg_argmin = rangejoin._seg_argmin
+
+    def recording(keys, dist):
+        argmin = seg_argmin(keys, dist)
+
+        def run(cand):
+            out = argmin(cand)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        return run
+
+    monkeypatch.setattr(rangejoin, "_seg_argmin", recording)
+    return plans
+
+
+def _assert_no_cartesian_no_python(plans: list[str]) -> None:
+    for p in plans:
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+
+
+def test_segment_cover_dilated(spark):
     segs = pd.DataFrame(
         [{"seg_id": "s", "ax": 10.0, "ay": 50.0, "bx": 10.01, "by": 50.0}]
     )
-    cov = rangejoin.segment_cover_pdf(segs, 14)
+    cov = rangejoin.segment_cover_df(spark.createDataFrame(segs), 14).toPandas()
     assert len(cov) >= 9  # at least the 3x3 dilation of one cell
     assert set(cov.columns) == {"cell", "seg_id", "ax", "ay", "bx", "by"}
 
@@ -40,34 +129,26 @@ def test_segment_cover_dilated():
 def test_nearest_segment_matches_bruteforce(spark):
     g = 4
     segs = _grid_segments(g)
-    cover = rangejoin.segment_cover_pdf(segs, 13)
     base = spark.range(0, 500, numPartitions=4)
     lon, lat = synth.lonlat_cols(F.col("id"))
     pts = base.select(F.col("id").alias("pid"), lon.alias("lon"), lat.alias("lat"))
-    out = rangejoin.nearest_segment_join(pts, cover, 13).toPandas()
+    out = rangejoin.nearest_segment_join_distributed(
+        pts, spark.createDataFrame(segs), 13
+    ).toPandas()
     assert len(out) == 500
-
-    # numpy brute-force oracle
-    a = segs[["ax", "ay"]].to_numpy()
-    b = segs[["bx", "by"]].to_numpy()
-    p = out[["lon", "lat"]].to_numpy()
-    d_ab = b - a
-    len2 = (d_ab**2).sum(1)
-    for i in range(len(p)):
-        t = np.clip(((p[i] - a) * d_ab).sum(1) / len2, 0, 1)
-        c = a + t[:, None] * d_ab
-        d = np.hypot(*(p[i] - c).T)
-        assert abs(out.road_dist.iloc[i] - d.min()) < 1e-12
+    got = sorted(map(tuple, out[["pid", "seg_id", "road_dist"]].itertuples(index=False)))
+    assert got == _bruteforce_nearest(out, segs)
 
 
 @pytest.mark.slow
 def test_classify_threshold(spark):
     segs = _grid_segments(4)
-    cover = rangejoin.segment_cover_pdf(segs, 13)
     base = spark.range(0, 300, numPartitions=4)
     lon, lat = synth.lonlat_cols(F.col("id"))
     pts = base.select(F.col("id").alias("pid"), lon.alias("lon"), lat.alias("lat"))
-    joined = rangejoin.nearest_segment_join(pts, cover, 13)
+    joined = rangejoin.nearest_segment_join_distributed(
+        pts, spark.createDataFrame(segs), 13
+    )
     out = rangejoin.classify_by_distance(joined, 0.005).toPandas()
     near = out[out.road_class == "near_road"]
     far = out[out.road_class == "off_road"]
@@ -169,10 +250,10 @@ def test_segments_from_lines_skips_nan_geometry(spark):
 
 def test_segment_cover_df_parity(spark):
     """Column-side supercover emits the IDENTICAL (cell, seg_id) set as
-    the driver pandas builder (same linspace arithmetic, same dilation),
-    on jittered general-position segments."""
+    the numpy oracle (same linspace arithmetic, same dilation), on
+    jittered general-position segments."""
     segs = _grid_segments(6, jitter=0.4)
-    want = rangejoin.segment_cover_pdf(segs, 13)
+    want = _segment_cover_pdf(segs, 13)
     got = rangejoin.segment_cover_df(spark.createDataFrame(segs), 13).toPandas()
     sa = set(map(tuple, want[["cell", "seg_id"]].itertuples(index=False)))
     sb = set(map(tuple, got[["cell", "seg_id"]].itertuples(index=False)))
@@ -194,65 +275,61 @@ def _random_segments(n: int, res: int, seed: int = 11) -> pd.DataFrame:
     })
 
 
-def test_distributed_join_matches_legacy_with_residue(spark):
-    """nearest_segment_join_distributed == the broadcast path row-for-row,
-    including a far outlier that is residue at the caller's resolution
-    (drained by the auto-appended coarser levels, not a cartesian). Two
-    inputs: a jittered road grid, and seeded random segments in general
-    position (random anchors, directions and lengths)."""
+def test_distributed_join_matches_bruteforce_with_residue(spark, monkeypatch):
+    """nearest_segment_join_distributed == the numpy brute force
+    row-for-row, including a far outlier that is residue at the caller's
+    resolution (drained by the auto-appended coarser levels, not a
+    cartesian). Two inputs: a jittered road grid, and seeded random
+    segments in general position (random anchors, directions and
+    lengths)."""
     cases = [
         (_grid_segments(4, jitter=0.3), 13, 800),
         (_random_segments(2_000, 16), 16, 4_000),
     ]
+    plans = _record_level_plans(monkeypatch)
     for segs, res, n in cases:
-        cover = rangejoin.segment_cover_pdf(segs, res)
         base = spark.range(0, n, numPartitions=4)
         lon, lat = synth.lonlat_cols(F.col("id"))
         pts = base.select(F.col("id").alias("pid"), lon.alias("lon"), lat.alias("lat"))
         pts = pts.unionByName(spark.createDataFrame(
             pd.DataFrame({"pid": [99999], "lon": [-150.0], "lat": [-70.0]})
         ))
-        legacy = rangejoin.nearest_segment_join(pts, cover, res)
         dist = rangejoin.nearest_segment_join_distributed(
             pts, spark.createDataFrame(segs), res, point_id="pid"
         )
-        a = sorted(map(tuple, legacy.select("pid", F.round("road_dist", 9)).collect()))
-        b = sorted(map(tuple, dist.select("pid", F.round("road_dist", 9)).collect()))
-        assert a == b and len(b) == n + 1, res
-        p = dist._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in p
-        assert "BroadcastNestedLoopJoin" not in p
-        # fully JVM-side: the distributed path has no Python stage at all
-        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+        got = dist.select("pid", "lon", "lat", "seg_id", "road_dist").toPandas()
+        want = _bruteforce_nearest(got, segs)
+        assert sorted(
+            map(tuple, got[["pid", "seg_id", "road_dist"]].itertuples(index=False))
+        ) == want and len(want) == n + 1, res
+        plans.append(dist._jdf.queryExecution().executedPlan().toString())
+    # fully JVM-side: no level of the cascade has a cartesian or a
+    # Python stage
+    assert len(plans) > 2 * len(cases)
+    _assert_no_cartesian_no_python(plans)
 
 
 def test_nearest_segment_tie_breaks_to_lowest_seg_id(spark):
-    """Points equidistant from two segments resolve to the lower seg_id on
-    the broadcast and the distributed path alike — at the first level
-    (pid 1, within one cell) and in the residue (pid 2, drained by the
-    brute pass / coarser levels). Dyadic coordinates make both distances
-    bit-identical."""
+    """Points equidistant from two segments resolve to the lower seg_id,
+    at the first level (pid 1, within one cell) and in the residue
+    (pid 2, drained by the coarser levels). Dyadic coordinates make both
+    distances bit-identical."""
     h = 2.0 ** -7
     segs = pd.DataFrame({
         "seg_id": ["s2", "s1"],  # the higher id comes first in the input
         "ax": [10.0, 10.0 + h], "ay": [50.0, 50.0],
         "bx": [10.0, 10.0 + h], "by": [50.0 + h, 50.0 + h],
     })
-    pts = spark.createDataFrame(pd.DataFrame({
+    pts_pdf = pd.DataFrame({
         "pid": [1, 2], "lon": [10.0 + h / 2, 10.0 + h / 2],
         "lat": [50.0 + h / 2, 50.5],
-    }))
+    })
     res = 13
-    legacy = rangejoin.nearest_segment_join(
-        pts, rangejoin.segment_cover_pdf(segs, res), res
-    )
     dist = rangejoin.nearest_segment_join_distributed(
-        pts, spark.createDataFrame(segs), res
+        spark.createDataFrame(pts_pdf), spark.createDataFrame(segs), res
     )
-    cols = ["pid", "seg_id", "road_dist"]
-    a = sorted(map(tuple, legacy.select(*cols).collect()))
-    b = sorted(map(tuple, dist.select(*cols).collect()))
-    assert a == b
+    b = sorted(map(tuple, dist.select("pid", "seg_id", "road_dist").collect()))
+    assert b == _bruteforce_nearest(pts_pdf, segs)
     assert [r[1] for r in b] == ["s1", "s1"]
     assert b[0][2] == h / 2 and b[1][2] > 180.0 / (1 << res)
 
@@ -274,18 +351,15 @@ def test_nearest_segment_tie_at_residue_bound(spark):
         "ax": [px + d, px - w / 4], "ay": [py - h / 4, py + d],
         "bx": [px + d, px + w / 4], "by": [py + h / 4, py + d],
     })
-    pts = spark.createDataFrame(pd.DataFrame({"pid": [1], "lon": [px], "lat": [py]}))
-    legacy = rangejoin.nearest_segment_join(
-        pts, rangejoin.segment_cover_pdf(segs, res), res
-    )
+    pts_pdf = pd.DataFrame({"pid": [1], "lon": [px], "lat": [py]})
     dist = rangejoin.nearest_segment_join_distributed(
-        pts, spark.createDataFrame(segs), res
+        spark.createDataFrame(pts_pdf), spark.createDataFrame(segs), res
     )
     assert d > 1.0 and d > h
-    for out in (legacy, dist):
-        assert [tuple(r) for r in out.select("pid", "seg_id", "road_dist").collect()] == [
-            (1, "s1", d)
-        ]
+    assert _bruteforce_nearest(pts_pdf, segs) == [(1, "s1", d)]
+    assert [tuple(r) for r in dist.select("pid", "seg_id", "road_dist").collect()] == [
+        (1, "s1", d)
+    ]
 
 
 def test_nn_paths_keep_nan_and_null_points(spark):
@@ -323,9 +397,6 @@ def test_nn_paths_keep_nan_and_null_points(spark):
             pts, tgt, levels, point_id="pid", broadcast_targets=False
         ),
         "parcel_assign": knn.parcel_assign(pts, anchors, levels, point_id="pid"),
-        "nearest_segment_join": rangejoin.nearest_segment_join(
-            pts, rangejoin.segment_cover_pdf(segs, 14), 14, point_id="pid"
-        ).withColumnRenamed("road_dist", "nn_dist"),
         "nearest_segment_join_distributed": rangejoin.nearest_segment_join_distributed(
             pts, spark.createDataFrame(segs.drop(columns="feature_type")), levels,
             point_id="pid",
@@ -337,6 +408,11 @@ def test_nn_paths_keep_nan_and_null_points(spark):
         assert 0.0 < rows[0].nn_dist < 0.02, name
         assert math.isnan(rows[1].nn_dist), name
         assert rows[2].nn_dist is None, name
+    # the finite point's segment and distance are the brute force's
+    road = runs["nearest_segment_join_distributed"].filter("pid = 1")
+    assert [tuple(r) for r in road.select("pid", "seg_id", "nn_dist").collect()] == (
+        _bruteforce_nearest(road.select("pid", "lon", "lat").toPandas(), segs)
+    )
 
     # boundary types: the ring's vertices are the points. The NaN vertex
     # types as 'gadm_boundary' (NaN exceeds the threshold); the null one
@@ -355,11 +431,61 @@ def test_nn_paths_keep_nan_and_null_points(spark):
     ]
 
 
-def test_star_junction_hot_cell_guard(spark):
+def test_boundary_types_beyond_first_level_match_bruteforce(spark, monkeypatch):
+    """Boundary typing of vertices that no first-level candidate set can
+    settle: every vertex lies farther from every line than the res-14
+    ring guarantee, so each one falls through to the coarser levels (the
+    case a cross-join brute pass used to cover). The threshold keeps
+    every nearest type, so the types are the brute force's nearest
+    segments under the combine rule. Vertex (10.125, 49.75) is equally
+    far from a and b (dyadic coordinates), and the tie goes to a."""
+    segs = pd.DataFrame({
+        "seg_id": ["a", "b", "c", "d"],
+        "ax": [10.0, 10.25, 10.0, 10.5], "ay": [49.5, 49.5, 50.0, 50.25],
+        "bx": [10.0, 10.25, 10.25, 10.75], "by": [50.0, 50.0, 50.0, 50.5],
+        "feature_type": ["waterway", "highway", "natural", "waterway"],
+    })
+    rings = {
+        "near_ab": [(10.125, 49.75), (10.375, 49.625), (9.875, 49.625)],
+        "north": [(10.125, 50.25), (10.375, 50.125), (10.25, 50.5), (10.0, 50.25)],
+        "east": [(11.0, 49.75), (11.0, 50.0), (10.5, 49.75), (10.75, 50.0)],
+    }
+    res, threshold = 14, 10.0
+    blocks = spark.createDataFrame(pd.DataFrame({
+        "block_id": list(rings),
+        "geometry": [[list(v) for v in ring] for ring in rings.values()],
+    }))
+    plans = _record_level_plans(monkeypatch)
+    out = rangejoin.boundary_types_for_blocks(blocks, segs, res, threshold=threshold)
+    got = {r.block_id: list(r.boundary_types) for r in out.collect()}
+
+    ftype = dict(zip(segs.seg_id, segs.feature_type))
+    combine = lambda a, b: a if a == b else ("highway" if "highway" in (a, b) else "natural")
+    want = {}
+    for bid, ring in rings.items():
+        verts = pd.DataFrame({
+            "pid": range(len(ring)), "lon": [v[0] for v in ring],
+            "lat": [v[1] for v in ring],
+        })
+        nearest = _bruteforce_nearest(verts, segs, decimals=9)
+        assert all(d > 180.0 / (1 << res) for _, _, d in nearest)  # all residue
+        assert all(d <= threshold for _, _, d in nearest)
+        vt = [ftype[seg] for _, seg, _ in nearest]
+        want[bid] = [combine(vt[i], vt[(i + 1) % len(vt)]) for i in range(len(vt))]
+        if bid == "near_ab":
+            assert [seg for _, seg, _ in nearest] == ["a", "b", "a"]
+    assert got == want
+
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+    assert len(plans) > 2  # the coarser levels ran
+    _assert_no_cartesian_no_python(plans)
+
+
+def test_star_junction_hot_cell_guard(spark, monkeypatch):
     """Degenerate skew fixture: N roads all through ONE junction point, so
     one cell (and its ring) holds every segment. The hot-cell guard must
     split the cell into hash chunks (bounded per-key candidate count) and
-    stay EXACT — identical output to the legacy broadcast path."""
+    stay EXACT — identical output to the numpy brute force."""
     rng = np.random.default_rng(7)
     n = 120
     ang = rng.uniform(0, 2 * np.pi, n)
@@ -383,15 +509,12 @@ def test_star_junction_hot_cell_guard(spark):
     assert hot == n  # the fixture IS degenerate: one cell holds every segment
 
     cap = 16
+    monkeypatch.setattr(rangejoin, "MAX_SEGS_PER_CELL", cap)
     guarded = rangejoin.nearest_segment_join_distributed(
-        pts, sdf, res, point_id="pid", max_segs_per_cell=cap
-    )
-    legacy = rangejoin.nearest_segment_join(
-        pts, rangejoin.segment_cover_pdf(segs, res), res, point_id="pid"
-    )
-    g = sorted(map(tuple, guarded.select("pid", F.round("road_dist", 9)).collect()))
-    l = sorted(map(tuple, legacy.select("pid", F.round("road_dist", 9)).collect()))
-    assert g == l and len(g) == 400
+        pts, sdf, res, point_id="pid"
+    ).select("pid", "lon", "lat", "seg_id", "road_dist").toPandas()
+    g = sorted(map(tuple, guarded[["pid", "seg_id", "road_dist"]].itertuples(index=False)))
+    assert g == _bruteforce_nearest(guarded, segs) and len(g) == 400
 
     # the bounded per-key property: with the guard, every (cell, chunk)
     # join key holds ~cap segments (hash-balanced), never the full hot
