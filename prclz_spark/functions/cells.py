@@ -155,6 +155,13 @@ def cell_id_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     return res * RES_BITS_SHIFT + cx * XY_SHIFT + cy
 
 
+def cell_prefix_np(ids: np.ndarray, prefix_res: int) -> np.ndarray:
+    """:func:`cell_prefix` on the driver: the ``prefix_res`` cell holding
+    each cell's centre, which lies inside its parent."""
+    x0, y0, x1, y1 = cell_bounds_np(ids)
+    return cell_id_np((x0 + x1) / 2, (y0 + y1) / 2, prefix_res)
+
+
 def cell_bounds(cell: int) -> tuple[float, float, float, float]:
     """(lon_min, lat_min, lon_max, lat_max) of a cell."""
     return tuple(float(v[0]) for v in cell_bounds_np(np.array([cell])))

@@ -3,10 +3,10 @@ with ANSI-SQL mirrors for the DuckDB oracles.
 
 Reference: geopy geodesic meters (/root/reference/reblock/i_topology.py:
 50-55 — F17) and the EPSG:3395 reprojection for km² areas
-(data_processing/process_worldpop.py:114,141,166 — F19). Same formulas as
-the numpy kernels in functions.geom (haversine_m / mercator_xy), written
-op-for-op identically on both engines so results agree bit-wise before
-rounding."""
+(data_processing/process_worldpop.py:114,141,166 — F19). The haversine
+is the numpy kernel functions.geom.haversine_m's formula; each function
+is written op-for-op identically on both engines so results agree
+bit-wise before rounding."""
 
 from __future__ import annotations
 

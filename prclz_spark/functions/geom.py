@@ -665,12 +665,3 @@ def haversine_m(lon0, lat0, lon1, lat1):
     dlon = np.radians(lon1) - np.radians(lon0)
     a = np.sin(dlat / 2) ** 2 + np.cos(rl0) * np.cos(rl1) * np.sin(dlon / 2) ** 2
     return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
-
-
-def mercator_xy(lon, lat):
-    """EPSG:3395-style forward projection for km² areas
-    (process_worldpop.py:114,141,166)."""
-    R = 6_378_137.0
-    x = R * np.radians(lon)
-    y = R * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
-    return x, y

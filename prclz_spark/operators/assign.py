@@ -152,36 +152,25 @@ def assign_points_to_blocks(
     res: int,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    how: str = "inner",
     salt: int = 0,
 ) -> DataFrame:
-    """Assign each point row its containing block_id.
+    """Assign each point row its containing block_id: the points inside
+    some block, each with its block_id (sjoin op='within').
 
     ``points``: any DataFrame with lon/lat columns. ``cover``: the exploded
     (cell, block_id, geometry[, interior]) dimension — a *pandas* DataFrame
     (block_cover_pdf) takes the small-dimension fast path (the broadcast
     carries per-cell edge lists, never whole rings), a Spark DataFrame
     takes the distributed path (no broadcast hint: a shuffle join, unless
-    Spark's own size rules broadcast a small frame). ``how``:
-    'inner' keeps matched points (sjoin op='within'), 'left' keeps all
-    (sjoin how='left', utils.py:73).
+    Spark's own size rules broadcast a small frame).
 
     salt > 0 (distributed path) replicates each cover row ``salt`` ways and
     routes each point deterministically to one replica — spreads a hot cell
     across `salt` tasks in the shuffle-join path.
     """
     if isinstance(cover, pd.DataFrame):
-        refined = _assign_small_cover(points, cover, res, lon_col, lat_col)
-    else:
-        refined = _assign_dist_cover(points, cover, res, lon_col, lat_col, salt)
-    if how == "inner":
-        return refined
-    if how == "left":
-        matched = refined.select(*points.columns, "block_id")
-        return points.join(
-            matched.select(points.columns[0], "block_id"), on=points.columns[0], how="left"
-        )
-    raise ValueError(how)
+        return _assign_small_cover(points, cover, res, lon_col, lat_col)
+    return _assign_dist_cover(points, cover, res, lon_col, lat_col, salt)
 
 
 def _assign_small_cover(

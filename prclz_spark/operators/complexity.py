@@ -72,9 +72,7 @@ COMPLEXITY_SCHEMA = T.StructType(
 )
 
 
-def k_complexity(
-    assigned_points: DataFrame, blocks: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
+def k_complexity(assigned_points: DataFrame, blocks: DataFrame) -> DataFrame:
     """Distributed k-complexity.
 
     ``assigned_points``: (block_id, lon, lat) — output of
@@ -84,8 +82,8 @@ def k_complexity(
     a block without points gets k = 0, a kernel fault k = -1.
 
     Uses cogrouped applyInPandas so block geometry rides next to its points
-    without replicating the ring onto every point row; ``num_partitions``
-    defaults to 2x default parallelism (see parcel._cogroup_by_block)."""
+    without replicating the ring onto every point row, hash-partitioned
+    2x default parallelism ways (see parcel._cogroup_by_block)."""
 
     def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
         cent = list(zip(pts_pdf["lon"].to_numpy(), pts_pdf["lat"].to_numpy()))
@@ -99,5 +97,5 @@ def k_complexity(
 
     return _cogroup_by_block(
         assigned_points, ["block_id", "lon", "lat"], blocks, kernel,
-        COMPLEXITY_SCHEMA, num_partitions,
+        COMPLEXITY_SCHEMA,
     )

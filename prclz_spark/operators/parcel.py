@@ -41,7 +41,7 @@ PARCELS_SCHEMA = T.StructType(
 def _cogroup_by_block(
     points: DataFrame, point_cols: list[str], blocks: DataFrame,
     kernel: Callable[[pd.DataFrame, str, np.ndarray, list | None], list[dict]],
-    schema: T.StructType, num_partitions: int | None = None,
+    schema: T.StructType,
 ) -> DataFrame:
     """The per-block operators' one cogroup: ``kernel(pts_pdf, block_id,
     ring, boundary_types)`` returns a block's output rows as dicts (missing
@@ -53,8 +53,8 @@ def _cogroup_by_block(
     The kernels are CPU-heavy while their shuffle is byte-light, so AQE's
     size-based coalescing would collapse the stage to a handful of tasks.
     Both sides are therefore hash-partitioned on block_id with an explicit
-    count (default 2x default parallelism) — an exchange the cogroup
-    reuses and AQE does not coalesce."""
+    count, 2x default parallelism — an exchange the cogroup reuses and AQE
+    does not coalesce."""
     cols = [f.name for f in schema.fields]
     blk_cols = ["block_id", F.flatten("geometry").alias("geometry")] + (
         ["boundary_types"] if "boundary_types" in blocks.columns else []
@@ -71,7 +71,7 @@ def _cogroup_by_block(
         )
         return pd.DataFrame(rows, columns=cols)
 
-    n = num_partitions or points.sparkSession.sparkContext.defaultParallelism * 2
+    n = points.sparkSession.sparkContext.defaultParallelism * 2
     return (
         points.select(*point_cols).repartition(n, "block_id").groupBy("block_id")
         .cogroup(
@@ -162,19 +162,14 @@ def _parcel_row(block_id: str, pid: str, ring: np.ndarray) -> dict:
     }
 
 
-def parcelize(
-    assigned_points: DataFrame,
-    blocks: DataFrame,
-    point_id: str = "image_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def parcelize(assigned_points: DataFrame, blocks: DataFrame) -> DataFrame:
     """(block_id, parcel_point_id, geometry, area): one parcel per
-    assigned point. ``assigned_points``: (block_id, point_id, lon, lat);
+    assigned point. ``assigned_points``: (block_id, image_id, lon, lat);
     ``blocks``: (block_id, geometry ring). Points are taken in point-id
     order, so the output does not depend on shuffle arrival order."""
 
     def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
-        ids, xy = _canonical_points(pts_pdf[point_id], pts_pdf[["lon", "lat"]])
+        ids, xy = _canonical_points(pts_pdf["image_id"], pts_pdf[["lon", "lat"]])
         try:
             cells_out = block_parcels(ring, ids, xy)
         except Exception:
@@ -182,8 +177,8 @@ def parcelize(
         return [_parcel_row(bid, pid, cell) for pid, cell in cells_out]
 
     return _cogroup_by_block(
-        assigned_points, ["block_id", point_id, "lon", "lat"], blocks, kernel,
-        PARCELS_SCHEMA, num_partitions,
+        assigned_points, ["block_id", "image_id", "lon", "lat"], blocks, kernel,
+        PARCELS_SCHEMA,
     )
 
 
@@ -203,13 +198,14 @@ FOOTPRINT_PARCELS_SCHEMA = T.StructType(
 
 FALLBACK_PARCEL_ID = "__block_boundary__"
 
+MAX_ANCHORS = 6_000  # per-block densification budget (parcelize_footprints)
+
 
 def block_parcels_footprint(
     block_ring: np.ndarray,
     fp_ids: list[str],
     fp_rings: list[np.ndarray],
     ptdist: float,
-    max_anchors: int = 20_000,
 ) -> list[tuple[str, int, float]]:
     """One block's footprint parcelization (midway_parcelization.R:62-76):
     densify every footprint boundary at ``ptdist`` (st_segmentize), Voronoi-
@@ -220,8 +216,8 @@ def block_parcels_footprint(
     dissolved area is the sum of the member cells' areas — no polygon
     union is computed (the union's *boundary*, when needed for a mesh
     sink, is the member cells' non-shared edges). Raises when the anchor
-    budget is exceeded, which the retry ladder converts into a coarser
-    ``ptdist`` attempt."""
+    budget ``MAX_ANCHORS`` is exceeded, which the retry ladder converts
+    into a coarser ``ptdist`` attempt."""
     # budget is enforced BEFORE densifying (perimeter/ptdist estimate) and
     # again while accumulating, so a pathological ptdist raises in O(1)
     # instead of materializing millions of anchors first
@@ -231,10 +227,10 @@ def block_parcels_footprint(
         if len(r) >= 2:
             closed = np.vstack([r, r[:1]])
             est += float(np.hypot(*(np.diff(closed, axis=0).T)).sum()) / ptdist
-    if est > max_anchors:
+    if est > MAX_ANCHORS:
         raise ValueError(
             f"footprint densification would produce ~{int(est)} anchors "
-            f"(> {max_anchors}) at ptdist={ptdist}"
+            f"(> {MAX_ANCHORS}) at ptdist={ptdist}"
         )
     anchors: list[tuple[float, float]] = []
     labels: list[int] = []
@@ -249,10 +245,10 @@ def block_parcels_footprint(
         for p in dens:
             anchors.append((float(p[0]), float(p[1])))
             labels.append(k)
-        if len(anchors) > max_anchors:
+        if len(anchors) > MAX_ANCHORS:
             raise ValueError(
                 f"footprint densification produced {len(anchors)} anchors "
-                f"(> {max_anchors}) at ptdist={ptdist}"
+                f"(> {MAX_ANCHORS}) at ptdist={ptdist}"
             )
     # exact duplicates: shared footprint corners / overlapping rings
     pts, frame = perturb_duplicates(anchors), _cell_frame(block_ring)
@@ -280,10 +276,7 @@ def parcelize_footprints(
     blocks: DataFrame,
     footprint_side: float,
     ptdist: float,
-    point_id: str = "image_id",
     coarse_factor: float = 100.0,
-    num_partitions: int | None = None,
-    max_anchors: int = 6_000,
 ) -> DataFrame:
     """Distributed footprint parcelization with the reference's retry
     ladder (midway_parcelization.R:126-135): per block, try the fine
@@ -291,7 +284,7 @@ def parcelize_footprints(
     fail, inherit the block boundary as a single fallback parcel
     (parcel_id '__block_boundary__', ptdist_used -1).
 
-    ``max_anchors`` is the per-block straggler budget: the Voronoi kernel
+    ``MAX_ANCHORS`` is the per-block straggler budget: the Voronoi kernel
     is O(n² log n) in anchors, so a hotspot block (30% of points in 1.5%
     of the area in the synthetic skew) must densify coarsely — exceeding
     the budget at the fine rung is precisely what drops it to the coarse
@@ -305,7 +298,7 @@ def parcelize_footprints(
     def kernel(pts_pdf, bid, ring, _types) -> list[dict]:
         if len(pts_pdf) == 0:
             return []
-        ids, xy = _canonical_points(pts_pdf[point_id], pts_pdf[["lon", "lat"]])
+        ids, xy = _canonical_points(pts_pdf["image_id"], pts_pdf[["lon", "lat"]])
         h = footprint_side / 2.0
         rings = [
             np.array(
@@ -315,7 +308,7 @@ def parcelize_footprints(
         ]
         for d in (ptdist, ptdist * coarse_factor):
             try:
-                out = block_parcels_footprint(ring, ids, rings, d, max_anchors)
+                out = block_parcels_footprint(ring, ids, rings, d)
             except Exception:
                 continue
             if out:
@@ -330,8 +323,8 @@ def parcelize_footprints(
                  "ptdist_used": -1.0}]
 
     return _cogroup_by_block(
-        assigned_points, ["block_id", point_id, "lon", "lat"], blocks, kernel,
-        FOOTPRINT_PARCELS_SCHEMA, num_partitions,
+        assigned_points, ["block_id", "image_id", "lon", "lat"], blocks, kernel,
+        FOOTPRINT_PARCELS_SCHEMA,
     )
 
 

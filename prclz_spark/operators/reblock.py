@@ -69,7 +69,7 @@ REBLOCK_SUMMARY_SCHEMA = T.StructType(
     [
         T.StructField("block_id", T.StringType()),
         # 0 ok | 1 error | 2 skipped (fewer than 2 terminals survive)
-        # | 3 skipped (max_nodes straggler budget hit)
+        # | 3 skipped (MAX_NODES straggler budget hit)
         T.StructField("status", T.IntegerType()),
         T.StructField("n_terminals", T.IntegerType()),
         T.StructField("n_nodes_pre", T.IntegerType()),
@@ -107,6 +107,8 @@ MAX_TERMINALS = 400  # straggler budget: the reference bounds per-block work
 # closure is O(t² · Dijkstra) so a dense hotspot block (thousands of
 # points) must be capped — terminals beyond the cap are subsampled
 # deterministically (every k-th by insertion order).
+MAX_NODES = 20_000  # a block whose parcel mesh has more nodes is skipped
+# with status 3 (the reference's mins_threshold, i_reblock.py:268-273)
 
 
 def _boundary_segments(block_ring: np.ndarray) -> np.ndarray:
@@ -179,8 +181,6 @@ def reblock_kernel(
     parcel_rings: list[np.ndarray],
     terminals_xy: np.ndarray,
     simplify: bool = True,
-    max_terminals: int = MAX_TERMINALS,
-    max_nodes: int = 20_000,
     outside_terminal: bool = True,
     terminal_cells: np.ndarray | None = None,
     drop_boundary_parcels: bool = True,
@@ -238,13 +238,13 @@ def reblock_kernel(
     n_with_dummy = len(terminals_xy) + (1 if outside_terminal else 0)
     if n_with_dummy <= 1:
         return _skip(len(terminals_xy))
-    if max_terminals and len(terminals_xy) > max_terminals:
-        step = len(terminals_xy) / max_terminals
-        idx = (np.arange(max_terminals) * step).astype(int)
+    if len(terminals_xy) > MAX_TERMINALS:
+        step = len(terminals_xy) / MAX_TERMINALS
+        idx = (np.arange(MAX_TERMINALS) * step).astype(int)
         terminals_xy = terminals_xy[idx]
     g = PlanarGraph.from_polygons(snapped)
     n_nodes_pre, n_edges_pre = g.number_of_nodes(), len(g.edges())
-    if max_nodes and n_nodes_pre > max_nodes:
+    if n_nodes_pre > MAX_NODES:
         # per-block work budget (reference mins_threshold, i_reblock.py:
         # 268-273): a pathological block is skipped with a status row, the
         # stage never stalls on one straggler
@@ -314,7 +314,7 @@ def reblock_kernel(
 def _reblock_block(
     block_id: str, block_ring: np.ndarray, parcels: dict[str, np.ndarray],
     points: dict[str, np.ndarray], boundary_types: list[str] | None,
-    simplify: bool = True, drop_boundary_parcels: bool = True,
+    drop_boundary_parcels: bool = True,
 ) -> dict[str, list[dict]]:
     """One block's reblock rows per sink kind from parcels and points keyed
     by point id, which pairs each terminal with its parcel; a kernel fault
@@ -328,8 +328,7 @@ def _reblock_block(
     cells = np.array([ring_idx.get(p, -1) for p in pt_ids], dtype=int)
     try:
         edges, summary = reblock_kernel(
-            block_ring, [parcels[p] for p in ring_ids], xy,
-            simplify=simplify, terminal_cells=cells,
+            block_ring, [parcels[p] for p in ring_ids], xy, terminal_cells=cells,
             drop_boundary_parcels=drop_boundary_parcels,
             boundary_types=boundary_types,
         )
@@ -355,14 +354,11 @@ def reblock(
     parcels: DataFrame,
     assigned_points: DataFrame,
     blocks: DataFrame,
-    point_id: str = "image_id",
     emit: str = "edges",
-    num_partitions: int | None = None,
-    simplify: bool = True,
     drop_boundary_parcels: bool = True,
 ) -> DataFrame:
     """Distributed reblocking. ``parcels``: operators.parcel.parcelize
-    output; ``assigned_points``: (block_id, point_id, lon, lat);
+    output; ``assigned_points``: (block_id, image_id, lon, lat);
     ``blocks``: (block_id, geometry[, boundary_types]). ``emit``: 'edges'
     (steiner edge rows), 'summary' (per-block metrics, the reference's
     timing/size columns) or 'terminals' (snapped terminal points — the
@@ -392,7 +388,7 @@ def reblock(
     ).unionByName(
         assigned_points.select(
             "block_id",
-            F.col(point_id).cast("string").alias("pid"),
+            F.col("image_id").cast("string").alias("pid"),
             F.array(F.col("lon"), F.col("lat")).alias("geometry"),
         )
     )
@@ -409,15 +405,14 @@ def reblock(
             else:
                 prings[str(pid)] = arr
         return _reblock_block(
-            bid, ring, prings, pts, btypes,
-            simplify=simplify, drop_boundary_parcels=drop_boundary_parcels,
+            bid, ring, prings, pts, btypes, drop_boundary_parcels=drop_boundary_parcels
         )[kind]
 
     # explicit hash partition count: the Steiner kernel is the most
     # CPU-expensive stage in the engine; never let byte-based AQE
     # coalescing underparallelize it (see parcel._cogroup_by_block)
     return _cogroup_by_block(
-        both, ["block_id", "pid", "geometry"], blocks, kernel, schema, num_partitions
+        both, ["block_id", "pid", "geometry"], blocks, kernel, schema
     )
 
 

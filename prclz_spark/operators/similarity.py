@@ -32,12 +32,10 @@ from pyspark.sql import types as T
 __all__ = [
     "cosine_topk",
     "near_dup_pairs",
-    "near_dup_pairs_broadcast",
     "near_dup_pairs_lsh",
     "lsh_bucket",
     "lsh_bucket_multi",
     "lsh_plane_sql",
-    "ivf_centroid",
     "ivf_centroid_sql",
     "ivf_topk",
     "ivfpq_topk",
@@ -246,48 +244,6 @@ def near_dup_pairs(
     return keyed.groupBy("k1", "k2").applyInPandas(pair_block, _PAIR_SCHEMA)
 
 
-def near_dup_pairs_broadcast(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 6,
-    max_rows: int = 100_000,
-) -> DataFrame:
-    """Test-oracle form of exact near-dup: the WHOLE table is collected to
-    the driver and broadcast — refuses tables above ``max_rows``. Use
-    ``near_dup_pairs`` (distributed chunk-pair GEMM) in pipelines."""
-    spark = embeddings.sparkSession
-    all_ids, all_mat = _collect_matrix(embeddings.limit(max_rows + 1), id_col, vec_col)
-    if len(all_ids) > max_rows:
-        raise ValueError(
-            f"near_dup_pairs_broadcast: table exceeds max_rows={max_rows}; "
-            "use near_dup_pairs (distributed) instead"
-        )
-    all_norm = all_mat / np.linalg.norm(all_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((all_ids, all_norm))
-    thr = float(threshold)
-    rd = round_digits
-
-    def pairs(batches):
-        ids_r, rn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids_l = pdf[id_col].to_numpy()
-            e = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            e = e / np.linalg.norm(e, axis=1, keepdims=True)
-            sims = e @ rn.T
-            if rd is not None:
-                sims = np.round(sims, rd)
-            li, rj = np.nonzero((sims >= thr) & (ids_l[:, None] < ids_r[None, :]))
-            yield pd.DataFrame(
-                {"v1": ids_l[li], "v2": ids_r[rj], "sim": sims[li, rj]}
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(pairs, _PAIR_SCHEMA)
-
-
 def near_dup_pairs_lsh(
     embeddings: DataFrame,
     threshold: float,
@@ -483,7 +439,7 @@ def ivf_train(
 ) -> np.ndarray:
     """Data-dependent IVF codebook: spherical k-means (Lloyd's) fit on a
     deterministic driver-side sample, returned as a numpy matrix to
-    broadcast into ``ivf_centroid``/``ivf_topk``. The 10^12-row shape:
+    broadcast into ``ivf_topk``. The 10^12-row shape:
     the sample is ``orderBy(id).limit(sample_size)`` — a TakeOrdered
     (per-partition top-k + driver merge, no global sort shuffle) that is
     deterministic across parallelism; training itself is
@@ -549,27 +505,6 @@ def _centroid_udf(spark, codebook: np.ndarray):
     return cent.asNondeterministic()
 
 
-def ivf_centroid(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    codebook: np.ndarray | None = None,
-) -> DataFrame:
-    """(id, centroid): IVF coarse quantization — inner-product assignment
-    against a broadcast codebook. Pass ``dim`` to avoid the ``.first()``
-    driver action used as fallback. ``codebook``: a trained matrix from
-    ``ivf_train`` (default: the fixed LCG codebook the SQL oracle
-    replays)."""
-    d = dim if dim is not None else len(embeddings.select(vec_col).first()[0])
-    cent = _centroid_udf(
-        embeddings.sparkSession,
-        _codebook(n_centroids, d) if codebook is None else codebook,
-    )
-    return embeddings.select(F.col(id_col), cent(F.col(vec_col)).alias("centroid"))
-
-
 def ivf_centroid_sql(table: str, n_centroids: int, d: int,
                      vec_col: str = "embedding", extra_cols: str = "vec_id") -> str:
     """Subquery computing the same centroid assignment: per-centroid dot
@@ -633,8 +568,8 @@ def ivf_topk(
     ]
     probe_df = F.broadcast(spark.createDataFrame(pd.DataFrame(probe_rows)))
 
-    # centroid computed INLINE (withColumn), never via a self-join with
-    # ivf_centroid: that plan re-scans the table and broadcasts an O(N)
+    # centroid computed INLINE (withColumn), never via a self-join with a
+    # separate (id, centroid) frame: that plan re-scans the table and broadcasts an O(N)
     # (id, centroid) map — fatal at 10^12 rows. Inline, the quantizer is
     # a map-side Arrow stage and only the tiny probe table broadcasts.
     cent = _centroid_udf(spark, codebook)

@@ -5,10 +5,14 @@ resumes via output-file-exists checks and CheckPointer CSVs (SURVEY.md
 §3, §2.1 S9). Here each stage is a DataFrame program whose output commits
 atomically to the TableStore with per-partition lineage; re-running the
 pipeline recomputes only partitions absent from lineage (kill-and-resume:
-a killed commit leaves no manifest, so its partitions re-run). Stages 2-4
-(k-complexity, parcels, reblock) are ONE per-block pass committed as
-``reblock_all``; their five tables are filter sinks of it, committed
-together from one write (``TableStore.commit_split``).
+a killed commit leaves no manifest, so its partitions re-run). Every
+stage decides what to re-run on the driver, from lineage: its todo keys
+are the keys it can produce minus those its table's lineage holds (the
+all-or-nothing manifest checks one stage marker), so a resume check runs
+no Spark job. Stages 2-4 (k-complexity, parcels, reblock) are ONE
+per-block pass committed as ``reblock_all``; their five tables are
+filter sinks of it, committed together from one write
+(``TableStore.commit_split``).
 
 Partitioning follows the north_rule: points carry a cell *prefix*
 (coarse cell id) and every stage table is partitioned by it, so a
@@ -29,6 +33,7 @@ deployment artifact.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +54,11 @@ REBLOCK_ALL_TABLE = "reblock_all"
 REBLOCK_TABLE = "reblock_summary"
 REBLOCK_EDGES_TABLE = "reblock_edges"
 REBLOCK_TERMINALS_TABLE = "reblock_terminals"
+# run_pipeline's tables, in stage order: the keys of the counts it returns
+STAGE_TABLES = (
+    ASSIGN_TABLE, COMPLEXITY_TABLE, PARCELS_TABLE, REBLOCK_ALL_TABLE,
+    REBLOCK_TABLE, REBLOCK_EDGES_TABLE, REBLOCK_TERMINALS_TABLE, MANIFEST_TABLE,
+)
 EVENTS_FACT_TABLE = "events_fact"
 EVENTS_ASSIGN_TABLE = "events_assign"
 EVENTS_BUCKETS = 32
@@ -102,39 +112,43 @@ def run_pipeline(
     lineage and resumable independently.
 
     Stage 1 is the flat single-cell broadcast join
-    (assign_points_to_blocks); the cover's row count lands in the assign
-    stage's lineage metrics.
+    (assign_points_to_blocks) over the cover cut to the cell prefixes
+    not yet in the assign table's lineage; the full cover's row count
+    lands in its lineage metrics. On a complete store no stage runs a
+    Spark job.
 
-    Returns per-stage counts actually computed this run (0 for a fully
-    resumed stage)."""
+    Returns the count each stage computed this run, keyed by every table
+    of ``STAGE_TABLES`` (0 for a fully resumed stage or one not run):
+    rows for assign, the reblock sinks and the manifest, blocks for
+    reblock_all, complexity and parcels."""
     store = TableStore(store_root)
     blocks_pdf = synth.grid_blocks(grid_g)
     cover = assign_op.block_cover_pdf(blocks_pdf, res)
-    computed = {}
+    computed = dict.fromkeys(STAGE_TABLES, 0)
 
     # -- stage 1: spatial assign, partitioned by cell prefix ---------------
-    pts = image_points(spark, n_images)
-    pts = pts.withColumn(
-        "cell_prefix",
-        cells.cell_prefix(
-            cells.cell_id(F.col("lon"), F.col("lat"), res), res, prefix_res
-        ),
-    )
-    todo = store.resume_filter(pts, ASSIGN_TABLE, "cell_prefix")
-    n_todo = todo.count()
-    computed[ASSIGN_TABLE] = n_todo
-    if n_todo > 0:
-        store.commit(
-            assign_op.assign_points_to_blocks(todo, cover, res),
-            ASSIGN_TABLE, "cell_prefix", stage=ASSIGN_TABLE,
-            extra={"cover_rows": len(cover)},
+    # Every assigned point joins through a cover cell, so the todo prefixes
+    # are the cover's minus the lineage's, picked on the driver (no Spark
+    # job), and the points are assigned against the cover cut to them.
+    prefix = cells.cell_prefix_np(cover["cell"].to_numpy(), prefix_res).astype(str)
+    todo = sorted(set(prefix.tolist()) - store.completed_partitions(ASSIGN_TABLE))
+    if todo:
+        pts = image_points(spark, n_images).withColumn(
+            "cell_prefix",
+            cells.cell_prefix(
+                cells.cell_id(F.col("lon"), F.col("lat"), res), res, prefix_res
+            ),
         )
+        sid = store.commit(
+            assign_op.assign_points_to_blocks(pts, cover[np.isin(prefix, todo)], res),
+            ASSIGN_TABLE, "cell_prefix", stage=ASSIGN_TABLE,
+            extra={"cover_rows": len(cover)}, keys=todo,
+        )
+        computed[ASSIGN_TABLE] = store.committed_rows(ASSIGN_TABLE, sid)
     assigned = store.read(spark, ASSIGN_TABLE)
     if assigned is None:
-        # no snapshot was ever committed (n_images == 0, or every point
-        # fell outside all blocks) — short-circuit stage 2 cleanly instead
-        # of crashing on a None frame
-        computed[COMPLEXITY_TABLE] = 0
+        # no point was ever assigned (n_images == 0, or every point fell
+        # outside all blocks): no later stage has input
         return computed
 
     # -- stages 2-4: k-complexity, parcels, Steiner reblocking -------------
@@ -169,7 +183,6 @@ def run_pipeline(
         (REBLOCK_TERMINALS_TABLE, "terminal", reblock_op.REBLOCK_TERMINALS_SCHEMA),
     ):
         keys[tname] = sorted(reblocked - store.completed_partitions(tname))
-        computed[tname] = 0
         if keys[tname]:
             sinks[kind] = (tname, [f.name for f in schema.fields])
     if sinks:
@@ -187,12 +200,9 @@ def run_pipeline(
     # The lineage stage marker makes the commit idempotent: a re-run
     # after a crash either sees no manifest (recompute) or the marker
     # (skip) — same guard as the streaming foreachBatch sink.
-    man = store.manifest(MANIFEST_TABLE)
-    if man and any(
-        l.get("stage") == MANIFEST_TABLE for l in man.get("lineage", [])
+    if not any(
+        l.get("stage") == MANIFEST_TABLE for l in store.read_lineage(MANIFEST_TABLE)
     ):
-        computed[MANIFEST_TABLE] = 0
-    else:
         # reuse stage 1's committed assign output for the manifest ROWS —
         # caption and phash are pure Column arithmetic of image_id, so
         # the PIP join (the pipeline's most expensive stage) never runs

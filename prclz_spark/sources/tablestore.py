@@ -7,8 +7,9 @@ files (midway/single_file_complexity.py:28-46), and the ``CheckPointer``
 keyed result store with a ``completed`` set saved every iteration
 (reblock/i_reblock.py:103-165). The distributed analog (SURVEY.md §2.1 S9,
 §2.8): every stage writes an atomically-committed snapshot of Parquet
-files plus a ``_lineage`` record per partition; resume = anti-join of the
-input's partition keys against committed lineage.
+files plus a ``_lineage`` record per partition; resume = the keys a stage
+can produce minus the keys its lineage holds (``completed_partitions``),
+picked on the driver, as the reference checks its ``completed`` set.
 
 Iceberg itself isn't installable in this sandbox (SURVEY.md §7.1), so this
 is a minimal stand-in with the same semantics the pipeline needs:
@@ -27,9 +28,9 @@ is a minimal stand-in with the same semantics the pipeline needs:
   snapshot_id) — the _lineage/_metrics contract of the north_rule;
 - a commit costs the Spark jobs of its write and nothing per partition
   (row counts come from Parquet footers), a read costs no schema-inference
-  job (the manifest stores the schema), and resume filters are broadcast
-  anti-joins against lineage keys, so no plan or job count grows with
-  the number of committed partitions;
+  job (the manifest stores the schema), and a resume check reads lineage
+  on the driver, so no plan or job count grows with the number of
+  committed partitions;
 - one writer per table: each commit first removes what killed commits
   left behind (staging directories, unlisted data files, manifests past
   LATEST).
@@ -45,10 +46,8 @@ import shutil
 import time
 import uuid
 
-import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class TableStore:
@@ -443,30 +442,9 @@ class TableStore:
 
     # -- resume -----------------------------------------------------------
     def completed_partitions(self, table: str) -> set[str]:
+        """Partition keys the table's lineage records. A stage's todo keys
+        are the keys it can produce minus these, picked on the driver."""
         return {rec["partition_id"] for rec in self.read_lineage(table)}
-
-    def resume_filter(
-        self, df: DataFrame, table: str, partition_col: str
-    ) -> DataFrame:
-        """Drop rows whose partition is already committed — the distributed
-        CheckPointer.completed anti-join (i_reblock.py:254-255): a
-        broadcast left_anti join against a small frame of lineage keys, so
-        the plan does not grow with the number of committed partitions.
-        String-compare because parquet partition keys are strings on
-        disk."""
-        done = self.completed_partitions(table)
-        if not done:
-            return df
-        # from pandas: under Arrow that is a LocalRelation, not an RDD
-        # whose broadcast would need a job of its own
-        keys = df.sparkSession.createDataFrame(
-            pd.DataFrame({"_committed_key": sorted(done)}), "_committed_key string"
-        )
-        return df.join(
-            F.broadcast(keys),
-            F.col(partition_col).cast("string") == keys["_committed_key"],
-            "left_anti",
-        )
 
 
 def _schema_ddl(fields) -> str:

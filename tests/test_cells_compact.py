@@ -210,3 +210,31 @@ def test_compact_cover_tolerates_unclassified(spark):
     # nothing is interior, so nothing compacts — pass-through
     assert len(comp) == len(cover)
     assert not comp.interior.any()
+
+
+def test_cell_prefix_np_matches_column(spark):
+    """The driver-side prefix (the prefix cell of each cell's centre)
+    equals the cell_prefix Column on random cells at several (res,
+    prefix_res) pairs, the grid's corner cells included."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(11)
+    pairs = [(17, 6), (15, 15), (26, 0), (26, 20), (12, 3), (1, 0)]
+    rows = []
+    for i, (res, _) in enumerate(pairs):
+        n = 1 << res
+        xy = np.vstack([rng.integers(0, n, (300, 2)), [[0, 0], [n - 1, n - 1]]])
+        rows += [(i, int(c)) for c in _ids(res, xy.tolist())]
+    got = (
+        spark.createDataFrame(rows, "pair int, cell long")
+        .select("pair", "cell", F.coalesce(*[
+            F.when(F.col("pair") == i, cells.cell_prefix(F.col("cell"), r, p))
+            for i, (r, p) in enumerate(pairs)
+        ]).alias("prefix"))
+        .toPandas()
+    )
+    assert len(got) == len(rows)
+    for i, (_, p) in enumerate(pairs):
+        sub = got[got.pair == i]
+        want = cells.cell_prefix_np(sub.cell.to_numpy(), p)
+        assert (want == sub.prefix.to_numpy()).all(), (i, p)

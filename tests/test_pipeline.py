@@ -59,15 +59,6 @@ def test_tablestore_uncommitted_invisible(spark, tmp_path):
     assert store.read(spark, "t").count() == 10
 
 
-def test_resume_filter(spark, tmp_path):
-    store = TableStore(str(tmp_path))
-    df = spark.range(0, 40).select(F.col("id"), (F.col("id") % 4).alias("b"))
-    store.commit(df.filter(F.col("b") < 2), "t", "b")
-    rest = store.resume_filter(df, "t", "b")
-    assert rest.count() == 20
-    assert set(r["b"] for r in rest.select("b").distinct().collect()) == {2, 3}
-
-
 @pytest.mark.slow
 def test_pipeline_kill_and_resume(spark, tmp_path):
     """Full run commits both stages; a re-run computes nothing; a partial
@@ -158,6 +149,32 @@ def test_pipeline_kill_and_resume(spark, tmp_path):
     a = mf.sort_values("image_id").reset_index(drop=True)
     b = mf2.sort_values("image_id").reset_index(drop=True)
     assert a[["image_id", "split", "is_keep"]].equals(b[["image_id", "split", "is_keep"]])
+
+
+@pytest.mark.slow
+def test_pipeline_assign_resumes_missing_prefixes(spark, tmp_path):
+    """Stage 1 assigns exactly the cell prefixes its lineage lacks: with
+    every other prefix of a fresh run's assign table committed, the re-run
+    assigns the rest (against the cover cut to them) and the table equals
+    the fresh run's."""
+    def assign_pdf(store):
+        pdf = store.read(spark, "assign").toPandas()
+        return pdf.sort_values("image_id").reset_index(drop=True)
+
+    full = TableStore(str(tmp_path / "full"))
+    pipeline.run_pipeline(spark, full.root, n_images=400, grid_g=2, prefix_res=10)
+    want = assign_pdf(full)
+    done = sorted(full.completed_partitions("assign"))[::2]
+    assert 0 < len(done) < len(full.completed_partitions("assign"))
+    part = TableStore(str(tmp_path / "part"))
+    sid = part.commit(
+        full.read(spark, "assign").filter(F.col("cell_prefix").cast("string").isin(done)),
+        "assign", "cell_prefix", stage="assign",
+    )
+    out = pipeline.run_pipeline(spark, part.root, n_images=400, grid_g=2, prefix_res=10)
+    assert out["assign"] == 400 - part.committed_rows("assign", sid)
+    pd.testing.assert_frame_equal(assign_pdf(part), want)
+    assert part.completed_partitions("assign") == full.completed_partitions("assign")
 
 
 def test_tablestore_metrics_df(spark, tmp_path):
@@ -407,8 +424,9 @@ def test_pipeline_killed_commit_resumes_identical(
 def test_pipeline_fresh_run_jobs_flat_in_blocks(spark, tmp_path):
     """A fresh run costs the same Spark jobs on 9 blocks as on 16: stages
     2-4 are one per-block commit plus one split write of its five filter
-    sinks, none of them per block."""
-    jobs = {}
+    sinks, none of them per block. A re-run on the complete store picks
+    every stage's todo on the driver, so it runs no Spark job."""
+    jobs, rerun = {}, {}
     for g in (3, 4):
         _, jobs[g] = jobs_in_group(
             spark, f"fresh-{g}-{tmp_path.name}",
@@ -416,4 +434,15 @@ def test_pipeline_fresh_run_jobs_flat_in_blocks(spark, tmp_path):
                 spark, str(tmp_path / f"wh{g}"), n_images=400 * g, grid_g=g
             ),
         )
-    assert jobs == {3: 22, 4: 22}, jobs
+        rerun[g] = jobs_in_group(
+            spark, f"rerun-{g}-{tmp_path.name}",
+            lambda: pipeline.run_pipeline(
+                spark, str(tmp_path / f"wh{g}"), n_images=400 * g, grid_g=g
+            ),
+        )
+    assert jobs == {3: 20, 4: 20}, jobs
+    zero = dict.fromkeys(pipeline.STAGE_TABLES, 0)
+    assert rerun == {3: (zero, 0), 4: (zero, 0)}, rerun
+    # no images: no stage has input, and every stage still reports a count
+    empty = pipeline.run_pipeline(spark, str(tmp_path / "wh0"), n_images=0, grid_g=2)
+    assert empty == zero, empty

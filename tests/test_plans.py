@@ -289,11 +289,11 @@ def test_tiles_rect_plan_jvm_only(spark):
 def test_k_complexity_explicit_partitions(spark, cover):
     assigned = assign.assign_points_to_blocks(_points(spark), cover, 15)
     blocks_sdf = spark.createDataFrame(synth.grid_blocks(4))
-    out = complexity.k_complexity(assigned, blocks_sdf, num_partitions=24)
-    p = _plan(out)
-    # both cogroup sides carry the explicit 24-way hash partitioning
-    assert p.count("hashpartitioning(block_id") >= 2
-    assert "24)" in p.split("FlatMapCoGroupsInPandas")[1][:2000] or "24)" in p
+    p = _plan(complexity.k_complexity(assigned, blocks_sdf))
+    # both cogroup sides carry the explicit 2x-default-parallelism hash
+    # partitioning, which AQE does not coalesce
+    n = spark.sparkContext.defaultParallelism * 2
+    assert len(re.findall(rf"hashpartitioning\(block_id#\d+, {n}\)", p)) == 2, p
 
 
 def test_assign_salted_equivalence(spark):

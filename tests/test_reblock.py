@@ -175,7 +175,7 @@ def test_parcelize_and_reblock_distributed(spark):
     assert (np.abs(pstats.total_area - step * step) < 1e-9).all()
 
     summary = reblock.reblock(parcels, assigned, blocks_sdf, emit="summary").toPandas()
-    assert set(summary.status) <= {0, 2, 3}  # 3 = max_nodes budget skip
+    assert set(summary.status) <= {0, 2, 3}  # 3 = MAX_NODES budget skip
     ok = summary[summary.status == 0]
     assert len(ok) > 0
     assert (ok.n_new_edges > 0).all()
