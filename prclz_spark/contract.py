@@ -2534,33 +2534,24 @@ def _sql_txt_pack_shards(sf_dir):
 
 
 def _q_img_training_manifest(spark, sf_dir):
-    """Capstone composition — one manifest row per image: broadcast PIP
-    block assign + caption quality/lang/BPE features inlined into a
+    """Capstone composition — one manifest row per image: the committed
+    PIP block assign + caption quality/lang/BPE features inlined into a
     single wide codegen projection + phash-cluster keep-list + split;
     `selected` is the trainer-facing curation bit."""
     img = _images(spark, sf_dir)
-    idnum = synth.image_id_num(F.col("image_id"))
-    lon, lat = synth.lonlat_cols(idnum)
-    pts = (
-        img.select("image_id", "caption", "phash")
-        .withColumn("lon", lon)
-        .withColumn("lat", lat)
-    )
     # fixture captions all score quality_r6 = 0.2188 (formulaic shape), so
     # the gate sits below that — selected then varies with the keep-list
     return curation.training_manifest(
-        pts,
-        _grid_cover(spark),
-        PIP_RES,
-        idnum=synth.image_id_num(F.col("image_id")),
-        min_quality=0.2,
+        img,
         # both expensive stages read committed tables (stage-5 pattern):
         # the PIP assign and the CC keep-list each materialize once per
         # corpus snapshot and are shared across the registry
-        assigned=pts.join(
+        img.select("image_id", "caption").join(
             _assigned_img_cached(spark, sf_dir).select("image_id", "block_id"),
             "image_id",
         ),
+        idnum=synth.image_id_num(F.col("image_id")),
+        min_quality=0.2,
         clusters=_phash_clusters_cached(spark, sf_dir),
     )
 

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _open_ring(g: Column) -> Column:
+def open_ring(g: Column) -> Column:
     """Drop the closing vertex when the ring repeats it. try_element_at:
     codegen may hoist the ends out of the size guard, and element_at raises
     on an empty ring under ANSI."""
@@ -39,7 +39,7 @@ def with_ring_centroid(
     """Append shoelace-centroid ``lon_col``/``lat_col`` for an
     array<array<double>> ring column — pure Column arithmetic."""
     g0 = F.col(geometry_col)
-    df = df.withColumn("__ring", _open_ring(g0))
+    df = df.withColumn("__ring", open_ring(g0))
     ring = F.col("__ring")
     # materialize the successor array so zip_with reads real columns
     df = df.withColumn(
@@ -100,7 +100,7 @@ def with_ring_bounds_rect(
     ``geom.is_axis_rect``). Lets rect×rect overlap resolve as a clamped
     product in whole-stage codegen, with no nested array ever crossing
     Arrow."""
-    df = df.withColumn("__ring", _open_ring(F.col(geometry_col)))
+    df = df.withColumn("__ring", open_ring(F.col(geometry_col)))
     ring = F.col("__ring")
     df = df.withColumn(
         "__nxt",
@@ -134,7 +134,7 @@ def with_ring_edges(
     """Append ``out_col``: the ring's ``[x0, y0, x1, y1]`` edges as an
     array<array<double>> — the JVM twin of ``geom.ring_edges`` (same walk,
     horizontal and NaN edges dropped, empty for rings under 3 vertices)."""
-    df = df.withColumn("__ring", _open_ring(F.col(geometry_col)))
+    df = df.withColumn("__ring", open_ring(F.col(geometry_col)))
     ring = F.col("__ring")
     ok = F.size(ring) >= 3
     # guarded: slice raises on an empty ring under ANSI

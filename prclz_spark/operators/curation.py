@@ -4,10 +4,10 @@ training set a 10^12-image pipeline feeds to a trainer.
 
 This is the capstone of the graft's training-data extensions (SURVEY.md
 §8 "Training-data extensions"): one call composes the spatial surface
-(J1 broadcast PIP assign), the text surface (quality / lang-ID / BPE
-piece counts), the dedup surface (F29 phash → banded Hamming pairs →
-connected components keep-list) and a deterministic train/val/test
-split into a single manifest row per image.
+(the committed J1 PIP assign table), the text surface (quality /
+lang-ID / BPE piece counts), the dedup surface (F29 phash → banded
+Hamming pairs → connected components keep-list) and a deterministic
+train/val/test split into a single manifest row per image.
 
 Scale design:
 - Every per-row feature (quality, lang, token counts, split) is inlined
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import assign, dedup, text
+from . import dedup, text
 
 SPLIT_P = 1_000_000_007      # prime modulus
 SPLIT_MULT = 2_654_435_761   # Knuth multiplicative constant (2^32 * phi)
@@ -108,19 +108,15 @@ def split_assign(df: DataFrame, idnum: Column | None = None,
 
 def training_manifest(
     img: DataFrame,
-    cover,
-    res: int,
+    assigned: DataFrame,
     *,
     id_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str = "phash",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     idnum: Column | None = None,
     min_quality: float = 0.5,
     weights: tuple[float, float, float] = (0.9, 0.05, 0.05),
     n_buckets: int = 10_000,
-    assigned: DataFrame | None = None,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """One manifest row per image: containing block, dedup cluster root +
@@ -128,20 +124,15 @@ def training_manifest(
     the final ``selected`` bit (keeper AND quality >= min_quality) — the
     row set a trainer's datamodule filters on.
 
-    ``img`` needs (id, caption, phash, lon, lat); ``cover``/``res`` as in
-    assign.assign_points_to_blocks (pandas cover → broadcast fast path).
-    Pass ``assigned`` (same row shape plus block_id) to reuse an already-
-    committed assign table instead of re-running the PIP join — the
-    pipeline's stage 5 does, so the most expensive stage never runs
-    twice; ``cover``/``res`` are ignored then. Pass ``clusters`` (the
-    (id, cluster_root, is_keep) frame from dedup.phash_clusters) to
-    reuse an already-computed keep-list — the iterative CC loop is the
-    other stage worth computing exactly once per corpus snapshot.
+    ``assigned`` is the committed assign table's rows (id, caption,
+    block_id — assign.assign_points_to_blocks output plus the caption),
+    so the PIP join, the pipeline's most expensive stage, never runs
+    twice. ``img`` (id, phash) is the corpus the keep-list clusters:
+    pass ``clusters`` (the (id, cluster_root, is_keep) frame from
+    dedup.phash_clusters) to reuse an already-computed keep-list
+    instead — the iterative CC loop is the other stage worth computing
+    exactly once per corpus snapshot.
     """
-    if assigned is None:
-        assigned = assign.assign_points_to_blocks(
-            img, cover, res, lon_col, lat_col
-        )
     q = text.quality_cols(caption_col)
     lg = text.lang_cols(caption_col)
     bp = text.bpe_cols(caption_col)

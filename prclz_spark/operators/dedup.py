@@ -5,15 +5,29 @@ The reference dedups only by exact id (skip-if-done sets,
 /root/reference/reblock/i_reblock.py:103-165); a training-data pipeline
 needs the full chain: candidate pairs (MinHash/Jaccard/phash), a
 component grouping over the pair graph, and a canonical keeper per
-component. The pieces here:
+component.
 
-- ``phash_near_dup``: image near-duplicates by perceptual-hash Hamming
-  distance, banded-LSH style — but with a provable twist: splitting the
-  64-bit phash into ``bands`` equal bands finds EVERY pair within
-  Hamming distance ``bands - 1`` (pigeonhole: k differing bits touch at
-  most k bands, so at least one band matches exactly). With the default
-  ``max_hamming=2 < bands=4`` the candidate join is exact, not
+Every phash path is one chain of private steps: ``_groups`` collapses
+identical hashes to (ph, rep = min id, n), ``_banded`` splits each hash
+into 16-bit bands with one ``stack``, ``_self_pairs`` runs the guarded
+banded self-join and ``_verified`` checks its candidates by
+``bit_count``, and ``_roots`` maps each item through the pair graph's
+``connected_components`` to its component root. The public functions
+compose them:
+
+- ``phash_near_dup``: the verified pairs between exact-duplicate groups.
+  Banding is provably exact here: splitting the 64-bit phash into
+  ``PHASH_BANDS`` equal bands finds EVERY pair within Hamming distance
+  ``PHASH_BANDS - 1`` (pigeonhole: k differing bits touch at most k
+  bands, so at least one band matches exactly). With
+  ``PHASH_MAX_HAMMING = 2 < 4`` the candidate join is exact, not
   approximate, so the DuckDB oracle mirrors full semantics.
+- ``phash_clusters``: every image mapped to its cluster root, one
+  ``_groups`` feeding both the pairs and the expansion.
+- ``incremental_phash_dedup``: a batch mapped against a keeper corpus;
+  corpus × batch pairs come from a broadcast join (the corpus never
+  self-joins nor shuffles), batch × batch pairs from the same guarded
+  ``_self_pairs``.
 - ``connected_components``: the alternating large-star / small-star
   algorithm (Kiveris et al., "Connected Components in MapReduce and
   Beyond", SoCC 2014) in pure DataFrame ops — O(log n) rounds even on
@@ -27,14 +41,15 @@ component. The pieces here:
   exactly one keeper (the component-minimum id) per cluster.
 
 100-TB design notes: exact-duplicate payloads are the dominant skew at
-web scale (a boilerplate page can repeat 10^8 times); ``phash_near_dup``
+web scale (a boilerplate page can repeat 10^8 times); ``_groups``
 collapses identical hashes to one representative FIRST (a single hash
 aggregation), so band buckets hold distinct hashes only and the
 self-join fan-out is bounded by distinct-hash collisions, not corpus
 multiplicity. Group sizes ride along as ``n_a``/``n_b`` so multiplicity
 is never lost. Band buckets holding a single representative are dropped
 before the self-join (they cannot pair), so a corpus with no near-dup
-candidates plans no join work at all.
+candidates plans no join work at all, and buckets above
+``PHASH_BUCKET_CAP`` reps are chunked (``_self_pairs``).
 """
 
 from __future__ import annotations
@@ -45,129 +60,36 @@ from pyspark.sql import functions as F
 PHASH_BANDS = 4
 PHASH_MAX_HAMMING = 2  # < PHASH_BANDS ⇒ banding is exact (pigeonhole)
 PHASH_BUCKET_CAP = 4096  # chunk hot band-buckets above this many reps
+_WIDTH = 64 // PHASH_BANDS  # 16-bit band values
+_MAX_ROUNDS = 25  # star rounds; O(log n) suffice
 
 
-def phash_near_dup(
-    img: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    bands: int = PHASH_BANDS,
-    phash_col: str = "phash",
-    id_col: str = "image_id",
-    max_bucket_reps: int | None = PHASH_BUCKET_CAP,
-) -> DataFrame:
-    """(id_a, id_b, hamming, n_a, n_b): near-duplicate image pairs by
-    phash Hamming distance, between exact-duplicate GROUPS (id_a/id_b are
-    each group's min image_id, n_a/n_b the group sizes; id_a < id_b).
-
-    Plan: one hash aggregation collapses identical phashes; each distinct
-    hash emits ``bands`` (band, 16-bit value) rows via ``stack`` (one
-    Generate, no array explode); an equi-join on (band, value) yields
-    candidates; ``bit_count(xor)`` verifies — all JVM-side codegen.
-
-    Hot-bucket guard (``max_bucket_reps``): with 4 bands there are only
-    65,536 distinct 16-bit band values, so at 10⁹+ distinct phashes an
-    average bucket holds ~15k reps and a bare self-join materializes
-    ~10⁸ candidate rows in ONE shuffle key per hot bucket. The guard is
-    EXACT, never approximate — it changes only the plan shape: every
-    bucket is split into ``B = ceil(bucket_n / max_bucket_reps)`` hash
-    chunks and each rep is replicated to its B unordered chunk-pair keys
-    (the same cogroup decomposition as similarity.near_dup_pairs), so a
-    pair (a, b) meets under exactly one (band, bv, ci, cj) key and every
-    within-bucket pair is still examined. Per-key rows are ≤
-    2·max_bucket_reps and per-key join output ≤ max_bucket_reps² — hub
-    buckets cost fan-out spread over B(B+1)/2 keys, never a straggler
-    task. Cold buckets get B = 1 and degenerate to the plain equi-join.
-    The bucket-count side table is ≤ bands·2^(64/bands) rows by
-    construction, so it is force-broadcast whenever band values fit 16
-    bits (bands ≥ 4 — no extra Exchange of the banded frame); with wider
-    bands the bound degenerates to distinct-phash cardinality and the
-    broadcast decision is left to AQE. Singleton buckets (``bn = 1``) are
-    filtered out of the count table before the join — exact, since a
-    pair needs two reps in one bucket — so when no bucket holds two reps
-    the count table is empty and AQE propagates the empty relation
-    through the join and distinct. ``max_bucket_reps=None`` restores the
-    unguarded join."""
-    width = 64 // bands
-    mask = (1 << width) - 1
-    g = img.groupBy(phash_col).agg(
+def _groups(df: DataFrame, id_col: str, phash_col: str) -> DataFrame:
+    """(ph, rep, n): one row per distinct phash, ``rep`` its min id and
+    ``n`` the exact-duplicate group's size (one hash aggregation)."""
+    return df.groupBy(F.col(phash_col).alias("ph")).agg(
         F.min(id_col).alias("rep"), F.count("*").alias("n")
     )
-    stack_args = ", ".join(
-        f"{b}, shiftright({phash_col}, {b * width}) & {mask}" for b in range(bands)
+
+
+def _banded(g: DataFrame) -> DataFrame:
+    """``_groups`` rows, each emitted ``PHASH_BANDS`` times as (band, bv =
+    the band's 16-bit value) via one ``stack`` Generate (no array
+    explode)."""
+    mask = (1 << _WIDTH) - 1
+    args = ", ".join(
+        f"{b}, shiftright(ph, {b * _WIDTH}) & {mask}" for b in range(PHASH_BANDS)
     )
-    banded = g.select(
-        "rep",
-        "n",
-        F.col(phash_col).alias("ph"),
-        F.expr(f"stack({bands}, {stack_args}) as (band, bv)"),
+    return g.select(
+        "rep", "n", "ph", F.expr(f"stack({PHASH_BANDS}, {args}) as (band, bv)")
     )
-    if max_bucket_reps is None:
-        cand = (
-            banded.alias("a")
-            .join(banded.alias("b"), ["band", "bv"])
-            .where(F.col("a.rep") < F.col("b.rep"))
-        )
-    else:
-        # three consumers (cnt + both self-join sides) would each re-run
-        # the distinct-phash aggregation and the corpus scan beneath it —
-        # truncate once (the CLAUDE.md multi-consumer rule)
-        banded = banded.localCheckpoint(eager=False)
-        # a bucket holding one rep cannot yield a pair: dropping it before
-        # the join is exact, and with no multi-rep bucket the count table
-        # is empty and AQE plans no join or distinct work at all
-        cnt = (
-            banded.groupBy("band", "bv")
-            .agg(F.count("*").alias("bn"))
-            .where(F.col("bn") > 1)
-        )
-        # the "≤ bands·2^width rows by construction" broadcast bound only
-        # holds while band values are ≤16 bits (bands ≥ 4 on a 64-bit
-        # hash); with wider bands the count table is bounded only by
-        # distinct phashes — let AQE decide instead of forcing a
-        # driver-sized broadcast at the 10⁹-hash scale the guard targets
-        if 64 // bands <= 16:
-            cnt = F.broadcast(cnt)
-        keyed = (
-            banded.join(cnt, ["band", "bv"])
-            .withColumn(
-                "nb",
-                F.ceil(F.col("bn") / F.lit(max_bucket_reps)).cast("int"),
-            )
-            .withColumn("c", F.pmod(F.xxhash64("rep"), F.col("nb")).cast("int"))
-            .select(
-                "band",
-                "bv",
-                "rep",
-                "n",
-                "ph",
-                "c",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(0, nb - 1), k ->"
-                        " named_struct('ci', least(c, cast(k as int)),"
-                        " 'cj', greatest(c, cast(k as int))))"
-                    )
-                ).alias("ck"),
-            )
-            .select(
-                "band", "bv", "rep", "n", "ph", "c",
-                F.col("ck.ci").alias("ci"), F.col("ck.cj").alias("cj"),
-            )
-        )
-        # a pair with chunks (ca, cb) meets under exactly the key
-        # (min(ca,cb), max(ca,cb)); the chunk-role filter drops the
-        # replicated co-occurrences under every other shared key
-        cand = (
-            keyed.alias("a")
-            .join(keyed.alias("b"), ["band", "bv", "ci", "cj"])
-            .where(
-                (F.col("a.rep") < F.col("b.rep"))
-                & (
-                    ((F.col("a.c") == F.col("ci")) & (F.col("b.c") == F.col("cj")))
-                    | ((F.col("a.c") == F.col("cj")) & (F.col("b.c") == F.col("ci")))
-                )
-            )
-        )
+
+
+def _verified(cand: DataFrame, max_hamming: int) -> DataFrame:
+    """(id_a, id_b, hamming, n_a, n_b) from a band join of two
+    ``_banded`` frames aliased ``a`` and ``b``: one row per pair however
+    many bands it collides in, kept when ``bit_count(xor)`` is within
+    ``max_hamming``."""
     return (
         cand.select(
             F.col("a.rep").alias("id_a"),
@@ -187,22 +109,127 @@ def phash_near_dup(
     )
 
 
-def phash_near_dup_sql(
-    parquet_path: str,
+def _self_pairs(g: DataFrame, max_hamming: int, max_bucket_reps: int) -> DataFrame:
+    """Verified pairs (id_a < id_b) among the ``_groups`` rows ``g``: the
+    banded self-join behind the hot-bucket guard.
+
+    With 4 bands there are only 65,536 distinct 16-bit band values, so
+    at 10⁹+ distinct phashes an average bucket holds ~15k reps and a
+    bare self-join materializes ~10⁸ candidate rows in ONE shuffle key
+    per hot bucket. The guard is EXACT, never approximate — it changes
+    only the plan shape: every bucket is split into ``B = ceil(bucket_n
+    / max_bucket_reps)`` hash chunks and each rep is replicated to its B
+    unordered chunk-pair keys (the same cogroup decomposition as
+    similarity.near_dup_pairs), so a pair (a, b) meets under exactly one
+    (band, bv, ci, cj) key and every within-bucket pair is still
+    examined. Per-key rows are ≤ 2·max_bucket_reps and per-key join
+    output ≤ max_bucket_reps² — hub buckets cost fan-out spread over
+    B(B+1)/2 keys, never a straggler task. Cold buckets get B = 1 and
+    degenerate to the plain equi-join. The bucket-count side table is ≤
+    PHASH_BANDS·2^16 rows by construction, so it is broadcast (no extra
+    Exchange of the banded frame). Singleton buckets (``bn = 1``) are
+    filtered out of the count table before the join — exact, since a
+    pair needs two reps in one bucket — so when no bucket holds two reps
+    the count table is empty and AQE propagates the empty relation
+    through the join and distinct."""
+    # three consumers (cnt + both self-join sides) would each re-run the
+    # distinct-phash aggregation and the scan beneath it — truncate once
+    # (the multi-consumer checkpoint rule)
+    banded = _banded(g).localCheckpoint(eager=False)
+    cnt = F.broadcast(
+        banded.groupBy("band", "bv")
+        .agg(F.count("*").alias("bn"))
+        .where(F.col("bn") > 1)
+    )
+    keyed = (
+        banded.join(cnt, ["band", "bv"])
+        .withColumn(
+            "nb", F.ceil(F.col("bn") / F.lit(max_bucket_reps)).cast("int")
+        )
+        .withColumn("c", F.pmod(F.xxhash64("rep"), F.col("nb")).cast("int"))
+        .select(
+            "band",
+            "bv",
+            "rep",
+            "n",
+            "ph",
+            "c",
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, nb - 1), k ->"
+                    " named_struct('ci', least(c, cast(k as int)),"
+                    " 'cj', greatest(c, cast(k as int))))"
+                )
+            ).alias("ck"),
+        )
+        .select(
+            "band", "bv", "rep", "n", "ph", "c",
+            F.col("ck.ci").alias("ci"), F.col("ck.cj").alias("cj"),
+        )
+    )
+    # a pair with chunks (ca, cb) meets under exactly the key
+    # (min(ca,cb), max(ca,cb)); the chunk-role filter drops the
+    # replicated co-occurrences under every other shared key
+    cand = (
+        keyed.alias("a")
+        .join(keyed.alias("b"), ["band", "bv", "ci", "cj"])
+        .where(
+            (F.col("a.rep") < F.col("b.rep"))
+            & (
+                ((F.col("a.c") == F.col("ci")) & (F.col("b.c") == F.col("cj")))
+                | ((F.col("a.c") == F.col("cj")) & (F.col("b.c") == F.col("ci")))
+            )
+        )
+    )
+    return _verified(cand, max_hamming)
+
+
+def _roots(
+    items: DataFrame, pairs: DataFrame, id_col: str,
+    src: str = "id_a", dst: str = "id_b",
+) -> DataFrame:
+    """(id_col, cluster_root, is_keep) for ``items`` (id_col, rep): the
+    root of ``rep``'s component in the ``pairs`` graph, ``rep`` itself
+    when unpaired; is_keep marks the item whose id is its root."""
+    cc = connected_components(pairs, src, dst).withColumnRenamed("node", "rep")
+    return (
+        items.join(cc, "rep", "left")
+        .select(id_col, F.coalesce("root", F.col("rep")).alias("cluster_root"))
+        .withColumn(
+            "is_keep", (F.col(id_col) == F.col("cluster_root")).cast("int")
+        )
+    )
+
+
+def phash_near_dup(
+    img: DataFrame,
     max_hamming: int = PHASH_MAX_HAMMING,
-    bands: int = PHASH_BANDS,
-) -> str:
+    phash_col: str = "phash",
+    id_col: str = "image_id",
+    max_bucket_reps: int = PHASH_BUCKET_CAP,
+) -> DataFrame:
+    """(id_a, id_b, hamming, n_a, n_b): near-duplicate image pairs by
+    phash Hamming distance, between exact-duplicate GROUPS (id_a/id_b are
+    each group's min image_id, n_a/n_b the group sizes; id_a < id_b).
+
+    Plan: one hash aggregation collapses identical phashes (``_groups``),
+    and ``_self_pairs`` bands them, self-joins on (band, value) behind
+    the hot-bucket guard (``max_bucket_reps``) and verifies by
+    ``bit_count(xor)`` — all JVM-side codegen."""
+    return _self_pairs(_groups(img, id_col, phash_col), max_hamming, max_bucket_reps)
+
+
+def phash_near_dup_sql(parquet_path: str) -> str:
     """DuckDB mirror of phash_near_dup (same banding, same verify)."""
-    width = 64 // bands
-    mask = (1 << width) - 1
+    mask = (1 << _WIDTH) - 1
     return f"""
         with g as (
           select phash, min(image_id) as rep, count(*) as n
           from read_parquet('{parquet_path}') group by 1
         ),
         bands as (
-          select rep, n, phash, b, (phash >> (b * {width})) & {mask} as bv
-          from g, (select unnest(range(0, {bands})) as b)
+          select rep, n, phash, b, (phash >> (b * {_WIDTH})) & {mask} as bv
+          from g, (select unnest(range(0, {PHASH_BANDS})) as b)
         ),
         cand as (
           select distinct a.rep as id_a, b.rep as id_b,
@@ -213,7 +240,7 @@ def phash_near_dup_sql(
         select id_a, id_b, cast(bit_count(xor(pa, pb)) as int) as hamming,
                n_a, n_b
         from cand
-        where bit_count(xor(pa, pb)) <= {max_hamming}
+        where bit_count(xor(pa, pb)) <= {PHASH_MAX_HAMMING}
     """
 
 
@@ -238,38 +265,14 @@ def phash_clusters_sql(parquet_path: str) -> str:
     """
 
 
-def _banded_groups(
-    df: DataFrame, phash_col: str, id_col: str, bands: int
-) -> DataFrame:
-    """Distinct-hash groups (rep = min id per identical phash) exploded to
-    ``bands`` (band, value) rows via one ``stack`` Generate."""
-    width = 64 // bands
-    mask = (1 << width) - 1
-    g = df.groupBy(phash_col).agg(F.min(id_col).alias("rep"))
-    stack_args = ", ".join(
-        f"{b}, shiftright({phash_col}, {b * width}) & {mask}" for b in range(bands)
-    )
-    return g.select(
-        "rep",
-        F.col(phash_col).alias("ph"),
-        F.expr(f"stack({bands}, {stack_args}) as (band, bv)"),
-    )
-
-
-def incremental_phash_dedup(
-    batch: DataFrame,
-    corpus: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    bands: int = PHASH_BANDS,
-    phash_col: str = "phash",
-    id_col: str = "image_id",
-) -> DataFrame:
+def incremental_phash_dedup(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """Daily-ingest dedup: map each BATCH item against an already-deduped
-    keeper ``corpus`` without ever re-clustering the corpus. Returns
-    (id, cluster_root, is_keep) for batch items only: cluster_root is a
-    corpus id when the item's near-dup component touches the corpus
-    (the item is a duplicate of existing data → is_keep 0), else the
-    component-minimum batch id (kept once per new component).
+    keeper ``corpus`` without ever re-clustering the corpus. Both frames
+    carry (image_id, phash). Returns (image_id, cluster_root, is_keep)
+    for batch items only: cluster_root is a corpus id when the item's
+    near-dup component touches the corpus (the item is a duplicate of
+    existing data → is_keep 0), else the component-minimum batch id
+    (kept once per new component).
 
     The incremental cost property, which is the whole point at 10^12
     corpus rows: the corpus NEVER self-joins and NEVER shuffles — its
@@ -278,58 +281,36 @@ def incremental_phash_dedup(
     O(|corpus| scan + |batch|-bounded join), not O(|corpus|^2).
     Corpus-corpus candidate pairs are excluded by construction (the
     corpus is assumed already deduped at this threshold); a batch item
-    bridging two corpus keepers maps to the smaller corpus id.
+    bridging two corpus keepers maps to the smaller corpus id. Batch-
+    batch pairs run through the guarded ``_self_pairs``, so a hot band
+    bucket inside one batch is chunked like any other.
 
     Priority encoding: ids ride as '0|id' (corpus) / '1|id' (batch), so
     every min/root computation in the star algorithm prefers corpus
     nodes lexicographically — no special-casing inside the CC kernel."""
     b = batch.select(
-        F.concat(F.lit("1|"), F.col(id_col)).alias("pid"), F.col(phash_col)
+        F.concat(F.lit("1|"), F.col("image_id")).alias("pid"),
+        F.col("phash").alias("ph"),
     )
     c = corpus.select(
-        F.concat(F.lit("0|"), F.col(id_col)).alias("pid"), F.col(phash_col)
+        F.concat(F.lit("0|"), F.col("image_id")).alias("pid"),
+        F.col("phash").alias("ph"),
     )
-    bb = _banded_groups(b, phash_col, "pid", bands)
-    cb = _banded_groups(c, phash_col, "pid", bands)
-
-    def _verify(cand):
-        return (
-            cand.select(
-                F.col("a.rep").alias("id_a"),
-                F.col("b.rep").alias("id_b"),
-                F.col("a.ph").alias("pa"),
-                F.col("b.ph").alias("pb"),
-            )
-            .distinct()  # a pair can collide in several bands
-            .where(
-                F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
-                <= F.lit(max_hamming)
-            )
-            .select("id_a", "id_b")
-        )
-
-    cand_bc = cb.alias("a").join(F.broadcast(bb).alias("b"), ["band", "bv"])
-    cand_bb = (
-        bb.alias("a")
-        .join(bb.alias("b"), ["band", "bv"])
-        .where(F.col("a.rep") < F.col("b.rep"))
+    gb = _groups(b, "pid", "ph")
+    cross = _banded(_groups(c, "pid", "ph")).alias("a").join(
+        F.broadcast(_banded(gb)).alias("b"), ["band", "bv"]
     )
-    pairs = _verify(cand_bc).unionByName(_verify(cand_bb))
-    cc = connected_components(pairs, "id_a", "id_b").withColumnRenamed(
-        "node", "rep"
+    pairs = _verified(cross, PHASH_MAX_HAMMING).unionByName(
+        _self_pairs(gb, PHASH_MAX_HAMMING, PHASH_BUCKET_CAP)
     )
-    breps = b.groupBy(phash_col).agg(F.min("pid").alias("rep"))
-    root = F.coalesce("root", F.col("rep"))
-    return (
-        b.join(breps, phash_col)
-        .join(cc, "rep", "left")
-        .select(
-            F.expr("substring(pid, 3)").alias(id_col),
-            # unbounded strip of the 2-char priority prefix — a fixed
-            # length cap would truncate (and could collide) long ids
-            root.substr(F.lit(3), F.length(root)).alias("cluster_root"),
-            (root == F.col("pid")).cast("int").alias("is_keep"),
-        )
+    out = _roots(b.join(gb.select("ph", "rep"), "ph"), pairs, "pid")
+    root = F.col("cluster_root")
+    return out.select(
+        F.expr("substring(pid, 3)").alias("image_id"),
+        # unbounded strip of the 2-char priority prefix — a fixed
+        # length cap would truncate (and could collide) long ids
+        root.substr(F.lit(3), F.length(root)).alias("cluster_root"),
+        "is_keep",
     )
 
 
@@ -356,7 +337,7 @@ def cc_closure_sql(pairs_sql: str, a: str = "id_a", b: str = "id_b") -> str:
 
 
 def connected_components(
-    edges: DataFrame, src: str = "u", dst: str = "v", max_iter: int = 25
+    edges: DataFrame, src: str = "u", dst: str = "v"
 ) -> DataFrame:
     """(node, root) for every non-root node of the pair graph; roots are
     each component's minimum node id (total order = the column's own
@@ -385,7 +366,7 @@ def connected_components(
         # against the result folds away at plan time instead of
         # broadcasting an empty checkpoint (one job per consumer)
         return e.limit(0).select(F.col("u").alias("node"), F.col("v").alias("root"))
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         # large-star: every neighbor v > u links to min(N(u) ∪ {u})
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
@@ -441,20 +422,12 @@ def phash_clusters(
     never a pair explosion), banded-Hamming near-dup pairs connect the
     representatives, and the component root expands back through the
     exact-dup groups. is_keep marks the one canonical copy per cluster."""
-    pairs = phash_near_dup(img, phash_col=phash_col, id_col=id_col)
-    reps = img.groupBy(phash_col).agg(F.min(id_col).alias("rep"))
-    cc = connected_components(pairs, "id_a", "id_b").withColumnRenamed(
-        "node", "rep"
+    g = _groups(img, id_col, phash_col)
+    pairs = _self_pairs(g, PHASH_MAX_HAMMING, PHASH_BUCKET_CAP)
+    items = img.select(id_col, F.col(phash_col).alias("ph")).join(
+        g.select("ph", "rep"), "ph"
     )
-    return (
-        img.select(id_col, phash_col)
-        .join(reps, phash_col)
-        .join(cc, "rep", "left")
-        .select(id_col, F.coalesce("root", F.col("rep")).alias("cluster_root"))
-        .withColumn(
-            "is_keep", (F.col(id_col) == F.col("cluster_root")).cast("int")
-        )
-    )
+    return _roots(items, pairs, id_col)
 
 
 def cluster_assign(
@@ -467,15 +440,6 @@ def cluster_assign(
     """(id, cluster_root, is_keep): every item mapped to its near-dup
     component root (itself if unpaired); is_keep = 1 for exactly the
     component-minimum item — the dedup 'keep one canonical copy' step."""
-    cc = connected_components(pairs, src, dst).withColumnRenamed("node", id_col)
-    return (
-        items.select(id_col)
-        .join(cc, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("root", F.col(id_col)).alias("cluster_root"),
-        )
-        .withColumn(
-            "is_keep", (F.col(id_col) == F.col("cluster_root")).cast("int")
-        )
+    return _roots(
+        items.select(id_col, F.col(id_col).alias("rep")), pairs, id_col, src, dst
     )

@@ -199,6 +199,7 @@ FOOTPRINT_PARCELS_SCHEMA = T.StructType(
 FALLBACK_PARCEL_ID = "__block_boundary__"
 
 MAX_ANCHORS = 6_000  # per-block densification budget (parcelize_footprints)
+COARSE_FACTOR = 100.0  # ptdist multiplier of the retry ladder's coarse rung
 
 
 def block_parcels_footprint(
@@ -276,11 +277,10 @@ def parcelize_footprints(
     blocks: DataFrame,
     footprint_side: float,
     ptdist: float,
-    coarse_factor: float = 100.0,
 ) -> DataFrame:
     """Distributed footprint parcelization with the reference's retry
     ladder (midway_parcelization.R:126-135): per block, try the fine
-    ``ptdist``; on failure retry at ``ptdist * coarse_factor``; if both
+    ``ptdist``; on failure retry at ``ptdist * COARSE_FACTOR``; if both
     fail, inherit the block boundary as a single fallback parcel
     (parcel_id '__block_boundary__', ptdist_used -1).
 
@@ -306,7 +306,7 @@ def parcelize_footprints(
             )
             for x, y in xy
         ]
-        for d in (ptdist, ptdist * coarse_factor):
+        for d in (ptdist, ptdist * COARSE_FACTOR):
             try:
                 out = block_parcels_footprint(ring, ids, rings, d)
             except Exception:

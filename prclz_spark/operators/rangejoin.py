@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import cells
+from ..functions import cells, geomcols
 from . import knn
 
 __all__ = [
@@ -393,32 +393,21 @@ def boundary_types_for_blocks(
     ~1 ulp off the line and would otherwise lose a d=0 tie it
     geometrically owns."""
     spark = blocks.sparkSession
-    g0 = F.col(geometry_col)
+    ring = geomcols.open_ring(F.col(geometry_col))
     if len(lines_pdf) == 0:
         # no line features at all: every vertex distance exceeds the
         # threshold, so every boundary segment types as 'gadm_boundary'
         # (the reference's fallback) — one per open-ring segment.
-        first0, last0 = F.element_at(g0, 1), F.element_at(g0, -1)
-        closed0 = (
-            (F.size(g0) > 1)
-            & (first0[0] == last0[0])
-            & (first0[1] == last0[1])
-        )
-        n_seg = F.when(closed0, F.size(g0) - 1).otherwise(F.size(g0))
         return blocks.withColumn(
             "boundary_types",
             F.transform(
-                F.sequence(F.lit(1), n_seg), lambda _: F.lit("gadm_boundary")
+                F.sequence(F.lit(1), F.size(ring)), lambda _: F.lit("gadm_boundary")
             ),
         )
     segs = spark.createDataFrame(lines_pdf[["seg_id", "ax", "ay", "bx", "by"]])
     types = F.broadcast(
         spark.createDataFrame(lines_pdf[["seg_id", "feature_type"]])
     )
-    g = F.col(geometry_col)
-    first, last = F.element_at(g, 1), F.element_at(g, -1)
-    closed = (F.size(g) > 1) & (first[0] == last[0]) & (first[1] == last[1])
-    ring = F.when(closed, F.slice(g, 1, F.size(g) - 1)).otherwise(g)
     verts = (
         blocks.select("block_id", ring.alias("__ring"))
         .select(

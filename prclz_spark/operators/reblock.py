@@ -314,7 +314,6 @@ def reblock_kernel(
 def _reblock_block(
     block_id: str, block_ring: np.ndarray, parcels: dict[str, np.ndarray],
     points: dict[str, np.ndarray], boundary_types: list[str] | None,
-    drop_boundary_parcels: bool = True,
 ) -> dict[str, list[dict]]:
     """One block's reblock rows per sink kind from parcels and points keyed
     by point id, which pairs each terminal with its parcel; a kernel fault
@@ -329,7 +328,6 @@ def _reblock_block(
     try:
         edges, summary = reblock_kernel(
             block_ring, [parcels[p] for p in ring_ids], xy, terminal_cells=cells,
-            drop_boundary_parcels=drop_boundary_parcels,
             boundary_types=boundary_types,
         )
     except Exception:
@@ -355,7 +353,6 @@ def reblock(
     assigned_points: DataFrame,
     blocks: DataFrame,
     emit: str = "edges",
-    drop_boundary_parcels: bool = True,
 ) -> DataFrame:
     """Distributed reblocking. ``parcels``: operators.parcel.parcelize
     output; ``assigned_points``: (block_id, image_id, lon, lat);
@@ -404,9 +401,7 @@ def reblock(
                 pts[str(pid)] = arr[0]
             else:
                 prings[str(pid)] = arr
-        return _reblock_block(
-            bid, ring, prings, pts, btypes, drop_boundary_parcels=drop_boundary_parcels
-        )[kind]
+        return _reblock_block(bid, ring, prings, pts, btypes)[kind]
 
     # explicit hash partition count: the Steiner kernel is the most
     # CPU-expensive stage in the engine; never let byte-based AQE

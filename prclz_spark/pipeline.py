@@ -14,10 +14,10 @@ per-block pass committed as ``reblock_all``; their five tables are
 filter sinks of it, committed together from one write
 (``TableStore.commit_split``).
 
-Partitioning follows the north_rule: points carry a cell *prefix*
-(coarse cell id) and every stage table is partitioned by it, so a
-neighborhood's images, blocks and k-values co-locate and downstream
-stages join without a shuffle.
+Partitioning: the assign table is partitioned by the points' cell
+*prefix* (coarse cell id), the unit stage 1 resumes by; every later
+table (the per-block products and the manifest) is partitioned by
+``block_id``, the unit stages 2-4 resume by.
 
 Cluster deploy (north_rule 'ships as spark-submit --py-files modules'):
 
@@ -62,6 +62,7 @@ STAGE_TABLES = (
 EVENTS_FACT_TABLE = "events_fact"
 EVENTS_ASSIGN_TABLE = "events_assign"
 EVENTS_BUCKETS = 32
+COVER_RES = 17  # cell resolution of run_pipeline's block cover
 
 
 def image_points(spark: SparkSession, n: int) -> DataFrame:
@@ -103,7 +104,6 @@ def run_pipeline(
     store_root: str,
     n_images: int = 100_000,
     grid_g: int = 8,
-    res: int = 17,
     prefix_res: int = 6,
 ) -> dict:
     """The reference's full stage chain — assign → k-complexity →
@@ -123,7 +123,7 @@ def run_pipeline(
     reblock_all, complexity and parcels."""
     store = TableStore(store_root)
     blocks_pdf = synth.grid_blocks(grid_g)
-    cover = assign_op.block_cover_pdf(blocks_pdf, res)
+    cover = assign_op.block_cover_pdf(blocks_pdf, COVER_RES)
     computed = dict.fromkeys(STAGE_TABLES, 0)
 
     # -- stage 1: spatial assign, partitioned by cell prefix ---------------
@@ -136,11 +136,15 @@ def run_pipeline(
         pts = image_points(spark, n_images).withColumn(
             "cell_prefix",
             cells.cell_prefix(
-                cells.cell_id(F.col("lon"), F.col("lat"), res), res, prefix_res
+                cells.cell_id(F.col("lon"), F.col("lat"), COVER_RES),
+                COVER_RES,
+                prefix_res,
             ),
         )
         sid = store.commit(
-            assign_op.assign_points_to_blocks(pts, cover[np.isin(prefix, todo)], res),
+            assign_op.assign_points_to_blocks(
+                pts, cover[np.isin(prefix, todo)], COVER_RES
+            ),
             ASSIGN_TABLE, "cell_prefix", stage=ASSIGN_TABLE,
             extra={"cover_rows": len(cover)}, keys=todo,
         )
@@ -213,10 +217,8 @@ def run_pipeline(
         # global corpus property — same reason this stage is atomic).
         mf = curation_op.training_manifest(
             image_rows(spark, n_images),
-            cover,
-            res,
+            _caption_phash_cols(assigned),
             idnum=F.col("image_id"),
-            assigned=_caption_phash_cols(assigned),
         )
         # partition by block_id like every other stage: high-cardinality
         # parallel writes that co-locate with the spatial tables (a

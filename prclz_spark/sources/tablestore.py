@@ -34,8 +34,6 @@ is a minimal stand-in with the same semantics the pipeline needs:
 - one writer per table: each commit first removes what killed commits
   left behind (staging directories, unlisted data files, manifests past
   LATEST).
-
-If real Iceberg jars are available the layer swaps to ``writeTo``.
 """
 
 from __future__ import annotations

@@ -57,17 +57,19 @@ def test_boundary_types_closed_ring_alignment(spark):
 
 def test_boundary_types_feed_reblock(spark):
     """End-to-end stage-4 wiring: producer output on the blocks frame makes
-    the Steiner tree route around the derived waterway (top) boundary."""
-    from pyspark.sql import functions as F
-
+    the Steiner tree route around the derived waterway (top) boundary.
+    The points are a 4×4 grid, so the central 2×2 parcels do not touch
+    the block boundary and stay terminals after reblock drops the
+    boundary parcels' points."""
     from prclz_spark.operators import parcel, reblock
 
+    ticks = [0.125, 0.375, 0.625, 0.875]
     pts_pdf = pd.DataFrame(
         {
-            "block_id": ["b0"] * 4,
-            "image_id": ["t1", "t2", "t3", "t4"],
-            "lon": [0.2, 0.8, 0.3, 0.7],
-            "lat": [0.8, 0.8, 0.3, 0.3],
+            "block_id": ["b0"] * 16,
+            "image_id": [f"t{i:02d}" for i in range(16)],
+            "lon": [x for _ in ticks for x in ticks],
+            "lat": [y for y in ticks for _ in ticks],
         }
     )
     assigned = spark.createDataFrame(pts_pdf)
@@ -75,10 +77,7 @@ def test_boundary_types_feed_reblock(spark):
         _blocks(spark, [BLOCK]), LINES, res=8, threshold=0.1
     )
     parcels = parcel.parcelize(assigned, typed_blocks.select("block_id", "geometry"))
-    edges = reblock.reblock(
-        parcels, assigned, typed_blocks, emit="edges",
-        drop_boundary_parcels=False,
-    ).toPandas()
+    edges = reblock.reblock(parcels, assigned, typed_blocks, emit="edges").toPandas()
     assert len(edges) > 0
     existing = edges[edges.edge_type == "existing"]
     # waterway top edge (y=1) carries weight 1e5: never free/existing
@@ -89,10 +88,7 @@ def test_boundary_types_feed_reblock(spark):
     ctl_blocks = boundary_types_for_blocks(
         _blocks(spark, [BLOCK]), hw, res=8, threshold=0.1
     )
-    ctl = reblock.reblock(
-        parcels, assigned, ctl_blocks, emit="edges",
-        drop_boundary_parcels=False,
-    ).toPandas()
+    ctl = reblock.reblock(parcels, assigned, ctl_blocks, emit="edges").toPandas()
     ctl_exist = ctl[ctl.edge_type == "existing"]
     assert len(ctl_exist) > 0
 

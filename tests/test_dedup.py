@@ -126,6 +126,30 @@ def test_cc_empty_graph_returns_after_one_checkpoint(spark, monkeypatch):
     _check_cc(spark, [], None, frame=a.join(b, "k").select("u", "v"), run=run)
 
 
+def _hamming(x, y):
+    return bin((x ^ y) & ((1 << 64) - 1)).count("1")
+
+
+def _brute_pairs(rows, max_hamming):
+    """All (id_a, id_b, hamming, n_a, n_b) within ``max_hamming`` between
+    the exact-duplicate groups of (id, phash) rows, by brute force: rep =
+    the min id per hash, n = the group size."""
+    groups = {}
+    for i, h in rows:
+        groups.setdefault(int(h), []).append(i)
+    uh = sorted(groups)
+    want = set()
+    for x in range(len(uh)):
+        for y in range(x + 1, len(uh)):
+            d = _hamming(uh[x], uh[y])
+            if d <= max_hamming:
+                (a, na), (b, nb) = sorted(
+                    (min(groups[h]), len(groups[h])) for h in (uh[x], uh[y])
+                )
+                want.add((a, b, d, na, nb))
+    return want
+
+
 def test_phash_band_join_is_exact_for_small_hamming(spark):
     """Pigeonhole guarantee: with 4 bands, every pair within Hamming 3
     shares at least one untouched band — the banded join must equal the
@@ -151,20 +175,10 @@ def test_phash_band_join_is_exact_for_small_hamming(spark):
         df = spark.createDataFrame(rows, "image_id string, phash long")
 
         got = {
-            (r.id_a, r.id_b, r.hamming)
+            (r.id_a, r.id_b, r.hamming, r.n_a, r.n_b)
             for r in dedup.phash_near_dup(df, max_hamming=3).collect()
         }
-
-        # brute force over distinct hashes; rep = min (zero-padded) id per hash
-        uh = sorted({int(h) for h in hashes})
-        rep = {h: min(i for i, hh in rows if int(hh) == h) for h in uh}
-        want = set()
-        for x in range(len(uh)):
-            for y in range(x + 1, len(uh)):
-                d = bin((uh[x] ^ uh[y]) & ((1 << 64) - 1)).count("1")
-                if d <= 3:
-                    a, b = sorted((rep[uh[x]], rep[uh[y]]))
-                    want.add((a, b, d))
+        want = _brute_pairs(rows, 3)
         if min_pairs:
             assert len(want) >= min_pairs  # planted near-dups actually present
         else:
@@ -189,8 +203,9 @@ def test_phash_hot_bucket_cap_is_exact(spark):
     """The chunk-pair hot-bucket guard changes only the plan, never the
     result: a randomized corpus with a deliberately HOT band bucket
     (hundreds of hashes sharing band 0's 16-bit value) must produce the
-    identical pair set at every cap, including cap=1 (every multi-rep
-    bucket chunked, per-bucket B = bucket_n)."""
+    brute-force pair set at every cap, including cap=1 (every multi-rep
+    bucket chunked, per-bucket B = bucket_n) and the default (no bucket
+    chunked)."""
     rng = np.random.default_rng(7)
     hashes = list(rng.integers(0, 2**63, size=60, dtype=np.int64))
     # hot bucket: 200 hashes identical in band 0 (low 16 bits), random above
@@ -213,10 +228,10 @@ def test_phash_hot_bucket_cap_is_exact(spark):
             for r in dedup.phash_near_dup(df, max_bucket_reps=cap).collect()
         }
 
-    want = pairs(None)  # the unguarded join is the ground truth
+    want = _brute_pairs(rows, dedup.PHASH_MAX_HAMMING)
     assert len(want) >= 10  # planted hot-bucket near-dups found
-    for cap in (1, 3, 50):
-        assert pairs(cap) == want, f"cap={cap} diverged from uncapped"
+    for cap in (1, 3, 50, dedup.PHASH_BUCKET_CAP):
+        assert pairs(cap) == want, f"cap={cap} diverged from brute force"
 
 
 def test_cluster_assign_keeps_one_per_cluster(spark):
@@ -294,6 +309,65 @@ def test_incremental_phash_dedup_corpus_never_shuffles(spark):
         for r in dedup.incremental_phash_dedup(b2, c2).collect()
     }
     assert out == {"bx": ("ca", 0)}
+
+
+def test_incremental_phash_dedup_hot_batch_bucket_is_guarded(spark, monkeypatch):
+    """Ingest runs its batch self-join through the same hot-bucket guard
+    as phash_near_dup: with the cap lowered to 3, a batch whose band-0
+    bucket holds 40 distinct hashes joins on chunk-pair keys (ci, cj in
+    the pair graph's plan), and the mapping still equals brute force —
+    corpus hits, batch clusters inside the hot bucket and exact-dup
+    batch groups included."""
+    rng = np.random.default_rng(19)
+    corpus_h = [int(h) for h in rng.integers(0, 2**63, size=10, dtype=np.int64)]
+    hot = [(int(rng.integers(0, 2**47)) << 16) | 0x0ABC for _ in range(40)]
+    batch_h = hot + [h ^ (1 << int(rng.integers(17, 63))) for h in hot[:8]]
+    batch_h += [corpus_h[i] ^ (1 << int(rng.integers(0, 63))) for i in range(4)]
+    batch_h += [corpus_h[5], hot[3], hot[9]]  # exact dups: corpus, batch, batch
+    corpus_rows = [(f"c{i:03d}", h) for i, h in enumerate(corpus_h)]
+    batch_rows = [(f"b{i:03d}", h) for i, h in enumerate(batch_h)]
+    schema = "image_id string, phash long"
+
+    edges = []
+    real_cc = dedup.connected_components
+
+    def recording(e, *a, **k):
+        edges.append(e)
+        return real_cc(e, *a, **k)
+
+    monkeypatch.setattr(dedup, "PHASH_BUCKET_CAP", 3)
+    monkeypatch.setattr(dedup, "connected_components", recording)
+    out = dedup.incremental_phash_dedup(
+        spark.createDataFrame(batch_rows, schema),
+        spark.createDataFrame(corpus_rows, schema),
+    )
+    got = {r.image_id: (r.cluster_root, r.is_keep) for r in out.collect()}
+    plan = edges[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "ci#" in plan and "cj#" in plan, plan
+
+    # brute force: exact-dup groups per side ('0|' corpus, '1|' batch
+    # priority ids, rep = min id), corpus×batch and batch×batch edges
+    def reps(rows, tag):
+        g = {}
+        for i, h in rows:
+            g.setdefault(h, []).append(f"{tag}|{i}")
+        return {h: min(ids) for h, ids in g.items()}
+
+    cr, br = reps(corpus_rows, 0), reps(batch_rows, 1)
+    pairs = [
+        (br[x], other[y])
+        for x in br
+        for other in (cr, br)
+        for y in other
+        if br[x] != other[y] and _hamming(x, y) <= dedup.PHASH_MAX_HAMMING
+    ]
+    assert sum(p[1].startswith("0|") for p in pairs) >= 5  # corpus hits
+    assert sum(p[1].startswith("1|") for p in pairs) >= 16  # batch pairs
+    root = _uf(pairs, sorted(set(cr.values()) | set(br.values())))
+    want = {
+        i: (root[br[h]][2:], int(root[br[h]] == f"1|{i}")) for i, h in batch_rows
+    }
+    assert got == want
 
 
 def test_incremental_phash_dedup_long_ids(spark):

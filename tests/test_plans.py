@@ -444,9 +444,10 @@ def test_largest_overlap_plan_shape(spark):
 
 
 def test_manifest_plan_single_python_eval(spark, cover):
-    """training_manifest: caption features + split are inlined Column
-    arithmetic and the PIP refine is a JVM ray cast — no Python eval in
-    the plan at all, and the cover join stays broadcast."""
+    """training_manifest over an assign frame: caption features + split
+    are inlined Column arithmetic and the PIP refine is a JVM ray cast —
+    no Python eval in the plan at all, and the cover join stays
+    broadcast."""
     from prclz_spark.operators import curation
 
     img = (
@@ -457,7 +458,8 @@ def test_manifest_plan_single_python_eval(spark, cover):
         )
         .withColumn("phash", F.xxhash64(F.col("image_id").cast("string")))
     )
-    out = curation.training_manifest(img, cover, 15, idnum=F.col("image_id"))
+    assigned = assign.assign_points_to_blocks(img, cover, 15)
+    out = curation.training_manifest(img, assigned, idnum=F.col("image_id"))
     p = _plan(out)
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     assert "BroadcastHashJoin" in p

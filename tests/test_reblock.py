@@ -93,18 +93,17 @@ def test_footprint_parcels_retry_ladder(spark):
     ).toPandas()
     assert set(fine.ptdist_used) == {0.02}
     assert len(fine) == 10
-    # rung 1 fails (anchor budget), rung 2 coarse succeeds
+    # rung 1 fails (10 perimeters of 0.16 at 1e-4: ~16,000 anchors, over
+    # the budget), rung 2 coarse succeeds (~160 anchors at 1e-2)
     coarse = parcel_op.parcelize_footprints(
-        pts_sdf, blocks_sdf, footprint_side=0.04, ptdist=1e-6,
-        coarse_factor=1e4,
+        pts_sdf, blocks_sdf, footprint_side=0.04, ptdist=1e-4
     ).toPandas()
-    assert set(coarse.ptdist_used) == {1e-6 * 1e4}
+    assert set(coarse.ptdist_used) == {1e-4 * parcel_op.COARSE_FACTOR}
     assert len(coarse) == 10
     assert abs(coarse.area.sum() - 1.0) < 1e-9
-    # both rungs fail -> inherit block boundary
+    # both rungs fail (~1.6e7 and ~1.6e5 anchors) -> inherit block boundary
     fb = parcel_op.parcelize_footprints(
-        pts_sdf, blocks_sdf, footprint_side=0.04, ptdist=1e-9,
-        coarse_factor=2.0,
+        pts_sdf, blocks_sdf, footprint_side=0.04, ptdist=1e-7
     ).toPandas()
     assert list(fb.parcel_id) == [parcel_op.FALLBACK_PARCEL_ID]
     assert list(fb.ptdist_used) == [-1.0]
