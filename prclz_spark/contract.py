@@ -2542,17 +2542,16 @@ def _q_img_training_manifest(spark, sf_dir):
     # fixture captions all score quality_r6 = 0.2188 (formulaic shape), so
     # the gate sits below that — selected then varies with the keep-list
     return curation.training_manifest(
-        img,
         # both expensive stages read committed tables (stage-5 pattern):
-        # the PIP assign and the CC keep-list each materialize once per
+        # the CC keep-list and the PIP assign each materialize once per
         # corpus snapshot and are shared across the registry
+        _phash_clusters_cached(spark, sf_dir),
         img.select("image_id", "caption").join(
             _assigned_img_cached(spark, sf_dir).select("image_id", "block_id"),
             "image_id",
         ),
         idnum=synth.image_id_num(F.col("image_id")),
         min_quality=0.2,
-        clusters=_phash_clusters_cached(spark, sf_dir),
     )
 
 

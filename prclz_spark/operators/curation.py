@@ -3,19 +3,21 @@ composition that turns the raw image+caption table into the curated
 training set a 10^12-image pipeline feeds to a trainer.
 
 This is the capstone of the graft's training-data extensions (SURVEY.md
-§8 "Training-data extensions"): one call composes the spatial surface
-(the committed J1 PIP assign table), the text surface (quality /
-lang-ID / BPE piece counts), the dedup surface (F29 phash → banded
-Hamming pairs → connected components keep-list) and a deterministic
-train/val/test split into a single manifest row per image.
+§8 "Training-data extensions"): one call joins the spatial surface (the
+committed J1 PIP assign table), the text surface (quality / lang-ID /
+BPE piece counts), the dedup surface (the F29 keep-list: phash → banded
+Hamming pairs → connected components, built by dedup.phash_clusters and
+passed in) and a deterministic train/val/test split into a single
+manifest row per image.
 
 Scale design:
 - Every per-row feature (quality, lang, token counts, split) is inlined
   as Column arithmetic into ONE wide projection over the assign output —
-  features add ZERO shuffles and stay in whole-stage codegen. The only
-  exchanges are the ones the semantics force: the phash pair join + CC
-  for the keep-list, and one equi-join of that keep-list back onto the
-  manifest rows.
+  features add ZERO shuffles and stay in whole-stage codegen. The
+  keep-list is an input, not a step: the caller builds it once per
+  corpus snapshot (run_pipeline on a second driver thread beside stages
+  1-4), so the manifest's only exchange is the equi-join of that
+  keep-list onto the manifest rows.
 - The split hash is pure bigint arithmetic — a Knuth multiplicative
   hash mod a prime — NOT xxhash64, so the DuckDB oracle replicates it
   bit-for-bit ((id % P) * M + O all stay < 2^63). Stable across Spark
@@ -29,11 +31,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import dedup, text
+from . import text
 
 SPLIT_P = 1_000_000_007      # prime modulus
 SPLIT_MULT = 2_654_435_761   # Knuth multiplicative constant (2^32 * phi)
 SPLIT_OFF = 40_503
+# train / val / test = 90 / 5 / 5 % of SPLIT_BUCKETS buckets (frozen too)
+SPLIT_BUCKETS = 10_000
+_TRAIN_HI, _VAL_HI = 9_000, 9_500
 
 
 def portable_hash(idnum: Column) -> Column:
@@ -54,107 +59,79 @@ def portable_hash_sql(idnum_expr: str) -> str:
     )
 
 
-def split_bucket(idnum: Column, n_buckets: int = 10_000) -> Column:
-    """Deterministic bucket in [0, n_buckets) from a nonnegative bigint
-    id (portable_hash % n_buckets)."""
-    return F.pmod(portable_hash(idnum), F.lit(n_buckets))
+def split_bucket(idnum: Column) -> Column:
+    """Deterministic bucket in [0, SPLIT_BUCKETS) from a nonnegative
+    bigint id (portable_hash % SPLIT_BUCKETS)."""
+    return F.pmod(portable_hash(idnum), F.lit(SPLIT_BUCKETS))
 
 
-def split_bucket_sql(idnum_expr: str, n_buckets: int = 10_000) -> str:
-    return f"{portable_hash_sql(idnum_expr)} % {n_buckets}"
+def split_bucket_sql(idnum_expr: str) -> str:
+    return f"{portable_hash_sql(idnum_expr)} % {SPLIT_BUCKETS}"
 
 
-def _cuts(weights: tuple[float, float, float], n_buckets: int) -> tuple[int, int]:
-    t_hi = int(round(weights[0] * n_buckets))
-    v_hi = t_hi + int(round(weights[1] * n_buckets))
-    return t_hi, v_hi
-
-
-def split_label(bucket: Column,
-                weights: tuple[float, float, float] = (0.9, 0.05, 0.05),
-                n_buckets: int = 10_000) -> Column:
-    t_hi, v_hi = _cuts(weights, n_buckets)
+def split_label(bucket: Column) -> Column:
     return (
-        F.when(bucket < t_hi, F.lit("train"))
-        .when(bucket < v_hi, F.lit("val"))
+        F.when(bucket < _TRAIN_HI, F.lit("train"))
+        .when(bucket < _VAL_HI, F.lit("val"))
         .otherwise(F.lit("test"))
     )
 
 
-def split_label_sql(bucket_expr: str,
-                    weights: tuple[float, float, float] = (0.9, 0.05, 0.05),
-                    n_buckets: int = 10_000) -> str:
-    t_hi, v_hi = _cuts(weights, n_buckets)
+def split_label_sql(bucket_expr: str) -> str:
     return (
-        f"(case when ({bucket_expr}) < {t_hi} then 'train' "
-        f"when ({bucket_expr}) < {v_hi} then 'val' else 'test' end)"
+        f"(case when ({bucket_expr}) < {_TRAIN_HI} then 'train' "
+        f"when ({bucket_expr}) < {_VAL_HI} then 'val' else 'test' end)"
     )
 
 
 def split_assign(df: DataFrame, idnum: Column | None = None,
-                 id_col: str = "image_id",
-                 weights: tuple[float, float, float] = (0.9, 0.05, 0.05),
-                 n_buckets: int = 10_000) -> DataFrame:
+                 id_col: str = "image_id") -> DataFrame:
     """Add (split_bucket, split) columns. ``idnum``: a nonnegative bigint
     Column for the portable (oracle-checkable) hash; default derives one
     from ``id_col`` via xxhash64 — fine in production, not SQL-mirrored."""
     if idnum is None:
         idnum = F.pmod(F.xxhash64(F.col(id_col)), F.lit(SPLIT_P))
-    b = split_bucket(idnum, n_buckets)
+    b = split_bucket(idnum)
     return df.withColumn("split_bucket", b).withColumn(
-        "split", split_label(F.col("split_bucket"), weights, n_buckets)
+        "split", split_label(F.col("split_bucket"))
     )
 
 
 def training_manifest(
-    img: DataFrame,
+    keep: DataFrame,
     assigned: DataFrame,
     *,
-    id_col: str = "image_id",
-    caption_col: str = "caption",
-    phash_col: str = "phash",
-    idnum: Column | None = None,
+    idnum: Column,
     min_quality: float = 0.5,
-    weights: tuple[float, float, float] = (0.9, 0.05, 0.05),
-    n_buckets: int = 10_000,
-    clusters: DataFrame | None = None,
 ) -> DataFrame:
     """One manifest row per image: containing block, dedup cluster root +
     keep flag, caption quality / language / BPE piece count, split, and
     the final ``selected`` bit (keeper AND quality >= min_quality) — the
     row set a trainer's datamodule filters on.
 
-    ``assigned`` is the committed assign table's rows (id, caption,
-    block_id — assign.assign_points_to_blocks output plus the caption),
-    so the PIP join, the pipeline's most expensive stage, never runs
-    twice. ``img`` (id, phash) is the corpus the keep-list clusters:
-    pass ``clusters`` (the (id, cluster_root, is_keep) frame from
-    dedup.phash_clusters) to reuse an already-computed keep-list
-    instead — the iterative CC loop is the other stage worth computing
-    exactly once per corpus snapshot.
+    ``keep`` is the corpus keep-list, (image_id, cluster_root, is_keep)
+    from dedup.phash_clusters: the iterative CC loop runs once per corpus
+    snapshot, by the caller, before or beside the manifest. ``assigned``
+    is the committed assign table's rows (image_id, caption, block_id —
+    assign.assign_points_to_blocks output plus the caption), so the PIP
+    join, the pipeline's most expensive stage, never runs twice.
+    ``idnum`` is the nonnegative bigint id the portable split hashes.
     """
-    q = text.quality_cols(caption_col)
-    lg = text.lang_cols(caption_col)
-    bp = text.bpe_cols(caption_col)
-    if idnum is None:
-        idnum = F.pmod(F.xxhash64(F.col(id_col)), F.lit(SPLIT_P))
-    bucket = split_bucket(idnum, n_buckets)
+    q = text.quality_cols("caption")
+    lg = text.lang_cols("caption")
+    bp = text.bpe_cols("caption")
+    bucket = split_bucket(idnum)
     wide = assigned.select(
-        id_col,
+        "image_id",
         "block_id",
         q["quality_r6"].alias("quality_r6"),
         lg["pred_lang"].alias("pred_lang"),
         bp["n_pieces_bpe"].alias("n_pieces_bpe"),
         bucket.alias("split_bucket"),
-        split_label(bucket, weights, n_buckets).alias("split"),
+        split_label(bucket).alias("split"),
     )
-    keep = (
-        clusters
-        if clusters is not None
-        else dedup.phash_clusters(img, id_col, phash_col)
-    )
-    return wide.join(keep, id_col).select(
-        id_col,
+    return wide.join(keep, "image_id").select(
+        "image_id",
         "block_id",
         "cluster_root",
         "is_keep",

@@ -25,9 +25,9 @@ compose them:
 - ``phash_clusters``: every image mapped to its cluster root, one
   ``_groups`` feeding both the pairs and the expansion.
 - ``incremental_phash_dedup``: a batch mapped against a keeper corpus;
-  corpus × batch pairs come from a broadcast join (the corpus never
-  self-joins nor shuffles), batch × batch pairs from the same guarded
-  ``_self_pairs``.
+  corpus × batch pairs come from a broadcast join (the corpus is
+  shuffled once, by its exact-dup ``_groups``, and never self-joins),
+  batch × batch pairs from the same guarded ``_self_pairs``.
 - ``connected_components``: the alternating large-star / small-star
   algorithm (Kiveris et al., "Connected Components in MapReduce and
   Beyond", SoCC 2014) in pure DataFrame ops — O(log n) rounds even on
@@ -204,19 +204,18 @@ def _roots(
 def phash_near_dup(
     img: DataFrame,
     max_hamming: int = PHASH_MAX_HAMMING,
-    phash_col: str = "phash",
-    id_col: str = "image_id",
     max_bucket_reps: int = PHASH_BUCKET_CAP,
 ) -> DataFrame:
-    """(id_a, id_b, hamming, n_a, n_b): near-duplicate image pairs by
-    phash Hamming distance, between exact-duplicate GROUPS (id_a/id_b are
-    each group's min image_id, n_a/n_b the group sizes; id_a < id_b).
+    """(id_a, id_b, hamming, n_a, n_b): near-duplicate pairs of ``img``
+    (image_id, phash) by phash Hamming distance, between exact-duplicate
+    GROUPS (id_a/id_b are each group's min image_id, n_a/n_b the group
+    sizes; id_a < id_b).
 
     Plan: one hash aggregation collapses identical phashes (``_groups``),
     and ``_self_pairs`` bands them, self-joins on (band, value) behind
     the hot-bucket guard (``max_bucket_reps``) and verifies by
     ``bit_count(xor)`` — all JVM-side codegen."""
-    return _self_pairs(_groups(img, id_col, phash_col), max_hamming, max_bucket_reps)
+    return _self_pairs(_groups(img, "image_id", "phash"), max_hamming, max_bucket_reps)
 
 
 def phash_near_dup_sql(parquet_path: str) -> str:
@@ -275,10 +274,11 @@ def incremental_phash_dedup(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     (kept once per new component).
 
     The incremental cost property, which is the whole point at 10^12
-    corpus rows: the corpus NEVER self-joins and NEVER shuffles — its
-    band table is scanned once and map-side-joined against the
-    BROADCAST batch bands, so a day's ingest costs
-    O(|corpus| scan + |batch|-bounded join), not O(|corpus|^2).
+    corpus rows: the corpus NEVER self-joins — it is scanned once,
+    shuffled once by the exact-dup groupBy (``_groups``, one hash
+    aggregation on ph), and its band rows are map-side-joined against
+    the BROADCAST batch bands, so a day's ingest costs O(|corpus| scan +
+    one aggregation + |batch|-bounded join), not O(|corpus|^2).
     Corpus-corpus candidate pairs are excluded by construction (the
     corpus is assumed already deduped at this threshold); a batch item
     bridging two corpus keepers maps to the smaller corpus id. Batch-
@@ -413,21 +413,20 @@ def _checkpoint_with_signature(e: DataFrame) -> tuple[DataFrame, tuple]:
     return e, (sig["n"], sig["h"])
 
 
-def phash_clusters(
-    img: DataFrame, id_col: str = "image_id", phash_col: str = "phash"
-) -> DataFrame:
-    """(image_id, cluster_root, is_keep) for the whole image corpus:
-    exact-dup groups collapse to a per-phash representative first (the
-    skew guard — a billion byte-identical thumbnails cost one groupBy,
-    never a pair explosion), banded-Hamming near-dup pairs connect the
-    representatives, and the component root expands back through the
-    exact-dup groups. is_keep marks the one canonical copy per cluster."""
-    g = _groups(img, id_col, phash_col)
+def phash_clusters(img: DataFrame) -> DataFrame:
+    """(image_id, cluster_root, is_keep) for the whole image corpus
+    ``img`` (image_id, phash): exact-dup groups collapse to a per-phash
+    representative first (the skew guard — a billion byte-identical
+    thumbnails cost one groupBy, never a pair explosion), banded-Hamming
+    near-dup pairs connect the representatives, and the component root
+    expands back through the exact-dup groups. is_keep marks the one
+    canonical copy per cluster."""
+    g = _groups(img, "image_id", "phash")
     pairs = _self_pairs(g, PHASH_MAX_HAMMING, PHASH_BUCKET_CAP)
-    items = img.select(id_col, F.col(phash_col).alias("ph")).join(
+    items = img.select("image_id", F.col("phash").alias("ph")).join(
         g.select("ph", "rep"), "ph"
     )
-    return _roots(items, pairs, id_col)
+    return _roots(items, pairs, "image_id")
 
 
 def cluster_assign(

@@ -168,22 +168,19 @@ def quality_score_sql(table: str = "documents", text_col: str = "text",
 
 def lang_cols(text_col: str = "text") -> dict[str, Column]:
     """Language-ID feature columns (name -> unaliased Column); see
-    lang_id for semantics."""
+    lang_id for semantics. Each language's count is built once; the argmax
+    is one ``greatest`` over (hits, -order, lang) structs."""
     toks = F.split(F.col(text_col), " ")
 
     def marker_count(markers: tuple[str, ...]) -> Column:
         # bind via helper: a 2-arg lambda would be treated as (elem, index)
         return F.size(F.filter(toks, lambda x: x.isin(*markers)))
 
-    scores = {lang: marker_count(m) for lang, m in LANG_MARKERS.items()}
-    langs = list(LANG_MARKERS)
-    best_lang: Column = F.lit(langs[0])
-    best_score: Column = scores[langs[0]]
-    for lang in langs[1:]:
-        is_better = scores[lang] > best_score
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(is_better, scores[lang]).otherwise(best_score)
-    return {"pred_lang": best_lang, "marker_hits": best_score}
+    best = F.greatest(*(
+        F.struct(marker_count(m).alias("s"), F.lit(-i).alias("o"), F.lit(lang).alias("lang"))
+        for i, (lang, m) in enumerate(LANG_MARKERS.items())
+    ))
+    return {"pred_lang": best["lang"], "marker_hits": best["s"]}
 
 
 def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"

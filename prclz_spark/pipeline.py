@@ -12,7 +12,8 @@ all-or-nothing manifest checks one stage marker), so a resume check runs
 no Spark job. Stages 2-4 (k-complexity, parcels, reblock) are ONE
 per-block pass committed as ``reblock_all``; their five tables are
 filter sinks of it, committed together from one write
-(``TableStore.commit_split``).
+(``TableStore.commit_split``). Stage 5's keep-list depends on the image
+table alone, so a second driver thread builds it beside stages 1-4.
 
 Partitioning: the assign table is partitioned by the points' cell
 *prefix* (coarse cell id), the unit stage 1 resumes by; every later
@@ -34,6 +35,7 @@ deployment artifact.
 from __future__ import annotations
 
 import numpy as np
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +43,7 @@ from .functions import cells
 from .operators import assign as assign_op
 from .operators import complexity as complexity_op
 from .operators import curation as curation_op
+from .operators import dedup as dedup_op
 from .operators import parcel as parcel_op
 from .operators import reblock as reblock_op
 from .sources import synth
@@ -99,6 +102,31 @@ def image_rows(spark: SparkSession, n: int) -> DataFrame:
     return _caption_phash_cols(image_points(spark, n))
 
 
+class _KeepList(InheritableThread):
+    """Stage 5's keep-list, ``dedup.phash_clusters`` over the FULL image
+    set (a cluster whose min-id keeper fell outside every block must still
+    elect it), built beside stages 1-4. As an InheritableThread its jobs
+    run in the caller's job group. It commits nothing and calls nothing
+    the benchmark's tracer wraps: every write stays on the main thread."""
+
+    def __init__(self, spark: SparkSession, n_images: int):
+        super().__init__(target=self._build, args=(spark, n_images))
+        self._keep = self._err = None
+        self.start()
+
+    def _build(self, spark: SparkSession, n_images: int) -> None:
+        try:
+            self._keep = dedup_op.phash_clusters(image_rows(spark, n_images))
+        except BaseException as e:  # raised again on the main thread
+            self._err = e
+
+    def result(self) -> DataFrame:
+        self.join()
+        if self._err is not None:
+            raise self._err
+        return self._keep
+
+
 def run_pipeline(
     spark: SparkSession,
     store_root: str,
@@ -108,23 +136,58 @@ def run_pipeline(
 ) -> dict:
     """The reference's full stage chain — assign → k-complexity →
     parcelization → reblocking (SURVEY.md §3), the last three as one
-    per-block pass — each table committed atomically with per-partition
-    lineage and resumable independently.
+    per-block pass — and the manifest, each table committed atomically
+    with per-partition lineage and resumable independently.
 
     Stage 1 is the flat single-cell broadcast join
     (assign_points_to_blocks) over the cover cut to the cell prefixes
     not yet in the assign table's lineage; the full cover's row count
-    lands in its lineage metrics. On a complete store no stage runs a
-    Spark job.
+    lands in its lineage metrics. The manifest's keep-list is built on a
+    second driver thread, joined on every exit path. On a complete store
+    no stage runs a Spark job and no thread starts.
 
     Returns the count each stage computed this run, keyed by every table
     of ``STAGE_TABLES`` (0 for a fully resumed stage or one not run):
     rows for assign, the reblock sinks and the manifest, blocks for
     reblock_all, complexity and parcels."""
     store = TableStore(store_root)
+    computed = dict.fromkeys(STAGE_TABLES, 0)
+    # The keep-list (phash connected components) is a GLOBAL property of
+    # the corpus, so stage 5 commits atomically as one unit — a per-block
+    # resume would cluster within subsets and change results. The lineage
+    # stage marker makes the commit idempotent: a re-run after a crash
+    # either sees no manifest (recompute) or the marker (skip) — same
+    # guard as the streaming foreachBatch sink.
+    marked = any(l.get("stage") == MANIFEST_TABLE for l in store.read_lineage(MANIFEST_TABLE))
+    keep = None if marked else _KeepList(spark, n_images)
+    try:
+        assigned = _stages_1_to_4(spark, store, computed, n_images, grid_g, prefix_res)
+        if keep is not None and assigned is not None:
+            # -- stage 5: curated training manifest -------------------------
+            # The manifest ROWS reuse stage 1's committed assign output —
+            # caption is pure Column arithmetic of image_id, so the PIP
+            # join (the pipeline's most expensive stage) never runs twice.
+            mf = curation_op.training_manifest(
+                keep.result(), _caption_phash_cols(assigned), idnum=F.col("image_id")
+            )
+            # partition by block_id like every other stage: high-cardinality
+            # parallel writes that co-locate with the spatial tables (a
+            # 'split' partitioning would funnel the write through 3 tasks)
+            sid = store.commit(mf, MANIFEST_TABLE, "block_id", stage=MANIFEST_TABLE)
+            computed[MANIFEST_TABLE] = store.committed_rows(MANIFEST_TABLE, sid)
+    finally:
+        if keep is not None:
+            keep.join()
+    return computed
+
+
+def _stages_1_to_4(spark: SparkSession, store: TableStore, computed: dict,
+                   n_images: int, grid_g: int, prefix_res: int) -> DataFrame | None:
+    """Stages 1-4, each resumed from its own lineage: fills ``computed``
+    and returns the committed assign table (None when no point was ever
+    assigned — n_images == 0, or all fell outside every block)."""
     blocks_pdf = synth.grid_blocks(grid_g)
     cover = assign_op.block_cover_pdf(blocks_pdf, COVER_RES)
-    computed = dict.fromkeys(STAGE_TABLES, 0)
 
     # -- stage 1: spatial assign, partitioned by cell prefix ---------------
     # Every assigned point joins through a cover cell, so the todo prefixes
@@ -151,9 +214,7 @@ def run_pipeline(
         computed[ASSIGN_TABLE] = store.committed_rows(ASSIGN_TABLE, sid)
     assigned = store.read(spark, ASSIGN_TABLE)
     if assigned is None:
-        # no point was ever assigned (n_images == 0, or every point fell
-        # outside all blocks): no later stage has input
-        return computed
+        return None  # no later stage has input
 
     # -- stages 2-4: k-complexity, parcels, Steiner reblocking -------------
     # ONE per-block pass commits every per-block product to reblock_all.
@@ -196,37 +257,7 @@ def run_pipeline(
                 len(keys[tname]) if tname in (COMPLEXITY_TABLE, PARCELS_TABLE)
                 else store.committed_rows(tname, sid)
             )
-
-    # -- stage 5: curated training manifest ---------------------------------
-    # The keep-list (phash connected components) is a GLOBAL property of
-    # the corpus, so this stage commits atomically as one unit — a
-    # per-block resume would cluster within subsets and change results.
-    # The lineage stage marker makes the commit idempotent: a re-run
-    # after a crash either sees no manifest (recompute) or the marker
-    # (skip) — same guard as the streaming foreachBatch sink.
-    if not any(
-        l.get("stage") == MANIFEST_TABLE for l in store.read_lineage(MANIFEST_TABLE)
-    ):
-        # reuse stage 1's committed assign output for the manifest ROWS —
-        # caption and phash are pure Column arithmetic of image_id, so
-        # the PIP join (the pipeline's most expensive stage) never runs
-        # twice. The keep-list corpus, however, is the FULL image set
-        # (image_rows), not the assigned subset: a cluster whose min-id
-        # keeper fell outside every block must still elect that keeper,
-        # or is_keep flips for its in-block members (the keep-list is a
-        # global corpus property — same reason this stage is atomic).
-        mf = curation_op.training_manifest(
-            image_rows(spark, n_images),
-            _caption_phash_cols(assigned),
-            idnum=F.col("image_id"),
-        )
-        # partition by block_id like every other stage: high-cardinality
-        # parallel writes that co-locate with the spatial tables (a
-        # 'split' partitioning would funnel the write through 3 tasks)
-        sid = store.commit(mf, MANIFEST_TABLE, "block_id", stage=MANIFEST_TABLE)
-        computed[MANIFEST_TABLE] = store.committed_rows(MANIFEST_TABLE, sid)
-
-    return computed
+    return assigned
 
 
 def block_hourly_rollup(events: DataFrame, assigned: DataFrame) -> DataFrame:

@@ -58,39 +58,42 @@ def test_boundary_types_closed_ring_alignment(spark):
 def test_boundary_types_feed_reblock(spark):
     """End-to-end stage-4 wiring: producer output on the blocks frame makes
     the Steiner tree route around the derived waterway (top) boundary.
-    The points are a 4×4 grid, so the central 2×2 parcels do not touch
-    the block boundary and stay terminals after reblock drops the
-    boundary parcels' points."""
+    The points are a 4×4 grid whose inner rows sit near the top, so the
+    central parcels (the terminals left after reblock drops the boundary
+    parcels' points) are cheapest to reach through the top boundary: the
+    all-highway control runs its tree along it, the typed run does not."""
     from prclz_spark.operators import parcel, reblock
 
-    ticks = [0.125, 0.375, 0.625, 0.875]
+    xs = [0.125, 0.375, 0.625, 0.875]
+    ys = [0.1, 0.75, 0.85, 0.95]
     pts_pdf = pd.DataFrame(
         {
             "block_id": ["b0"] * 16,
             "image_id": [f"t{i:02d}" for i in range(16)],
-            "lon": [x for _ in ticks for x in ticks],
-            "lat": [y for y in ticks for _ in ticks],
+            "lon": [x for _ in ys for x in xs],
+            "lat": [y for y in ys for _ in xs],
         }
     )
     assigned = spark.createDataFrame(pts_pdf)
-    typed_blocks = boundary_types_for_blocks(
-        _blocks(spark, [BLOCK]), LINES, res=8, threshold=0.1
-    )
-    parcels = parcel.parcelize(assigned, typed_blocks.select("block_id", "geometry"))
-    edges = reblock.reblock(parcels, assigned, typed_blocks, emit="edges").toPandas()
-    assert len(edges) > 0
-    existing = edges[edges.edge_type == "existing"]
-    # waterway top edge (y=1) carries weight 1e5: never free/existing
-    on_top = (np.abs(existing.ay - 1.0) < 1e-9) & (np.abs(existing.by - 1.0) < 1e-9)
-    assert not on_top.any()
-    # control: all-highway lines make the top boundary existing again
-    hw = LINES.assign(feature_type="highway")
-    ctl_blocks = boundary_types_for_blocks(
-        _blocks(spark, [BLOCK]), hw, res=8, threshold=0.1
-    )
-    ctl = reblock.reblock(parcels, assigned, ctl_blocks, emit="edges").toPandas()
-    ctl_exist = ctl[ctl.edge_type == "existing"]
-    assert len(ctl_exist) > 0
+
+    def steiner_edges(lines):
+        blocks = boundary_types_for_blocks(
+            _blocks(spark, [BLOCK]), lines, res=8, threshold=0.1
+        )
+        parcels = parcel.parcelize(assigned, blocks.select("block_id", "geometry"))
+        edges = reblock.reblock(parcels, assigned, blocks, emit="edges").toPandas()
+        on_top = (np.abs(edges.ay - 1.0) < 1e-9) & (np.abs(edges.by - 1.0) < 1e-9)
+        rows = edges[["ax", "ay", "bx", "by", "edge_type"]].round(9)
+        return set(map(tuple, rows.values.tolist())), edges[on_top].edge_type
+
+    typed, typed_top = steiner_edges(LINES)
+    ctl, ctl_top = steiner_edges(LINES.assign(feature_type="highway"))
+    assert typed and ctl
+    # waterway top edge (y=1) carries weight 1e5: never existing
+    assert not (typed_top == "existing").any()
+    # control: all-highway lines make the top boundary the cheap route
+    assert (ctl_top == "existing").any()
+    assert typed != ctl
 
 
 def test_boundary_types_empty_lines(spark):

@@ -210,6 +210,38 @@ def test_jaccard_df_cap_exactness(spark):
     assert [tuple(r) for r in got[["d1", "d2", "jaccard_r6"]].to_numpy()] == sorted(want)
 
 
+def test_lang_id_ties_null_and_empty(spark):
+    """lang_id's argmax on the cases the fixture corpus never hits: the
+    highest marker count wins, a tie goes to the earlier LANG_MARKERS
+    language, and empty or null text scores no hits (null text: 'en' with
+    null hits) — equal to the DuckDB mirror and pinned."""
+    from prclz_spark.operators import text as text_op
+
+    cases = {
+        "d0": None,
+        "d1": "",
+        "d2": "la la",  # es = fr = 2
+        "d3": "de",  # es = zh = 1
+        "d4": "der die le les",  # de = fr = 2 > zh = 1
+        "d5": "le la et est the",  # fr = 4
+        "d6": "shi le bu",  # zh = 3 > fr = 1
+    }
+    pdf = pd.DataFrame({"doc_id": list(cases), "text": list(cases.values())})
+    got = (
+        text_op.lang_id(spark.createDataFrame(pdf, "doc_id string, text string"))
+        .toPandas().set_index("doc_id").sort_index()
+    )
+    con = duckdb.connect()
+    con.register("docs", pdf)
+    want = con.sql(text_op.lang_id_sql("docs")).df().set_index("doc_id").sort_index()
+    assert list(got.pred_lang) == list(want.pred_lang) == [
+        "en", "en", "es", "es", "de", "fr", "zh",
+    ]
+    hits = [None if pd.isna(h) else int(h) for h in got.marker_hits]
+    assert hits == [None if pd.isna(h) else int(h) for h in want.marker_hits]
+    assert hits == [None, 0, 2, 1, 2, 4, 3]
+
+
 def test_bpe_pattern_tricky_strings(spark):
     """The BPE-ish pattern must tokenize identically in Java regex (Spark)
     and RE2 (DuckDB) on the branches the plain fixture corpus never hits:

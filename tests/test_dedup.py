@@ -279,23 +279,52 @@ def test_incremental_phash_dedup_semantics(spark):
     }
 
 
-def test_incremental_phash_dedup_corpus_never_shuffles(spark):
-    """The 10^12-corpus property: the corpus side of the candidate join
-    must be map-side (batch bands broadcast) — no Exchange repartitions
-    the corpus band stream, and the corpus never self-joins."""
+def _leaf_paths(node, above=()):
+    """(leaf, the nodes from the root down to it) for every leaf of a
+    physical plan."""
+    kids = node.children()
+    if kids.size() == 0:
+        yield node, above
+    for i in range(kids.size()):
+        yield from _leaf_paths(kids.apply(i), (*above, node))
+
+
+def test_incremental_phash_dedup_corpus_scanned_and_shuffled_once(spark, monkeypatch):
+    """The 10^12-corpus property, pinned on the pair graph's plan (the
+    edges handed to connected_components; the final plan reads its
+    checkpoint): the corpus is scanned once, shuffled once — by the
+    exact-dup groupBy on ph — and meets the batch only on the streamed
+    side of one broadcast join, so it never self-joins."""
     corpus = spark.range(0, 5000).selectExpr(
         "concat('c', id) as image_id", "id * 37 as phash"
     )
     batch = spark.range(0, 50).selectExpr(
         "concat('b', id) as image_id", "id * 37 as phash"
     )
-    pairs_plan = (
-        dedup.incremental_phash_dedup(batch, corpus)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in pairs_plan
+    edges = []
+    real_cc = dedup.connected_components
+
+    def recording(e, *a, **k):
+        edges.append(e)
+        return real_cc(e, *a, **k)
+
+    monkeypatch.setattr(dedup, "connected_components", recording)
+    dedup.incremental_phash_dedup(batch, corpus)
+    # AQE's initial plan: the physical plan with its exchanges placed
+    plan = edges[0]._jdf.queryExecution().executedPlan().initialPlan()
+    scans = [
+        above for leaf, above in _leaf_paths(plan)
+        if leaf.simpleString(10).startswith("Range (0, 5000,")
+    ]
+    assert len(scans) == 1, scans
+    shape = [
+        n.simpleString(10) for n in scans[0]
+        if "Join" in n.nodeName() or "Exchange" in n.nodeName()
+    ]
+    # no BroadcastExchange above the scan: the corpus is the streamed side
+    assert len(shape) == 2, shape
+    assert shape[0].startswith("BroadcastHashJoin "), shape
+    assert shape[1].startswith("Exchange hashpartitioning(ph#"), shape
     # bridge across two corpus keepers resolves to the smaller corpus id
     c2 = spark.createDataFrame(
         [("ca", 0x00FF), ("cb", 0x03FF)], "image_id string, phash long"

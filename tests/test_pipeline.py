@@ -7,12 +7,14 @@ skip-if-output-exists (midway/midway_blocks.py:31).
 """
 
 import os
+import threading
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from prclz_spark import pipeline
+from prclz_spark.operators import dedup
 from prclz_spark.sources.tablestore import TableStore
 from spark_jobs import jobs_in_group
 
@@ -446,3 +448,93 @@ def test_pipeline_fresh_run_jobs_flat_in_blocks(spark, tmp_path):
     # no images: no stage has input, and every stage still reports a count
     empty = pipeline.run_pipeline(spark, str(tmp_path / "wh0"), n_images=0, grid_g=2)
     assert empty == zero, empty
+
+
+def _no_active_jobs(spark):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getActiveJobsIds()) == []
+
+
+@pytest.mark.slow
+def test_pipeline_keep_list_error_raised(spark, tmp_path, monkeypatch):
+    """An error building the keep-list on its driver thread is raised again
+    by run_pipeline on the caller's thread: no manifest is committed and no
+    Spark job is left running."""
+
+    def broken(img):
+        raise RuntimeError("keep-list failed")
+
+    monkeypatch.setattr(dedup, "phash_clusters", broken)
+    root = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="keep-list failed"):
+        pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
+    assert TableStore(root).latest_snapshot_id("manifest") is None
+    assert _no_active_jobs(spark)
+
+
+@pytest.mark.slow
+def test_pipeline_killed_assign_joins_keep_list(
+    spark, tmp_path, monkeypatch, clean_pipeline
+):
+    """A kill in the assign commit while the keep-list thread is still
+    building: run_pipeline joins the thread before it raises, so no Spark
+    job is active and no thread is left live, and the re-run gives tables
+    identical to an uninterrupted run with no orphaned files."""
+    started, killed = threading.Event(), threading.Event()
+    real = dedup.phash_clusters
+
+    def held(img):
+        started.set()
+        assert killed.wait(120)
+        return real(img)
+
+    def on_phase(self, t, p):
+        if (t, p) == ("assign", "staged"):
+            assert started.wait(120)
+            killed.set()
+            raise _Killed("assign:staged")
+
+    monkeypatch.setattr(dedup, "phash_clusters", held)
+    monkeypatch.setattr(TableStore, "_on_phase", on_phase)
+    root = str(tmp_path / "wh")
+    before = set(threading.enumerate())
+    with pytest.raises(_Killed):
+        pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
+    assert set(threading.enumerate()) <= before
+    assert _no_active_jobs(spark)
+    monkeypatch.undo()
+    out = pipeline.run_pipeline(spark, root, n_images=400, grid_g=2)
+    assert out["assign"] == out["manifest"] == 400
+    got = _pipeline_tables(spark, root)
+    for t in _RESUME_TABLES:
+        pd.testing.assert_frame_equal(got[t], clean_pipeline[t], obj=t)
+    assert _store_leftovers(root) == []
+
+
+def test_pipeline_no_images_joins_keep_list(spark, tmp_path, monkeypatch):
+    """With no images the keep-list thread still starts (the manifest has
+    no lineage marker) and run_pipeline joins it on the early return,
+    though the thread only begins its build after stage 1 found no
+    assign table: every count is 0 and no thread is left live."""
+    calls, read_done = [], threading.Event()
+    real_clusters, real_read = dedup.phash_clusters, TableStore.read
+
+    def held(img):
+        calls.append(threading.current_thread())
+        assert read_done.wait(120)
+        return real_clusters(img)
+
+    def read(self, *a, **k):
+        out = real_read(self, *a, **k)
+        read_done.set()
+        return out
+
+    monkeypatch.setattr(dedup, "phash_clusters", held)
+    monkeypatch.setattr(TableStore, "read", read)
+    before = set(threading.enumerate())
+    out = pipeline.run_pipeline(spark, str(tmp_path / "wh"), n_images=0, grid_g=2)
+    assert out == dict.fromkeys(pipeline.STAGE_TABLES, 0)
+    assert len(calls) == 1 and calls[0] is not threading.current_thread()
+    assert not calls[0].is_alive()
+    assert set(threading.enumerate()) <= before

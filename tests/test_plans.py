@@ -448,7 +448,7 @@ def test_manifest_plan_single_python_eval(spark, cover):
     are inlined Column arithmetic and the PIP refine is a JVM ray cast —
     no Python eval in the plan at all, and the cover join stays
     broadcast."""
-    from prclz_spark.operators import curation
+    from prclz_spark.operators import curation, dedup
 
     img = (
         _points(spark, 5_000)
@@ -459,7 +459,9 @@ def test_manifest_plan_single_python_eval(spark, cover):
         .withColumn("phash", F.xxhash64(F.col("image_id").cast("string")))
     )
     assigned = assign.assign_points_to_blocks(img, cover, 15)
-    out = curation.training_manifest(img, assigned, idnum=F.col("image_id"))
+    out = curation.training_manifest(
+        dedup.phash_clusters(img), assigned, idnum=F.col("image_id")
+    )
     p = _plan(out)
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     assert "BroadcastHashJoin" in p
