@@ -8,7 +8,7 @@ DataFrame operators:
   pruning, spatial equi-joins and kNN (SQL-reproducible floor arithmetic).
 - Point-in-polygon assignment of geo-tagged image records to street blocks
   (``operators.assign``) — two-stage: cell equi-join prefilter + exact
-  Arrow-vectorized ray-cast refinement.
+  ray-cast refinement as JVM Column arithmetic (``geomcols.ring_contains``).
 - Street-block extraction by road-arrangement polygonization
   (``operators.blocks``).
 - Voronoi parcel decomposition + weak-dual k-complexity

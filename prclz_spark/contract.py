@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import pipeline
 from .functions import cells, geodesy
 from .operators import (
     assign,
@@ -1220,35 +1221,16 @@ def _sql_evt_window_agg(sf_dir):
 
 def _q_evt_block_hourly(spark, sf_dir):
     """Spatio-temporal rollup: which street blocks are active when —
-    events PIP-assigned to blocks x 1-hour event-time buckets (the
-    hotspot-monitoring composition of J1 with the hourly window agg).
-    The block_id comes from the committed assign table (stage-commit
-    reuse, shared with spatial_parcel_assign) joined back to the fact
-    row by event_id; at production scale both sides live in the
-    bucketed TableStore keyed on event_id (commit_bucketed /
-    read_bucketed), so the join is exchange-free and the only shuffle
-    is the final (block_id, hour) aggregation — whose key count is
-    bounded by blocks x hours, not by the fact row count. That
-    production shape is demonstrated, not just promised:
-    pipeline.run_events_rollup commits both sides co-bucketed and
-    tests/test_bucketed.py pins the zero-Exchange SortMergeJoin +
-    single aggregation Exchange, row-identical to this query's plan."""
-    ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    assigned = _assigned_events_cached(spark, sf_dir).select(
-        "event_id", "block_id"
-    )
-    return (
-        ev.join(assigned, "event_id")
-        .groupBy(
-            "block_id",
-            F.date_trunc("hour", F.col("ts")).alias("hour_bucket"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
+    events PIP-assigned to blocks x 1-hour event-time buckets
+    (pipeline.block_hourly_rollup). The block_id comes from the
+    committed assign table (stage-commit reuse, shared with
+    spatial_parcel_assign) joined back to the fact row by event_id; at
+    production scale both sides live in the bucketed TableStore keyed on
+    event_id (pipeline.run_events_rollup), so the join is exchange-free
+    and the only shuffle is the final (block_id, hour) aggregation —
+    pinned in tests/test_bucketed.py."""
+    return pipeline.block_hourly_rollup(
+        _t(spark, sf_dir, "events"), _assigned_events_cached(spark, sf_dir)
     )
 
 
@@ -1324,14 +1306,12 @@ SESSION_GAP_MIN = 30
 def _q_evt_sessionize(spark, sf_dir):
     """Sessionization (the canonical stateful-streaming semantics in batch
     form): per user, a new session starts when the gap to the previous
-    event exceeds 30 minutes; lag + running-sum window minting. The
-    streaming twin (streaming/stateful.py, applyInPandasWithState) is
-    pinned equal to this result by pytest.
+    event exceeds 30 minutes; lag + running-sum window minting.
 
-    The gap compares INTEGER MICROSECONDS on all three implementations
-    (unix_micros here, epoch_us in DuckDB, pandas .value//1000 in the
-    stateful kernel) — second-truncated or fractional-double gaps would
-    split sessions differently on sub-second timestamps."""
+    The gap compares INTEGER MICROSECONDS on both implementations
+    (unix_micros here, epoch_us in DuckDB) — second-truncated or
+    fractional-double gaps would split sessions differently on sub-second
+    timestamps."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))

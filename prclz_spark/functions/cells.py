@@ -267,10 +267,10 @@ def cover_cells_classified(ring: np.ndarray, res: int) -> tuple[np.ndarray, np.n
 # Cover compaction (H3 compact_cells / uncompact_cells analog)
 # ---------------------------------------------------------------------------
 
-def compact_cells(cells_df, res: int, res_min: int, cell_col: str = "cell"):
+def compact_cells(cells_df, res: int, res_min: int):
     """H3 ``compact_cells`` analog over the quadtree index: replace every
     complete 4-sibling group by its parent, repeatedly, until ``res_min``.
-    Input: a DataFrame whose ``cell_col`` holds cell ids at uniform ``res``
+    Input: a DataFrame whose ``cell`` column holds ids at uniform ``res``
     (duplicates tolerated — the set is distinct-ed first). Output: one
     ``cell`` column, mixed resolutions in [res_min, res], covering exactly
     the same area (disjoint by construction: a parent is emitted only when
@@ -294,13 +294,13 @@ def compact_cells(cells_df, res: int, res_min: int, cell_col: str = "cell"):
     # silently collide with a legit parent key, wrongly completing a
     # 4-sibling promotion — raise instead.
     checked = F.when(
-        F.expr(f"{cell_col} div {RES_BITS_SHIFT}") == F.lit(res),
-        F.col(cell_col),
+        F.expr(f"cell div {RES_BITS_SHIFT}") == F.lit(res),
+        F.col("cell"),
     ).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(f"compact_cells: input cell not at res={res}: "),
-                F.col(cell_col).cast("string"),
+                F.col("cell").cast("string"),
             )
         )
     )
@@ -332,35 +332,32 @@ def compact_cells(cells_df, res: int, res_min: int, cell_col: str = "cell"):
     return out
 
 
-def uncompact_cells(
-    cells_df, res: int, cell_col: str = "cell", dedup: bool = False
-):
+def uncompact_cells(cells_df, res: int):
     """Inverse of :func:`compact_cells`: expand every (possibly coarse)
-    cell to all its descendant cells at ``res``. Fan-out per row is
+    ``cell`` to all its descendant cells at ``res``. Fan-out per row is
     4^(res - r) (r = the row's own resolution, read from the id's high
     bits with exact integer division — the ids exceed 2^53 so float
     division would corrupt them); one Generate, all arithmetic in
-    whole-stage codegen, and NO shuffle by default: compact_cells output
-    is pairwise disjoint, so children are unique by construction. Pass
-    ``dedup=True`` only for inputs that may overlap (one hash Exchange
-    over the expanded frame). A row finer than ``res`` raises at
+    whole-stage codegen, and NO shuffle: compact_cells output is pairwise
+    disjoint, so children are unique by construction (overlapping input
+    cells give duplicate children). A row finer than ``res`` raises at
     execution (a negative shift would otherwise silently emit garbage —
     Java masks shift counts to the low 6 bits)."""
     assert 0 <= res <= MAX_RES
-    r = F.expr(f"{cell_col} div {RES_BITS_SHIFT}")
-    rem = F.col(cell_col) - r * F.lit(RES_BITS_SHIFT)
-    cx = F.expr(f"({cell_col} % {RES_BITS_SHIFT}) div {XY_SHIFT}")
+    r = F.expr(f"cell div {RES_BITS_SHIFT}")
+    rem = F.col("cell") - r * F.lit(RES_BITS_SHIFT)
+    cx = F.expr(f"(cell % {RES_BITS_SHIFT}) div {XY_SHIFT}")
     cy = rem % F.lit(XY_SHIFT)
     s = F.when(
         r <= F.lit(res),
         F.expr(
-            f"shiftleft(1L, cast({res} - {cell_col} div {RES_BITS_SHIFT} as int))"
+            f"shiftleft(1L, cast({res} - cell div {RES_BITS_SHIFT} as int))"
         ),
     ).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(f"uncompact_cells: input cell finer than res={res}: "),
-                F.col(cell_col).cast("string"),
+                F.col("cell").cast("string"),
             )
         )
     )
@@ -375,8 +372,7 @@ def uncompact_cells(
         + (F.col("_bx") + F.expr("_i div _s")) * F.lit(XY_SHIFT)
         + (F.col("_by") + F.col("_i") % F.col("_s"))
     )
-    out = df.select(child.cast("long").alias("cell"))
-    return out.distinct() if dedup else out
+    return df.select(child.cast("long").alias("cell"))
 
 
 def _parent_sql(cell_expr: str, r: int) -> str:

@@ -17,11 +17,11 @@ import numpy as np
 SNAP = 1e-9  # ~0.1mm in degrees
 
 
-def snap_ring(ring: np.ndarray, snap: float = SNAP) -> np.ndarray:
-    """Round coordinates to a fixed grid so vertices computed through
+def snap_ring(ring: np.ndarray) -> np.ndarray:
+    """Round coordinates to the ``SNAP`` grid so vertices computed through
     different float paths (e.g. the shared edge of two independently
     clipped Voronoi cells) coincide exactly and graph nodes merge."""
-    return np.round(np.asarray(ring, dtype=float) / snap) * snap
+    return np.round(np.asarray(ring, dtype=float) / SNAP) * SNAP
 
 
 def ring_to_np(val) -> np.ndarray:
@@ -565,76 +565,6 @@ def rect_polygon_overlap_area(
     if len(clipped) < 3:
         return 0.0
     return ring_area(clipped)
-
-
-def rect_intersects_polygon(
-    x0: float, y0: float, x1: float, y1: float, ring: np.ndarray
-) -> bool:
-    """Exact rectangle/polygon intersection predicate (cell covers)."""
-    if ring.shape[0] >= 2 and np.array_equal(ring[0], ring[-1]):
-        ring = ring[:-1]
-    # bbox reject
-    if ring[:, 0].max() < x0 or ring[:, 0].min() > x1:
-        return False
-    if ring[:, 1].max() < y0 or ring[:, 1].min() > y1:
-        return False
-    # any polygon vertex in rect
-    inside_rect = (
-        (ring[:, 0] >= x0) & (ring[:, 0] <= x1)
-        & (ring[:, 1] >= y0) & (ring[:, 1] <= y1)
-    )
-    if inside_rect.any():
-        return True
-    # any rect corner in polygon
-    corners = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
-    if points_in_polygon(corners[:, 0], corners[:, 1], ring).any():
-        return True
-    # any edge pair intersects
-    rect_edges = np.array(
-        [[[x0, y0], [x1, y0]], [[x1, y0], [x1, y1]],
-         [[x1, y1], [x0, y1]], [[x0, y1], [x0, y0]]]
-    )
-    poly_edges = np.stack([ring, np.roll(ring, -1, axis=0)], axis=1)
-    for re_ in rect_edges:
-        if segments_intersect_any(re_[0], re_[1], poly_edges):
-            return True
-    return False
-
-
-def segments_intersect_any(p: np.ndarray, q: np.ndarray, segs: np.ndarray) -> bool:
-    """True if segment pq intersects any of (m,2,2) ``segs`` (proper or
-    touching), vectorized orientation tests."""
-    a, b = segs[:, 0], segs[:, 1]
-
-    def orient(o, d, pts):
-        return (d[..., 0] - o[..., 0]) * (pts[..., 1] - o[..., 1]) - (
-            d[..., 1] - o[..., 1]
-        ) * (pts[..., 0] - o[..., 0])
-
-    d1 = orient(p[None, :], q[None, :], a)
-    d2 = orient(p[None, :], q[None, :], b)
-    d3 = orient(a, b, np.broadcast_to(p, a.shape))
-    d4 = orient(a, b, np.broadcast_to(q, a.shape))
-    proper = ((d1 * d2) < 0) & ((d3 * d4) < 0)
-    if proper.any():
-        return True
-
-    def on_seg(o, d, pts, dv):
-        return (
-            (np.abs(dv) < 1e-12)
-            & (pts[..., 0] >= np.minimum(o[..., 0], d[..., 0]) - 1e-12)
-            & (pts[..., 0] <= np.maximum(o[..., 0], d[..., 0]) + 1e-12)
-            & (pts[..., 1] >= np.minimum(o[..., 1], d[..., 1]) - 1e-12)
-            & (pts[..., 1] <= np.maximum(o[..., 1], d[..., 1]) + 1e-12)
-        )
-
-    touch = (
-        on_seg(p[None, :], q[None, :], a, d1)
-        | on_seg(p[None, :], q[None, :], b, d2)
-        | on_seg(a, b, np.broadcast_to(p, a.shape), d3)
-        | on_seg(a, b, np.broadcast_to(q, a.shape), d4)
-    )
-    return bool(touch.any())
 
 
 # ---------------------------------------------------------------------------

@@ -30,16 +30,11 @@ def open_ring(g: Column) -> Column:
     return F.when(closed, F.slice(g, 1, F.size(g) - 1)).otherwise(g)
 
 
-def with_ring_centroid(
-    df: DataFrame,
-    geometry_col: str = "geometry",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Append shoelace-centroid ``lon_col``/``lat_col`` for an
-    array<array<double>> ring column — pure Column arithmetic."""
-    g0 = F.col(geometry_col)
-    df = df.withColumn("__ring", open_ring(g0))
+def with_ring_centroid(df: DataFrame) -> DataFrame:
+    """Append shoelace-centroid ``lon``/``lat`` columns for the
+    array<array<double>> ring column ``geometry`` — pure Column
+    arithmetic."""
+    df = df.withColumn("__ring", open_ring(F.col("geometry")))
     ring = F.col("__ring")
     # materialize the successor array so zip_with reads real columns
     df = df.withColumn(
@@ -77,13 +72,13 @@ def with_ring_centroid(
     df = (
         df.withColumn("__a2", a2)
         .withColumn(
-            lon_col,
+            "lon",
             F.when(F.abs(F.col("__a2")) < 0.02, mean_x).otherwise(
                 sx / (F.lit(3.0) * F.col("__a2"))
             ),
         )
         .withColumn(
-            lat_col,
+            "lat",
             F.when(F.abs(F.col("__a2")) < 0.02, mean_y).otherwise(
                 sy / (F.lit(3.0) * F.col("__a2"))
             ),

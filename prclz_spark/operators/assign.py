@@ -134,11 +134,11 @@ def _cover_frame(spark, cover_pdf: pd.DataFrame) -> DataFrame:
     return F.broadcast(spark.createDataFrame(tbl))
 
 
-def _refine(cand: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
+def _refine(cand: DataFrame) -> DataFrame:
     """The single exact filter over (point, cover row) candidates: an
     interior cell assigns outright, a boundary cell by the ray cast over
     its edge list."""
-    inside = geomcols.ring_contains(F.col("edges"), F.col(lon_col), F.col(lat_col))
+    inside = geomcols.ring_contains(F.col("edges"), F.col("lon"), F.col("lat"))
     return cand.filter(F.col("interior") | inside).drop("cell", "interior", "edges")
 
 
@@ -150,15 +150,13 @@ def assign_points_to_blocks(
     points: DataFrame,
     cover,
     res: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     salt: int = 0,
 ) -> DataFrame:
     """Assign each point row its containing block_id: the points inside
     some block, each with its block_id (sjoin op='within').
 
-    ``points``: any DataFrame with lon/lat columns. ``cover``: the exploded
-    (cell, block_id, geometry[, interior]) dimension — a *pandas* DataFrame
+    ``points``: any DataFrame with ``lon``/``lat`` columns. ``cover``: the
+    exploded (cell, block_id, geometry[, interior]) dimension — a *pandas* DataFrame
     (block_cover_pdf) takes the small-dimension fast path (the broadcast
     carries per-cell edge lists, never whole rings), a Spark DataFrame
     takes the distributed path (no broadcast hint: a shuffle join, unless
@@ -169,20 +167,20 @@ def assign_points_to_blocks(
     across `salt` tasks in the shuffle-join path.
     """
     if isinstance(cover, pd.DataFrame):
-        return _assign_small_cover(points, cover, res, lon_col, lat_col)
-    return _assign_dist_cover(points, cover, res, lon_col, lat_col, salt)
+        return _assign_small_cover(points, cover, res)
+    return _assign_dist_cover(points, cover, res, salt)
 
 
 def _assign_small_cover(
-    points: DataFrame, cover_pdf: pd.DataFrame, res: int, lon_col: str, lat_col: str
+    points: DataFrame, cover_pdf: pd.DataFrame, res: int
 ) -> DataFrame:
     """Small-dimension path: one broadcast equi-join on the point's cell,
     then one filter (_refine). Interior-cell candidates pass on the flag
     alone; boundary-cell ones by the JVM ray cast over the cell's edge
     list. The points are scanned once and no Python worker starts."""
-    pt = points.withColumn("cell", cells.cell_id(F.col(lon_col), F.col(lat_col), res))
+    pt = points.withColumn("cell", cells.cell_id(F.col("lon"), F.col("lat"), res))
     cand = pt.join(_cover_frame(points.sparkSession, cover_pdf), on="cell", how="inner")
-    return _refine(cand, lon_col, lat_col)
+    return _refine(cand)
 
 
 def compact_cover_pdf(
@@ -219,8 +217,6 @@ def assign_points_to_blocks_compact(
     cover_pdf: pd.DataFrame,
     res: int,
     res_min: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
 ) -> DataFrame:
     """The H3 production shape of the two-stage PIP join: polyfill →
     compact → join the point's ANCESTOR-CELL ARRAY against the compacted
@@ -245,13 +241,13 @@ def assign_points_to_blocks_compact(
     comp = compact_cover_pdf(cover_pdf, res, res_min)
     ancestors = F.array(
         *[
-            cells.cell_id(F.col(lon_col), F.col(lat_col), r)
+            cells.cell_id(F.col("lon"), F.col("lat"), r)
             for r in range(res, res_min - 1, -1)
         ]
     )
     pt = points.withColumn("cell", F.explode(ancestors))
     cand = pt.join(_cover_frame(points.sparkSession, comp), on="cell", how="inner")
-    return _refine(cand, lon_col, lat_col)
+    return _refine(cand)
 
 
 def _cover_edges(cover: DataFrame) -> DataFrame:
@@ -289,25 +285,23 @@ def _assign_dist_cover(
     points: DataFrame,
     cover: DataFrame,
     res: int,
-    lon_col: str,
-    lat_col: str,
     salt: int,
 ) -> DataFrame:
     """Distributed-cover path (large polygon dimension): each cover row
     carries its cell-local edge list (_cover_edges) across the join in
     place of the geometry; optional salting spreads hot cells."""
-    pt = points.withColumn("cell", cells.cell_id(F.col(lon_col), F.col(lat_col), res))
+    pt = points.withColumn("cell", cells.cell_id(F.col("lon"), F.col("lat"), res))
     cov = _cover_edges(cover)
     if salt > 0:
         cov = cov.withColumn(
             "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
         )
-        pt = pt.withColumn("__salt", F.pmod(F.xxhash64(F.col(lon_col)), F.lit(salt)))
+        pt = pt.withColumn("__salt", F.pmod(F.xxhash64(F.col("lon")), F.lit(salt)))
         join_keys = ["cell", "__salt"]
     else:
         join_keys = ["cell"]
     cand = pt.join(cov, on=join_keys, how="inner")
-    return _refine(cand, lon_col, lat_col).drop("__salt")
+    return _refine(cand).drop("__salt")
 
 
 def largest_overlap_assign(
@@ -315,7 +309,6 @@ def largest_overlap_assign(
     cover: DataFrame,
     res: int,
     feature_id: str = "osm_id",
-    geometry_col: str = "geometry",
     block_geoms: DataFrame | None = None,
 ) -> DataFrame:
     """J5 (midway_parcelization.R:116 `st_join(..., largest=TRUE)`): assign
@@ -333,9 +326,7 @@ def largest_overlap_assign(
     # centroid is pure Column arithmetic (geomcols) — the former
     # mapInPandas stage paid ~9 s / 20k rows in nested-array Arrow
     # round-trips before any work happened
-    feats = geomcols.with_ring_centroid(
-        features.select(feature_id, F.col(geometry_col).alias("geometry"))
-    )
+    feats = geomcols.with_ring_centroid(features.select(feature_id, "geometry"))
     # bound form: the centroid columns are big HOF trees the optimizer
     # inlines into every kring site — the plain form re-evaluates them
     # ~2*(2k+1)^2 times per row (measured 10 s/20k rows at sf0.1)

@@ -7,21 +7,23 @@ The distributed analog (SURVEY.md §2.3 J10, north_star "H3-kNN for
 nearest-parcel queries"):
 
 1. targets are indexed by cell at ``res`` (cell, target_id, tx, ty);
-2. each point explodes to its kRing(r) cells and equi-joins the index;
+2. each point explodes to its kRing-1 cells (the 3×3 block around its
+   cell) and equi-joins the index;
 3. per point, ``min_by(distance)`` picks the winner;
-4. points whose winner is not provably exact within ring r (the analog of
-   the reference's x2 buffer growth) fall through to the next (coarser)
-   resolution level, and the final residue to one brute-force pass;
+4. points whose winner is not provably exact within the kRing-1 block
+   (the analog of the reference's x2 buffer growth) fall through to the
+   next (coarser) resolution level, and the final residue to one
+   brute-force pass;
 5. a point that falls through carries its winner's distance as ``__ub``,
    and every later argmin drops candidates beyond it before grouping
    (:func:`within_bound`) — like the reference, a wider search only
    looks for targets closer than the best one already found.
 
-Guarantee: a ring-r winner is only accepted when its distance <= r * cell
-edge (otherwise a nearer target could hide in ring r+1) — this makes the
-result exact, not approximate, at every cascade level. The bound keeps it
-exact: ``__ub`` is a real target's distance, so the true nearest target
-and every target tied with it pass ``d <= __ub``.
+Guarantee: a winner is only accepted when its distance <= one cell edge
+(otherwise a nearer target could hide outside the 3×3 block) — this
+makes the result exact, not approximate, at every cascade level. The
+bound keeps it exact: ``__ub`` is a real target's distance, so the true
+nearest target and every target tied with it pass ``d <= __ub``.
 """
 
 from __future__ import annotations
@@ -48,29 +50,22 @@ def within_bound(d: Column) -> Column:
     return ub.isNull() | (d <= ub)
 
 
-def _terminal_res(ring: int) -> int:
-    """Coarsest useful level: at res r with 2^r <= ring + 1 the CLAMPED
-    kRing window [max(0, c-ring), min(2^r - 1, c+ring)] spans the whole
-    grid from EVERY center cell (worst case c at an edge needs
-    ring >= 2^r - 1), so the candidate join is COMPLETE (every target is
-    a candidate for every point) and a level there may accept its argmin
-    unconditionally. NOT 2*ring+1: that only covers from a centered cell
-    — an edge point's clamped window would miss the far column and the
-    terminal level would accept a non-global argmin (or drop the point
-    when all targets sit in masked cells)."""
-    r = 0
-    while (1 << (r + 1)) <= ring + 1:
-        r += 1
-    return r
+# Coarsest useful level: at res 1 the grid is 2×2, and the CLAMPED
+# kRing-1 window [max(0, c-1), min(1, c+1)] spans all of it from EVERY
+# cell, so the candidate join is COMPLETE (every target is a candidate for
+# every point) and a level there may accept its argmin unconditionally.
+# Res 2 would not do: an edge cell's window misses the far column of its
+# 4×4 grid, so the level would accept a non-global argmin.
+_TERMINAL_RES = 1
 
 
-def _extend_levels(levels: list[int], ring: int) -> tuple[list[int], int]:
+def _extend_levels(levels: list[int]) -> tuple[list[int], int]:
     """Append coarser levels (geometric, step 3 = 8x cell growth) down to
     the terminal resolution, so the cascade residue is empty BY
     CONSTRUCTION and no brute pass is needed. Returns (levels, terminal):
-    every level above ``terminal`` accepts ring-guaranteed winners only;
+    every level above ``terminal`` accepts kRing-guaranteed winners only;
     the terminal level's candidate set is complete, so it accepts all."""
-    term = _terminal_res(ring)
+    term = _TERMINAL_RES
     if levels[-1] <= term:
         # the caller's coarsest level already spans the grid
         return levels, levels[-1]
@@ -86,7 +81,6 @@ def cascade(
     points_narrow: DataFrame,
     keys: str | list[str],
     levels: list[int],
-    ring: int,
     make_candidates: Callable[[DataFrame, int], DataFrame],
     argmin: Callable[[DataFrame], DataFrame],
     make_brute: Callable[[DataFrame], DataFrame] | None = None,
@@ -108,9 +102,9 @@ def cascade(
     urban hotspot (30% of points and targets in 1.5% of area) explodes
     the candidate join quadratically (measured 45.6M candidate rows for
     100k points / 4k anchors at res 14; a [17, 14] cascade cuts that
-    ~50x). A level ACCEPTS winners whose distance <= ring * cell height
-    (any unseen target lies outside the kRing, hence farther), so every
-    cascade is exact; survivors fall through, the residue goes brute.
+    ~50x). A level ACCEPTS winners whose distance <= one cell height
+    (any unseen target lies outside the kRing-1 block, hence farther), so
+    every cascade is exact; survivors fall through, the residue goes brute.
 
     The residue carries ``__ub`` (null before the first level): after
     each non-terminal level it is rebuilt by a ``left`` join of the
@@ -143,12 +137,12 @@ def cascade(
     fact-sized-target shape: a non-empty residue through ``make_brute``
     would otherwise be a true cartesian — the residue is instead drained
     by equi-joins whose per-point fan-out is output-sensitive (a point
-    surviving to level r had no target within ring·cell_h(r+3), so its
+    surviving to level r had no target within cell_h(r+3), so its
     r-window holds ~the targets within twice its true NN distance).
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     # fine -> coarse is load-bearing for the skew defense: [14, 17] stays
-    # EXACT (every level's accept is ring-guaranteed) but runs the coarse
+    # EXACT (every level's accept is kRing-guaranteed) but runs the coarse
     # hotspot join first — silently reintroducing the quadratic candidate
     # explosion the cascade exists to kill. Fail loudly instead.
     assert all(0 <= r <= cells.MAX_RES for r in levels), levels
@@ -157,13 +151,13 @@ def cascade(
     ) == len(levels), f"cascade levels must be strictly fine->coarse: {levels}"
     terminal = None
     if exhaustive:
-        levels, terminal = _extend_levels(list(levels), ring)
+        levels, terminal = _extend_levels(list(levels))
     remaining = points_narrow.withColumn("__ub", F.lit(None).cast("double"))
     resolved: list[DataFrame] = []
     for r in levels:
-        # guarantee radius in degrees: a ring-k winner is exact when its
-        # distance <= k * (lat cell height) — the tightest escape distance
-        # out of the (2k+1)^2 block (lon cells are 2x wider: conservative)
+        # guarantee radius in degrees: a winner is exact when its
+        # distance <= one lat cell height — the tightest escape distance
+        # out of the 3×3 block (lon cells are 2x wider: conservative)
         cell_h = 180.0 / (1 << r)
         best = argmin(make_candidates(remaining, r)).localCheckpoint(eager=False)
         if r == terminal:
@@ -171,10 +165,10 @@ def cascade(
             resolved.append(best)
             remaining = None
             break
-        bound = F.lit(ring * cell_h)
+        bound = F.lit(cell_h)
         resolved.append(best.filter(F.col("nn_dist") <= bound))
         # the residue is every point NOT accepted: no winner at this level
-        # (null __bd), or one beyond the ring guarantee. It keeps the
+        # (null __bd), or one beyond the kRing guarantee. It keeps the
         # tightest distance seen so far as its bound for the next level
         bd = F.col("__bd")
         remaining = (
@@ -212,12 +206,10 @@ def knn_join(
     res: int | list[int],
     point_id: str | None = None,
     target_id: str = "target_id",
-    ring: int = 1,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     broadcast_targets: bool = True,
 ) -> DataFrame:
-    """Nearest ``targets`` row (tx, ty) for every ``points`` row.
+    """Nearest ``targets`` row (tx, ty) for every ``points`` row (lon,
+    lat).
 
     Output: (point columns..., target_id, nn_dist). Exact nearest
     neighbor via :func:`cascade`; ``res`` may be a fine -> coarse
@@ -240,7 +232,7 @@ def knn_join(
     # final re-attach — truncate once so it executes once
     points = points.localCheckpoint(eager=False)
 
-    d2 = _dist2(F.col(lon_col), F.col(lat_col), F.col("tx"), F.col("ty"))
+    d2 = _dist2(F.col("lon"), F.col("lat"), F.col("tx"), F.col("ty"))
     # tie-break: equidistant targets resolve to the LOWER target id (the
     # struct orders field-wise), matching SQL's `order by d2, target_id`
     order_key = F.struct(d2.alias("d"), F.col(target_id).alias("t"))
@@ -259,7 +251,7 @@ def knn_join(
             tgt_r = F.broadcast(tgt_r)
         return remaining.withColumn(
             "__cell",
-            F.explode(cells.kring_cells(F.col(lon_col), F.col(lat_col), r, ring)),
+            F.explode(cells.kring_cells(F.col("lon"), F.col("lat"), r, 1)),
         ).join(tgt_r, F.col("__cell") == F.col("__tcell"), "inner")
 
     def make_brute(remaining: DataFrame) -> DataFrame:
@@ -271,8 +263,8 @@ def knn_join(
         return remaining.crossJoin(F.broadcast(targets))
 
     out = cascade(
-        points.select(pid, lon_col, lat_col),
-        pid, levels, ring, make_candidates, argmin, make_brute,
+        points.select(pid, "lon", "lat"),
+        pid, levels, make_candidates, argmin, make_brute,
         exhaustive=not broadcast_targets,
     )
     return points.join(out, on=pid)
@@ -283,9 +275,6 @@ def parcel_assign(
     anchors: DataFrame,
     res: int | list[int],
     point_id: str,
-    anchor_id: str = "anchor_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
 ) -> DataFrame:
     """Voronoi-parcel membership for a second point set: each point's
     parcel is the Voronoi cell of the nearest anchor WITHIN the point's
@@ -308,10 +297,10 @@ def parcel_assign(
     # feeds both the level-1 candidate join and the final re-attach —
     # truncate once so it executes once
     points = points.localCheckpoint(eager=False)
-    d2 = _dist2(F.col(lon_col), F.col(lat_col), F.col("ax"), F.col("ay"))
+    d2 = _dist2(F.col("lon"), F.col("lat"), F.col("ax"), F.col("ay"))
     order_key = F.struct(d2.alias("d"), F.col("__aid").alias("t"))
     a_base = anchors.select(
-        F.col(anchor_id).alias("__aid"),
+        F.col("anchor_id").alias("__aid"),
         F.col("block_id").alias("__ablock"),
         "ax",
         "ay",
@@ -319,7 +308,7 @@ def parcel_assign(
 
     def argmin(cand: DataFrame) -> DataFrame:
         return cand.filter(within_bound(F.sqrt(d2))).groupBy(point_id).agg(
-            F.min_by(F.col("__aid"), order_key).alias(anchor_id),
+            F.min_by(F.col("__aid"), order_key).alias("anchor_id"),
             F.sqrt(F.min(d2)).alias("nn_dist"),
         )
 
@@ -329,7 +318,7 @@ def parcel_assign(
         ))
         return remaining.withColumn(
             "__cell",
-            F.explode(cells.kring_cells(F.col(lon_col), F.col(lat_col), r, 1)),
+            F.explode(cells.kring_cells(F.col("lon"), F.col("lat"), r, 1)),
         ).join(
             a_r,
             (F.col("__cell") == F.col("__acell"))
@@ -343,7 +332,7 @@ def parcel_assign(
         )
 
     out = cascade(
-        points.select(point_id, "block_id", lon_col, lat_col),
-        point_id, levels, 1, make_candidates, argmin, make_brute,
+        points.select(point_id, "block_id", "lon", "lat"),
+        point_id, levels, make_candidates, argmin, make_brute,
     )
     return points.join(out, point_id)

@@ -326,13 +326,3 @@ def parcelize_footprints(
         assigned_points, ["block_id", "image_id", "lon", "lat"], blocks, kernel,
         FOOTPRINT_PARCELS_SCHEMA,
     )
-
-
-def parcel_stats(parcels: DataFrame) -> DataFrame:
-    """Per-block parcel summary (count + area checks): the area sum of a
-    block's parcels equals the block area — the partition-of-unity
-    invariant pinned in tests."""
-    return parcels.groupBy("block_id").agg(
-        F.count("*").alias("n_parcels"),
-        F.sum("area").alias("total_area"),
-    )

@@ -201,11 +201,9 @@ def nearest_segment_join_distributed(
     segments: DataFrame,
     res: int | list[int],
     point_id: str | None = None,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
 ) -> DataFrame:
-    """Exact nearest segment of every point: (point columns..., seg_id,
-    road_dist), distance ties broken to the lowest seg_id. ``segments``
+    """Exact nearest segment of every point (lon, lat): (point columns...,
+    seg_id, road_dist), distance ties broken to the lowest seg_id. ``segments``
     is (seg_id, ax, ay, bx, by); it is never broadcast, so it may be
     fact-sized. ``res`` is the first cascade level or a fine -> coarse
     level list; see :func:`_nearest_segments`."""
@@ -214,10 +212,9 @@ def nearest_segment_join_distributed(
     # the caller's upstream plan feeds the first candidate join AND the
     # final re-attach — truncate once so it executes once
     points = points.localCheckpoint(eager=False)
-    pts = points.select(
-        pid, F.col(lon_col).alias("lon"), F.col(lat_col).alias("lat")
+    out = _nearest_segments(
+        points.select(pid, "lon", "lat"), [pid], segments, levels, _seg_dist_cols()
     )
-    out = _nearest_segments(pts, [pid], segments, levels, _seg_dist_cols())
     return points.join(out, on=pid).withColumnRenamed("nn_dist", "road_dist")
 
 
@@ -291,7 +288,7 @@ def _nearest_segments(
         return pcell.join(cov, ["cell", "chunk"])
 
     return knn.cascade(
-        pts, keys, levels, 1, make_candidates, _seg_argmin(keys, dist),
+        pts, keys, levels, make_candidates, _seg_argmin(keys, dist),
         exhaustive=True,
     )
 
@@ -339,16 +336,14 @@ def _seg_dist_cols() -> Column:
     )
 
 
-def classify_by_distance(
-    joined: DataFrame, threshold: float,
-    near_label: str = "near_road", far_label: str = "off_road",
-) -> DataFrame:
-    """J13: label by the ε-threshold on the nearest distance (the exact
-    form of the reference's buffered-intersects)."""
+def classify_by_distance(joined: DataFrame, threshold: float) -> DataFrame:
+    """J13: label ``near_road`` / ``off_road`` by the ε-threshold on the
+    nearest distance (the exact form of the reference's
+    buffered-intersects)."""
     return joined.withColumn(
         "road_class",
-        F.when(F.col("road_dist") <= F.lit(threshold), F.lit(near_label)).otherwise(
-            F.lit(far_label)
+        F.when(F.col("road_dist") <= F.lit(threshold), F.lit("near_road")).otherwise(
+            F.lit("off_road")
         ),
     )
 
@@ -358,7 +353,6 @@ def boundary_types_for_blocks(
     lines_pdf: pd.DataFrame,
     res: int,
     threshold: float = 1.0,
-    geometry_col: str = "geometry",
 ) -> DataFrame:
     """Derive the per-boundary-segment feature types that
     ``operators.reblock`` consumes — the producer the reference builds
@@ -393,7 +387,7 @@ def boundary_types_for_blocks(
     ~1 ulp off the line and would otherwise lose a d=0 tie it
     geometrically owns."""
     spark = blocks.sparkSession
-    ring = geomcols.open_ring(F.col(geometry_col))
+    ring = geomcols.open_ring(F.col("geometry"))
     if len(lines_pdf) == 0:
         # no line features at all: every vertex distance exceeds the
         # threshold, so every boundary segment types as 'gadm_boundary'

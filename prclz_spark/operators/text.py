@@ -54,8 +54,8 @@ def bpe_cols(text_col: str = "text") -> dict[str, Column]:
     toks = F.split(F.col(text_col), " ")
     pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_PATTERN), 0)
     return {
-        "n_tokens_ws": F.size(toks),
-        "n_pieces_bpe": F.size(pieces),
+        "n_tokens_ws": F.array_size(toks),
+        "n_pieces_bpe": F.array_size(pieces),
         "n_chars": F.length(F.col(text_col)),
     }
 
@@ -91,16 +91,22 @@ def quality_cols(text_col: str = "text") -> dict[str, Column]:
     """Quality feature columns (name -> unaliased Column); see
     quality_score for semantics."""
     toks = F.split(F.col(text_col), " ")
-    n_tokens = F.size(toks)
+    n_tokens = F.array_size(toks)
     n_chars = F.length(F.col(text_col))
-    n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
+    n_stop = F.array_size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
     stop_ratio = n_stop.cast("double") / n_tokens.cast("double")
-    punct_ratio = (
-        n_chars - F.length(F.regexp_replace(F.col(text_col), r"[.,;:!?]", ""))
-    ).cast("double") / n_chars.cast("double")
-    digit_ratio = (
-        n_chars - F.length(F.regexp_replace(F.col(text_col), r"[0-9]", ""))
-    ).cast("double") / n_chars.cast("double")
+    # try_divide: empty text has n_chars 0, and the ratio is null (as in
+    # the DuckDB mirror) under ANSI too, where a plain divide raises
+    punct_ratio = F.try_divide(
+        (n_chars - F.length(F.regexp_replace(F.col(text_col), r"[.,;:!?]", "")))
+        .cast("double"),
+        n_chars.cast("double"),
+    )
+    digit_ratio = F.try_divide(
+        (n_chars - F.length(F.regexp_replace(F.col(text_col), r"[0-9]", "")))
+        .cast("double"),
+        n_chars.cast("double"),
+    )
     mean_tok_len = (
         (n_chars - (n_tokens - F.lit(1))).cast("double") / n_tokens.cast("double")
     )
@@ -174,7 +180,7 @@ def lang_cols(text_col: str = "text") -> dict[str, Column]:
 
     def marker_count(markers: tuple[str, ...]) -> Column:
         # bind via helper: a 2-arg lambda would be treated as (elem, index)
-        return F.size(F.filter(toks, lambda x: x.isin(*markers)))
+        return F.array_size(F.filter(toks, lambda x: x.isin(*markers)))
 
     best = F.greatest(*(
         F.struct(marker_count(m).alias("s"), F.lit(-i).alias("o"), F.lit(lang).alias("lang"))
@@ -457,13 +463,13 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     staged = staged.select(
-        F.col(id_col), F.size(ghc).alias("n_grams"),
+        F.col(id_col), F.array_size(ghc).alias("n_grams"),
         F.array_distinct(wins).alias("fps"),
     )
     return staged.select(
         F.col(id_col),
         "n_grams",
-        F.size(F.col("fps")).alias("n_fingerprints"),
+        F.array_size(F.col("fps")).alias("n_fingerprints"),
         F.array_min(F.col("fps")).alias("min_fp"),
         F.array_max(F.col("fps")).alias("max_fp"),
     )

@@ -39,11 +39,9 @@ from ..functions import cells, geom, imagecodec
 DEFAULT_FOOTPRINT = 0.002  # degrees of ground per image side
 
 
-def _tile_rects(
-    points: DataFrame, t: int, footprint: float,
-    lon_col: str = "lon", lat_col: str = "lat",
-) -> DataFrame:
-    """Explode each point into t×t tile rectangles (tx0, ty0, tx1, ty1)."""
+def _tile_rects(points: DataFrame, t: int, footprint: float) -> DataFrame:
+    """Explode each point (lon, lat) into t×t tile rectangles (tx0, ty0,
+    tx1, ty1)."""
     half = footprint / 2.0
     tile = footprint / t
     idx = F.explode(F.sequence(F.lit(0), F.lit(t * t - 1))).alias("tile_idx")
@@ -53,8 +51,8 @@ def _tile_rects(
     return (
         out.withColumn("tile_row", tr)
         .withColumn("tile_col", tc)
-        .withColumn("tx0", F.col(lon_col) - F.lit(half) + F.col("tile_col") * F.lit(tile))
-        .withColumn("ty0", F.col(lat_col) - F.lit(half) + F.col("tile_row") * F.lit(tile))
+        .withColumn("tx0", F.col("lon") - F.lit(half) + F.col("tile_col") * F.lit(tile))
+        .withColumn("ty0", F.col("lat") - F.lit(half) + F.col("tile_row") * F.lit(tile))
         .withColumn("tx1", F.col("tx0") + F.lit(tile))
         .withColumn("ty1", F.col("ty0") + F.lit(tile))
         .drop("tile_idx")
@@ -66,18 +64,15 @@ def tile_membership_rect(
     block_bounds: DataFrame,
     t: int = 2,
     footprint: float = DEFAULT_FOOTPRINT,
-    id_col: str = "image_id",
-    broadcast_blocks: bool = True,
 ) -> DataFrame:
     """Tile membership against axis-aligned blocks.
 
-    ``block_bounds``: (block_id, bx0, by0, bx1, by1). Output: (id, tile_row,
-    tile_col, block_id, weight) with weight = |tile ∩ block| / |tile| > 0.
-    All arithmetic JVM-side."""
+    ``block_bounds``: (block_id, bx0, by0, bx1, by1), broadcast. Output:
+    (image_id, tile_row, tile_col, block_id, weight) with weight =
+    |tile ∩ block| / |tile| > 0. All arithmetic JVM-side."""
     tiles = _tile_rects(points, t, footprint)
-    bb = F.broadcast(block_bounds) if broadcast_blocks else block_bounds
     j = tiles.join(
-        bb,
+        F.broadcast(block_bounds),
         (F.col("tx0") < F.col("bx1")) & (F.col("tx1") > F.col("bx0"))
         & (F.col("ty0") < F.col("by1")) & (F.col("ty1") > F.col("by0")),
         "inner",
@@ -86,7 +81,7 @@ def tile_membership_rect(
     oy = F.least(F.col("ty1"), F.col("by1")) - F.greatest(F.col("ty0"), F.col("by0"))
     tile_area = F.lit((footprint / t) * (footprint / t))
     return j.select(
-        F.col(id_col),
+        F.col("image_id"),
         "tile_row",
         "tile_col",
         "block_id",
@@ -100,10 +95,10 @@ def tile_membership_poly(
     res: int,
     t: int = 2,
     footprint: float = DEFAULT_FOOTPRINT,
-    id_col: str = "image_id",
 ) -> DataFrame:
     """Tile membership against arbitrary polygon rings (cover = exploded
-    cell dimension from operators.assign.block_cover_*). Exact clip kernel."""
+    cell dimension from operators.assign.block_cover_*). Exact clip kernel.
+    Output columns as :func:`tile_membership_rect`."""
     tiles = _tile_rects(points, t, footprint)
     # candidate polygons: any polygon covering the cell of the tile center
     cx = (F.col("tx0") + F.col("tx1")) / 2
@@ -135,8 +130,8 @@ def tile_membership_poly(
     ).filter(F.col("weight") > 0)
     # a tile may meet the same polygon through several cover cells → dedupe
     return scored.select(
-        id_col, "tile_row", "tile_col", "block_id", "weight"
-    ).dropDuplicates([id_col, "tile_row", "tile_col", "block_id"])
+        "image_id", "tile_row", "tile_col", "block_id", "weight"
+    ).dropDuplicates(["image_id", "tile_row", "tile_col", "block_id"])
 
 
 TILE_STATS_SCHEMA = T.StructType(

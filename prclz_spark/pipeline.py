@@ -266,8 +266,8 @@ def block_hourly_rollup(events: DataFrame, assigned: DataFrame) -> DataFrame:
     hotspot-monitoring composition of J1 with the hourly window agg
     (contract evt_block_hourly; reference analog: the per-block summary
     rollups of midway/single_file_complexity.py keyed on time instead).
-    Same expression tree as contract._q_evt_block_hourly so the bucketed
-    production path below is oracle-checked by proxy."""
+    Contract row evt_block_hourly runs it against its DuckDB oracle, so
+    the bucketed production path below is oracle-checked by proxy."""
     return (
         events.select("event_id", "ts", "value")
         .join(assigned.select("event_id", "block_id"), "event_id")
@@ -291,11 +291,10 @@ def run_events_rollup(
     assigned: DataFrame | None = None,
     n_buckets: int = EVENTS_BUCKETS,
 ) -> DataFrame:
-    """The rollup's PRODUCTION shape (the plan contract._q_evt_block_hourly's
-    docstring promises): the events fact AND its block assignment live in
-    the TableStore as CO-BUCKETED snapshots on event_id, so the fact-sized
-    equi-join is EXCHANGE-FREE (zero-shuffle SortMergeJoin over co-located
-    buckets) and the only shuffle in the whole job is the final
+    """The rollup's PRODUCTION shape: the events fact AND its block
+    assignment live in the TableStore as CO-BUCKETED snapshots on
+    event_id, so the fact-sized equi-join is EXCHANGE-FREE (zero-shuffle
+    SortMergeJoin over co-located buckets) and the only shuffle in the whole job is the final
     (block_id, hour) aggregation — whose key count is bounded by
     blocks x hours, not by the fact row count. Pinned in
     tests/test_bucketed.py::test_evt_block_hourly_bucketed_single_exchange.

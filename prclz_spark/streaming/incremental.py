@@ -1,82 +1,24 @@
-"""Structured Streaming façade: incremental spatial assignment over a
-growing images directory.
+"""Structured Streaming ingest dedup: the daily-ingest loop that maps
+newly-landed image files against the committed keeper corpus.
 
 The reference is purely batch with file-level incrementality (SURVEY.md
 §2.8); the Spark-native expression of "process whatever arrived since the
 last run" is a ``readStream`` over the landing directory with an
-``availableNow`` trigger — one micro-batch per invocation, exactly-once
-via the streaming checkpoint, then the query stops. The same assignment
-operator (two-stage PIP join) runs unchanged inside the stream: broadcast
-dimension joins and Arrow pandas UDFs are both streaming-compatible, and
-no stateful operator is needed (assignment is per-row).
-
-At production scale this is the continuous-ingest path: new image
-parquet files land, each trigger assigns only the new rows and appends to
-the partitioned output table; lineage lives in the streaming checkpoint
-(offsets = files already processed), complementing the TableStore's
-per-partition lineage for batch stages.
+``availableNow`` trigger, which drains every file on disk and stops.
+``stream_phash_dedup_ingest`` runs each micro-batch through
+``commit_phash_dedup_batch``, which dedups the batch against the corpus
+with ``operators.dedup.incremental_phash_dedup`` and commits it as one
+TableStore snapshot. The streaming checkpoint records which files are
+done; the table's lineage records which batch ids are committed, so a
+replayed batch is a no-op.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import cells
-from ..operators import assign as assign_op
 from ..sources import synth
-
-
-def incremental_assign(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cover_pdf: pd.DataFrame,
-    res: int,
-    prefix_res: int = 6,
-) -> int:
-    """Process all currently-available new files in ``input_dir`` (exact
-    input_hint schema) through the spatial assign and append to
-    ``output_dir`` partitioned by cell prefix. Returns rows written this
-    invocation (0 when nothing new arrived — exactly-once)."""
-    stream = (
-        spark.readStream.schema(synth.IMAGES_SCHEMA).parquet(input_dir)
-    )
-    pts = stream.select(
-        "image_id", synth.image_id_num(F.col("image_id")).alias("idnum")
-    )
-    lon, lat = synth.lonlat_cols(F.col("idnum"))
-    pts = pts.select("image_id", lon.alias("lon"), lat.alias("lat"))
-    assigned = assign_op.assign_points_to_blocks(pts, cover_pdf, res)
-    assigned = assigned.withColumn(
-        "cell_prefix",
-        cells.cell_prefix(
-            cells.cell_id(F.col("lon"), F.col("lat"), res), res, prefix_res
-        ),
-    )
-    def _out_count() -> int:
-        try:
-            return spark.read.parquet(output_dir).count()
-        except Exception:  # first trigger: output dir does not exist yet
-            return 0
-
-    before = _out_count()
-    query = (
-        assigned.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("cell_prefix")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    # rows written this trigger, counted at the sink (the file-sink's
-    # progress reports no output-row metric, and source-side numInputRows
-    # double-counts because the assign union scans the source twice)
-    return _out_count() - before
 
 
 def stream_phash_dedup_ingest(

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 
 def _hourly_agg(stream: DataFrame, watermark: str) -> DataFrame:
-    """Shared watermarked hourly (window, event_type) rollup."""
+    """Watermarked hourly (window, event_type) rollup."""
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
         stream.withWatermark("ts", watermark)
@@ -72,59 +72,3 @@ def stream_hourly_rollup(
     )
     q.awaitTermination()
     return spark.table(name)
-
-
-def stream_hourly_rollup_append(
-    spark: SparkSession,
-    events_path: str,
-    store,
-    table: str,
-    checkpoint_dir: str,
-    watermark: str = "2 hours",
-) -> list[dict]:
-    """The PRODUCTION shape of the rollup: append mode, so the watermark
-    actually closes windows and DROPS their state (state size = O(open
-    windows), independent of stream length — complete mode rewrites every
-    window every batch and is fixture-drain only), with each emission of
-    closed windows committed as one atomic TableStore snapshot via
-    ``foreachBatch`` (exactly-once: the checkpoint replays an uncommitted
-    batch, and a replayed ``commit`` just supersedes the orphaned files,
-    which no manifest references).
-
-    One ``availableNow`` drain per call; call again after new files land —
-    the checkpoint carries the watermark and window state across drains,
-    so windows only emit once, when the watermark passes their end.
-    Returns the drain's progress dicts (state-store rows, watermark) so
-    callers/tests can assert the state bound."""
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    agg = _hourly_agg(stream, watermark)
-
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        stage = f"stream_rollup_batch_{batch_id}"
-        # exactly-once needs BOTH halves: a crash before the manifest write
-        # leaves orphaned staging files no manifest references (safe), and a
-        # crash AFTER the manifest write but before the streaming checkpoint
-        # records the batch replays _commit with the same batch_id — the
-        # lineage stage marker detects that and skips the duplicate append.
-        man = store.manifest(table)
-        if man and any(l.get("stage") == stage for l in man.get("lineage", [])):
-            return
-        store.commit(
-            batch_df.withColumn("hour_key", F.date_format("hour_bucket", "yyyyMMddHH")),
-            table,
-            partition_col="hour_key",
-            stage=stage,
-        )
-
-    q = (
-        agg.writeStream.foreachBatch(_commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return [p for p in q.recentProgress]

@@ -242,6 +242,42 @@ def test_lang_id_ties_null_and_empty(spark):
     assert hits == [None, 0, 2, 1, 2, 4, 3]
 
 
+def test_text_ops_ansi_off_matches_ansi_on(spark):
+    """The text operators' sizes are ``array_size``, which is null on a
+    null array in both ANSI modes (``size`` reads -1 with ANSI off), and
+    an empty text's ratios are null, not a divide-by-zero error: on null,
+    empty and normal text, lang_id, quality_score, bpe_token_stats and
+    winnow_fingerprints give the same rows with ANSI off as with ANSI on,
+    and as their DuckDB mirrors."""
+    from prclz_spark.operators import text as text_op
+
+    pdf = pd.DataFrame({
+        "doc_id": ["d0", "d1", "d2"],
+        "text": [None, "", "the cat sat on a mat, and ran."],
+    })
+    ops = [
+        (text_op.lang_id, text_op.lang_id_sql),
+        (text_op.quality_score, text_op.quality_score_sql),
+        (text_op.bpe_token_stats, text_op.bpe_token_stats_sql),
+        (text_op.winnow_fingerprints, text_op.winnow_fingerprints_sql),
+    ]
+
+    def rows(ansi: str) -> list:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        docs = spark.createDataFrame(pdf, "doc_id string, text string")
+        return [sorted(map(tuple, op(docs).collect())) for op, _ in ops]
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        on, off = rows("true"), rows("false")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    con = duckdb.connect()
+    con.register("docs", pdf)
+    want = [sorted(con.sql(sql("docs")).fetchall()) for _, sql in ops]
+    assert off == on == want
+
+
 def test_bpe_pattern_tricky_strings(spark):
     """The BPE-ish pattern must tokenize identically in Java regex (Spark)
     and RE2 (DuckDB) on the branches the plain fixture corpus never hits:

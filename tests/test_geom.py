@@ -99,16 +99,6 @@ def test_clip_and_overlap_area():
     assert geom.rect_polygon_overlap_area(5, 5, 6, 6, tri) == 0.0
 
 
-def test_rect_intersects_polygon():
-    tri = np.array([[0, 0], [4, 0], [0, 4]], dtype=float)
-    assert geom.rect_intersects_polygon(1, 1, 2, 2, tri)
-    assert not geom.rect_intersects_polygon(3.5, 3.5, 5, 5, tri)
-    # rect containing the whole polygon
-    assert geom.rect_intersects_polygon(-1, -1, 5, 5, tri)
-    # edge-crossing only (no vertices inside either way)
-    assert geom.rect_intersects_polygon(-1, 1, 5, 1.5, tri)
-
-
 def test_segmentize():
     line = np.array([[0, 0], [1, 0]], dtype=float)
     out = geom.segmentize(line, 0.3)

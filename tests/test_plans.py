@@ -470,24 +470,13 @@ def test_manifest_plan_single_python_eval(spark, cover):
 
 
 def test_knn_terminal_res_edge_coverage(spark):
-    """Regression (round-5 review): _terminal_res must use 2^r <= ring+1
-    (clamped-window coverage from EVERY center cell), not 2*ring+1
-    (coverage from a centered cell only). With ring=2 the old terminal
-    (res 2, nx=4) masked the far column for an edge point, so the
-    exhaustive path accepted a non-global argmin (reproduced: target 20
-    at 225.06 where broadcast returns target 10 at 181.5)."""
+    """The exhaustive cascade's terminal level (res 1, a 2×2 grid)
+    accepts its argmin unconditionally, so its clamped kRing-1 window
+    must span the whole grid from an EDGE cell too. A point at the
+    far-east edge with both targets in the west half must get the same
+    global nearest target as the broadcast plan (a res-2 terminal, nx=4,
+    would mask the west columns and drop the point)."""
     import pandas as pd
-
-    from prclz_spark.operators.knn import _terminal_res
-
-    # coverage law: from every center c on a 2^r axis, the clamped
-    # window [max(0, c-ring), min(nx-1, c+ring)] spans the whole axis
-    for ring in range(1, 9):
-        nx = 1 << _terminal_res(ring)
-        assert all(
-            max(0, c - ring) == 0 and min(nx - 1, c + ring) == nx - 1
-            for c in range(nx)
-        ), (ring, nx)
 
     tgt = spark.createDataFrame(pd.DataFrame(
         {"target_id": [10, 20], "tx": [-90.5, -89.9], "ty": [89.0, -44.9]}
@@ -495,10 +484,8 @@ def test_knn_terminal_res_edge_coverage(spark):
     pts = spark.createDataFrame(pd.DataFrame(
         {"image_id": [1], "lon": [91.0], "lat": [89.0]}
     ))
-    a = knn.knn_join(pts, tgt, 14, target_id="target_id", ring=2)
-    b = knn.knn_join(
-        pts, tgt, 14, target_id="target_id", ring=2, broadcast_targets=False
-    )
+    a = knn.knn_join(pts, tgt, 14, target_id="target_id")
+    b = knn.knn_join(pts, tgt, 14, target_id="target_id", broadcast_targets=False)
     ra = sorted(map(tuple, a.select(
         "image_id", "target_id", F.round("nn_dist", 9)).collect()))
     rb = sorted(map(tuple, b.select(

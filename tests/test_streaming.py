@@ -1,266 +1,9 @@
-"""Structured Streaming incremental-assign tests: availableNow triggers,
-exactly-once across invocations, correct assignment counts."""
+"""Structured Streaming tests: watermarked dedup state eviction and the
+ingest-dedup loop's exactly-once commits across availableNow drains."""
 
 import os
 
-import numpy as np
-import pytest
-
-from prclz_spark.operators import assign
 from prclz_spark.sources import synth
-from prclz_spark.streaming.incremental import incremental_assign
-
-
-@pytest.mark.slow
-def test_incremental_assign_exactly_once(spark, tmp_path):
-    input_dir = str(tmp_path / "landing")
-    output_dir = str(tmp_path / "assigned")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(input_dir)
-    cover = assign.block_cover_pdf(synth.grid_blocks(4), 15)
-
-    # batch 1 lands
-    synth.write_images_parquet(os.path.join(input_dir, "b1.parquet"), 300)
-    n1 = incremental_assign(spark, input_dir, output_dir, ckpt, cover, 15)
-    assert n1 == 300
-    assert spark.read.parquet(output_dir).count() == 300
-
-    # nothing new → zero processed, output unchanged
-    n2 = incremental_assign(spark, input_dir, output_dir, ckpt, cover, 15)
-    assert n2 == 0
-    assert spark.read.parquet(output_dir).count() == 300
-
-    # batch 2 lands (ids disjoint — write a shifted range)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = synth.images_batch_pdf(np.arange(300, 500))
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        os.path.join(input_dir, "b2.parquet"),
-    )
-    n3 = incremental_assign(spark, input_dir, output_dir, ckpt, cover, 15)
-    assert n3 == 200
-    out = spark.read.parquet(output_dir)
-    assert out.count() == 500
-    # exactly one block per image, partition column present
-    assert out.select("image_id").distinct().count() == 500
-    assert "cell_prefix" in out.columns
-
-
-def test_append_rollup_closes_windows_and_bounds_state(spark, tmp_path):
-    """The PRODUCTION streaming path (VERDICT r2 next #9): append-mode
-    watermarked rollup into a TableStore sink via foreachBatch.
-
-    Pins three properties complete-mode cannot show:
-      1. only CLOSED windows (end < watermark = max_ts - delay) are
-         committed per drain — the open tail is held back;
-      2. a second drain over new files emits exactly the newly-closed
-         windows (no duplicates — exactly-once across checkpointed drains);
-      3. the state store DROPS closed windows: numRowsTotal after a drain
-         equals the number of still-open (window, event_type) groups, not
-         the total ever seen."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from prclz_spark.sources.tablestore import TableStore
-    from prclz_spark.streaming.windows import stream_hourly_rollup_append
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    store = TableStore(str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-
-    def _events(hours, offset):
-        # two events per (hour, type): minute 15 and minute 45 (max ts per
-        # hour = :45, never window-aligned, so closed/open is unambiguous)
-        rows = []
-        for h in hours:
-            for typ in ("view", "click"):
-                for minute in (15, 45):
-                    rows.append(
-                        {
-                            "ts": pd.Timestamp(2026, 1, 1, h, minute),
-                            "event_type": typ,
-                            "value": float(h) + minute / 100.0 + offset,
-                        }
-                    )
-        return pd.DataFrame(rows)
-
-    def _drain(name, pdf):
-        # pandas defaults to ns timestamps -> parquet TIMESTAMP(NANOS),
-        # which Spark's reader rejects; write us like the driver fixtures
-        pq.write_table(
-            pa.Table.from_pandas(
-                pdf.assign(ts=pdf.ts.astype("datetime64[us]")),
-                preserve_index=False,
-            ),
-            str(landing / name),
-        )
-        return stream_hourly_rollup_append(
-            spark, str(landing), store, "rollup", ckpt, watermark="2 hours"
-        )
-
-    def _committed():
-        df = store.read(spark, "rollup")
-        if df is None:
-            return pd.DataFrame(
-                columns=["hour_bucket", "event_type", "n_events", "sum_value"]
-            )
-        return (
-            df.select("hour_bucket", "event_type", "n_events", "sum_value")
-            .toPandas()
-            .sort_values(["hour_bucket", "event_type"])
-            .reset_index(drop=True)
-        )
-
-    def _expected(pdf, watermark_ts):
-        g = pdf.assign(hour=pdf.ts.dt.floor("h"))
-        g = g.groupby(["hour", "event_type"], as_index=False).agg(
-            n_events=("value", "size"), sum_value=("value", "sum")
-        )
-        closed = g[(g.hour + pd.Timedelta(hours=1)) < watermark_ts]
-        return closed.sort_values(["hour", "event_type"]).reset_index(drop=True)
-
-    # drain 1: hours 0..5, max ts 05:45 -> watermark 03:45 -> closed = h0,h1,h2
-    b1 = _events(range(6), offset=0.0)
-    prog1 = _drain("b1.parquet", b1)
-    got1 = _committed()
-    want1 = _expected(b1, pd.Timestamp(2026, 1, 1, 3, 45))
-    assert list(got1.hour_bucket) == list(want1.hour)
-    assert list(got1.event_type) == list(want1.event_type)
-    assert (got1.n_events.to_numpy() == want1.n_events.to_numpy()).all()
-    assert abs(got1.sum_value.to_numpy() - want1.sum_value.to_numpy()).max() < 1e-9
-
-    # state bound: the watermark-advance batch EVICTS closed windows
-    # (complete mode never removes state; exact numRows* values double-
-    # count across state-store partitions, so pin the behavior not the
-    # metric internals)
-    removed1 = [
-        op.get("numRowsRemoved", 0)
-        for p in prog1
-        for op in p.get("stateOperators", [])
-    ]
-    assert sum(removed1) > 0
-
-    # drain 2: hours 6..9 land -> watermark 07:45 -> closed through h6
-    b2 = _events(range(6, 10), offset=100.0)
-    prog2 = _drain("b2.parquet", b2)
-    got2 = _committed()
-    both = pd.concat([b1, b2], ignore_index=True)
-    want2 = _expected(both, pd.Timestamp(2026, 1, 1, 7, 45))
-    assert list(got2.hour_bucket) == list(want2.hour)
-    assert (got2.n_events.to_numpy() == want2.n_events.to_numpy()).all()
-    assert abs(got2.sum_value.to_numpy() - want2.sum_value.to_numpy()).max() < 1e-9
-    # exactly-once: no (hour, type) appears twice across the two commits
-    assert not got2.duplicated(["hour_bucket", "event_type"]).any()
-
-    # drain 2's data batch updates ONLY the 8 new (hour, type) groups
-    # (h6..h9 x 2) — state for already-emitted windows is gone, and the
-    # still-open h3..h5 groups receive no new rows, so are untouched:
-    # state is O(open windows), not O(windows ever seen)
-    updated2 = [
-        op.get("numRowsUpdated", 0)
-        for p in prog2
-        for op in p.get("stateOperators", [])
-        if p.get("numInputRows", 0) > 0
-    ]
-    assert sum(updated2) == 8
-    removed2 = [
-        op.get("numRowsRemoved", 0)
-        for p in prog2
-        for op in p.get("stateOperators", [])
-    ]
-    assert sum(removed2) > 0
-
-
-def test_stateful_sessionize_matches_batch(spark):
-    """applyInPandasWithState sessionizer: one availableNow drain over the
-    static events fixture (emit_open drain mode) must reproduce the batch
-    lag+cumsum sessionization exactly."""
-    import os
-    import uuid
-
-    import pandas as pd
-
-    from prclz_spark import contract
-    from prclz_spark.streaming.stateful import sessionize_stream
-
-    sf_dir = "/root/testdata/sf0.001"
-    stream_dir = contract._stage_stream_dir(sf_dir)
-    schema = spark.read.parquet(stream_dir).schema
-    stream = spark.readStream.schema(schema).parquet(stream_dir)
-    out = sessionize_stream(stream, gap_min=contract.SESSION_GAP_MIN, emit_open=True)
-    name = f"sess_{uuid.uuid4().hex[:10]}"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.table(name).toPandas()
-    want = contract._q_evt_sessionize(spark, sf_dir).toPandas()
-    key = ["user_id", "sess_idx"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(want) > 0
-    assert (got.n_events.to_numpy() == want.n_events.to_numpy()).all()
-    assert (pd.to_datetime(got.session_start).to_numpy()
-            == pd.to_datetime(want.session_start).to_numpy()).all()
-    assert (pd.to_datetime(got.session_end).to_numpy()
-            == pd.to_datetime(want.session_end).to_numpy()).all()
-
-
-@pytest.mark.slow
-def test_append_rollup_commit_replay_is_idempotent(spark, tmp_path):
-    """Crash-replay half of exactly-once: a batch whose TableStore commit
-    SUCCEEDED but whose streaming checkpoint write did not (simulated by
-    wiping the checkpoint and re-draining the same files) re-invokes
-    foreachBatch with the same batch_id — the lineage stage marker must
-    skip the duplicate append, or every closed window doubles."""
-    import shutil
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from prclz_spark.sources.tablestore import TableStore
-    from prclz_spark.streaming.windows import stream_hourly_rollup_append
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    store = TableStore(str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-
-    rows = []
-    for h in range(6):
-        for minute in (15, 45):
-            rows.append(
-                {"ts": pd.Timestamp(2026, 1, 1, h, minute),
-                 "event_type": "view", "value": 1.0}
-            )
-    pdf = pd.DataFrame(rows)
-    pq.write_table(
-        pa.Table.from_pandas(
-            pdf.assign(ts=pdf.ts.astype("datetime64[us]")), preserve_index=False
-        ),
-        str(landing / "b1.parquet"),
-    )
-
-    stream_hourly_rollup_append(
-        spark, str(landing), store, "rollup", ckpt, watermark="2 hours"
-    )
-    first = store.read(spark, "rollup").toPandas()
-    assert len(first) == 3  # h0..h2 closed (watermark 03:45)
-
-    # checkpoint lost after commit -> the drain replays batch 0 verbatim
-    shutil.rmtree(ckpt)
-    stream_hourly_rollup_append(
-        spark, str(landing), store, "rollup", ckpt, watermark="2 hours"
-    )
-    again = store.read(spark, "rollup").toPandas()
-    assert len(again) == 3, "replayed batch was appended twice"
-    assert not again.duplicated(["hour_bucket", "event_type"]).any()
 
 
 def test_stream_dedup_watermark_evicts_state(spark, tmp_path):
